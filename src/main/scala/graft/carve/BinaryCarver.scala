@@ -944,12 +944,13 @@ object BinaryCarver {
 
   /** Raw value, or — for sketched high-cardinality columns — the bucket's
     * representative value (upper edge; last bucket -> last edge + 1). Null
-    * and NaN pass through as null (the NaN bucket).
+    * and NaN both become null (the NaN bucket), as in `transform`.
     */
   private[carve] def quantValueExpr(name: String, sketched: Map[String, Vector[Double]]): Column =
-    sketched.get(name) match {
-      case None => col(name).cast("double")
-      case Some(edges) if edges.isEmpty => col(name).cast("double")
+    sketched.get(name).filter(_.nonEmpty) match {
+      case None =>
+        val c = col(name).cast("double")
+        when(!isnan(c), c)
       case Some(edges) =>
         val reps = edges :+ (edges.last + 1.0)
         val bucket = graft.transform.BinarySearchBucketize.column(

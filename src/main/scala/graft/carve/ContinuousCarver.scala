@@ -83,19 +83,6 @@ object ContinuousCarver {
     * 3 input scans total (sketch, histogram, rank aggregate) where the
     * previous shape paid 5-6 for a median fit.
     */
-  /** Stage timer (stderr, only under BENCH_DEBUG) — same pattern as
-    * PagePipeline's fixed-vs-parallel cost attribution.
-    */
-  private def timed[T](name: String)(f: => T): T = {
-    if (!sys.env.contains("BENCH_DEBUG")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[cont-fit] $name%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   def computeStages(
       train: DataFrame,
       target: String,
@@ -118,12 +105,12 @@ object ContinuousCarver {
     // cv>1 folds ride the SAME scan (fold key as one more groupBy column).
     // The R4 distinct-y gate rides the SKETCH job as one extra aggregate —
     // previously its own full scan of (possibly expensive) y.
-    val (sketched, sketchRow) = timed("sketch+acd")(BinaryCarver.sketchWithExtras(train, specs, config,
-      Seq(approx_count_distinct(col(target)).as("__graft_y_acd"))))
+    val (sketched, sketchRow) = BinaryCarver.sketchWithExtras(train, specs, config,
+      Seq(approx_count_distinct(col(target)).as("__graft_y_acd")))
     val distinctY = sketchRow.map(_.getAs[Long]("__graft_y_acd")).getOrElse(-1L)
-    val (trainHist, foldHists) = timed("histogram")(
+    val (trainHist, foldHists) =
       if (config.cv > 1) BinaryCarver.histogramWithFolds(train, target, specs, config.cv, sketched, Option(config.foldCol))
-      else (BinaryCarver.histogram(train, target, specs, sketched), Nil))
+      else (BinaryCarver.histogram(train, target, specs, sketched), Nil)
     def totalOf(name: String): Long = trainHist(name).map(_.count).sum
     val prep: Map[String, Prep] = specs.map { s =>
       s.name -> (s.kind match {
@@ -142,8 +129,8 @@ object ContinuousCarver {
 
     // ---- pass 2: rank stats per (feature, modality), both rank bases
     val approxMedian = withYHists && distinctY > medianGateThreshold(config, specs.length)
-    val (rows, ties, yHists) = timed("rank-stats")(
-      rankStatsJob(train, target, specs, prep, withYHists, approxMedian, distinctY))
+    val (rows, ties, yHists) =
+      rankStatsJob(train, target, specs, prep, withYHists, approxMedian, distinctY)
     Stages(config, sketched, distinctY, trainHist, foldHists, prep, rows, ties, yHists)
   }
 
@@ -180,7 +167,7 @@ object ContinuousCarver {
     val yHists: Map[String, Map[String, Array[(Double, Double)]]] =
       if (!withMedians) Map.empty
       else if (stages.yHists.nonEmpty) stages.yHists
-      else timed("median-yhist")(yHistsOf(longForm(train, target, specs, prep), approxMedian))
+      else yHistsOf(longForm(train, target, specs, prep), approxMedian)
     def rankStats(name: String): (Continuous.RankXagg, Continuous.RankXagg, Map[String, (Double, Double, Double)]) = {
       val p = prep(name)
       val rows = stages.rows.getOrElse(name, Map.empty)
@@ -244,7 +231,7 @@ object ContinuousCarver {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val fitted = timed("search")(Await.result(Future.traverse(specs.toVector) { spec =>
+    val fitted = Await.result(Future.traverse(specs.toVector) { spec =>
       Future {
         val p = prep(spec.name)
         val (sub, full, moments) = rankStats(spec.name)
@@ -264,7 +251,7 @@ object ContinuousCarver {
         searchContinuous(spec, p, sub, full, devX.filter(_.labels.nonEmpty), config, foldXs, moments,
           stages.dpMemo)
       }
-    }, Duration.Inf))
+    }, Duration.Inf)
 
     Model(target, config.minFreq, config.maxNMod, "kruskal", fitted)
   }
@@ -357,7 +344,23 @@ object ContinuousCarver {
     val ylh = long.groupBy(col("fid"), col("lbl"), col("y"))
       .agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try rankStatsOf(df, target, specs, long, ylh, withMedians, approxMedian, approxDistinctY)
+    finally ylh.unpersist()
+  }
 
+  /** [[rankStatsJob]]'s derivations from the persisted aggregate `ylh`. */
+  private def rankStatsOf(
+      df: DataFrame,
+      target: String,
+      specs: Seq[FeatureSpec],
+      long: DataFrame,
+      ylh: DataFrame,
+      withMedians: Boolean,
+      approxMedian: Boolean,
+      approxDistinctY: Long
+  ): (Map[String, Map[String, (Double, Double, Double, Double, Double)]],
+      Map[String, (Double, Double)],
+      Map[String, Map[String, Array[(Double, Double)]]]) = {
     // per-(feature, y): counts over all rows and over non-NaN-modality rows
     val yh = ylh.groupBy(col("fid"), col("y"))
       .agg(
@@ -374,7 +377,7 @@ object ContinuousCarver {
     // bucket-window path below remains for high-cardinality y (where the
     // pool table is ~|rows| and must never be collected).
     val localYh = approxDistinctY >= 0 &&
-      approxDistinctY * math.max(1, specs.length).toLong <= 200000L
+      approxDistinctY * math.max(1, specs.length).toLong <= Stats.LocalRankRows
     if (localYh) {
       val yhRows = yh.collect()
       require(!yhRows.exists(_.isNullAt(1)),
@@ -422,7 +425,6 @@ object ContinuousCarver {
               _.map(r => (r.getDouble(2), r.getLong(3).toDouble)).toArray).toMap
           }.toMap
         }
-      ylh.unpersist()
       val byFid = mutable.Map.empty[String, mutable.Map[String, (Double, Double, Double, Double, Double)]]
       stats.foreach { r =>
         byFid.getOrElseUpdate(r.getString(0), mutable.Map.empty)(r.getString(1)) =
@@ -518,7 +520,6 @@ object ContinuousCarver {
             _.map(r => (r.getDouble(2), r.getLong(3).toDouble)).toArray).toMap
         }.toMap
       }
-    ylh.unpersist()
 
     val byFid = mutable.Map.empty[String, mutable.Map[String, (Double, Double, Double, Double, Double)]]
     stats.foreach { r =>

@@ -15,6 +15,13 @@ package graft.carve
   */
 object Stats {
 
+  /** Row bound of a grouped count table that a size-adaptive rank stage
+    * collects and ranks on the driver (ContinuousCarver's `(feature, y)`
+    * pool table, the selector's grouped long-form aggregate). Above it the
+    * ranks stay a distributed bucketed window.
+    */
+  val LocalRankRows: Long = 200000L
+
   /** Inverse standard-normal CDF (Acklam's rational approximation,
     * relative error < 1.2e-9 over (0,1)). Replaces `scipy.stats.norm.ppf`
     * for the Wilson z-score; a 1e-9 z error shifts a Wilson bound by

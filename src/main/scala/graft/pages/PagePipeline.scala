@@ -16,19 +16,6 @@ import graft.text.TextOps
   */
 object PagePipeline {
 
-  /** Stage timer (stderr, only under BENCH_DEBUG) — the scaling bench's
-    * fixed-vs-parallel cost attribution.
-    */
-  private def timed[T](name: String)(f: => T): T = {
-    if (!sys.env.contains("BENCH_DEBUG")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[pipeline] $name%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   /** Scan-side projection (no shuffle): every text/time-derived scalar,
     * heavy payload columns dropped — the window exchanges must never carry
     * the html/text bytes (at 100 TB the payload dominates shuffle volume).
@@ -120,20 +107,20 @@ object PagePipeline {
       // the per-partition GK sketches ~100x smaller than the 1e-4 default —
       // at 1e-4 the single-task sketch MERGE dominated and ANTI-scaled with
       // cluster width (more scan splits = more partials to merge)
-      val sketched = timed("sketch")(BinaryCarver.sketchHighCardinality(scanOnly, sketchSpecs,
+      val sketched = BinaryCarver.sketchHighCardinality(scanOnly, sketchSpecs,
         config.copy(sketchCardinalityThreshold = math.min(config.sketchCardinalityThreshold, 100000L),
-          sketchRelativeError = math.max(config.sketchRelativeError, 0.001))))
+          sketchRelativeError = math.max(config.sketchRelativeError, 0.001)))
       val train = featureFromScan(scanOnly).withColumn("y", label)
-      val hist = timed("histogram")(BinaryCarver.histogram(train, "y", specs, sketched))
+      val hist = BinaryCarver.histogram(train, "y", specs, sketched)
       if (cacheScan) scanOnly.unpersist()
-      val json = timed("hist-json")(HistJson.write(hist))
+      val json = HistJson.write(hist)
       IcebergLite.saveCheckpoint(table, IcebergLite.Checkpoint("hist", manifest.snapshotId, cfgHash, json))
       json
     }
 
     val modelJson = IcebergLite.loadCheckpoint(table, "model", manifest.snapshotId, cfgHash).getOrElse {
       computed += "model"
-      val model = timed("dp-fit")(BinaryCarver.fitFromHistograms(HistJson.read(histJson), None, "y", specs, config))
+      val model = BinaryCarver.fitFromHistograms(HistJson.read(histJson), None, "y", specs, config)
       val json = model.toJson
       IcebergLite.saveCheckpoint(table, IcebergLite.Checkpoint("model", manifest.snapshotId, cfgHash, json))
       json

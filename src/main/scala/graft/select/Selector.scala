@@ -1,9 +1,11 @@
 package graft.select
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 import graft.carve.{BinaryCarver, Stats}
 
@@ -11,14 +13,14 @@ import graft.carve.{BinaryCarver, Stats}
   * gate metrics, association ranking vs the target, redundancy filtering,
   * and the best-first selection walk.
   *
-  * Cluster shape: gate + qualitative association come from ONE long-form
-  * `groupBy(feature, value)` pass (shared with the carver's histogram
-  * machinery); quantitative association is one wide aggregation (Pearson)
-  * plus one melt-groupBy pass (Spearman from average ranks over grouped
-  * counts — cardinality-sized, never a global row sort); redundancy is ONE
-  * correlation-matrix aggregation over the quantitative block and ONE
-  * batched crosstab job over the qualitative pairs — the best-first walk
-  * itself launches zero Spark jobs.
+  * Cluster shape: every measure of one call derives from two aggregates
+  * ([[Aggregates]]): ONE global aggregation over the quantitative block
+  * and ONE grouped long-form count holding the quantitative melt, the
+  * qualitative histogram and the qualitative pair crosstab, run side by
+  * side. Below [[Stats.LocalRankRows]] grouped rows the driver computes
+  * every gate, rank measure and redundancy matrix from the collected
+  * table; above it the ranks stay bucketed windows over the same grouped
+  * frame. The best-first walk launches zero Spark jobs.
   */
 object Selector {
 
@@ -66,214 +68,351 @@ object Selector {
     floor.map { case (k, v) => k -> (if (bump(k)) v + 1 else v) }
   }
 
-  /** One pass: per-feature nan fraction, mode frequency, cardinality, and
-    * (for qualitative features vs a binary target) the chi²-derived
-    * unrounded Cramér's V (`selectors/measures/qualitative_measures.py`).
+  /** Sufficient statistics of one feature's rank pool of `(x, g, count)`
+    * cells, x ranked (average ranks) and g the groups: `ssbn = Σ_g R_g²/n_g`,
+    * `tsum = Σ_x (t³ − t)`, and the count-weighted Pearson sums of (rank x,
+    * rank g), zero when g is not numeric. Both rank paths produce it.
     */
-  def qualitativeMetrics(
-      df: DataFrame,
-      target: String,
-      quals: Seq[String]
-  ): Map[String, FeatureRank] =
+  private final case class RankStats(n: Double, ssbn: Double, k: Double, tsum: Double,
+      sx: Double, sxx: Double, sy: Double, syy: Double, sxy: Double) {
+    def spearman: Double = {
+      val den = math.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
+      if (den == 0 || den.isNaN) Double.NaN else (n * sxy - sx * sy) / den
+    }
+    def kruskal: KruskalRow = {
+      val h0 = 12.0 / (n * (n + 1.0)) * ssbn - 3.0 * (n + 1.0)
+      val tie = 1.0 - tsum / (n * n * n - n)
+      val h = if (tie <= 0) Double.NaN else h0 / tie
+      val eps = if (n > 1) h / (n - 1.0) else Double.NaN
+      val eta = if (n - k > 0) math.max(0.0, (h - k + 1.0) / (n - k)) else Double.NaN
+      KruskalRow(h, eps, eta)
+    }
+  }
+
+  /** The two aggregates of one `(df, target, quants, quals)`, each run at
+    * most once and only when a measure reads it:
+    *
+    *  - `global`: ONE `df.agg` row — per quantitative nan rate, Pearson
+    *    vs the target and stddev, and every pairwise `covar_samp` (with
+    *    `redundancy`);
+    *  - `plan`: ONE `groupBy(fid, v, s, t, y).count()` over entries
+    *    exploded from each row. fid numbers the quantitatives `(v, y)`,
+    *    then the qualitatives `(s, y)`, then (with `redundancy`) the
+    *    qualitative pairs `(s, t)`; strings are the raw `cast("string")`.
+    *
+    * The grouped pass collects at most `bound + 1` rows. Under the bound
+    * that is the whole table and every measure is computed on the driver;
+    * above it the grouped frame is persisted (released by [[release]]),
+    * the count tables are collected reduced over y, and the ranks run as
+    * bucketed windows.
+    */
+  private[select] final class Aggregates(val df: DataFrame, target: Option[String],
+      val quants: Seq[String], val quals: Seq[String], redundancy: Boolean = false,
+      bound: Long = Stats.LocalRankRows) {
+    private val nq = quants.size
+    private val nl = quals.size
+    private def pairsOf(k: Int) = if (!redundancy) Vector.empty
+      else for { i <- (0 until k).toVector; j <- i + 1 until k } yield (i, j)
+    private val quantPairs = pairsOf(nq)
+    private val qualPairs = pairsOf(nl)
+    private def qx(i: Int): Column = col(quants(i)).cast("double")
+    private def qs(j: Int): Column = col(quals(j)).cast("string")
+    private val y = target.fold(lit(null).cast("double"))(t => col(t).cast("double"))
+    private var persisted: Option[DataFrame] = None
+
+    // submitted on first use, or by [[overlapped]] to run beside the grouped pass
+    private lazy val globalJob: Future[Row] = Future {
+      val aggs = (0 until nq).flatMap(i => Seq(avg(qx(i).isNull.cast("double")).as(s"nan$i"),
+          safeCorr(qx(i), y).as(s"corr$i"), stddev_samp(qx(i)).as(s"sd$i"))) ++
+        quantPairs.map { case (i, j) => covar_samp(qx(i), qx(j)).as(s"cv${i}_$j") }
+      df.agg(aggs.head, aggs.tail: _*).head()
+    }(ExecutionContext.global)
+    private lazy val global: Row = Await.result(globalJob, Duration.Inf)
+    def overlapped(): this.type = { if (nq > 0) globalJob; this }
+    private def num(field: String): Option[Double] = Option(global.getAs[java.lang.Double](field)).map(_.toDouble)
+
+    private lazy val plan: DataFrame = {
+      val (d, str) = (lit(null).cast("double"), lit(null).cast("string"))
+      def entry(fid: Int, v: Column, s: Column, t: Column, yv: Column) =
+        struct(lit(fid).as("fid"), v.as("v"), s.as("s"), t.as("t"), yv.as("y"))
+      val entries = (0 until nq).map(i => entry(i, qx(i), str, str, y)) ++
+        (0 until nl).map(j => entry(nq + j, d, qs(j), str, y)) ++
+        qualPairs.zipWithIndex.map { case ((a, b), k) => entry(nq + nl + k, d, qs(a), qs(b), d) }
+      df.select(explode(array(entries: _*)).as("e"))
+        .groupBy(Seq("fid", "v", "s", "t", "y").map(f => col(s"e.$f").as(f)): _*)
+        .agg(count(lit(1)).as("cnt"))
+    }
+    // (fid, v, s, t, y, cnt) rows, at most bound + 1
+    private lazy val local: Array[Row] =
+      if (nq + nl == 0) Array.empty else plan.limit((math.min(bound, Int.MaxValue - 1L) + 1).toInt).collect()
+    private lazy val small = local.length <= bound
+    private lazy val grouped: DataFrame = {
+      if (!small) persisted = Some(plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      plan
+    }
+
+    /** Unpersists the above-bound grouped frame, if one was persisted. */
+    def release(): Unit = persisted.foreach(_.unpersist())
+
+    lazy val nanFreq: Map[String, Double] = quants.indices.map(i => quants(i) -> num(s"nan$i").getOrElse(0.0)).toMap
+    lazy val pearson: Map[String, Double] =
+      quants.indices.map(i => quants(i) -> num(s"corr$i").getOrElse(Double.NaN)).toMap
+
+    private def symmetric(names: Seq[String])(f: (String, String) => Double): Map[(String, String), Double] =
+      names.combinations(2).flatMap { case Seq(a, b) => val v = f(a, b); Seq((a, b) -> v, (b, a) -> v) }.toMap
+
+    /** |Pearson| for every pair of `names` from the global row's stddevs
+      * and covariances (0 when either side is constant or empty).
+      */
+    def corrMatrix(names: Seq[String]): Map[(String, String), Double] = {
+      val idx = quants.zipWithIndex.toMap
+      symmetric(names) { (a, b) =>
+        val (i, j) = (math.min(idx(a), idx(b)), math.max(idx(a), idx(b)))
+        (for {
+          sa <- num(s"sd$i"); sb <- num(s"sd$j"); cv <- num(s"cv${i}_$j")
+          if sa * sb > 0
+        } yield math.abs(cv / (sa * sb))).getOrElse(0.0)
+      }
+    }
+
+    /** Distinct non-null values per quantitative (the grouping normalises
+      * NaN and -0.0 exactly like `count_distinct`).
+      */
+    lazy val cardinality: Map[String, Long] = {
+      val byFid: Map[Int, Long] =
+        if (small) local.filter(r => r.getInt(0) < nq && !r.isNullAt(1))
+          .map(r => (r.getInt(0), java.lang.Double.doubleToLongBits(r.getDouble(1)))).distinct
+          .groupMapReduce(_._1)(_ => 1L)(_ + _)
+        else grouped.filter(col("fid") < nq && col("v").isNotNull).groupBy("fid")
+          .agg(count_distinct(col("v"))).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      quants.indices.map(i => quants(i) -> byFid.getOrElse(i, 0L)).toMap
+    }
+
+    // qualitative and pair cells reduced over y: (fid, s, t, count, Σ y·count)
+    private lazy val counts: Array[(Int, String, String, Long, Double)] =
+      if (nl == 0) Array.empty
+      else if (small) local.filter(_.getInt(0) >= nq)
+        .groupMapReduce(r => (r.getInt(0), r.getString(2), r.getString(3)))(r =>
+          (r.getLong(5), if (r.isNullAt(4)) 0.0 else r.getDouble(4) * r.getLong(5)))(
+          (a, b) => (a._1 + b._1, a._2 + b._2))
+        .map { case ((f, s, t), (c, sy)) => (f, s, t, c, sy) }.toArray
+      else grouped.filter(col("fid") >= nq).groupBy("fid", "s", "t")
+        .agg(sum("cnt"), coalesce(sum(col("y") * col("cnt")), lit(0.0))).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getDouble(4)))
+
+    /** The categorical histogram every qualitative measure reads, in
+      * [[BinaryCarver.histogram]]'s row form (values stringified like the
+      * carver's categorical entries, null first then ascending).
+      */
+    lazy val qualHist: Map[String, Array[BinaryCarver.HistRow]] =
+      counts.filter(_._1 < nq + nl).groupBy(_._1).map { case (fid, rows) =>
+        quals(fid - nq) -> rows
+          .groupMapReduce(r => Option(r._2).map(_.replaceAll("^(-?\\d+)\\.0$", "$1")).orNull)(r =>
+            (r._4, r._5))((a, b) => (a._1 + b._1, a._2 + b._2))
+          .toArray.sortBy(r => Option(r._1))
+          .map { case (sv, (c, sy)) => BinaryCarver.HistRow(Double.NaN, sv, sv == null, c, sy) }
+      }
+
+    /** Cramér's V for every pair of `names` from the pair crosstab (null is
+      * a category of its own).
+      */
+    def pairMatrix(names: Seq[String]): Map[(String, String), Double] = {
+      val idx = quals.zipWithIndex.toMap
+      val pid = qualPairs.zipWithIndex.toMap
+      lazy val byPair = counts.filter(_._1 >= nq + nl).groupBy(_._1 - nq - nl)
+      symmetric(names) { (a, b) =>
+        val (i, j) = (idx(a), idx(b))
+        val rows = byPair.getOrElse(pid((math.min(i, j), math.max(i, j))), Array.empty)
+          .map(r => if (i < j) (r._2, r._3, r._4) else (r._3, r._2, r._4))
+        val aVals = rows.map(_._1).distinct.zipWithIndex.toMap
+        val bVals = rows.map(_._2).distinct.zipWithIndex.toMap
+        val obs = Array.fill(aVals.size, bVals.size)(0.0)
+        rows.foreach(r => obs(aVals(r._1))(bVals(r._2)) += r._3.toDouble)
+        cramerTschuprow(obs, rows.map(_._3).sum.toDouble)._1
+      }
+    }
+
+    /** Rank pool per feature: quantitatives rank v with y as the groups
+      * (v non-null, non-NaN; y non-null), qualitatives rank y with their
+      * modalities as the groups (s and y non-null).
+      */
+    private def rankStats(quant: Boolean, spearman: Boolean): Map[Int, RankStats] =
+      if (small) {
+        def bits(d: Double): Any = java.lang.Double.doubleToLongBits(d)
+        local.filter { r =>
+          val f = r.getInt(0)
+          !r.isNullAt(4) && (if (quant) f < nq && !r.isNullAt(1) && !r.getDouble(1).isNaN
+            else f >= nq && f < nq + nl && !r.isNullAt(2))
+        }.groupBy(_.getInt(0)).map { case (fid, rs) =>
+          fid -> localRankStats(rs.map(r =>
+            if (quant) (r.getDouble(1), bits(r.getDouble(4)), r.getLong(5))
+            else (r.getDouble(4), r.getString(2): Any, r.getLong(5))), numericG = quant)
+        }
+      } else {
+        val (f, v, yv) = (col("fid"), col("v"), col("y"))
+        val pool =
+          if (quant) grouped.filter(f < nq && v.isNotNull && !isnan(v) && yv.isNotNull)
+            .select(f, v.as("x"), yv.as("g"), col("cnt"))
+          else grouped.filter(f >= nq && f < nq + nl && col("s").isNotNull && yv.isNotNull)
+            .select(f, yv.as("x"), col("s").as("g"), col("cnt"))
+        distributedRankStats(pool, spearman)
+      }
+    private lazy val quantRanks = rankStats(quant = true, spearman = true)
+
+    lazy val spearman: Map[String, Double] = quantRanks.map { case (i, r) => quants(i) -> r.spearman }
+    lazy val kruskal: Map[String, KruskalRow] = (if (small) quantRanks else rankStats(quant = true,
+      spearman = false)).map { case (i, r) => quants(i) -> r.kruskal }
+    lazy val kruskalReversed: Map[String, KruskalRow] =
+      rankStats(quant = false, spearman = false).map { case (j, r) => quals(j - nq) -> r.kruskal }
+  }
+
+  private def using[A](a: Aggregates)(f: Aggregates => A): A = try f(a) finally a.release()
+
+  /** Average ranks (ties → midrank) of `(value, count)` cells: one entry
+    * `(value, n, rank)` per distinct value, ascending with NaN last like
+    * Spark's sort. Values compare by their bits (the grouping already
+    * normalised NaN and -0.0).
+    */
+  private def avgRanks(cells: Iterable[(Double, Long)]): Array[(Double, Long, Double)] = {
+    var cum = 0L
+    cells.groupMapReduce(c => java.lang.Double.doubleToLongBits(c._1))(_._2)(_ + _).toArray
+      .map { case (b, n) => (java.lang.Double.longBitsToDouble(b), n) }
+      .sortWith((a, b) => java.lang.Double.compare(a._1, b._1) < 0)
+      .map { case (v, n) => val r = cum + (n + 1) / 2.0; cum += n; (v, n, r) }
+  }
+
+  /** [[RankStats]] of one feature's `(x, g, count)` cells on the driver;
+    * with `numericG`, g is a double's bits and is ranked too (Spearman).
+    */
+  private def localRankStats(cells: Array[(Double, Any, Long)], numericG: Boolean): RankStats = {
+    val rx = avgRanks(cells.map(c => (c._1, c._3)))
+    val rankOf = rx.map(t => java.lang.Double.doubleToLongBits(t._1) -> t._3).toMap
+    val groups = cells.groupMapReduce(_._2)(c =>
+      (c._3, c._3 * rankOf(java.lang.Double.doubleToLongBits(c._1))))((a, b) => (a._1 + b._1, a._2 + b._2))
+    val (sy, syy, sxy) =
+      if (!numericG) (0.0, 0.0, 0.0)
+      else {
+        val ry = avgRanks(groups.toSeq.map { case (g, (ng, _)) =>
+          (java.lang.Double.longBitsToDouble(g.asInstanceOf[Long]), ng) })
+        ry.foldLeft((0.0, 0.0, 0.0)) { case ((a, b, c), (g, ng, r)) =>
+          (a + ng * r, b + ng * r * r, c + groups(java.lang.Double.doubleToLongBits(g))._2 * r)
+        }
+      }
+    RankStats(groups.values.map(_._1).sum.toDouble, groups.values.map { case (ng, rg) => rg * rg / ng }.sum,
+      groups.size.toDouble, rx.map { case (_, t, _) => t * t * t - t }.sum.toDouble,
+      rx.map { case (_, t, r) => t * r }.sum, rx.map { case (_, t, r) => t * r * r }.sum, sy, syy, sxy)
+  }
+
+  /** [[RankStats]] per feature from a `(fid, x, g, cnt)` pool frame, for
+    * tables above the driver bound: x (and, with `spearman`, g) ranked by
+    * [[bucketedAvgRank]], group rank sums joined back, one collect.
+    */
+  private def distributedRankStats(pool: DataFrame, spearman: Boolean): Map[Int, RankStats] = {
+    val rx = bucketedAvgRank(pool.groupBy("fid", "x").agg(sum("cnt").as("n")), "x")
+    val grp = pool.join(rx.select("fid", "x", "r"), Seq("fid", "x"))
+      .groupBy("fid", "g").agg(sum("cnt").as("ng"), sum(col("cnt") * col("r")).as("rg"))
+    val ranked =
+      if (!spearman) grp.withColumn("r", lit(0.0))
+      else grp.join(bucketedAvgRank(grp.select(col("fid"), col("g"), col("ng").as("n")), "g")
+        .select("fid", "g", "r"), Seq("fid", "g"))
+    val (ng, rg, r, n) = (col("ng"), col("rg"), col("r"), col("n"))
+    ranked.groupBy("fid").agg(sum(ng).cast("double"), sum(rg * rg / ng), count(lit(1)).cast("double"),
+        sum(ng * r), sum(ng * r * r), sum(rg * r))
+      .join(rx.groupBy("fid").agg(sum(n * n * n - n).cast("double").as("tsum"), sum(n * r).as("sx"),
+        sum(n * r * r).as("sxx")), "fid")
+      .collect().map { row =>
+        def d(i: Int) = row.getDouble(i)
+        row.getInt(0) -> RankStats(d(1), d(2), d(3), d(7), d(8), d(9), d(4), d(5), d(6))
+      }.toMap
+  }
+
+  /** Per-feature nan fraction, mode frequency, cardinality and the
+    * chi²-derived unrounded Cramér's V vs a binary target
+    * (`selectors/measures/qualitative_measures.py`), from the histogram.
+    */
+  def qualitativeMetrics(df: DataFrame, target: String, quals: Seq[String]): Map[String, FeatureRank] =
     qualitativeMetricsFromHist(qualHistogram(df, target, quals), quals)
 
-  /** The one-pass categorical histogram shared by every qualitative
-    * selector measure (gates, Cramér's V, Tschuprow's T) — compute once per
-    * (df, quals) and derive all of them (guide §1.2: selectTask used to run
-    * this identical job twice).
+  /** The categorical histogram shared by every qualitative selector
+    * measure (gates, Cramér's V, Tschuprow's T), from the grouped pass.
     */
-  def qualHistogram(df: DataFrame, target: String, quals: Seq[String])
-      : Map[String, Array[BinaryCarver.HistRow]] =
-    if (quals.isEmpty) Map.empty
-    else BinaryCarver.histogram(df, target, quals.map(n => BinaryCarver.FeatureSpec(n, "categorical")))
+  def qualHistogram(df: DataFrame, target: String, quals: Seq[String]): Map[String, Array[BinaryCarver.HistRow]] =
+    using(new Aggregates(df, Some(target), Nil, quals))(_.qualHist)
 
-  private def qualitativeMetricsFromHist(
-      hist: Map[String, Array[BinaryCarver.HistRow]],
-      quals: Seq[String]
-  ): Map[String, FeatureRank] = {
-    if (quals.isEmpty) return Map.empty
+  private def qualitativeMetricsFromHist(hist: Map[String, Array[BinaryCarver.HistRow]],
+      quals: Seq[String]): Map[String, FeatureRank] =
     quals.map { name =>
       val rows = hist.getOrElse(name, Array.empty)
       val total = rows.map(_.count).sum.toDouble
       val nanCount = rows.filter(_.isNull).map(_.count).sum.toDouble
       val nonNull = rows.filterNot(_.isNull)
       val modeFreq = if (nonNull.isEmpty) 0.0 else nonNull.map(_.count).max / total
-      // chi2 on the (value × {0,1}) table, unrounded V (selector-side)
-      val obs = nonNull.map(r => Array(r.count - r.sumY, r.sumY))
-      val assoc =
-        if (obs.length < 2) 0.0
-        else {
-          val chi2 = Stats.pearsonChi2(obs, guardZeroExpected = true)
-          val nObs = nonNull.map(_.count).sum.toDouble
-          Stats.cramervTschuprowtUnrounded(chi2, nObs, obs.length.toDouble, 2.0)._1
-        }
       name -> FeatureRank(name, "categorical", nanCount / total, modeFreq,
-        nonNull.length.toLong, assoc, Double.NaN, passedGates = true)
+        nonNull.length.toLong, targetVT(nonNull)._1, Double.NaN, passedGates = true)
     }.toMap
-  }
 
-  /** Quantitative metrics in two jobs for ALL features: one wide
-    * aggregation (nan fraction, Pearson, cardinality) and one melt-groupBy
-    * pass for Spearman. Spearman uses average ranks computed from grouped
-    * (feature, value[, y]) counts — the shuffles are sized by column
-    * cardinality, not row count, and every window is partitioned by
-    * feature id (never the round-1 global single-partition `percent_rank`).
+  /** Unrounded Cramér's V and Tschuprow's T of a contingency table
+    * (chi² with zero-expected cells skipped); 0 below two rows or columns.
     */
-  def quantitativeMetrics(
-      df: DataFrame,
-      target: String,
-      quants: Seq[String]
-  ): Map[String, FeatureRank] = quantitativeMetricsWith(df, target, quants, None)
+  private def cramerTschuprow(obs: Array[Array[Double]], nObs: Double): (Double, Double) =
+    if (obs.length < 2 || obs.head.length < 2) (0.0, 0.0)
+    else Stats.cramervTschuprowtUnrounded(Stats.pearsonChi2(obs, guardZeroExpected = true),
+      nObs, obs.length.toDouble, obs.head.length.toDouble)
 
-  /** Gate + Pearson + cardinality only (ONE wide aggregation): for callers
-    * that never read the spearman column, skipping its multi-stage rank
-    * pass halves the job count.
+  /** V and T of a qualitative feature's non-null histogram rows against
+    * the binary target (the (value × {0,1}) table, selector-side).
     */
-  def quantitativeMetricsNoSpearman(
-      df: DataFrame,
-      target: String,
-      quants: Seq[String]
-  ): Map[String, FeatureRank] = quantitativeMetricsWith(df, target, quants, Some(Map.empty))
+  private def targetVT(nonNull: Array[BinaryCarver.HistRow]): (Double, Double) =
+    cramerTschuprow(nonNull.map(r => Array(r.count - r.sumY, r.sumY)), nonNull.map(_.count).sum.toDouble)
 
-  /** [[quantitativeMetrics]] with an optional precomputed Spearman map:
-    * the regression/ordinal task preset already ran spearmanByFeature for
-    * its ranking override, and the classification preset never reads the
-    * spearman column — either way the duplicate multi-stage rank pass is
-    * skipped (`Some(Map.empty)` = don't compute, report NaN).
+  /** Quantitative metrics for ALL features: nan fraction and Pearson from
+    * the global row, cardinality and Spearman (average ranks over grouped
+    * `(feature, value, y)` counts) from the grouped pass.
     */
-  private def quantitativeMetricsWith(
-      df: DataFrame,
-      target: String,
-      quants: Seq[String],
-      spearmanPre: Option[Map[String, Double]]
-  ): Map[String, FeatureRank] = {
-    if (quants.isEmpty) return Map.empty
-    val y = col(target).cast("double")
-    val aggs = quants.flatMap { n =>
-      val c = col(n).cast("double")
-      Seq(
-        avg(c.isNull.cast("double")).as(s"${n}__nan"),
-        safeCorr(c, y).as(s"${n}__corr"),
-        count_distinct(c).as(s"${n}__card")
-      )
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val sp = spearmanPre.getOrElse(spearmanByFeature(df, target, quants))
+  def quantitativeMetrics(df: DataFrame, target: String, quants: Seq[String]): Map[String, FeatureRank] =
+    using(new Aggregates(df, Some(target), quants, Nil).overlapped())(quantMetricsOf(_, true))
 
-    quants.map { n =>
-      val nanF = Option(row.getAs[java.lang.Double](s"${n}__nan")).map(_.toDouble).getOrElse(0.0)
-      val pearson = Option(row.getAs[java.lang.Double](s"${n}__corr")).map(_.toDouble).getOrElse(Double.NaN)
-      val card = row.getAs[Long](s"${n}__card")
-      n -> FeatureRank(n, "quantitative", nanF, Double.NaN, card,
-        math.abs(pearson), sp.getOrElse(n, Double.NaN), passedGates = true)
+  /** Gate + Pearson + cardinality only: for callers that never read the
+    * spearman column (no rank derivation).
+    */
+  def quantitativeMetricsNoSpearman(df: DataFrame, target: String, quants: Seq[String]): Map[String, FeatureRank] =
+    using(new Aggregates(df, Some(target), quants, Nil).overlapped())(quantMetricsOf(_, false))
+
+  private def quantMetricsOf(a: Aggregates, withSpearman: Boolean): Map[String, FeatureRank] = {
+    val sp = if (withSpearman) a.spearman else Map.empty[String, Double]
+    a.quants.map { n =>
+      n -> FeatureRank(n, "quantitative", a.nanFreq(n), Double.NaN, a.cardinality(n),
+        math.abs(a.pearson(n)), sp.getOrElse(n, Double.NaN), passedGates = true)
     }.toMap
   }
 
   /** "Distance" ranking measure (F2) — the reference's DistanceMeasure
     * (`selectors/measures/quantitative_measures.py:272-288`) is
     * `scipy.spatial.distance.correlation(x, y) - 1`, and scipy's
-    * correlation DISTANCE is `1 - pearson`, so the measure is exactly
-    * `-pearson` over the feature's non-null rows. Shares the one batched
-    * aggregation with [[quantitativeMetrics]]'s Pearson — no extra job.
+    * correlation DISTANCE is `1 - pearson`: exactly the global
+    * aggregate's `-pearson`.
     */
-  def distanceByFeature(df: DataFrame, target: String, quants: Seq[String]): Map[String, Double] = {
-    if (quants.isEmpty) return Map.empty
-    val y = col(target).cast("double")
-    val aggs = quants.map { n => safeCorr(col(n).cast("double"), y).as(s"${n}__corr") }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    quants.map { n =>
-      val pearson = Option(row.getAs[java.lang.Double](s"${n}__corr")).map(_.toDouble).getOrElse(Double.NaN)
-      n -> -pearson
-    }.toMap
-  }
+  def distanceByFeature(df: DataFrame, target: String, quants: Seq[String]): Map[String, Double] =
+    new Aggregates(df, Some(target), quants, Nil).pearson.view.mapValues(-_).toMap
 
   /** Spearman rho per feature vs the target, over rows where the feature is
     * non-null. Average-rank (tie-corrected) formulation as the Pearson
-    * correlation of rank transforms, computed entirely from grouped counts:
-    *
-    *  - melt to (fid, v, yv) and count — one shuffle sized by Σ per-feature
-    *    (value × target-value) cardinality;
-    *  - rank(v) within fid from the per-(fid, v) cumulative counts;
-    *  - rank(yv) within fid likewise (the feature's null rows are excluded,
-    *    so target ranks are per-feature);
-    *  - weighted Pearson over the grouped triples.
+    * correlation of rank transforms, computed entirely from the grouped
+    * `(fid, v, y)` counts: ranks of v within fid from cumulative counts,
+    * group rank sums per y, ranks of y over the feature's non-null rows.
     */
-  def spearmanByFeature(df: DataFrame, target: String, quants: Seq[String]): Map[String, Double] = {
-    if (quants.isEmpty) return Map.empty
-    val melted = df
-      .select(col(target).cast("double").as("yv"),
-        explode(map(quants.flatMap(n => Seq(lit(n), col(n).cast("double"))): _*)).as(Seq("fid", "v")))
-      .filter(col("v").isNotNull && !isnan(col("v")) && col("yv").isNotNull)
-    // persisted: the grouped counts feed the two rank derivations AND the
-    // final join — unpersisted, each reference replays the melt+groupBy
-    // over the input (3 full scans)
-    val g = melted.groupBy(col("fid"), col("v"), col("yv")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val rx = bucketedAvgRank(g.groupBy("fid", "v").agg(sum("cnt").as("n")), "v", "rx")
-    val ry = bucketedAvgRank(g.groupBy("fid", "yv").agg(sum("cnt").as("n")), "yv", "ry")
-
-    val joined = g.join(rx, Seq("fid", "v")).join(ry, Seq("fid", "yv"))
-    val stats = joined.groupBy("fid").agg(
-      sum(col("cnt")).cast("double").as("n"),
-      sum(col("cnt") * col("rx")).as("sx"),
-      sum(col("cnt") * col("ry")).as("sy"),
-      sum(col("cnt") * col("rx") * col("rx")).as("sxx"),
-      sum(col("cnt") * col("ry") * col("ry")).as("syy"),
-      sum(col("cnt") * col("rx") * col("ry")).as("sxy")
-    ).collect()
-    g.unpersist()
-    stats.map { r =>
-      val (n, sx, sy, sxx, syy, sxy) =
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6))
-      val den = math.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-      r.getString(0) -> (if (den == 0 || den.isNaN) Double.NaN else (n * sxy - sx * sy) / den)
-    }.toMap
-  }
+  def spearmanByFeature(df: DataFrame, target: String, quants: Seq[String]): Map[String, Double] =
+    using(new Aggregates(df, Some(target), quants, Nil))(_.spearman)
 
   /** Kruskal-Wallis H (tie-corrected) per quantitative feature with the
     * target as the grouping variable, plus the ε²/η² effect sizes
-    * (`selectors/measures/quantitative_measures.py:36-160`) — computed from
-    * the same melt-groupBy machinery as Spearman: one shuffle sized by
-    * cardinality, ranks from grouped cumulative counts, never a row sort.
+    * (`selectors/measures/quantitative_measures.py:36-160`) — from the same
+    * grouped counts and rank path as Spearman, never a row sort.
     */
   final case class KruskalRow(h: Double, epsilonSq: Double, etaSq: Double)
 
-  def kruskalByFeature(df: DataFrame, target: String, quants: Seq[String]): Map[String, KruskalRow] = {
-    if (quants.isEmpty) return Map.empty
-    val melted = df
-      .select(col(target).cast("double").as("yv"),
-        explode(map(quants.flatMap(n => Seq(lit(n), col(n).cast("double"))): _*)).as(Seq("fid", "v")))
-      .filter(col("v").isNotNull && !isnan(col("v")) && col("yv").isNotNull)
-    // persisted: g feeds the rank derivation and the join (2 references)
-    val g = melted.groupBy(col("fid"), col("v"), col("yv")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // average rank of each x value within fid (ties -> midrank)
-    val rx = bucketedAvgRank(g.groupBy("fid", "v").agg(sum("cnt").as("n")), "v", "rx",
-      keepTie = true)
-    val joined = g.join(rx, Seq("fid", "v"))
-    val grpStats = joined.groupBy("fid", "yv").agg(
-      sum(col("cnt")).cast("double").as("ng"),
-      sum(col("cnt") * col("rx")).as("rg"))
-    val tieStats = rx.groupBy("fid").agg(
-      sum(col("tie") * col("tie") * col("tie") - col("tie")).cast("double").as("tsum"))
-    val rows = grpStats.groupBy("fid").agg(
-      sum(col("ng")).as("n"),
-      sum(col("rg") * col("rg") / col("ng")).as("ssbn"),
-      count(lit(1)).as("k")
-    ).join(tieStats, Seq("fid")).collect()
-    g.unpersist()
-    rows.map { r =>
-      val n = r.getDouble(1); val ssbn = r.getDouble(2); val k = r.getLong(3).toDouble
-      val tsum = r.getDouble(4)
-      val h0 = 12.0 / (n * (n + 1.0)) * ssbn - 3.0 * (n + 1.0)
-      val tie = 1.0 - tsum / (n * n * n - n)
-      val h = if (tie <= 0) Double.NaN else h0 / tie
-      val eps = if (n > 1) h / (n - 1.0) else Double.NaN
-      val eta = if (n - k > 0) math.max(0.0, (h - k + 1.0) / (n - k)) else Double.NaN
-      r.getString(0) -> KruskalRow(h, eps, eta)
-    }.toMap
-  }
+  def kruskalByFeature(df: DataFrame, target: String, quants: Seq[String]): Map[String, KruskalRow] =
+    using(new Aggregates(df, Some(target), quants, Nil))(_.kruskal)
 
   /** R measure per quantitative feature vs a binary/low-cardinality target
     * (`quantitative_measures.py:RMeasure`): sqrt of the OLS R² of
@@ -350,56 +489,14 @@ object Selector {
   /** Full |Pearson| matrix over a quantitative block in ONE aggregation
     * (k stddevs + k(k−1)/2 covariances as codegen'd agg expressions).
     */
-  def quantCorrMatrix(df: DataFrame, quants: Seq[String]): Map[(String, String), Double] = {
-    if (quants.size < 2) return Map.empty
-    val pairs = for { i <- quants.indices; j <- i + 1 until quants.size } yield (quants(i), quants(j))
-    val aggs = quants.map(n => stddev_samp(col(n).cast("double")).as(s"sd__$n")) ++
-      pairs.zipWithIndex.map { case ((a, b), k) =>
-        covar_samp(col(a).cast("double"), col(b).cast("double")).as(s"cv__$k")
-      }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    def get(n: String): Option[Double] = Option(row.getAs[java.lang.Double](n)).map(_.toDouble)
-    pairs.zipWithIndex.flatMap { case ((a, b), k) =>
-      val r = (for {
-        sa <- get(s"sd__$a"); sb <- get(s"sd__$b"); cv <- get(s"cv__$k")
-        if sa * sb > 0
-      } yield math.abs(cv / (sa * sb))).getOrElse(0.0)
-      Seq((a, b) -> r, (b, a) -> r)
-    }.toMap
-  }
+  def quantCorrMatrix(df: DataFrame, quants: Seq[String]): Map[(String, String), Double] =
+    new Aggregates(df, None, quants, Nil, redundancy = true).corrMatrix(quants)
 
-  /** Cramér's V for every qualitative pair in ONE batched crosstab job:
-    * each row emits one (pair, value_a, value_b) per pair, a single
-    * groupBy counts them all, and the tiny grouped result collects once.
+  /** Cramér's V for every qualitative pair from ONE batched crosstab: each
+    * row emits one (pair, value_a, value_b) per pair into the grouped pass.
     */
-  def qualPairMatrix(df: DataFrame, quals: Seq[String]): Map[(String, String), Double] = {
-    if (quals.size < 2) return Map.empty
-    val pairs = for { i <- quals.indices; j <- i + 1 until quals.size } yield (quals(i), quals(j))
-    val pairStructs = pairs.zipWithIndex.map { case ((a, b), k) =>
-      struct(lit(k).as("pid"), col(a).cast("string").as("va"), col(b).cast("string").as("vb"))
-    }
-    val counts = df
-      .select(explode(array(pairStructs: _*)).as("p"))
-      .groupBy(col("p.pid"), col("p.va"), col("p.vb"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    val byPair = counts.groupBy(_.getInt(0))
-    pairs.zipWithIndex.flatMap { case ((a, b), k) =>
-      val rows = byPair.getOrElse(k, Array.empty)
-      val aVals = rows.map(_.getString(1)).distinct.zipWithIndex.toMap
-      val bVals = rows.map(_.getString(2)).distinct.zipWithIndex.toMap
-      val v =
-        if (aVals.size < 2 || bVals.size < 2) 0.0
-        else {
-          val obs = Array.fill(aVals.size, bVals.size)(0.0)
-          rows.foreach(r => obs(aVals(r.getString(1)))(bVals(r.getString(2))) += r.getLong(3).toDouble)
-          val chi2 = Stats.pearsonChi2(obs, guardZeroExpected = true)
-          Stats.cramervTschuprowtUnrounded(chi2, rows.map(_.getLong(3)).sum.toDouble,
-            aVals.size.toDouble, bVals.size.toDouble)._1
-        }
-      Seq((a, b) -> v, (b, a) -> v)
-    }.toMap
-  }
+  def qualPairMatrix(df: DataFrame, quals: Seq[String]): Map[(String, String), Double] =
+    using(new Aggregates(df, None, Nil, quals, redundancy = true))(_.pairMatrix(quals))
 
   /** Single-pair association (kept for targeted checks; `select` uses the
     * batched matrices instead of per-pair jobs).
@@ -451,9 +548,8 @@ object Selector {
 
   /** Best-first selection (`selectors/filters`): gate, rank by association
     * desc, walk best-first dropping any feature too associated with an
-    * already-kept better one, stop at nBest per kind. All pairwise
-    * associations are precomputed in two batched jobs; the walk is pure
-    * driver-side lookups.
+    * already-kept better one, stop at nBest per kind. All associations
+    * come from the two aggregates; the walk is driver-side lookups.
     */
   def select(
       df: DataFrame,
@@ -461,7 +557,8 @@ object Selector {
       quants: Seq[String],
       quals: Seq[String],
       config: Config = Config()
-  ): Selection = selectWith(df, target, quants, quals, config, Map.empty)
+  ): Selection = using(new Aggregates(df, Some(target), quants, quals, redundancy = true).overlapped())(
+    selectWith(_, config, Map.empty, withSpearman = true))
 
   /** Task presets (F6): the reference's selector classes pick the ranking
     * measure per (task, feature kind) — `classification_selector.py:7-17`,
@@ -480,50 +577,22 @@ object Selector {
       quals: Seq[String],
       task: String,
       config: Config = Config()
-  ): Selection = task match {
-    // the two ranking passes per preset are data-independent — submitted
-    // concurrently (guide §2.6: actions are only sequential because the
-    // driver calls them sequentially; the later pass's tasks back-fill
-    // executor cores the first pass's tail leaves idle). Same results —
-    // only the submission overlaps.
-    case "classification" =>
-      // the qualitative histogram serves BOTH the Tschuprow T override and
-      // the gate metrics; the spearman column is never read under a task
-      // preset, so its rank pass is skipped (Some(Map.empty))
-      val (hist, kru) = concurrently(
-        qualHistogram(df, target, quals),
-        kruskalByFeature(df, target, quants))
-      val overrides = kru.view.mapValues(_.etaSq).toMap ++ tschuprowtFromHist(hist, quals)
-      selectWith(df, target, quants, quals, config, overrides,
-        Map("quantitative" -> "Kruskal", "categorical" -> "TschuprowT"),
-        qualHist = Some(hist), spearmanPre = Some(Map.empty))
-    case "regression" | "ordinal" =>
-      // the spearman override IS the spearman metric — pass it through
-      // instead of re-running the identical rank pass inside
-      // quantitativeMetrics
-      val (sp, kruRev) = concurrently(
-        spearmanByFeature(df, target, quants),
-        kruskalReversedByFeature(df, target, quals))
-      val overrides = sp.view.mapValues(math.abs(_)).toMap ++
-        kruRev.view.mapValues(_.etaSq).toMap
-      selectWith(df, target, quants, quals, config, overrides,
-        Map("quantitative" -> "Spearman", "categorical" -> "KruskalReversed"),
-        spearmanPre = Some(sp))
-    case other => throw new IllegalArgumentException(
-      s"unknown task '$other' (classification | regression | ordinal)")
-  }
-
-  /** Run two independent job-submitting computations concurrently (the
-    * Spark scheduler interleaves their jobs; results and their uses are
-    * unchanged — guide §2.6's overlap-independent-jobs pattern).
-    */
-  private def concurrently[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val a = Future(fa)
-    val b = Future(fb)
-    (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf))
+  ): Selection = {
+    if (!Set("classification", "regression", "ordinal")(task)) throw new IllegalArgumentException(
+      s"unknown task '$task' (classification | regression | ordinal)")
+    // both presets read their ranking measures from the gates' two aggregates
+    using(new Aggregates(df, Some(target), quants, quals, redundancy = true).overlapped()) { a =>
+      if (task == "classification") {
+        val overrides = a.kruskal.view.mapValues(_.etaSq).toMap ++ tschuprowtFromHist(a.qualHist, quals)
+        selectWith(a, config, overrides,
+          Map("quantitative" -> "Kruskal", "categorical" -> "TschuprowT"), withSpearman = false)
+      } else {
+        val overrides = a.spearman.view.mapValues(math.abs(_)).toMap ++
+          a.kruskalReversed.view.mapValues(_.etaSq).toMap
+        selectWith(a, config, overrides,
+          Map("quantitative" -> "Spearman", "categorical" -> "KruskalReversed"), withSpearman = true)
+      }
+    }
   }
 
   /** Tschuprow's T per qualitative feature vs the target (classification
@@ -533,78 +602,26 @@ object Selector {
     tschuprowtFromHist(qualHistogram(df, target, quals), quals)
 
   private def tschuprowtFromHist(
-      hist: Map[String, Array[BinaryCarver.HistRow]], quals: Seq[String]): Map[String, Double] = {
-    if (quals.isEmpty) return Map.empty
-    quals.map { name =>
-      val nonNull = hist.getOrElse(name, Array.empty).filterNot(_.isNull)
-      val obs = nonNull.map(r => Array(r.count - r.sumY, r.sumY))
-      val t =
-        if (obs.length < 2) 0.0
-        else {
-          val chi2 = Stats.pearsonChi2(obs, guardZeroExpected = true)
-          Stats.cramervTschuprowtUnrounded(chi2, nonNull.map(_.count).sum.toDouble,
-            obs.length.toDouble, 2.0)._2
-        }
-      name -> t
-    }.toMap
-  }
+      hist: Map[String, Array[BinaryCarver.HistRow]], quals: Seq[String]): Map[String, Double] =
+    quals.map(n => n -> targetVT(hist.getOrElse(n, Array.empty).filterNot(_.isNull))._2).toMap
 
   /** REVERSED Kruskal-Wallis per qualitative feature vs a numeric target
     * (`_vectorized.py:kruskal_h_reversed`): the feature's modalities are
-    * the groups, the target is the ranked variable. Same cardinality-sized
-    * grouped-rank machinery as [[kruskalByFeature]] with the roles swapped.
+    * the groups, the target is the ranked variable. Same grouped counts and
+    * rank path as [[kruskalByFeature]] with the roles swapped.
     */
-  def kruskalReversedByFeature(df: DataFrame, target: String, quals: Seq[String]): Map[String, KruskalRow] = {
-    if (quals.isEmpty) return Map.empty
-    val melted = df
-      .select(col(target).cast("double").as("yv"),
-        explode(map(quals.flatMap(n => Seq(lit(n), col(n).cast("string"))): _*)).as(Seq("fid", "g")))
-      .filter(col("g").isNotNull && col("yv").isNotNull)
-    // persisted: gr feeds the rank derivation and the join (2 references)
-    val gr = melted.groupBy(col("fid"), col("g"), col("yv")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // average rank of each y value within fid (ties -> midrank)
-    val ry = bucketedAvgRank(gr.groupBy("fid", "yv").agg(sum("cnt").as("n")), "yv", "ry",
-      keepTie = true)
-    val joined = gr.join(ry, Seq("fid", "yv"))
-    val grpStats = joined.groupBy("fid", "g").agg(
-      sum(col("cnt")).cast("double").as("ng"),
-      sum(col("cnt") * col("ry")).as("rg"))
-    val tieStats = ry.groupBy("fid").agg(
-      sum(col("tie") * col("tie") * col("tie") - col("tie")).cast("double").as("tsum"))
-    val rows = grpStats.groupBy("fid").agg(
-      sum(col("ng")).as("n"),
-      sum(col("rg") * col("rg") / col("ng")).as("ssbn"),
-      count(lit(1)).as("k")
-    ).join(tieStats, Seq("fid")).collect()
-    gr.unpersist()
-    rows.map { r =>
-      val n = r.getDouble(1); val ssbn = r.getDouble(2); val k = r.getLong(3).toDouble
-      val tsum = r.getDouble(4)
-      val h0 = 12.0 / (n * (n + 1.0)) * ssbn - 3.0 * (n + 1.0)
-      val tie = 1.0 - tsum / (n * n * n - n)
-      val h = if (tie <= 0) Double.NaN else h0 / tie
-      val eps = if (n > 1) h / (n - 1.0) else Double.NaN
-      val eta = if (n - k > 0) math.max(0.0, (h - k + 1.0) / (n - k)) else Double.NaN
-      r.getString(0) -> KruskalRow(h, eps, eta)
-    }.toMap
-  }
+  def kruskalReversedByFeature(df: DataFrame, target: String, quals: Seq[String]): Map[String, KruskalRow] =
+    using(new Aggregates(df, Some(target), Nil, quals))(_.kruskalReversed)
 
-  /** Average rank of each value within fid over grouped `(fid, value, n)`
-    * counts WITHOUT a per-feature single-task window: a window partitioned
-    * by `fid` alone puts a feature's ENTIRE grouped-count table in one
-    * task — for a high-cardinality quantitative (id-like) feature that is
-    * ~|rows| rows through one task at corpus scale. Instead, global
-    * approximate splits of the value range bucket the cumulative sum
-    * (exactness unaffected — buckets only partition it), small per-(fid,
-    * bucket) totals collect for driver-side exclusive offsets, and the
-    * window runs within (fid, bucket) — the same shape as the continuous
-    * carver's rank job and prebin/Quantiles.exactEdgesDF. Rank values are
-    * identical (exact integer-count arithmetic). NaN values route to the
-    * LAST bucket, matching their position in an ascending value sort.
+  /** Average rank `r` of each value within fid over grouped `(fid, value,
+    * n)` counts, above the driver bound, without a window partitioned by
+    * fid alone (an id-like feature would put ~|rows| rows through one
+    * task): approximate global splits bucket the value range, small
+    * per-(fid, bucket) totals collect for driver-side exclusive offsets,
+    * and the window runs within (fid, bucket). Ranks stay exact integer
+    * arithmetic; NaN routes to the LAST bucket, as in an ascending sort.
     */
-  private def bucketedAvgRank(grouped: DataFrame, valueCol: String, out: String,
-      keepTie: Boolean = false): DataFrame = {
+  private def bucketedAvgRank(grouped: DataFrame, valueCol: String): DataFrame = {
     val splits = grouped.stat.approxQuantile(valueCol, (1 until 32).map(_ / 32.0).toArray, 0.05)
       .filterNot(_.isNaN).distinct.sorted
     val bucketCol = graft.transform.BinarySearchBucketize.column(
@@ -612,7 +629,7 @@ object Selector {
       nanBin = splits.length)
     val gB = grouped.withColumn("bucket", bucketCol)
     val per = gB.groupBy(col("fid"), col("bucket")).agg(sum(col("n")).as("bn")).collect()
-    val offs: Map[String, Long] = per.groupBy(_.getString(0)).toSeq.flatMap { case (fid, rows) =>
+    val offs: Map[String, Long] = per.groupBy(_.getInt(0)).toSeq.flatMap { case (fid, rows) =>
       val sorted = rows.toSeq.sortBy(_.getInt(1))
       sorted.scanLeft(0L)((acc, r) => acc + r.getLong(2)).init.zip(sorted)
         .map { case (off, r) => s"$fid#${r.getInt(1)}" -> off }
@@ -624,37 +641,23 @@ object Selector {
       .rowsBetween(Window.unboundedPreceding, -1)
     gB
       .withColumn("cum", coalesce(sum(col("n")).over(w), lit(0L)) + offsetExpr)
-      .select(Seq(col("fid"), col(valueCol), (col("cum") + (col("n") + 1) / 2.0).as(out)) ++
-        (if (keepTie) Seq(col("n").as("tie")) else Nil): _*)
+      .select(col("fid"), col(valueCol), col("n"), (col("cum") + (col("n") + 1) / 2.0).as("r"))
   }
 
   private def selectWith(
-      df: DataFrame,
-      target: String,
-      quants: Seq[String],
-      quals: Seq[String],
+      a: Aggregates,
       config: Config,
       assocOverride: Map[String, Double],
       // ranking-measure display names per kind (the report's `measure`
       // column — reference strips the "Measure" suffix the same way)
       measureNames: Map[String, String] = Map(
         "quantitative" -> "Pearson", "categorical" -> "CramerV"),
-      qualHist: Option[Map[String, Array[BinaryCarver.HistRow]]] = None,
-      spearmanPre: Option[Map[String, Double]] = None
+      withSpearman: Boolean
   ): Selection = {
-    // gate metrics and outlier rates are data-independent aggregations over
-    // the same frame — overlapped (guide §2.6); results unchanged
-    val (quantMetrics, (qualMetrics, outliers)) = concurrently(
-      quantitativeMetricsWith(df, target, quants, spearmanPre),
-      concurrently(
-        qualHist match {
-          case Some(h) => qualitativeMetricsFromHist(h, quals)
-          case None => qualitativeMetrics(df, target, quals)
-        },
-        if (config.maxZscoreOutlierRate.nonEmpty || config.maxIqrOutlierRate.nonEmpty)
-          outlierRates(df, quants)
-        else Map.empty: Map[String, OutlierRates]))
-    val metrics = (quantMetrics ++ qualMetrics)
+    val outliers =
+      if (config.maxZscoreOutlierRate.nonEmpty || config.maxIqrOutlierRate.nonEmpty) outlierRates(a.df, a.quants)
+      else Map.empty[String, OutlierRates]
+    val metrics = (quantMetricsOf(a, withSpearman) ++ qualitativeMetricsFromHist(a.qualHist, a.quals))
       .values.toVector
       .map(m => assocOverride.get(m.name).fold(m)(a => m.copy(association = a)))
     val dropped = Vector.newBuilder[(FeatureRank, String)]
@@ -673,18 +676,15 @@ object Selector {
       else if (!iOk) dropped += ((m, f"iqr_outliers=${outliers(m.name).iqrRate}%.3f"))
       nanOk && modeOk && cardOk && zOk && iOk
     }
-    // pairwise association matrices over the gated survivors only
-    // (independent per kind — overlapped, §2.6)
-    val gatedQuants = gated.filter(_.kind == "quantitative").map(_.name)
-    val gatedQuals = gated.filter(_.kind == "categorical").map(_.name)
-    val (quantAssoc, qualAssoc) = concurrently(
-      quantCorrMatrix(df, gatedQuants), qualPairMatrix(df, gatedQuals))
-    val assoc = quantAssoc ++ qualAssoc
+    // pairwise association matrices over the gated survivors only, read
+    // from the aggregates (no job)
+    val assoc = a.corrMatrix(gated.filter(_.kind == "quantitative").map(_.name)) ++
+      a.pairMatrix(gated.filter(_.kind == "categorical").map(_.name))
 
     // per-kind caps: either the flat nBest, or the largest-remainder split
     // of one total budget (F5)
     val budgets: Map[String, Int] = config.totalBudget match {
-      case Some(tb) => splitBudget(tb, Seq("quantitative" -> quants.size, "categorical" -> quals.size))
+      case Some(tb) => splitBudget(tb, Seq("quantitative" -> a.quants.size, "categorical" -> a.quals.size))
       case None => Map("quantitative" -> config.nBest, "categorical" -> config.nBest)
     }
     val ranked = gated.sortBy(m => (-nz(m.association), m.name))

@@ -123,4 +123,89 @@ class SelectorSpec extends SparkSuite {
     assert(sel.kept.length == 1)
     assert(sel.dropped.exists(_._2 == "budget"))
   }
+
+  /** Spark jobs `body` launches, with AQE and auto-broadcast off so each
+    * action is one job (as in DedupSpec's CC job-budget test).
+    */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    val bcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      Thread.sleep(300) // let queued listener events drain
+      (r, counter.get())
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcastBefore)
+    }
+  }
+
+  test("select runs the global aggregate and the grouped pass only: at most 3 jobs") {
+    // one job for the global aggregate; the grouped pass's bounded collect
+    // takes one shuffle partition first, then the other three (two jobs)
+    val (sel, jobs) = jobsOf(Selector.select(df, "y",
+      quants = Seq("signal", "copy", "noise", "constant"), quals = Seq("cat", "cat_noise"),
+      config = Selector.Config(nBest = 2)))
+    assert(jobs <= 3, s"ran $jobs jobs")
+    assert(sel.kept.nonEmpty)
+    val (_, taskJobs) = jobsOf(Selector.selectTask(df, "y", Seq("signal", "noise"),
+      Seq("cat", "cat_noise"), task = "classification"))
+    assert(taskJobs <= 3, s"selectTask ran $taskJobs jobs")
+    // rank measures alone never run the global aggregate
+    val (_, rankJobs) = jobsOf(Selector.kruskalByFeature(df, "y", Seq("signal", "noise")))
+    assert(rankJobs <= 2, s"kruskalByFeature ran $rankJobs jobs")
+  }
+
+  test("driver ranks and bucketed-window ranks agree on both sides of the row bound") {
+    // ties (few distinct values), NaN feature values and null-y rows
+    val t = (0 until 1500).map { i =>
+      val signal = if (i % 11 == 0) Double.NaN else (i % 40).toDouble
+      val noise = ((i * 7919) % 13).toDouble
+      val yc = if (i % 17 == 0) None else Some((i % 40) / 8 + (i * 31 % 3).toDouble)
+      (signal, noise, s"c${i % 4}", s"n${(i * 7919) % 5}", yc)
+    }.toDF("signal", "noise", "cat", "cat_noise", "yc")
+    def measures(bound: Long) = {
+      val a = new Selector.Aggregates(t, Some("yc"), Seq("signal", "noise"), Seq("cat", "cat_noise"),
+        redundancy = true, bound = bound)
+      try (a.spearman, a.kruskal, a.kruskalReversed, a.cardinality,
+        a.qualHist.view.mapValues(_.toSeq.map(r => (r.sv, r.isNull, r.count, r.sumY))).toMap,
+        a.pairMatrix(Seq("cat", "cat_noise")))
+      finally a.release()
+    }
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    val driver = measures(Long.MaxValue)
+    val window = measures(0L)
+    assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore, "grouped frame left persisted")
+    def close(a: Double, b: Double) = (a.isNaN && b.isNaN) || math.abs(a - b) <= 1e-12 * math.max(1.0, math.abs(a))
+    assert(driver._1.keySet == Set("signal", "noise") && driver._1.keySet == window._1.keySet)
+    driver._1.foreach { case (n, v) => assert(close(v, window._1(n)), s"spearman $n: $v vs ${window._1(n)}") }
+    Seq(driver._2 -> window._2, driver._3 -> window._3).foreach { case (d, w) =>
+      assert(d.keySet == w.keySet && d.nonEmpty)
+      d.foreach { case (n, k) =>
+        val o = w(n)
+        assert(close(k.h, o.h) && close(k.epsilonSq, o.epsilonSq) && close(k.etaSq, o.etaSq), s"kruskal $n: $k vs $o")
+      }
+    }
+    assert(driver._4 == window._4 && driver._5 == window._5)
+    assert(driver._6.forall { case (p, v) => close(v, window._6(p)) })
+  }
+
+  test("grouped-pass cardinality equals count_distinct over NaN, -0.0 and 0.0") {
+    val t = Seq(Some(0.0), Some(-0.0), Some(Double.NaN), Some(Double.NaN), Some(1.0), None, Some(-0.0), Some(2.5))
+      .zipWithIndex.map { case (x, i) => (x, i % 2) }.toDF("x", "y")
+    val expected = t.agg(count_distinct(col("x"))).head().getLong(0)
+    assert(Selector.quantitativeMetrics(t, "y", Seq("x"))("x").cardinality == expected)
+    val a = new Selector.Aggregates(t, Some("y"), Seq("x"), Nil, bound = 0L)
+    try assert(a.cardinality("x") == expected) finally a.release()
+  }
 }
