@@ -998,10 +998,9 @@ object SparkEntry {
   private def mcHist(s: SparkSession, dir: String)
       : (Map[String, Array[graft.carve.OrdinalCarver.KHistRow]], Vector[String]) =
     cachedModel(s"mcHist:$dir") {
-      import graft.carve.{BinaryCarver, MulticlassCarver}
-      val df = ovrFrame(s, dir)
-      val sketched = BinaryCarver.sketchHighCardinality(df, mcSpecs, BinaryCarver.Config())
-      MulticlassCarver.histogramM(df, "y", mcSpecs, sketched)
+      val (hist, _) = graft.carve.MulticlassCarver.classStage(ovrFrame(s, dir), "y", mcSpecs, None,
+        graft.carve.BinaryCarver.Config(), "MulticlassCarver")
+      (hist.total, hist.classes)
     }
 
   private def ovrDocs(s: SparkSession, dir: String): graft.carve.OneVsRestCarver.Model =

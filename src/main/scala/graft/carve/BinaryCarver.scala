@@ -651,14 +651,10 @@ object BinaryCarver {
     validateInputs(train, target, specs)
     val sketched = sketchHighCardinality(train, specs, config)
     // cv>1 shares ONE scan between the train histogram and all fold views
-    // (fold key = one more groupBy column; the total is the fold sum)
-    val (trainHist, foldHists) =
-      if (config.cv > 1)
-        histogramWithFolds(train, target, specs, config.cv, sketched, Option(config.foldCol),
-          requireBinaryY = true)
-      else (histogram(train, target, specs, sketched, requireBinaryY = true), Nil)
+    val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Summed(requireBinaryY = true),
+      Crosstab.folds(config.cv, config.foldCol))(Crosstab.summed)
     val devHist = dev.map(d => histogram(d, target, specs, sketched, requireBinaryY = true))
-    fitFromHistograms(trainHist, devHist, target, specs, config, foldHists)
+    fitFromHistograms(hist.total, devHist, target, specs, config, hist.folds)
   }
 
   /** Sketch path for high-cardinality quantitative columns, in ONE cluster
@@ -726,81 +722,6 @@ object BinaryCarver {
       case Some(c) => col(c).cast("long")
       case None => foldKeyExpr(specs, target, cv)
     }
-
-  /** Validates one collected fold id — shared by every family's fold
-    * histogram loop so a user fold column with nulls or out-of-range ids
-    * raises the same typed error everywhere (instead of an NPE or a
-    * silently truncated array index).
-    */
-  def checkFoldId(r: org.apache.spark.sql.Row, idx: Int, cv: Int, family: String): Int = {
-    require(!r.isNullAt(idx),
-      s"[$family] fold column carries nulls — every row needs a fold id in [0, cv)")
-    val raw = r.getLong(idx)
-    require(raw >= 0 && raw < cv,
-      s"[$family] fold id $raw outside [0, $cv) — foldCol must carry integer folds 0..cv-1")
-    raw.toInt
-  }
-
-  /** Train histogram + all `cv` fold histograms from ONE cluster pass: the
-    * fold key is one more groupBy column, each held-out fold's view is the
-    * rows carrying its key, and the full-train histogram is the sum over
-    * folds (no second scan — `base_carver.py:607-628` semantics at 1× the
-    * IO of a plain fit).
-    */
-  def histogramWithFolds(df: DataFrame, target: String, specs: Seq[FeatureSpec], cv: Int,
-      sketched: Map[String, Vector[Double]] = Map.empty,
-      foldCol: Option[String] = None,
-      requireBinaryY: Boolean = false)
-      : (Map[String, Array[HistRow]], Seq[Map[String, Array[HistRow]]]) = {
-    val y = col(target).cast("double")
-    val long = df.select(explode(array(histEntries(specs, sketched): _*)).as("e"), y.as("__y"),
-      foldExpr(specs, target, cv, foldCol).as("__fold"))
-    // same opt-in binary-target contract as [[histogram]] (shared scan)
-    val checkAggs =
-      if (requireBinaryY) Seq(
-        sum(col("__y").isNull.cast("long")).as("yNull"),
-        sum((col("__y") =!= 0.0 && col("__y") =!= 1.0).cast("long")).as("yNonBin"))
-      else Nil
-    val agg = long
-      .groupBy(col("e.fid").as("fid"), col("e.dv").as("dv"), col("e.sv").as("sv"), col("__fold"))
-      .agg(count(lit(1)).as("cnt"), (sum(col("__y")).as("sy") +: checkAggs): _*)
-      .collect()
-    if (requireBinaryY) {
-      require(!agg.exists(r => r.getLong(6) > 0),
-        s"[BinaryCarver] y ('$target') should not contain NaN/null")
-      require(!agg.exists(r => !r.isNullAt(7) && r.getLong(7) > 0),
-        s"[BinaryCarver] y ('$target') must be binary (values 0/1); use Continuous/Multiclass/OrdinalCarver for other targets")
-    }
-    val folds = Vector.fill(cv)(mutable.Map.empty[String, mutable.ArrayBuffer[HistRow]])
-    // total accumulator keyed by (fid, value-bits, sv): NaN-safe via doubleToLongBits
-    val total = mutable.LinkedHashMap.empty[(String, Long, String), (Boolean, Long, Double)]
-    agg.foreach { r =>
-      val fid = r.getString(0)
-      val dvNull = r.isNullAt(1)
-      val svNull = r.isNullAt(2)
-      val dv = if (dvNull) Double.NaN else r.getDouble(1)
-      val sv = if (svNull) null else r.getString(2)
-      val f = checkFoldId(r, 3, cv, "BinaryCarver")
-      val cnt = r.getLong(4)
-      val sy = if (r.isNullAt(5)) 0.0 else r.getDouble(5)
-      folds(f).getOrElseUpdate(fid, mutable.ArrayBuffer.empty) += HistRow(dv, sv, dvNull && svNull, cnt, sy)
-      val key = (fid, java.lang.Double.doubleToLongBits(dv), sv)
-      val (isNull, c0, s0) = total.getOrElse(key, (dvNull && svNull, 0L, 0.0))
-      total(key) = (isNull, c0 + cnt, s0 + sy)
-    }
-    val totalByFid = mutable.Map.empty[String, mutable.ArrayBuffer[HistRow]]
-    total.foreach { case ((fid, dvBits, sv), (isNull, c, s)) =>
-      totalByFid.getOrElseUpdate(fid, mutable.ArrayBuffer.empty) +=
-        HistRow(java.lang.Double.longBitsToDouble(dvBits), sv, isNull, c, s)
-    }
-    (totalByFid.view.mapValues(_.toArray).toMap,
-      folds.map(_.view.mapValues(_.toArray).toMap))
-  }
-
-  /** Fold histograms only (single-pass under the hood). */
-  def histogramFolds(df: DataFrame, target: String, specs: Seq[FeatureSpec], cv: Int,
-      sketched: Map[String, Vector[Double]] = Map.empty): Seq[Map[String, Array[HistRow]]] =
-    histogramWithFolds(df, target, specs, cv, sketched)._2
 
   /** Driver-only fit from collected histograms — the resumable second
     * stage (E6): the histogram is the only cluster product, so a
@@ -873,8 +794,8 @@ object BinaryCarver {
   }
 
   /** Long-form (fid, dv, sv) entry structs — the explode payload shared by
-    * every histogram pass (binary/fold/multiclass variants). Nested features
-    * encode their whole (finest, parents...) tuple into sv so the rollup
+    * the [[Crosstab]] stage and the input audit. Nested features encode
+    * their whole (finest, parents...) tuple into sv so the rollup
     * needs no second scan; a null finest value is the NaN bucket regardless
     * of parents.
     */
@@ -894,53 +815,13 @@ object BinaryCarver {
           categoricalStringExpr(col(s.name)).as("sv"))
     }
 
-  /** The one cluster pass: explode features to long form, aggregate
-    * count + sum(y) per (feature, value). Map-side partial aggregation
-    * keeps the shuffle at (features × cardinality) rows.
+  /** The binary projection of the [[Crosstab]] stage: count + sum(y) per
+    * (feature, value), without folds.
     */
   def histogram(df: DataFrame, target: String, specs: Seq[FeatureSpec],
       sketched: Map[String, Vector[Double]] = Map.empty,
-      requireBinaryY: Boolean = false): Map[String, Array[HistRow]] = {
-    val y = col(target).cast("double")
-    val long = df.select(explode(array(histEntries(specs, sketched): _*)).as("e"), y.as("__y"))
-    // requireBinaryY (the binary FIT paths only — this histogram is shared
-    // with the continuous/selector scans): the target contract rides the
-    // SAME aggregation (two conditional sums, no extra scan). The reference
-    // raises on NaN y and on values outside {0, 1}
-    // (`base_discretizer._prepare_y`, `test_binary_carver` prepare_samples)
-    // — without this, sum(y) silently computes garbage rates for a
-    // multiclass y.
-    val checkAggs =
-      if (requireBinaryY) Seq(
-        sum(col("__y").isNull.cast("long")).as("yNull"),
-        sum((col("__y") =!= 0.0 && col("__y") =!= 1.0).cast("long")).as("yNonBin"))
-      else Nil
-    val agg = long
-      .groupBy(col("e.fid").as("fid"), col("e.dv").as("dv"), col("e.sv").as("sv"))
-      .agg(count(lit(1)).as("cnt"), (sum(col("__y")).as("sy") +: checkAggs): _*)
-      .collect()
-    if (requireBinaryY) {
-      require(!agg.exists(r => r.getLong(5) > 0),
-        s"[BinaryCarver] y ('$target') should not contain NaN/null")
-      require(!agg.exists(r => !r.isNullAt(6) && r.getLong(6) > 0),
-        s"[BinaryCarver] y ('$target') must be binary (values 0/1); use Continuous/Multiclass/OrdinalCarver for other targets")
-    }
-    val byFid = mutable.Map.empty[String, mutable.ArrayBuffer[HistRow]]
-    agg.foreach { r =>
-      val fid = r.getString(0)
-      val dvNull = r.isNullAt(1)
-      val svNull = r.isNullAt(2)
-      val row = HistRow(
-        if (dvNull) Double.NaN else r.getDouble(1),
-        if (svNull) null else r.getString(2),
-        dvNull && svNull,
-        r.getLong(3),
-        if (r.isNullAt(4)) 0.0 else r.getDouble(4)
-      )
-      byFid.getOrElseUpdate(fid, mutable.ArrayBuffer.empty) += row
-    }
-    byFid.view.mapValues(_.toArray).toMap
-  }
+      requireBinaryY: Boolean = false): Map[String, Array[HistRow]] =
+    Crosstab.stage(df, target, specs, sketched, Crosstab.Summed(requireBinaryY), None)(Crosstab.summed).total
 
   /** Raw value, or — for sketched high-cardinality columns — the bucket's
     * representative value (upper edge; last bucket -> last edge + 1). Null
@@ -958,8 +839,11 @@ object BinaryCarver {
         element_at(typedlit(reps), bucket + 1).cast("double")
     }
 
-  /** Driver-side search-ready feature state. */
-  final case class Prep(
+  /** Driver-side bin layout of one prepped feature, shared by every carver
+    * family: how raw values map to search labels, and all that
+    * [[assembleFitted]] needs besides the chosen combination.
+    */
+  final case class Layout(
       kind: String,
       prebinEdges: Vector[Double],
       // maps a raw value to its search label ("m####" leader for quantitative
@@ -967,13 +851,37 @@ object BinaryCarver {
       prebinLeader: Vector[String],     // quantitative: prebin idx -> leader label
       valueToRaw: Map[String, String],  // categorical: raw value -> raw label
       rawOrder: Vector[String],         // search label order (without NaN)
-      xagg: Search.Xagg,                // train xagg incl NaN row if present
       hasNan: Boolean,
       hasDefault: Boolean,
-      // ordinal: search label -> its pre-merged raw members in declared
-      // order (bin labels list every member, not just the leader)
+      // ordinal, nested: search label -> its pre-merged raw members in
+      // declared order (bin labels list every member, not just the leader)
       members: Map[String, Vector[String]] = Map.empty
-  )
+  ) {
+    /** Search label of one crosstab value of a validation view (dev or
+      * fold); null when an unseen value has no bucket to fall into.
+      */
+    def labelOf(spec: FeatureSpec, dv: Double, sv: String, isNull: Boolean): String =
+      if (isNull) NanLabel
+      else if (kind == "quantitative") prebinLeader(searchsortedLeft(prebinEdges, dv))
+      else if (kind == "nested") {
+        // X4 on the validation view: unseen finest values walk the tuple's
+        // parent values nearest→coarsest to the first surviving bucket
+        val levels = decodeNestedSv(sv, spec.parents.length + 1)
+        valueToRaw.get(levels.head) match {
+          case Some(lbl) => lbl
+          case None =>
+            val buckets = rawOrder.toSet
+            levels.tail.find(v => v != null && buckets.contains(v))
+              .getOrElse(if (buckets.contains(OtherLabel)) OtherLabel else null)
+        }
+      }
+      else valueToRaw.getOrElse(sv, if (hasDefault) OtherLabel else null)
+  }
+
+  /** Search-ready feature state: the layout plus the train xagg (NaN row
+    * included when present).
+    */
+  final case class Prep(layout: Layout, xagg: Search.Xagg)
 
   private[carve] def quantLabel(i: Int): String = f"m$i%04d"
 
@@ -1009,8 +917,8 @@ object BinaryCarver {
     val n1 = gSy ++ (if (hasNan) Array(nanSumY) else Array.empty[Double])
     val n0 = gCnt.zip(gSy).map { case (c, s) => c - s } ++
       (if (hasNan) Array(nanCount - nanSumY) else Array.empty[Double])
-    Prep("quantitative", edges, labels.map(leaderOf), Map.empty, order,
-      Search.Xagg(xLabels, n0, n1), hasNan, hasDefault = false)
+    Prep(Layout("quantitative", edges, labels.map(leaderOf), Map.empty, order, hasNan, hasDefault = false),
+      Search.Xagg(xLabels, n0, n1))
   }
 
   private[carve] def prepCategorical(hist: Array[HistRow], total: Long, halfMinFreq: Double, config: Config): Prep = {
@@ -1035,8 +943,8 @@ object BinaryCarver {
     val n1 = order.map(l => stats(l)._2).toArray ++ (if (hasNan) Array(nanSumY) else Array.empty[Double])
     val n0 = order.map(l => stats(l)._1 - stats(l)._2).toArray ++
       (if (hasNan) Array(nanCount - nanSumY) else Array.empty[Double])
-    Prep("categorical", Vector.empty, Vector.empty, valueToRaw, order,
-      Search.Xagg(xLabels, n0, n1), hasNan, hasDefault)
+    Prep(Layout("categorical", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault),
+      Search.Xagg(xLabels, n0, n1))
   }
 
   /** Nested prep (P6 carver integration — reference QualitativeDiscretizer
@@ -1075,8 +983,8 @@ object BinaryCarver {
       val children = res.rawToBucket.collect { case (v, bb) if bb == b && v != b => v }.toVector.sorted
       b -> (b +: children)
     }.toMap
-    Prep("nested", Vector.empty, Vector.empty, res.rawToBucket, order,
-      Search.Xagg(xLabels, n0, n1), hasNan, hasDefault = true, members = members)
+    Prep(Layout("nested", Vector.empty, Vector.empty, res.rawToBucket, order, hasNan,
+      hasDefault = true, members = members), Search.Xagg(xLabels, n0, n1))
   }
 
   /** Declared-ordinal prep (reference `OrdinalDiscretizer.fit` +
@@ -1122,9 +1030,8 @@ object BinaryCarver {
     val n1 = gSy ++ (if (hasNan) Array(nanSumY) else Array.empty[Double])
     val n0 = gCnt.zip(gSy).map { case (c, s) => c - s } ++
       (if (hasNan) Array(nanCount - nanSumY) else Array.empty[Double])
-    Prep("ordinal", Vector.empty, Vector.empty, valueToRaw, order,
-      Search.Xagg(xLabels, n0, n1), hasNan, hasDefault = false,
-      members = groups.map(g => g.head -> g).toMap)
+    Prep(Layout("ordinal", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault = false,
+      members = groups.map(g => g.head -> g).toMap), Search.Xagg(xLabels, n0, n1))
   }
 
   /** Dev histogram → xagg in the train feature's label space. */
@@ -1132,22 +1039,7 @@ object BinaryCarver {
     val acc = mutable.LinkedHashMap.empty[String, (Double, Double)]
     p.xagg.labels.foreach(l => acc(l) = (0.0, 0.0))
     hist.foreach { r =>
-      val label =
-        if (r.isNull) NanLabel
-        else if (spec.kind == "quantitative") p.prebinLeader(searchsortedLeft(p.prebinEdges, r.dv))
-        else if (spec.kind == "nested") {
-          // X4 on the validation view: unseen finest values walk the tuple's
-          // parent values nearest→coarsest to the first surviving bucket
-          val levels = decodeNestedSv(r.sv, spec.parents.length + 1)
-          p.valueToRaw.get(levels.head) match {
-            case Some(lbl) => lbl
-            case None =>
-              val buckets = p.rawOrder.toSet
-              levels.tail.find(v => v != null && buckets.contains(v))
-                .getOrElse(if (buckets.contains(OtherLabel)) OtherLabel else null)
-          }
-        }
-        else p.valueToRaw.getOrElse(r.sv, if (p.hasDefault) OtherLabel else null)
+      val label = p.layout.labelOf(spec, r.dv, r.sv, r.isNull)
       if (label != null) {
         val (c, s) = acc.getOrElse(label, (0.0, 0.0))
         acc(label) = (c + r.count, s + r.sumY)
@@ -1168,7 +1060,7 @@ object BinaryCarver {
       if (config.history) mutable.ArrayBuffer.empty[Search.HistoryEntry] else null
     def run(minFreq: Option[Double]) = Search.bestCombination(
       p.xagg, devXagg, config.maxNMod, minFreq, config.minFreqAlpha,
-      config.sortBy, p.hasNan, NanLabel, dropna = config.dropna,
+      config.sortBy, p.layout.hasNan, NanLabel, dropna = config.dropna,
       config.topKInitial, config.escalate, folds = folds, rateStrategy = config.rateStrategy,
       histSink = histBuf, rescueMode = minFreq.isEmpty)
     val normal = run(Some(config.minFreq))
@@ -1183,72 +1075,73 @@ object BinaryCarver {
     // viability vehicle. The NaN group, when present, is last, so the
     // surviving bin indices are unchanged.
     val best =
-      if (config.dropna || !p.hasNan) best0
+      if (config.dropna || !p.layout.hasNan) best0
       else best0.map(b => b.copy(
         combination = b.combination.filterNot(_ == Vector(NanLabel)),
         rates = b.rates.filterNot(_.label == NanLabel)))
 
+    val history = if (histBuf == null) Vector.empty else histBuf.toVector
     best match {
-      case None =>
-        FittedFeature(spec.name, p.kind, p.prebinEdges, Vector.empty, Map.empty,
-          -1, -1, p.hasNan, p.hasDefault, Vector.empty, Double.NaN, Double.NaN,
-          Vector.empty, dropped = true, droppedReason = "no viable combination",
-          history = if (histBuf == null) Vector.empty else histBuf.toVector,
-          fitDropna = config.dropna)
-      case Some(b) =>
-        // final bin index per search label
-        val labelToBin: Map[String, Int] =
-          b.combination.zipWithIndex.flatMap { case (g, i) => g.map(_ -> i) }.toMap
-        val nanBin = labelToBin.getOrElse(NanLabel, -1)
-        if (p.kind == "quantitative") {
-          val prebinToBin = p.prebinLeader.map(l => labelToBin.getOrElse(l, -1))
-          val binLabels = quantBinLabels(b.combination, p, nanBin)
-          FittedFeature(spec.name, p.kind, p.prebinEdges, prebinToBin, Map.empty,
-            nanBin, -1, p.hasNan, p.hasDefault, binLabels, b.cramerv, b.tschuprowt,
-            b.rates, dropped = false, droppedReason = "",
-            history = if (histBuf == null) Vector.empty else histBuf.toVector,
-            fitDropna = config.dropna)
-        } else {
-          val valueToBin = p.valueToRaw.collect {
-            case (v, raw) if labelToBin.contains(raw) => v -> labelToBin(raw)
-          }
-          // nested features ALWAYS have a default bucket (the reference's
-          // has_default setter appends a zero-mass __OTHER__ as the LAST
-          // modality when no terminal pooling created one — verified by
-          // executing it: unresolved unseen values land in the last bin)
-          val otherBin =
-            if (p.kind == "nested") labelToBin.getOrElse(OtherLabel, b.combination.length - 1)
-            else labelToBin.getOrElse(OtherLabel, -1)
-          // ordinal: a search label may stand for several pre-merged raw
-          // members — the bin label lists them all (declared order)
-          val binLabels0 = b.combination.map(g =>
-            g.flatMap(l => p.members.getOrElse(l, Vector(l))).mkString(", "))
-          // ...and the appended zero-mass default joins the last bin's
-          // member list, mirroring the reference's GroupedList content
-          val binLabels =
-            if (p.kind == "nested" && !labelToBin.contains(OtherLabel))
-              binLabels0.updated(otherBin, binLabels0(otherBin) + s", $OtherLabel")
-            else binLabels0
-          // nested: bucket leaders get their own map for the X4 parent walk
-          // (parent values are only ever matched against LEADERS)
-          val leaderToBin =
-            if (p.kind == "nested")
-              labelToBin.filterNot { case (l, _) => l == NanLabel || l == OtherLabel }
-            else Map.empty[String, Int]
-          FittedFeature(spec.name, p.kind, Vector.empty, Vector.empty, valueToBin,
-            nanBin, otherBin, p.hasNan, p.hasDefault, binLabels, b.cramerv, b.tschuprowt,
-            b.rates, dropped = false, droppedReason = "",
-            ordinalOrder = if (p.kind == "ordinal") spec.ordinalOrder.toVector else Vector.empty,
-            parents = if (p.kind == "nested") spec.parents.toVector else Vector.empty,
-            leaderToBin = leaderToBin,
-            history = if (histBuf == null) Vector.empty else histBuf.toVector,
-            fitDropna = config.dropna)
-        }
+      case None => assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
+        history, config.dropna)
+      case Some(b) => assembleFitted(spec, p.layout, b.combination, b.rates, b.cramerv, b.tschuprowt,
+        history, config.dropna)
     }
   }
 
-  private[carve] def quantBinLabels(combination: Vector[Vector[String]], p: Prep, nanBin: Int): Vector[String] = {
-    val pos = Vector.tabulate(p.prebinEdges.length + 1)(quantLabel).zipWithIndex.toMap
+  /** The fitted feature for a chosen combination of search labels — one
+    * assembly for every carver family. An empty combination (nothing
+    * viable) gives the dropped feature.
+    */
+  private[carve] def assembleFitted(spec: FeatureSpec, l: Layout, combination: Vector[Vector[String]],
+      rates: Vector[Search.RateRow], cramerv: Double, tschuprowt: Double,
+      history: Vector[Search.HistoryEntry], fitDropna: Boolean = true): FittedFeature = {
+    if (combination.isEmpty)
+      return FittedFeature(spec.name, l.kind, l.prebinEdges, Vector.empty, Map.empty,
+        -1, -1, l.hasNan, l.hasDefault, Vector.empty, Double.NaN, Double.NaN,
+        Vector.empty, dropped = true, droppedReason = "no viable combination",
+        history = history, fitDropna = fitDropna)
+    // final bin index per search label
+    val labelToBin: Map[String, Int] =
+      combination.zipWithIndex.flatMap { case (g, i) => g.map(_ -> i) }.toMap
+    val nanBin = labelToBin.getOrElse(NanLabel, -1)
+    if (l.kind == "quantitative")
+      return FittedFeature(spec.name, l.kind, l.prebinEdges, l.prebinLeader.map(labelToBin.getOrElse(_, -1)),
+        Map.empty, nanBin, -1, l.hasNan, l.hasDefault, quantBinLabels(combination, l, nanBin),
+        cramerv, tschuprowt, rates, dropped = false, droppedReason = "",
+        history = history, fitDropna = fitDropna)
+    val valueToBin = l.valueToRaw.collect {
+      case (v, raw) if labelToBin.contains(raw) => v -> labelToBin(raw)
+    }
+    // nested features ALWAYS have a default bucket (the reference's
+    // has_default setter appends a zero-mass __OTHER__ as the LAST
+    // modality when no terminal pooling created one — verified by
+    // executing it: unresolved unseen values land in the last bin)
+    val nested = l.kind == "nested"
+    val otherBin = labelToBin.getOrElse(OtherLabel, if (nested) combination.length - 1 else -1)
+    // ordinal: a search label may stand for several pre-merged raw
+    // members — the bin label lists them all (declared order)
+    val binLabels0 = combination.map(g => g.flatMap(x => l.members.getOrElse(x, Vector(x))).mkString(", "))
+    // ...and the appended zero-mass default joins the last bin's member
+    // list, mirroring the reference's GroupedList content
+    val binLabels =
+      if (nested && !labelToBin.contains(OtherLabel))
+        binLabels0.updated(otherBin, binLabels0(otherBin) + s", $OtherLabel")
+      else binLabels0
+    FittedFeature(spec.name, l.kind, Vector.empty, Vector.empty, valueToBin,
+      nanBin, otherBin, l.hasNan, l.hasDefault, binLabels, cramerv, tschuprowt,
+      rates, dropped = false, droppedReason = "",
+      ordinalOrder = if (l.kind == "ordinal") spec.ordinalOrder.toVector else Vector.empty,
+      parents = if (nested) spec.parents.toVector else Vector.empty,
+      // nested: bucket leaders get their own map for the X4 parent walk
+      // (parent values are only ever matched against LEADERS)
+      leaderToBin =
+        if (nested) labelToBin.filterNot { case (x, _) => x == NanLabel || x == OtherLabel }
+        else Map.empty,
+      history = history, fitDropna = fitDropna)
+  }
+
+  private def quantBinLabels(combination: Vector[Vector[String]], p: Layout, nanBin: Int): Vector[String] = {
     combination.zipWithIndex.map { case (g, i) =>
       val idxs = g.filterNot(_ == NanLabel).flatMap(l =>
         p.prebinLeader.zipWithIndex.collect { case (leader, pi) if leader == l => pi })

@@ -16,7 +16,7 @@ import scala.collection.mutable
   * see [[Continuous.bestCombination]]) in the same aggregation.
   */
 object ContinuousCarver {
-  import BinaryCarver.{FeatureSpec, FittedFeature, Model, Prep, Config, NanLabel, OtherLabel}
+  import BinaryCarver.{FeatureSpec, FittedFeature, Layout, Model, Prep, Config, NanLabel, OtherLabel, assembleFitted}
 
   /** Cluster products of a continuous fit that do NOT depend on the rate
     * strategy: prebin state, rank statistics, tie corrections, the
@@ -108,9 +108,9 @@ object ContinuousCarver {
     val (sketched, sketchRow) = BinaryCarver.sketchWithExtras(train, specs, config,
       Seq(approx_count_distinct(col(target)).as("__graft_y_acd")))
     val distinctY = sketchRow.map(_.getAs[Long]("__graft_y_acd")).getOrElse(-1L)
-    val (trainHist, foldHists) =
-      if (config.cv > 1) BinaryCarver.histogramWithFolds(train, target, specs, config.cv, sketched, Option(config.foldCol))
-      else (BinaryCarver.histogram(train, target, specs, sketched), Nil)
+    val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Summed(),
+      Crosstab.folds(config.cv, config.foldCol))(Crosstab.summed)
+    val trainHist = hist.total
     def totalOf(name: String): Long = trainHist(name).map(_.count).sum
     val prep: Map[String, Prep] = specs.map { s =>
       s.name -> (s.kind match {
@@ -131,7 +131,7 @@ object ContinuousCarver {
     val approxMedian = withYHists && distinctY > medianGateThreshold(config, specs.length)
     val (rows, ties, yHists) =
       rankStatsJob(train, target, specs, prep, withYHists, approxMedian, distinctY)
-    Stages(config, sketched, distinctY, trainHist, foldHists, prep, rows, ties, yHists)
+    Stages(config, sketched, distinctY, trainHist, hist.folds, prep, rows, ties, yHists)
   }
 
   /** Driver-side search per rate strategy over precomputed [[Stages]]; the
@@ -196,7 +196,7 @@ object ContinuousCarver {
       else {
         val y = col(target).cast("double")
         val foldKey = BinaryCarver.foldExpr(specs, target, config.cv, Option(config.foldCol))
-        val entries = specs.map(sp => struct(lit(sp.name).as("fid"), labelExpr(sp, prep(sp.name)).as("lbl")))
+        val entries = specs.map(sp => struct(lit(sp.name).as("fid"), labelExpr(sp, prep(sp.name).layout).as("lbl")))
         val long = train.withColumn("__fold", foldKey)
           .select(col("__fold"), explode(array(entries: _*)).as("e"), y.as("y"))
           .select(col("__fold"), col("e.fid").as("fid"), col("e.lbl").as("lbl"), col("y"))
@@ -222,7 +222,7 @@ object ContinuousCarver {
       if (!withMedians) Map.empty
       else dev.map { d =>
         val y = col(target).cast("double")
-        val entries = specs.map(s => struct(lit(s.name).as("fid"), labelExpr(s, prep(s.name)).as("lbl")))
+        val entries = specs.map(s => struct(lit(s.name).as("fid"), labelExpr(s, prep(s.name).layout).as("lbl")))
         val long = d.select(explode(array(entries: _*)).as("e"), y.as("y"))
           .select(col("e.fid").as("fid"), col("e.lbl").as("lbl"), col("y"))
         yHistsOf(long, approxMedian)
@@ -262,7 +262,7 @@ object ContinuousCarver {
     * `searchsorted(side='left')` semantics as the former chained
     * `when(x <= e_i)` ladder) + one O(1) literal-array label lookup.
     */
-  private def labelExpr(spec: FeatureSpec, p: Prep): Column =
+  private def labelExpr(spec: FeatureSpec, p: Layout): Column =
     if (spec.kind == "quantitative") {
       val x = col(spec.name).cast("double")
       val leaders = p.prebinLeader
@@ -299,7 +299,7 @@ object ContinuousCarver {
       prep: Map[String, Prep]): DataFrame = {
     val y = col(target).cast("double")
     val entries = specs.map { s =>
-      struct(lit(s.name).as("fid"), labelExpr(s, prep(s.name)).as("lbl"))
+      struct(lit(s.name).as("fid"), labelExpr(s, prep(s.name).layout).as("lbl"))
     }
     df.select(explode(array(entries: _*)).as("e"), y.as("y"))
       .select(col("e.fid").as("fid"), col("e.lbl").as("lbl"), col("y"))
@@ -599,22 +599,17 @@ object ContinuousCarver {
       if (config.history) scala.collection.mutable.ArrayBuffer.empty[Search.HistoryEntry] else null
     def run(minFreq: Option[Double]) = Continuous.bestCombination(
       sub, full, devX, config.maxNMod, minFreq, config.minFreqAlpha,
-      p.hasNan, NanLabel, config.topKInitial, config.escalate, folds,
+      p.layout.hasNan, NanLabel, config.topKInitial, config.escalate, folds,
       histSink = histBuf, rescueMode = minFreq.isEmpty, dpMemo = dpMemo)
     val normal = run(Some(config.minFreq))
     // rescue-rare (C13): min_freq waived when a validation view exists
     val best =
       if (normal.isEmpty && config.rescue && (devX.nonEmpty || folds.nonEmpty)) run(None)
       else normal
+    val history = if (histBuf == null) Vector.empty else histBuf.toVector
     best match {
-      case None =>
-        FittedFeature(spec.name, p.kind, p.prebinEdges, Vector.empty, Map.empty,
-          -1, -1, p.hasNan, p.hasDefault, Vector.empty, Double.NaN, Double.NaN,
-          Vector.empty, dropped = true, droppedReason = "no viable combination",
-          history = if (histBuf == null) Vector.empty else histBuf.toVector)
+      case None => assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN, history)
       case Some((combination, h, rates)) =>
-        val labelToBin = combination.zipWithIndex.flatMap { case (g, i) => g.map(_ -> i) }.toMap
-        val nanBin = labelToBin.getOrElse(NanLabel, -1)
         // per-bin sample std (ddof=1) from the (n, Σy, Σy²) label moments —
         // the Welch-drift reference the stability monitor needs (M4)
         val stds = combination.map { g =>
@@ -622,39 +617,7 @@ object ContinuousCarver {
           val n = ms.map(_._1).sum; val s = ms.map(_._2).sum; val ss = ms.map(_._3).sum
           if (n < 2) Double.NaN else math.sqrt(math.max(0.0, (ss - s * s / n) / (n - 1)))
         }
-        if (p.kind == "quantitative") {
-          val prebinToBin = p.prebinLeader.map(l => labelToBin.getOrElse(l, -1))
-          val binLabels = BinaryCarver.quantBinLabels(combination, p, nanBin)
-          FittedFeature(spec.name, p.kind, p.prebinEdges, prebinToBin, Map.empty,
-            nanBin, -1, p.hasNan, p.hasDefault, binLabels, h, Double.NaN, rates,
-            dropped = false, droppedReason = "", stds = stds,
-            history = if (histBuf == null) Vector.empty else histBuf.toVector)
-        } else {
-          val valueToBin = p.valueToRaw.collect {
-            case (v, raw) if labelToBin.contains(raw) => v -> labelToBin(raw)
-          }
-          // nested: zero-mass default joins the last bin (reference
-          // has_default semantics; see BinaryCarver.searchFeature)
-          val otherBin =
-            if (p.kind == "nested") labelToBin.getOrElse(OtherLabel, combination.length - 1)
-            else labelToBin.getOrElse(OtherLabel, -1)
-          val binLabels0 = combination.map(g =>
-            g.flatMap(l => p.members.getOrElse(l, Vector(l))).mkString(", "))
-          val binLabels =
-            if (p.kind == "nested" && !labelToBin.contains(OtherLabel))
-              binLabels0.updated(otherBin, binLabels0(otherBin) + s", $OtherLabel")
-            else binLabels0
-          val leaderToBin =
-            if (p.kind == "nested")
-              labelToBin.filterNot { case (l, _) => l == NanLabel || l == OtherLabel }
-            else Map.empty[String, Int]
-          FittedFeature(spec.name, p.kind, Vector.empty, Vector.empty, valueToBin,
-            nanBin, otherBin, p.hasNan, p.hasDefault, binLabels, h, Double.NaN,
-            rates, dropped = false, droppedReason = "", stds = stds,
-            parents = if (p.kind == "nested") spec.parents.toVector else Vector.empty,
-            leaderToBin = leaderToBin,
-            history = if (histBuf == null) Vector.empty else histBuf.toVector)
-        }
+        assembleFitted(spec, p.layout, combination, rates, h, Double.NaN, history).copy(stds = stds)
     }
   }
 }

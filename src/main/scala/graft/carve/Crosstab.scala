@@ -1,0 +1,168 @@
+package graft.carve
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import graft.carve.BinaryCarver.{FeatureSpec, HistRow}
+import graft.carve.OrdinalCarver.KHistRow
+
+/** The crosstab stage (SURVEY §2.4 C1/C2, folds C4) — the one reduction of
+  * data-sized input to small driver state, shared by every carver family:
+  * ONE `explode(histEntries) → groupBy(fid, dv, sv[, y][, fold]) → collect`.
+  * The target is either summed (`count` plus `sum(y)`: binary, continuous)
+  * or one more groupBy key (the double level: ordinal; the string class:
+  * multiclass, mapped to its index in the sorted class list after the
+  * collect). Map-side partial aggregation keeps the shuffle at
+  * features × cardinality (× target keys) rows.
+  *
+  * With folds the fold key is one more groupBy column: each held-out
+  * fold's view is the rows carrying its key, and the train total is the
+  * sum over folds — no second scan (`base_carver.py:607-628` semantics at
+  * 1× the IO of a plain fit). Row order within a feature is the collect
+  * order without folds and first-seen order for the fold total.
+  */
+object Crosstab {
+
+  /** How the target enters the crosstab; `family` names the fit in the
+    * y-contract and fold-id errors.
+    */
+  sealed abstract class Target(val family: String)
+
+  /** `count` plus `sum(y)`. `requireBinaryY` (the binary fit paths only —
+    * the continuous fit shares this form) adds the binary target contract
+    * to the SAME aggregation: two conditional sums, no extra scan. The
+    * reference raises on NaN y and on values outside {0, 1}
+    * (`base_discretizer._prepare_y`); without the check sum(y) silently
+    * computes garbage rates for a multiclass y.
+    */
+  final case class Summed(requireBinaryY: Boolean = false) extends Target("BinaryCarver")
+
+  /** Keyed by the target cast to double (integer-encoded ordinal levels). */
+  case object Level extends Target("OrdinalCarver")
+
+  /** Keyed by the target cast to string; classes take their sorted
+    * (canonical) order — `get_multiclass_crosstab` pins the same order.
+    */
+  case object Class extends Target("MulticlassCarver")
+
+  /** `cv` folds from the user's `foldCol`, else the content hash. */
+  final case class Folds(cv: Int, foldCol: Option[String] = None)
+
+  /** The fold option of a fit config: folds only when `cv > 1`. */
+  def folds(cv: Int, foldCol: String): Option[Folds] =
+    Option.when(cv > 1)(Folds(cv, Option(foldCol)))
+
+  /** Train total per feature, one view per fold (empty without folds) and
+    * the sorted classes (empty unless the target is [[Class]]).
+    */
+  final case class Result[R](total: Map[String, Array[R]], folds: Seq[Map[String, Array[R]]],
+      classes: Vector[String])
+
+  /** Builds one row from (dv, sv, isNull, key, count, sumY): `key` is the
+    * level or class index (0 when summed), `sumY` is Σy (0 when keyed).
+    */
+  type Mk[R] = (Double, String, Boolean, Double, Long, Double) => R
+
+  /** The binary/continuous projection. */
+  val summed: Mk[HistRow] = (dv, sv, isNull, _, count, sumY) => HistRow(dv, sv, isNull, count, sumY)
+
+  /** The ordinal/multiclass projection. */
+  val keyed: Mk[KHistRow] = (dv, sv, isNull, key, count, _) => KHistRow(dv, sv, isNull, key, count)
+
+  def stage[R: ClassTag](df: DataFrame, target: String, specs: Seq[FeatureSpec],
+      sketched: Map[String, Vector[Double]], y: Target, folds: Option[Folds])(mk: Mk[R]): Result[R] = {
+    val isKeyed = !y.isInstanceOf[Summed]
+    val yCol = if (y == Class) col(target).cast("string") else col(target).cast("double")
+    val foldCol = folds.map(f => BinaryCarver.foldExpr(specs, target, f.cv, f.foldCol).as("__fold"))
+    val long = df.select(
+      Seq(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), yCol.as("__y")) ++ foldCol: _*)
+    val keys = (if (isKeyed) Seq(col("__y")) else Nil) ++ foldCol.map(_ => col("__fold"))
+    val aggs = y match {
+      case Summed(check) =>
+        sum(col("__y")).as("sy") +: (if (!check) Nil else Seq(
+          sum(col("__y").isNull.cast("long")).as("yNull"),
+          sum((col("__y") =!= 0.0 && col("__y") =!= 1.0).cast("long")).as("yNonBin")))
+      case _ => Nil
+    }
+    val agg = long
+      .groupBy(Seq(col("e.fid").as("fid"), col("e.dv").as("dv"), col("e.sv").as("sv")) ++ keys: _*)
+      .agg(count(lit(1)).as("cnt"), aggs: _*)
+      .collect()
+    val foldIdx = if (isKeyed) 4 else 3
+    val cntIdx = 3 + keys.length
+
+    y match {
+      case Summed(true) =>
+        require(!agg.exists(r => r.getLong(cntIdx + 2) > 0),
+          s"[BinaryCarver] y ('$target') should not contain NaN/null")
+        require(!agg.exists(r => !r.isNullAt(cntIdx + 3) && r.getLong(cntIdx + 3) > 0),
+          s"[BinaryCarver] y ('$target') must be binary (values 0/1); use Continuous/Multiclass/OrdinalCarver for other targets")
+      // reference OrdinalCarver._prepare_samples: y must be a numeric
+      // integer-encoded ordinal with no NaN — a null here is either a real
+      // null or a non-numeric value nulled by the cast
+      case Level => require(!agg.exists(_.isNullAt(3)),
+        s"[OrdinalCarver] y ('$target') must be an integer-encoded numeric ordinal with no nulls")
+      // reference validate_multiclass_target: NaN y raises (a null would
+      // otherwise become a class — or NPE in the sort below)
+      case Class => require(!agg.exists(_.isNullAt(3)),
+        s"[MulticlassCarver] y ('$target') should not contain null")
+      case _ =>
+    }
+    val classes = if (y == Class) agg.map(_.getString(3)).distinct.sorted.toVector else Vector.empty
+    val classIdx = classes.zipWithIndex.toMap
+    def keyOf(r: Row): Double = y match {
+      case Class => classIdx(r.getString(3)).toDouble
+      case Level => r.getDouble(3)
+      case _ => 0.0
+    }
+    def sumYOf(r: Row): Double = if (isKeyed || r.isNullAt(cntIdx + 1)) 0.0 else r.getDouble(cntIdx + 1)
+    def arrays(m: mutable.Map[String, mutable.ArrayBuffer[R]]): Map[String, Array[R]] =
+      m.view.mapValues(_.toArray).toMap
+
+    // one view per fold; without folds the single view is the result
+    val views = Vector.fill(folds.fold(1)(_.cv))(mutable.Map.empty[String, mutable.ArrayBuffer[R]])
+    // fold total keyed by (fid, value bits, sv, key bits): NaN-safe
+    val total = mutable.LinkedHashMap.empty[(String, Long, String, Long), (Boolean, Long, Double)]
+    agg.foreach { r =>
+      val fid = r.getString(0)
+      val dvNull = r.isNullAt(1)
+      val svNull = r.isNullAt(2)
+      val dv = if (dvNull) Double.NaN else r.getDouble(1)
+      val sv = if (svNull) null else r.getString(2)
+      val key = keyOf(r)
+      val cnt = r.getLong(cntIdx)
+      val sy = sumYOf(r)
+      val view = folds.fold(0)(f => checkFoldId(r, foldIdx, f.cv, y.family))
+      views(view).getOrElseUpdate(fid, mutable.ArrayBuffer.empty) += mk(dv, sv, dvNull && svNull, key, cnt, sy)
+      if (folds.nonEmpty) {
+        val k = (fid, java.lang.Double.doubleToLongBits(dv), sv, java.lang.Double.doubleToLongBits(key))
+        val (isNull, c0, s0) = total.getOrElse(k, (dvNull && svNull, 0L, 0.0))
+        total(k) = (isNull, c0 + cnt, s0 + sy)
+      }
+    }
+    if (folds.isEmpty) Result(arrays(views.head), Nil, classes)
+    else {
+      val totalByFid = mutable.Map.empty[String, mutable.ArrayBuffer[R]]
+      total.foreach { case ((fid, dvBits, sv, keyBits), (isNull, c, s)) =>
+        totalByFid.getOrElseUpdate(fid, mutable.ArrayBuffer.empty) +=
+          mk(java.lang.Double.longBitsToDouble(dvBits), sv, isNull, java.lang.Double.longBitsToDouble(keyBits), c, s)
+      }
+      Result(arrays(totalByFid), views.map(arrays), classes)
+    }
+  }
+
+  /** Validates one collected fold id, so a user fold column with nulls or
+    * out-of-range ids raises the same typed error in every family (instead
+    * of an NPE or a silently truncated array index).
+    */
+  private def checkFoldId(r: Row, idx: Int, cv: Int, family: String): Int = {
+    require(!r.isNullAt(idx),
+      s"[$family] fold column carries nulls — every row needs a fold id in [0, cv)")
+    val raw = r.getLong(idx)
+    require(raw >= 0 && raw < cv,
+      s"[$family] fold id $raw outside [0, $cv) — foldCol must carry integer folds 0..cv-1")
+    raw.toInt
+  }
+}

@@ -251,11 +251,11 @@ object Dp {
   /** Run the independent per-k computations (k = 2..cap, each its own DP
     * under a k-dependent segment cost) concurrently and return the results
     * in ascending-k order — callers append them in that order, so the
-    * output sequence is identical to the former serial loop.
+    * output sequence is identical to the former serial loop. A failing
+    * k-run rethrows its own exception, not the pool's
+    * `ExecutionException` wrapper.
     */
-  private[carve] def chi2PerK[T](cap: Int)(runK: Int => T): Vector[T] = perKParallel(cap)(runK)
-
-  private def perKParallel[T](cap: Int)(runK: Int => T): Vector[T] = {
+  private[carve] def perKParallel[T](cap: Int)(runK: Int => T): Vector[T] = {
     if (cap < 2) return Vector.empty
     if (cap == 2) return Vector(runK(2))
     val futs = (2 to cap).map { k =>
@@ -263,7 +263,8 @@ object Dp {
       dpPool.execute(task)
       task
     }
-    futs.map(_.get()).toVector
+    try futs.map(_.get()).toVector
+    catch { case e: java.util.concurrent.ExecutionException if e.getCause != null => throw e.getCause }
   }
 
   /** Binary chi² top-K DP (`binary_combination_evaluators.py:376-485`):

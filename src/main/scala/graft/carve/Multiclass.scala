@@ -80,7 +80,7 @@ object Multiclass {
     // are independent and run concurrently (ascending-k append keeps the
     // emission sequence identical to the former serial loop).
     val all = mutable.ArrayBuffer.empty[(Double, Double, Double, Dp.Node)]
-    Dp.chi2PerK(cap) { kGroups =>
+    Dp.perKParallel(cap) { kGroups =>
       val cMarg = colSums.map(_ + kGroups * tol)
       val nWithTol = totalN + kGroups * nClasses * tol
       val yates = kGroups == 2 && nClasses == 2

@@ -1,10 +1,9 @@
 package graft.carve
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
-import graft.carve.BinaryCarver.{FeatureSpec, FittedFeature, NanLabel, OtherLabel}
+import graft.carve.BinaryCarver.{FeatureSpec, FittedFeature, Layout, NanLabel, OtherLabel, assembleFitted}
 import graft.carve.OrdinalCarver.{KHistRow, KPrep}
 
 /** Supervised optimal discretization against an UNORDERED multiclass target
@@ -15,8 +14,9 @@ import graft.carve.OrdinalCarver.{KHistRow, KPrep}
   * and viability-rated by correspondence-analysis first-axis score.
   *
   * Cluster/driver split mirrors BinaryCarver: ONE
-  * `groupBy(feature, value, class).count()` long-form pass; everything else
-  * is driver-side math over the collected crosstabs.
+  * `groupBy(feature, value, class).count()` long-form pass (the
+  * [[Crosstab]] stage keyed by class, run by [[classStage]]); everything
+  * else is driver-side math over the collected crosstabs.
   */
 object MulticlassCarver {
 
@@ -64,84 +64,32 @@ object MulticlassCarver {
     def transformLabels(df: DataFrame): DataFrame = binaryView.transformLabels(df)
   }
 
-  /** The one cluster pass for a string-class target: classes map to their
-    * sorted (canonical) column order — `get_multiclass_crosstab` pins the
-    * same order in the reference. Returns (histograms, sorted classes).
+  /** The class stage shared by the multiclass and one-vs-rest fits: the
+    * sketch, the class [[Crosstab]] (± folds; it also yields the sorted
+    * class set, so no distinct() pass), the > 2 classes check, and the dev
+    * class crosstab. The reference's validate_multiclass_target raises on
+    * a dev class mismatch in EITHER direction (a dev sample missing a
+    * train class would silently score that class as all-zero otherwise);
+    * both class vectors are sorted, so equal sets share class indices and
+    * the dev rows need no remap. `family` names the fit in the errors.
     */
-  def histogramM(df: DataFrame, target: String, specs: Seq[FeatureSpec],
-      sketched: Map[String, Vector[Double]] = Map.empty): (Map[String, Array[KHistRow]], Vector[String]) = {
-    val y = col(target).cast("string")
-    val long = df.select(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), y.as("__y"))
-    val agg = long
-      .groupBy(col("e.fid").as("fid"), col("e.dv").as("dv"), col("e.sv").as("sv"), col("__y"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect()
-    // reference validate_multiclass_target: NaN y raises (a null here would
-    // otherwise become a class -- or NPE in the sort below)
-    require(!agg.exists(_.isNullAt(3)),
-      s"[MulticlassCarver] y ('$target') should not contain null")
-    val classes = agg.map(_.getString(3)).distinct.sorted.toVector
-    val classIdx = classes.zipWithIndex.toMap
-    val byFid = mutable.Map.empty[String, mutable.ArrayBuffer[KHistRow]]
-    agg.foreach { r =>
-      val dvNull = r.isNullAt(1)
-      val svNull = r.isNullAt(2)
-      byFid.getOrElseUpdate(r.getString(0), mutable.ArrayBuffer.empty) += KHistRow(
-        if (dvNull) Double.NaN else r.getDouble(1),
-        if (svNull) null else r.getString(2),
-        dvNull && svNull,
-        classIdx(r.getString(3)).toDouble,
-        r.getLong(4)
-      )
+  def classStage(train: DataFrame, target: String, specs: Seq[FeatureSpec], dev: Option[DataFrame],
+      config: BinaryCarver.Config, family: String)
+      : (Crosstab.Result[KHistRow], Option[Map[String, Array[KHistRow]]]) = {
+    val sketched = BinaryCarver.sketchHighCardinality(train, specs, config)
+    val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Class,
+      Crosstab.folds(config.cv, config.foldCol))(Crosstab.keyed)
+    val classes = hist.classes
+    require(classes.length > 2, s"[$family] y has ${classes.length} classes; use BinaryCarver for <=2")
+    val devHist = dev.map { d =>
+      val h = Crosstab.stage(d, target, specs, sketched, Crosstab.Class, None)(Crosstab.keyed)
+      val devOnly = h.classes.filterNot(classes.contains)
+      val trainOnly = classes.filterNot(h.classes.contains)
+      require(devOnly.isEmpty && trainOnly.isEmpty,
+        s"[$family] Mismatched classes between y and y_dev: train-only $trainOnly, dev-only $devOnly")
+      h.total
     }
-    (byFid.view.mapValues(_.toArray).toMap, classes)
-  }
-
-  /** Train class-histogram + all `cv` fold class-histograms from ONE pass
-    * (fold key as one more groupBy column; total = fold sum; class order is
-    * the canonical sorted order of the FULL data so fold levels are already
-    * in the train class space). The single-scan C4 shape.
-    */
-  def histogramMWithFolds(df: DataFrame, target: String, specs: Seq[FeatureSpec], cv: Int,
-      sketched: Map[String, Vector[Double]] = Map.empty,
-      foldCol: Option[String] = None)
-      : (Map[String, Array[KHistRow]], Vector[String], Seq[Map[String, Array[KHistRow]]]) = {
-    val y = col(target).cast("string")
-    val long = df.select(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), y.as("__y"),
-      BinaryCarver.foldExpr(specs, target, cv, foldCol).as("__fold"))
-    val agg = long
-      .groupBy(col("e.fid").as("fid"), col("e.dv").as("dv"), col("e.sv").as("sv"),
-        col("__y"), col("__fold"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect()
-    require(!agg.exists(_.isNullAt(3)),
-      s"[MulticlassCarver] y ('$target') should not contain null")
-    val classes = agg.map(_.getString(3)).distinct.sorted.toVector
-    val classIdx = classes.zipWithIndex.toMap
-    val folds = Vector.fill(cv)(mutable.Map.empty[String, mutable.ArrayBuffer[KHistRow]])
-    val total = mutable.LinkedHashMap.empty[(String, Long, String, Int), (Boolean, Long)]
-    agg.foreach { r =>
-      val fid = r.getString(0)
-      val dvNull = r.isNullAt(1)
-      val svNull = r.isNullAt(2)
-      val dv = if (dvNull) Double.NaN else r.getDouble(1)
-      val sv = if (svNull) null else r.getString(2)
-      val ci = classIdx(r.getString(3))
-      val f = BinaryCarver.checkFoldId(r, 4, cv, "MulticlassCarver")
-      val cnt = r.getLong(5)
-      folds(f).getOrElseUpdate(fid, mutable.ArrayBuffer.empty) +=
-        KHistRow(dv, sv, dvNull && svNull, ci.toDouble, cnt)
-      val key = (fid, java.lang.Double.doubleToLongBits(dv), sv, ci)
-      val (isNull, c0) = total.getOrElse(key, (dvNull && svNull, 0L))
-      total(key) = (isNull, c0 + cnt)
-    }
-    val totalByFid = mutable.Map.empty[String, mutable.ArrayBuffer[KHistRow]]
-    total.foreach { case ((fid, dvBits, sv, ci), (isNull, c)) =>
-      totalByFid.getOrElseUpdate(fid, mutable.ArrayBuffer.empty) +=
-        KHistRow(java.lang.Double.longBitsToDouble(dvBits), sv, isNull, ci.toDouble, c)
-    }
-    (totalByFid.view.mapValues(_.toArray).toMap, classes,
-      folds.map(_.view.mapValues(_.toArray).toMap))
+    (hist, devHist)
   }
 
   def fit(
@@ -158,32 +106,11 @@ object MulticlassCarver {
       "nested features are not supported against an unordered multiclass target — the " +
         "reference's NestedDiscretizer target sort cannot score string classes " +
         "(series_target_rate crashes there); use Binary/Continuous/Ordinal carvers")
-    val sketched = BinaryCarver.sketchHighCardinality(train, specs,
-      BinaryCarver.Config(minFreq = config.minFreq,
+    val (hist, devHist) = classStage(train, target, specs, dev,
+      BinaryCarver.Config(minFreq = config.minFreq, cv = config.cv, foldCol = config.foldCol,
         sketchCardinalityThreshold = config.sketchCardinalityThreshold,
-        sketchRelativeError = config.sketchRelativeError))
-    // one scan for the train histogram AND (when cv>1) every fold view —
-    // histogramMWithFolds levels are already in the full-data class space
-    val (trainHist, classes, foldHists) =
-      if (config.cv > 1) histogramMWithFolds(train, target, specs, config.cv, sketched, Option(config.foldCol))
-      else { val (h, c) = histogramM(train, target, specs, sketched); (h, c, Nil) }
-    require(classes.length > 2,
-      s"[MulticlassCarver] y has ${classes.length} classes; use BinaryCarver for <=2")
-    // dev classes must map into the train class space (unseen dev classes raise
-    // in the reference's ca_row_scores; here the histogram mapping raises)
-    val devHist = dev.map { d =>
-      val (h, devClasses) = histogramM(d, target, specs, sketched)
-      // reference validate_multiclass_target raises on a mismatch in EITHER
-      // direction -- a dev sample missing a train class would silently score
-      // that class as all-zero otherwise
-      val unseen = devClasses.filterNot(classes.contains)
-      val missing = classes.filterNot(devClasses.contains)
-      require(unseen.isEmpty && missing.isEmpty,
-        s"[MulticlassCarver] Mismatched classes between y and y_dev: train-only $missing, dev-only $unseen")
-      val remap = devClasses.zipWithIndex.map { case (c, i) => i.toDouble -> classes.indexOf(c).toDouble }.toMap
-      h.view.mapValues(_.map(r => r.copy(level = remap(r.level)))).toMap
-    }
-    fitFromHistograms(trainHist, devHist, target, specs, classes, config, foldHists)
+        sketchRelativeError = config.sketchRelativeError), "MulticlassCarver")
+    fitFromHistograms(hist.total, devHist, target, specs, hist.classes, config, hist.folds)
   }
 
   def fitFromHistograms(
@@ -282,8 +209,8 @@ object MulticlassCarver {
     }
     val xLabels = if (hasNan) order :+ NanLabel else order
     val m = if (hasNan) gMat :+ nanRow else gMat
-    KPrep("quantitative", edges, labels.map(leaderOf), Map.empty, order,
-      Ordinal.KXagg(xLabels, levels, m), hasNan, hasDefault = false)
+    KPrep(Layout("quantitative", edges, labels.map(leaderOf), Map.empty, order, hasNan, hasDefault = false),
+      Ordinal.KXagg(xLabels, levels, m))
   }
 
   /** Categorical prep for a nominal target: rare→OTHER, then modality order
@@ -326,8 +253,8 @@ object MulticlassCarver {
     }
     val xLabels = if (hasNan) order :+ NanLabel else order
     val m = (order.map(mats(_)) ++ (if (hasNan) Vector(nanRow) else Vector.empty)).toArray
-    KPrep("categorical", Vector.empty, Vector.empty, valueToRaw, order,
-      Ordinal.KXagg(xLabels, levels, m), hasNan, hasDefault)
+    KPrep(Layout("categorical", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault),
+      Ordinal.KXagg(xLabels, levels, m))
   }
 
   /** Declared-ordinal feature prep against a NOMINAL target: declared
@@ -386,9 +313,8 @@ object MulticlassCarver {
     }
     val xLabels = if (hasNan) order :+ NanLabel else order
     val m = if (hasNan) gMat :+ nanRow else gMat
-    KPrep("ordinal", Vector.empty, Vector.empty, valueToRaw, order,
-      Ordinal.KXagg(xLabels, levels, m), hasNan, hasDefault = false,
-      members = groups.map(g => g.head -> g).toMap)
+    KPrep(Layout("ordinal", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault = false,
+      members = groups.map(g => g.head -> g).toMap), Ordinal.KXagg(xLabels, levels, m))
   }
 
   private[carve] def searchFeatureM(spec: FeatureSpec, p: KPrep, devX: Option[Ordinal.KXagg], config: Config,
@@ -397,47 +323,20 @@ object MulticlassCarver {
       if (config.history) scala.collection.mutable.ArrayBuffer.empty[Search.HistoryEntry] else null
     def run(minFreq: Option[Double]) = Multiclass.bestCombination(
       p.xagg, devX, config.maxNMod, minFreq, config.minFreqAlpha,
-      config.sortBy, p.hasNan, NanLabel, dropna = true, config.topKInitial, config.escalate, folds,
+      config.sortBy, p.layout.hasNan, NanLabel, dropna = true, config.topKInitial, config.escalate, folds,
       histSink = histBuf, rescueMode = minFreq.isEmpty)
     val normal = run(Some(config.minFreq))
     val best =
       if (normal.isEmpty && config.rescue && (devX.nonEmpty || folds.nonEmpty)) run(None)
       else normal
 
+    val history = if (histBuf == null) Vector.empty else histBuf.toVector
+    val rateRef = Multiclass.CAScoreRate(Ca.fitCaAxis(p.xagg.m))
     best match {
-      case None =>
-        MFitted(FittedFeature(spec.name, p.kind, p.prebinEdges, Vector.empty, Map.empty,
-          -1, -1, p.hasNan, p.hasDefault, Vector.empty, Double.NaN, Double.NaN,
-          Vector.empty, dropped = true, droppedReason = "no viable combination",
-          history = if (histBuf == null) Vector.empty else histBuf.toVector),
-          Double.NaN, Double.NaN, Multiclass.CAScoreRate(Ca.fitCaAxis(p.xagg.m)))
-      case Some(b) =>
-        val labelToBin: Map[String, Int] =
-          b.combination.zipWithIndex.flatMap { case (g, i) => g.map(_ -> i) }.toMap
-        val nanBin = labelToBin.getOrElse(NanLabel, -1)
-        val f =
-          if (p.kind == "quantitative") {
-            val prebinToBin = p.prebinLeader.map(l => labelToBin.getOrElse(l, -1))
-            val prep = BinaryCarver.Prep(p.kind, p.prebinEdges, p.prebinLeader, p.valueToRaw,
-              p.rawOrder, Search.Xagg(Vector.empty, Array.empty, Array.empty), p.hasNan, p.hasDefault)
-            val binLabels = BinaryCarver.quantBinLabels(b.combination, prep, nanBin)
-            FittedFeature(spec.name, p.kind, p.prebinEdges, prebinToBin, Map.empty,
-              nanBin, -1, p.hasNan, p.hasDefault, binLabels, b.cramerv, b.tschuprowt,
-              b.rates, dropped = false, droppedReason = "",
-              history = if (histBuf == null) Vector.empty else histBuf.toVector)
-          } else {
-            val valueToBin = p.valueToRaw.collect {
-              case (v, raw) if labelToBin.contains(raw) => v -> labelToBin(raw)
-            }
-            val otherBin = labelToBin.getOrElse(OtherLabel, -1)
-            val binLabels = b.combination.map(g =>
-              g.flatMap(l => p.members.getOrElse(l, Vector(l))).mkString(", "))
-            FittedFeature(spec.name, p.kind, Vector.empty, Vector.empty, valueToBin,
-              nanBin, otherBin, p.hasNan, p.hasDefault, binLabels, b.cramerv, b.tschuprowt,
-              b.rates, dropped = false, droppedReason = "",
-              history = if (histBuf == null) Vector.empty else histBuf.toVector)
-          }
-        MFitted(f, b.cramerv, b.tschuprowt, Multiclass.CAScoreRate(Ca.fitCaAxis(p.xagg.m)))
+      case None => MFitted(assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
+        history), Double.NaN, Double.NaN, rateRef)
+      case Some(b) => MFitted(assembleFitted(spec, p.layout, b.combination, b.rates, b.cramerv, b.tschuprowt,
+        history), b.cramerv, b.tschuprowt, rateRef)
     }
   }
 }
@@ -507,29 +406,11 @@ object OneVsRestCarver {
     // nested specs are fine HERE (unlike the CA MulticlassCarver): each
     // class is a binary sub-fit, so the rollup's target sort runs per class
     // on the binarized rate — matching the reference, where OvR + nested
-    // works while the CA carver's NestedDiscretizer sort crashes on string y
-    val sketched = BinaryCarver.sketchHighCardinality(train, specs, config)
-    // the class-histogram scan also yields the class set: no distinct() pass.
-    // cv>1 folds share the same scan (fold key = one more groupBy column);
-    // the fold assignment hashes the raw class label (deterministic, shared
-    // across classes) rather than each per-class binarized target.
-    val (kHist, classes, kFolds) =
-      if (config.cv > 1) MulticlassCarver.histogramMWithFolds(train, target, specs, config.cv, sketched, Option(config.foldCol))
-      else { val (h, c) = MulticlassCarver.histogramM(train, target, specs, sketched); (h, c, Nil) }
-    require(classes.length > 2, s"[OneVsRestCarver] y has ${classes.length} classes; use BinaryCarver for <=2")
-    val carved = classes.drop(1) // reference drops the first sorted class
-    val devK = dev.map { d =>
-      val (h, devClasses) = MulticlassCarver.histogramM(d, target, specs, sketched)
-      // reference validate_multiclass_target: class-set mismatch in either
-      // direction raises (a missing dev class would silently binarize to
-      // an all-zero dev target for that class's fit)
-      val devOnly = devClasses.filterNot(classes.contains)
-      val trainOnly = classes.filterNot(devClasses.contains)
-      require(devOnly.isEmpty && trainOnly.isEmpty,
-        s"[OneVsRestCarver] Mismatched classes between y and y_dev: train-only $trainOnly, dev-only $devOnly")
-      (h, devClasses)
-    }
-    fitFromHistograms(kHist, classes, target, specs, config, kFolds, devK)
+    // works while the CA carver's NestedDiscretizer sort crashes on string y.
+    // cv>1: the fold assignment hashes the raw class label (deterministic,
+    // shared across classes) rather than each per-class binarized target
+    val (hist, devHist) = MulticlassCarver.classStage(train, target, specs, dev, config, "OneVsRestCarver")
+    fitFromHistograms(hist.total, hist.classes, target, specs, config, hist.folds, devHist)
   }
 
   /** Driver-side remainder of [[fit]] over a precomputed class-histogram —
@@ -545,17 +426,14 @@ object OneVsRestCarver {
       specs: Seq[FeatureSpec],
       config: BinaryCarver.Config = BinaryCarver.Config(),
       kFolds: Seq[Map[String, Array[KHistRow]]] = Nil,
-      devK: Option[(Map[String, Array[KHistRow]], Vector[String])] = None
+      devK: Option[Map[String, Array[KHistRow]]] = None
   ): Model = {
     require(classes.length > 2, s"[OneVsRestCarver] y has ${classes.length} classes; use BinaryCarver for <=2")
     val carved = classes.drop(1) // reference drops the first sorted class
     val perClass = carved.map { yClass =>
       val ci = classes.indexOf(yClass).toDouble
       val trainHist = binarize(kHist, ci)
-      val devHist = devK.map { case (h, devClasses) =>
-        val di = devClasses.indexOf(yClass).toDouble // -1 => class absent, all sumY 0
-        binarize(h, di)
-      }
+      val devHist = devK.map(binarize(_, ci))
       val foldHists = kFolds.map(binarize(_, ci))
       yClass -> BinaryCarver.fitFromHistograms(trainHist, devHist, "__ovr_y", specs, config, foldHists)
     }.toMap

@@ -1,18 +1,18 @@
 package graft.carve
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
-import graft.carve.BinaryCarver.{FeatureSpec, FittedFeature, HistRow, NanLabel, OtherLabel}
+import graft.carve.BinaryCarver.{FeatureSpec, FittedFeature, Layout, NanLabel, OtherLabel, assembleFitted}
 
 /** Supervised optimal discretization against an ORDINAL target (integer
   * encoded, ordered levels, K > 2) — the Spark-native re-expression of the
   * reference's OrdinalCarver (`carvers/ordinal_carver.py`).
   *
   * Cluster/driver split mirrors BinaryCarver: ONE pass over the train table
-  * — `groupBy(feature, value, y_level).count()` in long form — collects the
-  * per-value K-column crosstabs (bounded by cardinality × levels). All
+  * — the [[Crosstab]] stage keyed by the target level,
+  * `groupBy(feature, value, y_level).count()` — collects the per-value
+  * K-column crosstabs (bounded by cardinality × levels). All
   * carving (quantile prebin, rare merge, ridit scale, C−D interval DP with
   * tau-b/tau-c/Somers' D, viability vetoes) runs driver-side on those
   * aggregates. Transform is the same pure projection as the binary model.
@@ -66,86 +66,11 @@ object OrdinalCarver {
     def transformLabels(df: DataFrame): DataFrame = binaryView.transformLabels(df)
   }
 
-  /** One K-histogram row: raw value (numeric or string; null = NaN bucket),
-    * target level, count.
+  /** One K-histogram row — the keyed projection of the [[Crosstab]]
+    * stage: raw value (numeric or string; null = NaN bucket), target level
+    * (or class index), count.
     */
   final case class KHistRow(dv: Double, sv: String, isNull: Boolean, level: Double, count: Long)
-
-  /** The one cluster pass: explode features to long form, count per
-    * (feature, value, target level). Map-side partial aggregation keeps the
-    * shuffle at (features × cardinality × levels) rows.
-    */
-  def histogramK(df: DataFrame, target: String, specs: Seq[FeatureSpec],
-      sketched: Map[String, Vector[Double]] = Map.empty): Map[String, Array[KHistRow]] = {
-    val y = col(target).cast("double")
-    val long = df.select(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), y.as("__y"))
-    val agg = long
-      .groupBy(col("e.fid").as("fid"), col("e.dv").as("dv"), col("e.sv").as("sv"), col("__y"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect()
-    // reference OrdinalCarver._prepare_samples: y must be a numeric
-    // integer-encoded ordinal with no NaN -- a null here is either a real
-    // null or a non-numeric value nulled by the cast
-    require(!agg.exists(_.isNullAt(3)),
-      s"[OrdinalCarver] y ('$target') must be an integer-encoded numeric ordinal with no nulls")
-    val byFid = mutable.Map.empty[String, mutable.ArrayBuffer[KHistRow]]
-    agg.foreach { r =>
-      val dvNull = r.isNullAt(1)
-      val svNull = r.isNullAt(2)
-      byFid.getOrElseUpdate(r.getString(0), mutable.ArrayBuffer.empty) += KHistRow(
-        if (dvNull) Double.NaN else r.getDouble(1),
-        if (svNull) null else r.getString(2),
-        dvNull && svNull,
-        r.getDouble(3),
-        r.getLong(4)
-      )
-    }
-    byFid.view.mapValues(_.toArray).toMap
-  }
-
-  /** Train K-histogram + all `cv` fold K-histograms from ONE cluster pass
-    * (fold key as one more groupBy column; total = sum over folds — the
-    * single-scan C4 shape, see [[BinaryCarver.histogramWithFolds]]).
-    */
-  def histogramKWithFolds(df: DataFrame, target: String, specs: Seq[FeatureSpec], cv: Int,
-      sketched: Map[String, Vector[Double]] = Map.empty,
-      foldCol: Option[String] = None)
-      : (Map[String, Array[KHistRow]], Seq[Map[String, Array[KHistRow]]]) = {
-    val y = col(target).cast("double")
-    val long = df.select(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), y.as("__y"),
-      BinaryCarver.foldExpr(specs, target, cv, foldCol).as("__fold"))
-    val agg = long
-      .groupBy(col("e.fid").as("fid"), col("e.dv").as("dv"), col("e.sv").as("sv"),
-        col("__y"), col("__fold"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect()
-    require(!agg.exists(_.isNullAt(3)),
-      s"[OrdinalCarver] y ('$target') must be an integer-encoded numeric ordinal with no nulls")
-    val folds = Vector.fill(cv)(mutable.Map.empty[String, mutable.ArrayBuffer[KHistRow]])
-    val total = mutable.LinkedHashMap.empty[(String, Long, String, Double), (Boolean, Long)]
-    agg.foreach { r =>
-      val fid = r.getString(0)
-      val dvNull = r.isNullAt(1)
-      val svNull = r.isNullAt(2)
-      val dv = if (dvNull) Double.NaN else r.getDouble(1)
-      val sv = if (svNull) null else r.getString(2)
-      val level = r.getDouble(3)
-      val f = BinaryCarver.checkFoldId(r, 4, cv, "OrdinalCarver")
-      val cnt = r.getLong(5)
-      folds(f).getOrElseUpdate(fid, mutable.ArrayBuffer.empty) +=
-        KHistRow(dv, sv, dvNull && svNull, level, cnt)
-      val key = (fid, java.lang.Double.doubleToLongBits(dv), sv, level)
-      val (isNull, c0) = total.getOrElse(key, (dvNull && svNull, 0L))
-      total(key) = (isNull, c0 + cnt)
-    }
-    val totalByFid = mutable.Map.empty[String, mutable.ArrayBuffer[KHistRow]]
-    total.foreach { case ((fid, dvBits, sv, level), (isNull, c)) =>
-      totalByFid.getOrElseUpdate(fid, mutable.ArrayBuffer.empty) +=
-        KHistRow(java.lang.Double.longBitsToDouble(dvBits), sv, isNull, level, c)
-    }
-    (totalByFid.view.mapValues(_.toArray).toMap,
-      folds.map(_.view.mapValues(_.toArray).toMap))
-  }
 
   def fit(
       train: DataFrame,
@@ -157,7 +82,8 @@ object OrdinalCarver {
     val guarded = BinaryCarver.guardTarget(target, specs)
     if (guarded.length != specs.length) return fit(train, target, guarded, dev, config)
     val (trainHist, foldHists, sketched) = histStage(train, target, guarded, config)
-    val devHist = dev.map(d => histogramK(d, target, guarded, sketched))
+    val devHist = dev.map(d =>
+      Crosstab.stage(d, target, guarded, sketched, Crosstab.Level, None)(Crosstab.keyed).total)
     fitFromHistograms(trainHist, devHist, target, guarded, config, foldHists)
   }
 
@@ -184,10 +110,9 @@ object OrdinalCarver {
       BinaryCarver.Config(minFreq = config.minFreq,
         sketchCardinalityThreshold = config.sketchCardinalityThreshold,
         sketchRelativeError = config.sketchRelativeError))
-    val (trainHist, foldHists) =
-      if (config.cv > 1) histogramKWithFolds(train, target, specs, config.cv, sketched, Option(config.foldCol))
-      else (histogramK(train, target, specs, sketched), Nil)
-    (trainHist, foldHists, sketched)
+    val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Level,
+      Crosstab.folds(config.cv, config.foldCol))(Crosstab.keyed)
+    (hist.total, hist.folds, sketched)
   }
 
   def fitFromHistograms(
@@ -276,18 +201,7 @@ object OrdinalCarver {
   }
 
   /** Search-ready per-feature state (K-column analogue of BinaryCarver.Prep). */
-  final case class KPrep(
-      kind: String,
-      prebinEdges: Vector[Double],
-      prebinLeader: Vector[String],
-      valueToRaw: Map[String, String],
-      rawOrder: Vector[String],
-      xagg: Ordinal.KXagg,
-      hasNan: Boolean,
-      hasDefault: Boolean,
-      // declared-ordinal: search label -> pre-merged raw members
-      members: Map[String, Vector[String]] = Map.empty
-  )
+  final case class KPrep(layout: Layout, xagg: Ordinal.KXagg)
 
   /** Declared-ordinal feature prep against a K-level target: declared
     * order preserved, rare values merged with declared neighbours using
@@ -344,9 +258,8 @@ object OrdinalCarver {
     }
     val xLabels = if (hasNan) order :+ NanLabel else order
     val m = if (hasNan) gMat :+ nanRow else gMat
-    KPrep("ordinal", Vector.empty, Vector.empty, valueToRaw, order,
-      Ordinal.KXagg(xLabels, levels, m), hasNan, hasDefault = false,
-      members = groups.map(g => g.head -> g).toMap)
+    KPrep(Layout("ordinal", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault = false,
+      members = groups.map(g => g.head -> g).toMap), Ordinal.KXagg(xLabels, levels, m))
   }
 
   private[carve] def prepQuantitativeK(
@@ -393,8 +306,8 @@ object OrdinalCarver {
     }
     val xLabels = if (hasNan) order :+ NanLabel else order
     val m = if (hasNan) gMat :+ nanRow else gMat
-    KPrep("quantitative", edges, labels.map(leaderOf), Map.empty, order,
-      Ordinal.KXagg(xLabels, levels, m), hasNan, hasDefault = false)
+    KPrep(Layout("quantitative", edges, labels.map(leaderOf), Map.empty, order, hasNan, hasDefault = false),
+      Ordinal.KXagg(xLabels, levels, m))
   }
 
   private[carve] def prepCategoricalK(
@@ -435,8 +348,8 @@ object OrdinalCarver {
     }
     val xLabels = if (hasNan) order :+ NanLabel else order
     val m = (order.map(mats(_)) ++ (if (hasNan) Vector(nanRow) else Vector.empty)).toArray
-    KPrep("categorical", Vector.empty, Vector.empty, valueToRaw, order,
-      Ordinal.KXagg(xLabels, levels, m), hasNan, hasDefault)
+    KPrep(Layout("categorical", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault),
+      Ordinal.KXagg(xLabels, levels, m))
   }
 
   /** Nested prep against a K-level ordinal target (reference
@@ -484,8 +397,8 @@ object OrdinalCarver {
       val children = res.rawToBucket.collect { case (v, bb) if bb == b && v != b => v }.toVector.sorted
       b -> (b +: children)
     }.toMap
-    KPrep("nested", Vector.empty, Vector.empty, res.rawToBucket, order,
-      Ordinal.KXagg(xLabels, levels, m), hasNan, hasDefault = true, members = members)
+    KPrep(Layout("nested", Vector.empty, Vector.empty, res.rawToBucket, order, hasNan,
+      hasDefault = true, members = members), Ordinal.KXagg(xLabels, levels, m))
   }
 
   /** Dev histogram → KXagg in the train feature's label space. */
@@ -496,22 +409,7 @@ object OrdinalCarver {
     val acc = mutable.LinkedHashMap.empty[String, Array[Double]]
     p.xagg.labels.foreach(l => acc(l) = new Array[Double](levels.length))
     hist.foreach { r =>
-      val label =
-        if (r.isNull) NanLabel
-        else if (spec.kind == "quantitative") p.prebinLeader(BinaryCarver.searchsortedLeft(p.prebinEdges, r.dv))
-        else if (spec.kind == "nested") {
-          // X4 on the validation view: unseen finest walks the tuple's
-          // parent values to the first surviving bucket
-          val lv = BinaryCarver.decodeNestedSv(r.sv, spec.parents.length + 1)
-          p.valueToRaw.get(lv.head) match {
-            case Some(lbl) => lbl
-            case None =>
-              val buckets = p.rawOrder.toSet
-              lv.tail.find(v => v != null && buckets.contains(v))
-                .getOrElse(if (buckets.contains(OtherLabel)) OtherLabel else null)
-          }
-        }
-        else p.valueToRaw.getOrElse(r.sv, if (p.hasDefault) OtherLabel else null)
+      val label = p.layout.labelOf(spec, r.dv, r.sv, r.isNull)
       if (label != null) {
         levelIdx.get(r.level).foreach { j =>
           acc.getOrElseUpdate(label, new Array[Double](levels.length))(j) += r.count
@@ -530,62 +428,20 @@ object OrdinalCarver {
       if (config.history) scala.collection.mutable.ArrayBuffer.empty[Search.HistoryEntry] else null
     def run(minFreq: Option[Double]) = Ordinal.bestCombination(
       p.xagg, devX, rate0, config.maxNMod, minFreq, config.minFreqAlpha,
-      config.sortBy, p.hasNan, NanLabel, dropna = true, config.topKInitial, config.escalate, folds,
+      config.sortBy, p.layout.hasNan, NanLabel, dropna = true, config.topKInitial, config.escalate, folds,
       histSink = histBuf, rescueMode = minFreq.isEmpty, dpMemo = dpMemo)
     val normal = run(Some(config.minFreq))
     val best =
       if (normal.isEmpty && config.rescue && (devX.nonEmpty || folds.nonEmpty)) run(None)
       else normal
 
+    val history = if (histBuf == null) Vector.empty else histBuf.toVector
+    val rateRef = rate0.fitReference(p.xagg)
     best match {
-      case None =>
-        OFitted(FittedFeature(spec.name, p.kind, p.prebinEdges, Vector.empty, Map.empty,
-          -1, -1, p.hasNan, p.hasDefault, Vector.empty, Double.NaN, Double.NaN,
-          Vector.empty, dropped = true, droppedReason = "no viable combination",
-          history = if (histBuf == null) Vector.empty else histBuf.toVector),
-          Double.NaN, Double.NaN, Double.NaN, rate0.fitReference(p.xagg))
-      case Some(b) =>
-        val labelToBin: Map[String, Int] =
-          b.combination.zipWithIndex.flatMap { case (g, i) => g.map(_ -> i) }.toMap
-        val nanBin = labelToBin.getOrElse(NanLabel, -1)
-        val f =
-          if (p.kind == "quantitative") {
-            val prebinToBin = p.prebinLeader.map(l => labelToBin.getOrElse(l, -1))
-            val prep = BinaryCarver.Prep(p.kind, p.prebinEdges, p.prebinLeader, p.valueToRaw,
-              p.rawOrder, Search.Xagg(Vector.empty, Array.empty, Array.empty), p.hasNan, p.hasDefault)
-            val binLabels = BinaryCarver.quantBinLabels(b.combination, prep, nanBin)
-            FittedFeature(spec.name, p.kind, p.prebinEdges, prebinToBin, Map.empty,
-              nanBin, -1, p.hasNan, p.hasDefault, binLabels, Double.NaN, Double.NaN,
-              b.rates, dropped = false, droppedReason = "",
-              history = if (histBuf == null) Vector.empty else histBuf.toVector)
-          } else {
-            val valueToBin = p.valueToRaw.collect {
-              case (v, raw) if labelToBin.contains(raw) => v -> labelToBin(raw)
-            }
-            // nested: zero-mass default joins the last bin (reference
-            // has_default semantics; see BinaryCarver.searchFeature)
-            val otherBin =
-              if (p.kind == "nested") labelToBin.getOrElse(OtherLabel, b.combination.length - 1)
-              else labelToBin.getOrElse(OtherLabel, -1)
-            val binLabels0 = b.combination.map(g =>
-              g.flatMap(l => p.members.getOrElse(l, Vector(l))).mkString(", "))
-            val binLabels =
-              if (p.kind == "nested" && !labelToBin.contains(OtherLabel))
-                binLabels0.updated(otherBin, binLabels0(otherBin) + s", $OtherLabel")
-              else binLabels0
-            val leaderToBin =
-              if (p.kind == "nested")
-                labelToBin.filterNot { case (l, _) => l == NanLabel || l == OtherLabel }
-              else Map.empty[String, Int]
-            FittedFeature(spec.name, p.kind, Vector.empty, Vector.empty, valueToBin,
-              nanBin, otherBin, p.hasNan, p.hasDefault, binLabels, Double.NaN, Double.NaN,
-              b.rates, dropped = false, droppedReason = "",
-              ordinalOrder = if (p.kind == "ordinal") spec.ordinalOrder.toVector else Vector.empty,
-              parents = if (p.kind == "nested") spec.parents.toVector else Vector.empty,
-              leaderToBin = leaderToBin,
-              history = if (histBuf == null) Vector.empty else histBuf.toVector)
-          }
-        OFitted(f, b.metrics.tauB, b.metrics.tauC, b.metrics.somersd, rate0.fitReference(p.xagg))
+      case None => OFitted(assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
+        history), Double.NaN, Double.NaN, Double.NaN, rateRef)
+      case Some(b) => OFitted(assembleFitted(spec, p.layout, b.combination, b.rates, Double.NaN, Double.NaN,
+        history), b.metrics.tauB, b.metrics.tauC, b.metrics.somersd, rateRef)
     }
   }
 }

@@ -57,11 +57,13 @@ class RobustnessSpec extends SparkSuite {
     // back via foldCol must see byte-identical fold histograms, proving an
     // EXTERNAL (sklearn-style) assignment routes through unchanged
     val withFold = df.withColumn("__fold", BinaryCarver.foldKeyExpr(specs, "y", 5))
-    val viaHash = BinaryCarver.histogramWithFolds(df, "y", specs, 5)
-    val viaCol = BinaryCarver.histogramWithFolds(withFold, "y", specs, 5, foldCol = Some("__fold"))
+    val viaHash = Crosstab.stage(df, "y", specs, Map.empty, Crosstab.Summed(),
+      Some(Crosstab.Folds(5)))(Crosstab.summed)
+    val viaCol = Crosstab.stage(withFold, "y", specs, Map.empty, Crosstab.Summed(),
+      Some(Crosstab.Folds(5, foldCol = Some("__fold"))))(Crosstab.summed)
     def canon(h: Seq[Map[String, Array[BinaryCarver.HistRow]]]) =
       h.map(_.view.mapValues(_.sortBy(r => (r.dv, r.count)).toVector).toMap)
-    assert(canon(viaHash._2) == canon(viaCol._2))
+    assert(canon(viaHash.folds) == canon(viaCol.folds))
     // and a full fit through Config.foldCol matches the hash-cv fit
     val mHash = BinaryCarver.fit(df, "y", specs, config = BinaryCarver.Config(cv = 5))
     val mCol = BinaryCarver.fit(withFold, "y", specs,
@@ -128,9 +130,27 @@ class RobustnessSpec extends SparkSuite {
       counter.get()
     }
     val specs = Seq(BinaryCarver.FeatureSpec("x", "quantitative"))
-    val plain = countJobs { BinaryCarver.fit(df, "y", specs); () }
-    val folded = countJobs { BinaryCarver.fit(df, "y", specs, config = BinaryCarver.Config(cv = 5)); () }
-    assert(folded <= plain + 1, s"cv=5 fit ran $folded jobs vs $plain without cv")
+    val kdf = df.withColumn("lvl", (col("y") * 2 + pmod(col("id"), lit(2))).cast("int"))
+      .withColumn("k", (col("y") + pmod(col("id"), lit(2))).cast("string"))
+    // family -> (cv folds, fit under that cv; 0 = no folds)
+    val fits: Seq[(String, Int, Int => Unit)] = Seq(
+      ("binary", 5, cv => BinaryCarver.fit(df, "y", specs, config = BinaryCarver.Config(cv = cv))),
+      ("ordinal", 3, cv => OrdinalCarver.fit(kdf, "lvl", specs, config = OrdinalCarver.Config(cv = cv))),
+      ("multiclass", 3, cv => MulticlassCarver.fit(kdf, "k", specs, config = MulticlassCarver.Config(cv = cv))),
+      ("one-vs-rest", 3, cv => OneVsRestCarver.fit(kdf, "k", specs, config = BinaryCarver.Config(cv = cv))))
+    fits.foreach { case (family, cv, fit) =>
+      val plain = countJobs(fit(0))
+      val folded = countJobs(fit(cv))
+      assert(folded <= plain + 1, s"$family: cv=$cv fit ran $folded jobs vs $plain without cv")
+    }
+  }
+
+  test("a failing per-k DP run reaches the caller with its own exception type") {
+    val e = intercept[IllegalArgumentException] {
+      Dp.perKParallel(5) { k => require(k != 3, s"k-run $k failed"); k }
+    }
+    assert(e.getMessage.contains("k-run 3 failed"), e.getMessage)
+    assert(Dp.perKParallel(5)(identity) == Vector(2, 3, 4, 5))
   }
 
   test("cv folds veto an unstable split that train+dev alone accept") {
