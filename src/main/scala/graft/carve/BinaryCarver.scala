@@ -2,7 +2,6 @@ package graft.carve
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 
 /** Supervised optimal discretization of numeric + categorical features
   * against a binary target — the Spark-native re-expression of the
@@ -13,9 +12,11 @@ import scala.collection.mutable
   * the train table — `groupBy(feature, value).agg(count, sum(y))` in long
   * form — and one over the dev table. The collected per-value histograms
   * (bounded by column cardinality, not row count) feed every driver-side
-  * algorithm: frequency-aware quantile pre-binning at min_freq/2, rare
-  * quantile merge, categorical rare→__OTHER__ + target-rate sort, and the
-  * progressive top-K chi² DP search with Wilson/distinct/rank-order vetoes.
+  * algorithm: the pre-binning ([[Prebin.prep]] under the summed target
+  * view [[Prebin.Summed]]: quantile prebins at min_freq/2, rare quantile
+  * merge, categorical rare→__OTHER__ + target-rate sort, declared-ordinal
+  * and nested kinds), then the progressive top-K chi² DP search with
+  * Wilson/distinct/rank-order vetoes.
   * Transform is a pure projection (no shuffle): binary-searched bucketize
   * for numerics, broadcast map for categoricals.
   *
@@ -737,49 +738,15 @@ object BinaryCarver {
       foldHists: Seq[Map[String, Array[HistRow]]] = Nil
   ): Model = {
     require(specs.nonEmpty, "no features to carve")
-    val halfMinFreq = config.minFreq / 2.0
-    val q = math.rint(1.0 / halfMinFreq).toInt
-
-    val histRows = trainHist.values.map(_.length.toLong).sum
-    require(histRows <= config.maxHistogramRows,
-      s"histogram too large ($histRows rows) — use the sketch prebin path for high-cardinality columns")
-
-    // total rows (incl. NaN) per feature = sum of histogram counts
-    def totalOf(name: String): Long = trainHist(name).map(_.count).sum
-
-    // ---- driver prebin per feature → search-ready state
-    val prep: Map[String, Prep] = specs.map { s =>
-      s.name -> (s.kind match {
-        case "quantitative" => prepQuantitative(trainHist(s.name), totalOf(s.name), q, halfMinFreq, config)
-        case "ordinal" => prepOrdinal(trainHist(s.name), totalOf(s.name), s.ordinalOrder, halfMinFreq, config)
-        case "nested" => prepNested(s, trainHist(s.name), totalOf(s.name), halfMinFreq, config)
-        case _ => prepCategorical(trainHist(s.name), totalOf(s.name), halfMinFreq, config)
-      })
-    }.toMap
-
-    // ---- per-feature DP search: driver-side, embarrassingly parallel over
-    // features (reference uses a process pool here; JVM threads suffice)
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fitted = Await.result(
-      Future.traverse(specs.toVector) { spec =>
-        Future {
-          val p = prep(spec.name)
-          val devXagg = devHist.map(h => devXaggOf(spec, p, h.getOrElse(spec.name, Array.empty)))
-          val foldXaggs = foldHists.map(h => devXaggOf(spec, p, h.getOrElse(spec.name, Array.empty)))
-            .filter(_.labels.nonEmpty)
-          searchFeature(spec, p, devXagg.filter(_.labels.nonEmpty), config, foldXaggs)
-        }
-      },
-      Duration.Inf
-    )
-
+    val prep = Prebin.prepAll(specs, trainHist, Prebin.Summed, config.minFreq, config.minFreqAlpha,
+      config.rescue, config.maxHistogramRows)
+    val fitted = Prebin.fitEach(specs, prep, Prebin.Summed, devHist, foldHists)(searchFeature(_, _, _, _, config))
     Model(target, config.minFreq, config.maxNMod, config.sortBy, fitted)
   }
 
   /** One histogram row: raw value (numeric or string; null = NaN bucket). */
   final case class HistRow(dv: Double, sv: String, isNull: Boolean, count: Long, sumY: Double)
+      extends Crosstab.Cell
 
   // nested sv encoding: level values joined by \u0001, nulls as \u0002 —
   // control characters no extracted web-text value carries (the reference's
@@ -857,6 +824,9 @@ object BinaryCarver {
       // declared order (bin labels list every member, not just the leader)
       members: Map[String, Vector[String]] = Map.empty
   ) {
+    /** The searched labels: the search order, then NaN when present. */
+    def labels: Vector[String] = if (hasNan) rawOrder :+ NanLabel else rawOrder
+
     /** Search label of one crosstab value of a validation view (dev or
       * fold); null when an unseen value has no bucket to fall into.
       */
@@ -878,197 +848,18 @@ object BinaryCarver {
       else valueToRaw.getOrElse(sv, if (hasDefault) OtherLabel else null)
   }
 
-  /** Search-ready feature state: the layout plus the train xagg (NaN row
-    * included when present).
-    */
-  final case class Prep(layout: Layout, xagg: Search.Xagg)
+  /** Search-ready feature state of the summed-target families. */
+  type Prep = Prebin.Prep[Search.Xagg]
 
-  private[carve] def quantLabel(i: Int): String = f"m$i%04d"
-
-  private[carve] def prepQuantitative(hist: Array[HistRow], total: Long, q: Int, halfMinFreq: Double, config: Config): Prep = {
-    val nonNull = hist.filterNot(_.isNull).sortBy(_.dv)
-    val nanCount = hist.filter(_.isNull).map(_.count).sum
-    val nanSumY = hist.filter(_.isNull).map(_.sumY).sum
-    val edges = Prebin.findQuantiles(nonNull.map(_.dv), nonNull.map(_.count), total, q)
-    val nPrebins = edges.length + 1
-    // per-prebin (count, sumY) from the histogram
-    val cnt = new Array[Double](nPrebins)
-    val sy = new Array[Double](nPrebins)
-    nonNull.foreach { r =>
-      val idx = searchsortedLeft(edges, r.dv)
-      cnt(idx) += r.count
-      sy(idx) += r.sumY
+  private def searchFeature(spec: FeatureSpec, p: Prep, devXagg: Option[Search.Xagg], folds: Seq[Search.Xagg],
+      config: Config): FittedFeature = {
+    val (best0, history) = Search.withRescue(config.minFreq, config.rescue, devXagg.nonEmpty || folds.nonEmpty,
+        config.history) { (minFreq, sink) =>
+      Search.bestCombination(p.xagg, devXagg, config.maxNMod, minFreq, config.minFreqAlpha,
+        config.sortBy, p.layout.hasNan, NanLabel, dropna = config.dropna,
+        config.topKInitial, config.escalate, folds = folds, rateStrategy = config.rateStrategy,
+        histSink = sink, rescueMode = minFreq.isEmpty)
     }
-    val labels = Vector.tabulate(nPrebins)(quantLabel)
-    // rare quantile bins (can exist due to over-represented values): greedy
-    // ordinal merge at halfMinFreq (reference QuantitativeDiscretizer)
-    val hasRare = cnt.exists(c => Stats.isSignificantlyBelow(c, total, halfMinFreq, config.minFreqAlpha))
-    val groups =
-      if (hasRare) Prebin.findCommonModalities(labels, cnt, sy, total, halfMinFreq, config.minFreqAlpha)
-      else labels.map(Vector(_))
-    // leader per prebin + merged stats in group order
-    val leaderOf = groups.flatMap(g => g.map(_ -> g.head)).toMap
-    val order = groups.map(_.head)
-    val pos = labels.zipWithIndex.toMap
-    val gCnt = groups.map(g => g.map(l => cnt(pos(l))).sum).toArray
-    val gSy = groups.map(g => g.map(l => sy(pos(l))).sum).toArray
-    val hasNan = nanCount > 0
-    val xLabels = if (hasNan) order :+ NanLabel else order
-    val n1 = gSy ++ (if (hasNan) Array(nanSumY) else Array.empty[Double])
-    val n0 = gCnt.zip(gSy).map { case (c, s) => c - s } ++
-      (if (hasNan) Array(nanCount - nanSumY) else Array.empty[Double])
-    Prep(Layout("quantitative", edges, labels.map(leaderOf), Map.empty, order, hasNan, hasDefault = false),
-      Search.Xagg(xLabels, n0, n1))
-  }
-
-  private[carve] def prepCategorical(hist: Array[HistRow], total: Long, halfMinFreq: Double, config: Config): Prep = {
-    Prebin.frequencyGate(hist.map(_.count.toDouble), total, halfMinFreq, config.rescue, "categorical")
-    val nonNull = hist.filterNot(_.isNull)
-    val nanCount = hist.filter(_.isNull).map(_.count).sum
-    val nanSumY = hist.filter(_.isNull).map(_.sumY).sum
-    val counts = nonNull.map(r => r.sv -> r.count.toDouble).toMap
-    val rare = Prebin.rareCategoricals(counts, total, halfMinFreq, config.minFreqAlpha, NanLabel).toSet
-    val hasDefault = rare.nonEmpty
-    val valueToRaw = nonNull.map(r => r.sv -> (if (rare(r.sv)) OtherLabel else r.sv)).toMap
-    // merged stats per raw label
-    val stats = mutable.LinkedHashMap.empty[String, (Double, Double)]
-    nonNull.foreach { r =>
-      val lbl = valueToRaw(r.sv)
-      val (c, s) = stats.getOrElse(lbl, (0.0, 0.0))
-      stats(lbl) = (c + r.count, s + r.sumY)
-    }
-    val order = Prebin.targetRateOrder(stats.toMap)
-    val hasNan = nanCount > 0
-    val xLabels = if (hasNan) order :+ NanLabel else order
-    val n1 = order.map(l => stats(l)._2).toArray ++ (if (hasNan) Array(nanSumY) else Array.empty[Double])
-    val n0 = order.map(l => stats(l)._1 - stats(l)._2).toArray ++
-      (if (hasNan) Array(nanCount - nanSumY) else Array.empty[Double])
-    Prep(Layout("categorical", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault),
-      Search.Xagg(xLabels, n0, n1))
-  }
-
-  /** Nested prep (P6 carver integration — reference QualitativeDiscretizer
-    * runs nested FIRST inside fit, `qualitative_discretizer.py:82-84`, via
-    * NestedDiscretizer at the carver's half min_freq): decodes the
-    * tuple-encoded histogram rows, runs the level-by-level rollup
-    * ([[Nested.rollupCore]]), then behaves like a categorical prep over the
-    * surviving buckets (target-rate order). The rollup rides the shared
-    * one-pass histogram scan — no extra cluster job. No frequency gate:
-    * nested modalities are legitimately rare pre-rollup (the reference's
-    * check_frequencies excludes nested features for the same reason).
-    * hasDefault is always true — the reference pins a default modality on
-    * every nested feature so transform-time unseen values have a fallback.
-    */
-  private[carve] def prepNested(spec: FeatureSpec, hist: Array[HistRow], total: Long,
-      halfMinFreq: Double, config: Config): Prep = {
-    val columns = spec.name +: spec.parents
-    val nonNull = hist.filterNot(_.isNull)
-    val nanCount = hist.filter(_.isNull).map(_.count).sum
-    val nanSumY = hist.filter(_.isNull).map(_.sumY).sum
-    val tuples = nonNull.toSeq.map(r =>
-      Nested.Tup(decodeNestedSv(r.sv, columns.length), r.count, r.sumY))
-    val res = Nested.rollupCore(columns, tuples, total, halfMinFreq, config.minFreqAlpha,
-      sortByTarget = true)
-    val hasNan = nanCount > 0
-    val order = res.order
-    val xLabels = if (hasNan) order :+ NanLabel else order
-    val n1 = order.map(l => res.bucketStats(l)._2).toArray ++
-      (if (hasNan) Array(nanSumY) else Array.empty[Double])
-    val n0 = order.map(l => res.bucketStats(l)._1 - res.bucketStats(l)._2).toArray ++
-      (if (hasNan) Array(nanCount - nanSumY) else Array.empty[Double])
-    // bin labels list every rolled-up finest member plus the bucket leader
-    // (the reference's GroupedList content after order.group(raw, bucket)),
-    // leader first per the engine's display convention
-    val members = order.map { b =>
-      val children = res.rawToBucket.collect { case (v, bb) if bb == b && v != b => v }.toVector.sorted
-      b -> (b +: children)
-    }.toMap
-    Prep(Layout("nested", Vector.empty, Vector.empty, res.rawToBucket, order, hasNan,
-      hasDefault = true, members = members), Search.Xagg(xLabels, n0, n1))
-  }
-
-  /** Declared-ordinal prep (reference `OrdinalDiscretizer.fit` +
-    * `find_common_modalities`, `ordinal_discretizer.py:94-187`): modality
-    * order is the USER's declared total order (never target-rate sorted);
-    * rare values merge only with a declared neighbour via the closest-
-    * modality cascade; declared-but-unseen values participate with count 0
-    * (`reindex(labels, fill_value=0)`); observed-but-undeclared values
-    * raise.
-    */
-  private[carve] def prepOrdinal(hist: Array[HistRow], total: Long, declared: Seq[String],
-      halfMinFreq: Double, config: Config): Prep = {
-    require(declared.nonEmpty, "[ordinal] declared value order is empty")
-    require(!declared.contains(NanLabel),
-      s"[ordinal] ordering for '$NanLabel' can't be set by user, only fitted on data")
-    Prebin.frequencyGate(hist.map(_.count.toDouble), total, halfMinFreq, config.rescue, "ordinal")
-    val nonNull = hist.filterNot(_.isNull)
-    val nanCount = hist.filter(_.isNull).map(_.count).sum
-    val nanSumY = hist.filter(_.isNull).map(_.sumY).sum
-    val byVal = mutable.Map.empty[String, (Double, Double)]
-    nonNull.foreach { r =>
-      val (c, s) = byVal.getOrElse(r.sv, (0.0, 0.0))
-      byVal(r.sv) = (c + r.count, s + r.sumY)
-    }
-    val undeclared = byVal.keys.filterNot(declared.contains).toSeq.sorted
-    require(undeclared.isEmpty,
-      s"[ordinal] observed values not in the declared order: ${undeclared.mkString(", ")}")
-    val labels = declared.toVector
-    val cnt = labels.map(l => byVal.getOrElse(l, (0.0, 0.0))._1).toArray
-    val sy = labels.map(l => byVal.getOrElse(l, (0.0, 0.0))._2).toArray
-    val hasRare = cnt.exists(c => Stats.isSignificantlyBelow(c, total, halfMinFreq, config.minFreqAlpha))
-    val groups =
-      if (hasRare) Prebin.findCommonModalities(labels, cnt, sy, total, halfMinFreq, config.minFreqAlpha)
-      else labels.map(Vector(_))
-    val leaderOf = groups.flatMap(g => g.map(_ -> g.head)).toMap
-    val valueToRaw = nonNull.map(r => r.sv -> leaderOf(r.sv)).toMap
-    val order = groups.map(_.head)
-    val pos = labels.zipWithIndex.toMap
-    val gCnt = groups.map(g => g.map(l => cnt(pos(l))).sum).toArray
-    val gSy = groups.map(g => g.map(l => sy(pos(l))).sum).toArray
-    val hasNan = nanCount > 0
-    val xLabels = if (hasNan) order :+ NanLabel else order
-    val n1 = gSy ++ (if (hasNan) Array(nanSumY) else Array.empty[Double])
-    val n0 = gCnt.zip(gSy).map { case (c, s) => c - s } ++
-      (if (hasNan) Array(nanCount - nanSumY) else Array.empty[Double])
-    Prep(Layout("ordinal", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault = false,
-      members = groups.map(g => g.head -> g).toMap), Search.Xagg(xLabels, n0, n1))
-  }
-
-  /** Dev histogram → xagg in the train feature's label space. */
-  private[carve] def devXaggOf(spec: FeatureSpec, p: Prep, hist: Array[HistRow]): Search.Xagg = {
-    val acc = mutable.LinkedHashMap.empty[String, (Double, Double)]
-    p.xagg.labels.foreach(l => acc(l) = (0.0, 0.0))
-    hist.foreach { r =>
-      val label = p.layout.labelOf(spec, r.dv, r.sv, r.isNull)
-      if (label != null) {
-        val (c, s) = acc.getOrElse(label, (0.0, 0.0))
-        acc(label) = (c + r.count, s + r.sumY)
-      }
-    }
-    // drop labels with zero dev mass only if they were unseen additions
-    val labels = acc.keysIterator.toVector
-    Search.Xagg(
-      labels,
-      labels.map(l => acc(l)._1 - acc(l)._2).toArray,
-      labels.map(l => acc(l)._2).toArray
-    )
-  }
-
-  private[carve] def searchFeature(spec: FeatureSpec, p: Prep, devXagg: Option[Search.Xagg], config: Config,
-      folds: Seq[Search.Xagg] = Nil): FittedFeature = {
-    val histBuf =
-      if (config.history) mutable.ArrayBuffer.empty[Search.HistoryEntry] else null
-    def run(minFreq: Option[Double]) = Search.bestCombination(
-      p.xagg, devXagg, config.maxNMod, minFreq, config.minFreqAlpha,
-      config.sortBy, p.layout.hasNan, NanLabel, dropna = config.dropna,
-      config.topKInitial, config.escalate, folds = folds, rateStrategy = config.rateStrategy,
-      histSink = histBuf, rescueMode = minFreq.isEmpty)
-    val normal = run(Some(config.minFreq))
-    // rescue-rare rerun (`combination_evaluator.py:507-516`): min_freq waived,
-    // distinct-rates + ordering still enforced on every validation view
-    val best0 =
-      if (normal.isEmpty && config.rescue && (devXagg.nonEmpty || folds.nonEmpty)) run(None)
-      else normal
     // dropna=false: the NaN group (the all-vs-NaN rescue's second half) and
     // the NaN rate row never materialize as a bin — NaN stays raw at
     // transform time (`Features.unfillna`); the split was only the
@@ -1079,8 +870,6 @@ object BinaryCarver {
       else best0.map(b => b.copy(
         combination = b.combination.filterNot(_ == Vector(NanLabel)),
         rates = b.rates.filterNot(_.label == NanLabel)))
-
-    val history = if (histBuf == null) Vector.empty else histBuf.toVector
     best match {
       case None => assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
         history, config.dropna)

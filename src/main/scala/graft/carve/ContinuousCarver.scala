@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
-/** Regression carver (`carvers/continuous_carver.py`): same prebin pipeline
-  * as the binary carver, Kruskal-Wallis H association instead of chi².
+/** Regression carver (`carvers/continuous_carver.py`): the binary carver's
+  * prep ([[Prebin.prep]] under [[Prebin.Summed]], Σy of a real-valued y),
+  * Kruskal-Wallis H association instead of chi².
   *
   * Cluster shape: pass 1 = the shared per-value histogram (prebins, counts,
   * Σy); pass 2 = exact average-rank statistics per (feature, modality):
@@ -98,9 +99,6 @@ object ContinuousCarver {
     // otherwise surface as a raw ANSI cast error inside the rank job)
     require(train.schema(target).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"[ContinuousCarver] y ('$target') must be numeric; got ${train.schema(target).dataType.simpleString}")
-    val halfMinFreq = config.minFreq / 2.0
-    val q = math.rint(1.0 / halfMinFreq).toInt
-
     // ---- pass 1: shared histogram → prebins (quantile edges, merges, OTHER).
     // cv>1 folds ride the SAME scan (fold key as one more groupBy column).
     // The R4 distinct-y gate rides the SKETCH job as one extra aggregate —
@@ -111,21 +109,10 @@ object ContinuousCarver {
     val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Summed(),
       Crosstab.folds(config.cv, config.foldCol))(Crosstab.summed)
     val trainHist = hist.total
-    def totalOf(name: String): Long = trainHist(name).map(_.count).sum
-    val prep: Map[String, Prep] = specs.map { s =>
-      s.name -> (s.kind match {
-        case "quantitative" =>
-          BinaryCarver.prepQuantitative(trainHist(s.name), totalOf(s.name), q, halfMinFreq, config)
-        case "ordinal" =>
-          BinaryCarver.prepOrdinal(trainHist(s.name), totalOf(s.name), s.ordinalOrder, halfMinFreq, config)
-        case "nested" =>
-          // same rollup semantics as the binary integration: the target-rate
-          // sort is mean(y) per bucket, which HistRow's sumY already carries
-          BinaryCarver.prepNested(s, trainHist(s.name), totalOf(s.name), halfMinFreq, config)
-        case _ =>
-          BinaryCarver.prepCategorical(trainHist(s.name), totalOf(s.name), halfMinFreq, config)
-      })
-    }.toMap
+    // the nested rollup's target sort is mean(y) per bucket, which the
+    // summed view's Σy carries
+    val prep = Prebin.prepAll(specs, trainHist, Prebin.Summed, config.minFreq, config.minFreqAlpha,
+      config.rescue, config.maxHistogramRows)
 
     // ---- pass 2: rank stats per (feature, modality), both rank bases
     val approxMedian = withYHists && distinctY > medianGateThreshold(config, specs.length)
@@ -228,30 +215,22 @@ object ContinuousCarver {
         yHistsOf(long, approxMedian)
       }.getOrElse(Map.empty)
 
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fitted = Await.result(Future.traverse(specs.toVector) { spec =>
-      Future {
-        val p = prep(spec.name)
-        val (sub, full, moments) = rankStats(spec.name)
-        def view(h: Map[String, Array[BinaryCarver.HistRow]],
-            yh: Map[String, Map[String, Array[(Double, Double)]]]): Continuous.RankXagg = {
-          val x = BinaryCarver.devXaggOf(spec, p, h.getOrElse(spec.name, Array.empty))
-          // RankXagg view of a validation sample (ranks unused by vetoes);
-          // the median rate additionally needs the y histogram per modality
+    val fitted = Prebin.perFeature(specs) { spec =>
+      val p = prep(spec.name)
+      val (sub, full, moments) = rankStats(spec.name)
+      // RankXagg view of a validation sample (ranks unused by vetoes); the
+      // median rate additionally needs the y histogram per modality
+      def view(h: Map[String, Array[BinaryCarver.HistRow]],
+          yh: Map[String, Map[String, Array[(Double, Double)]]]): Option[Continuous.RankXagg] =
+        Prebin.project(spec, p, h, Prebin.Summed).map { x =>
           Continuous.RankXagg(x.labels, x.labels.indices.map(i => x.n0(i) + x.n1(i)).toArray,
             new Array[Double](x.labels.length), x.n1, 1.0,
             if (withMedians) "target_median" else "target_mean",
             yh.getOrElse(spec.name, Map.empty))
         }
-        val devX = devHist.map(view(_, devYHists))
-        val foldXs = foldHists.zip(foldYHists).map { case (h, yh) => view(h, yh) }
-          .filter(_.labels.nonEmpty)
-        searchContinuous(spec, p, sub, full, devX.filter(_.labels.nonEmpty), config, foldXs, moments,
-          stages.dpMemo)
-      }
-    }, Duration.Inf)
+      searchContinuous(spec, p, sub, full, devHist.flatMap(view(_, devYHists)), config,
+        foldHists.zip(foldYHists).flatMap { case (h, yh) => view(h, yh) }, moments, stages.dpMemo)
+    }
 
     Model(target, config.minFreq, config.maxNMod, "kruskal", fitted)
   }
@@ -595,18 +574,12 @@ object ContinuousCarver {
       moments: Map[String, (Double, Double, Double)] = Map.empty,
       dpMemo: Dp.CandMemo = null
   ): FittedFeature = {
-    val histBuf =
-      if (config.history) scala.collection.mutable.ArrayBuffer.empty[Search.HistoryEntry] else null
-    def run(minFreq: Option[Double]) = Continuous.bestCombination(
-      sub, full, devX, config.maxNMod, minFreq, config.minFreqAlpha,
-      p.layout.hasNan, NanLabel, config.topKInitial, config.escalate, folds,
-      histSink = histBuf, rescueMode = minFreq.isEmpty, dpMemo = dpMemo)
-    val normal = run(Some(config.minFreq))
-    // rescue-rare (C13): min_freq waived when a validation view exists
-    val best =
-      if (normal.isEmpty && config.rescue && (devX.nonEmpty || folds.nonEmpty)) run(None)
-      else normal
-    val history = if (histBuf == null) Vector.empty else histBuf.toVector
+    val (best, history) = Search.withRescue(config.minFreq, config.rescue, devX.nonEmpty || folds.nonEmpty,
+        config.history) { (minFreq, sink) =>
+      Continuous.bestCombination(sub, full, devX, config.maxNMod, minFreq, config.minFreqAlpha,
+        p.layout.hasNan, NanLabel, config.topKInitial, config.escalate, folds,
+        histSink = sink, rescueMode = minFreq.isEmpty, dpMemo = dpMemo)
+    }
     best match {
       case None => assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN, history)
       case Some((combination, h, rates)) =>

@@ -25,6 +25,17 @@ import graft.carve.OrdinalCarver.KHistRow
   */
 object Crosstab {
 
+  /** One collected crosstab row as the driver prep reads it: the value
+    * (numeric `dv` or string `sv`; both null is the NaN bucket) and its
+    * count. [[HistRow]] and [[KHistRow]] add the summed or keyed target.
+    */
+  trait Cell {
+    def dv: Double
+    def sv: String
+    def isNull: Boolean
+    def count: Long
+  }
+
   /** How the target enters the crosstab; `family` names the fit in the
     * y-contract and fold-id errors.
     */

@@ -234,15 +234,18 @@ object Dp {
       m.getOrElseUpdate(key, compute).asInstanceOf[T]
   }
 
-  /** Dedicated pool for the chi²-style per-k DP runs. The per-feature
-    * searches already run as futures on the global pool and BLOCK on their
-    * DP results; running the nested k-runs on the same bounded pool could
-    * starve it on small machines (all workers blocked awaiting tasks that
-    * cannot get a thread). A cached daemon pool sidesteps that — DP bursts
-    * are short and the pool shrinks back to zero threads when idle.
+  /** Threads of the dedicated pool for the chi²-style per-k DP runs. */
+  private[carve] val dpPoolSize: Int = Runtime.getRuntime.availableProcessors
+
+  /** Dedicated pool for the chi²-style per-k DP runs, fixed at one thread
+    * per core. The per-feature searches already run as futures on the
+    * global pool and BLOCK on their DP results, so the k-runs cannot share
+    * that pool (all its workers could be blocked on tasks that never get a
+    * thread); a fixed pool bounds the threads a wide fit starts, and
+    * [[perKParallel]]'s caller runs whatever k no pool thread has started.
     */
   private lazy val dpPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newCachedThreadPool(r => {
+    java.util.concurrent.Executors.newFixedThreadPool(dpPoolSize, r => {
       val t = new Thread(r, "graft-dp")
       t.setDaemon(true)
       t
@@ -251,19 +254,19 @@ object Dp {
   /** Run the independent per-k computations (k = 2..cap, each its own DP
     * under a k-dependent segment cost) concurrently and return the results
     * in ascending-k order — callers append them in that order, so the
-    * output sequence is identical to the former serial loop. A failing
-    * k-run rethrows its own exception, not the pool's
+    * output sequence is identical to the former serial loop. k = 3..cap go
+    * to the pool; the calling thread runs k = 2, then every k a pool
+    * thread has not started yet, so its progress never waits on a free
+    * pool thread. A failing k-run rethrows its own exception, not the
     * `ExecutionException` wrapper.
     */
   private[carve] def perKParallel[T](cap: Int)(runK: Int => T): Vector[T] = {
     if (cap < 2) return Vector.empty
     if (cap == 2) return Vector(runK(2))
-    val futs = (2 to cap).map { k =>
-      val task = new java.util.concurrent.FutureTask[T](() => runK(k))
-      dpPool.execute(task)
-      task
-    }
-    try futs.map(_.get()).toVector
+    val tasks = (2 to cap).map(k => new java.util.concurrent.FutureTask[T](() => runK(k)))
+    tasks.tail.foreach(dpPool.execute)
+    tasks.foreach(_.run()) // a no-op for a task a pool thread has started
+    try tasks.map(_.get()).toVector
     catch { case e: java.util.concurrent.ExecutionException if e.getCause != null => throw e.getCause }
   }
 

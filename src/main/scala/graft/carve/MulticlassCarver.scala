@@ -3,8 +3,8 @@ package graft.carve
 import org.apache.spark.sql.DataFrame
 import scala.collection.mutable
 
-import graft.carve.BinaryCarver.{FeatureSpec, FittedFeature, Layout, NanLabel, OtherLabel, assembleFitted}
-import graft.carve.OrdinalCarver.{KHistRow, KPrep}
+import graft.carve.BinaryCarver.{FeatureSpec, FittedFeature, NanLabel, assembleFitted}
+import graft.carve.OrdinalCarver.KHistRow
 
 /** Supervised optimal discretization against an UNORDERED multiclass target
   * (K > 2 classes) — the Spark-native re-expression of the reference's
@@ -16,7 +16,10 @@ import graft.carve.OrdinalCarver.{KHistRow, KPrep}
   * Cluster/driver split mirrors BinaryCarver: ONE
   * `groupBy(feature, value, class).count()` long-form pass (the
   * [[Crosstab]] stage keyed by class, run by [[classStage]]); everything
-  * else is driver-side math over the collected crosstabs.
+  * else is driver-side math over the collected crosstabs: the shared
+  * [[Prebin.prep]] under a class target view (K class counts; CA
+  * first-axis scores stand in for the merge rate and the categorical
+  * order), then the K-column chi² search.
   */
 object MulticlassCarver {
 
@@ -102,10 +105,6 @@ object MulticlassCarver {
     val guarded = BinaryCarver.guardTarget(target, specs)
     if (guarded.length != specs.length) return fit(train, target, guarded, dev, config)
     BinaryCarver.validateInputs(train, target, specs)
-    require(!specs.exists(_.kind == "nested"),
-      "nested features are not supported against an unordered multiclass target — the " +
-        "reference's NestedDiscretizer target sort cannot score string classes " +
-        "(series_target_rate crashes there); use Binary/Continuous/Ordinal carvers")
     val (hist, devHist) = classStage(train, target, specs, dev,
       BinaryCarver.Config(minFreq = config.minFreq, cv = config.cv, foldCol = config.foldCol,
         sketchCardinalityThreshold = config.sketchCardinalityThreshold,
@@ -123,221 +122,49 @@ object MulticlassCarver {
       foldHists: Seq[Map[String, Array[KHistRow]]] = Nil
   ): Model = {
     require(specs.nonEmpty, "no features to carve")
-    val histRows = trainHist.values.map(_.length.toLong).sum
-    require(histRows <= config.maxHistogramRows,
-      s"histogram too large ($histRows rows) — use the sketch prebin path for high-cardinality columns")
-    val levels = classes.indices.map(_.toDouble).toVector
-
-    val halfMinFreq = config.minFreq / 2.0
-    val q = math.rint(1.0 / halfMinFreq).toInt
-    def totalOf(name: String): Long = trainHist(name).map(_.count).sum
-
-    val prep: Map[String, KPrep] = specs.map { s =>
-      s.name -> (s.kind match {
-        case "quantitative" =>
-          prepQuantitativeM(trainHist(s.name), totalOf(s.name), levels, q, halfMinFreq, config)
-        case "ordinal" =>
-          prepOrdinalM(trainHist(s.name), totalOf(s.name), levels, s.ordinalOrder, halfMinFreq, config)
-        case _ =>
-          prepCategoricalM(trainHist(s.name), totalOf(s.name), levels, halfMinFreq, config)
-      })
-    }.toMap
-
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fitted = Await.result(
-      Future.traverse(specs.toVector) { spec =>
-        Future {
-          val p = prep(spec.name)
-          val devX = devHist.map(h => OrdinalCarver.devKXaggOf(spec, p, h.getOrElse(spec.name, Array.empty), levels))
-          val foldXs = foldHists.map(h => OrdinalCarver.devKXaggOf(spec, p, h.getOrElse(spec.name, Array.empty), levels))
-            .filter(_.labels.nonEmpty)
-          searchFeatureM(spec, p, devX.filter(_.labels.nonEmpty), config, foldXs)
-        }
-      },
-      Duration.Inf
-    )
+    require(!specs.exists(_.kind == "nested"),
+      "nested features are not supported against an unordered multiclass target — the " +
+        "reference's NestedDiscretizer target sort cannot score string classes " +
+        "(series_target_rate crashes there); use Binary/Continuous/Ordinal carvers")
+    // an unordered target has no mean: the merge "rate" of an ordered label
+    // is its CA first-axis score over the pre-merge crosstab
+    // (`ordinal_discretizer.py:compute_stats` — `_ca_row_scores`), and
+    // categorical modalities sort by CA score over the label-sorted
+    // crosstab (`categorical_discretizer.py:182-191`; pd.crosstab sorts its
+    // index, so ties keep label order)
+    val view = new Prebin.Keyed(classes.indices.map(_.toDouble).toVector) {
+      def targetSum(r: KHistRow, kind: String): Double = 0.0
+      override def mergeSums(accs: Array[Array[Double]]): Array[Double] = {
+        val scores = caScores(accs)
+        Array.tabulate(accs.length)(i => accs(i)(0) * scores(i))
+      }
+      override def order(accs: collection.Map[String, Array[Double]]): Vector[String] = {
+        val sorted = accs.keys.toVector.sorted
+        sorted.zip(caScores(sorted.map(accs).toArray)).sortBy(_._2).map(_._1)
+      }
+      private def caScores(accs: Array[Array[Double]]): Array[Double] = {
+        val m = accs.map(_.drop(2))
+        Ca.caRowScores(m, Ca.fitCaAxis(m))
+      }
+    }
+    val prep = Prebin.prepAll(specs, trainHist, view, config.minFreq, config.minFreqAlpha, config.rescue,
+      config.maxHistogramRows)
+    val fitted = Prebin.fitEach(specs, prep, view, devHist, foldHists) { (spec, p, devX, foldXs) =>
+      val (best, history) = Search.withRescue(config.minFreq, config.rescue, devX.nonEmpty || foldXs.nonEmpty,
+          config.history) { (minFreq, sink) =>
+        Multiclass.bestCombination(p.xagg, devX, config.maxNMod, minFreq, config.minFreqAlpha,
+          config.sortBy, p.layout.hasNan, NanLabel, dropna = true, config.topKInitial, config.escalate, foldXs,
+          histSink = sink, rescueMode = minFreq.isEmpty)
+      }
+      val rateRef = Multiclass.CAScoreRate(Ca.fitCaAxis(p.xagg.m))
+      best match {
+        case None => MFitted(assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
+          history), Double.NaN, Double.NaN, rateRef)
+        case Some(b) => MFitted(assembleFitted(spec, p.layout, b.combination, b.rates, b.cramerv, b.tschuprowt,
+          history), b.cramerv, b.tschuprowt, rateRef)
+      }
+    }
     Model(target, config.minFreq, config.maxNMod, config.sortBy, classes, fitted)
-  }
-
-  /** Quantitative prep for a nominal target: quantile prebin as usual; the
-    * rare-prebin merge "rate" is the prebin's CA first-axis score against
-    * the class crosstab (`ordinal_discretizer.py:compute_stats` — an
-    * unordered target has no numeric mean).
-    */
-  private[carve] def prepQuantitativeM(
-      hist: Array[KHistRow], total: Long, levels: Vector[Double],
-      q: Int, halfMinFreq: Double, config: Config
-  ): KPrep = {
-    val levelIdx = levels.zipWithIndex.toMap
-    val nonNull = hist.filterNot(_.isNull)
-    val nanRows = hist.filter(_.isNull)
-    val byVal = mutable.TreeMap.empty[Double, Long]
-    nonNull.foreach(r => byVal(r.dv) = byVal.getOrElse(r.dv, 0L) + r.count)
-    val edges = Prebin.findQuantiles(byVal.keys.toArray, byVal.values.toArray, total, q)
-    val nPrebins = edges.length + 1
-    val mat = Array.fill(nPrebins, levels.length)(0.0)
-    val cnt = new Array[Double](nPrebins)
-    nonNull.foreach { r =>
-      val idx = BinaryCarver.searchsortedLeft(edges, r.dv)
-      mat(idx)(levelIdx(r.level)) += r.count
-      cnt(idx) += r.count
-    }
-    val labels = Vector.tabulate(nPrebins)(BinaryCarver.quantLabel)
-    val hasRare = cnt.exists(c => Stats.isSignificantlyBelow(c, total, halfMinFreq, config.minFreqAlpha))
-    val groups =
-      if (hasRare) {
-        // per-prebin CA score × count as the merge "target sum"
-        val scores = Ca.caRowScores(mat, Ca.fitCaAxis(mat))
-        val sy = Array.tabulate(nPrebins)(i => cnt(i) * scores(i))
-        Prebin.findCommonModalities(labels, cnt, sy, total, halfMinFreq, config.minFreqAlpha)
-      } else labels.map(Vector(_))
-    val leaderOf = groups.flatMap(g => g.map(_ -> g.head)).toMap
-    val order = groups.map(_.head)
-    val pos = labels.zipWithIndex.toMap
-    val gMat = groups.map { g =>
-      val row = new Array[Double](levels.length)
-      g.foreach { l => val p = pos(l); var j = 0; while (j < row.length) { row(j) += mat(p)(j); j += 1 } }
-      row
-    }.toArray
-    val hasNan = nanRows.nonEmpty
-    val nanRow = {
-      val row = new Array[Double](levels.length)
-      nanRows.foreach(r => row(levelIdx(r.level)) += r.count)
-      row
-    }
-    val xLabels = if (hasNan) order :+ NanLabel else order
-    val m = if (hasNan) gMat :+ nanRow else gMat
-    KPrep(Layout("quantitative", edges, labels.map(leaderOf), Map.empty, order, hasNan, hasDefault = false),
-      Ordinal.KXagg(xLabels, levels, m))
-  }
-
-  /** Categorical prep for a nominal target: rare→OTHER, then modality order
-    * by CA first-axis score ascending (`categorical_discretizer.py:182-191`,
-    * ties by label via the crosstab's sorted index).
-    */
-  private[carve] def prepCategoricalM(
-      hist: Array[KHistRow], total: Long, levels: Vector[Double],
-      halfMinFreq: Double, config: Config
-  ): KPrep = {
-    val levelIdx = levels.zipWithIndex.toMap
-    val nonNull = hist.filterNot(_.isNull)
-    val nanRows = hist.filter(_.isNull)
-    locally {
-      val perValue = mutable.Map.empty[String, Double]
-      hist.foreach(r => perValue(if (r.isNull) null else r.sv) =
-        perValue.getOrElse(if (r.isNull) null else r.sv, 0.0) + r.count)
-      Prebin.frequencyGate(perValue.values, total, halfMinFreq, config.rescue, "categorical")
-    }
-    val valCounts = mutable.Map.empty[String, Double]
-    nonNull.foreach(r => valCounts(r.sv) = valCounts.getOrElse(r.sv, 0.0) + r.count)
-    val rare = Prebin.rareCategoricals(valCounts.toMap, total, halfMinFreq, config.minFreqAlpha, NanLabel).toSet
-    val hasDefault = rare.nonEmpty
-    val valueToRaw = nonNull.map(r => r.sv -> (if (rare(r.sv)) OtherLabel else r.sv)).toMap
-    val mats = mutable.Map.empty[String, Array[Double]]
-    nonNull.foreach { r =>
-      val lbl = valueToRaw(r.sv)
-      mats.getOrElseUpdate(lbl, new Array[Double](levels.length))(levelIdx(r.level)) += r.count
-    }
-    // CA scores over the sorted-label crosstab (pd.crosstab sorts its index)
-    val sortedLabels = mats.keys.toVector.sorted
-    val labelMat = sortedLabels.map(mats(_)).toArray
-    val scores = Ca.caRowScores(labelMat, Ca.fitCaAxis(labelMat))
-    val order = sortedLabels.zip(scores).sortBy(_._2).map(_._1) // stable: ties keep sorted order
-    val hasNan = nanRows.nonEmpty
-    val nanRow = {
-      val row = new Array[Double](levels.length)
-      nanRows.foreach(r => row(levelIdx(r.level)) += r.count)
-      row
-    }
-    val xLabels = if (hasNan) order :+ NanLabel else order
-    val m = (order.map(mats(_)) ++ (if (hasNan) Vector(nanRow) else Vector.empty)).toArray
-    KPrep(Layout("categorical", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault),
-      Ordinal.KXagg(xLabels, levels, m))
-  }
-
-  /** Declared-ordinal feature prep against a NOMINAL target: declared
-    * order preserved; the rare-merge "rate" substitutes each modality's
-    * CA first-axis score (`ordinal_discretizer.py:compute_stats` —
-    * `_ca_row_scores` — an unordered target has no numeric mean).
-    */
-  private[carve] def prepOrdinalM(
-      hist: Array[KHistRow], total: Long, levels: Vector[Double], declared: Seq[String],
-      halfMinFreq: Double, config: Config
-  ): KPrep = {
-    require(declared.nonEmpty, "[ordinal] declared value order is empty")
-    require(!declared.contains(NanLabel),
-      s"[ordinal] ordering for '$NanLabel' can't be set by user, only fitted on data")
-    val levelIdx = levels.zipWithIndex.toMap
-    val nonNull = hist.filterNot(_.isNull)
-    val nanRows = hist.filter(_.isNull)
-    locally {
-      val perValue = mutable.Map.empty[String, Double]
-      hist.foreach(r => perValue(if (r.isNull) null else r.sv) =
-        perValue.getOrElse(if (r.isNull) null else r.sv, 0.0) + r.count)
-      Prebin.frequencyGate(perValue.values, total, halfMinFreq, config.rescue, "ordinal")
-    }
-    val undeclared = nonNull.map(_.sv).distinct.filterNot(declared.contains).sorted
-    require(undeclared.isEmpty,
-      s"[ordinal] observed values not in the declared order: ${undeclared.mkString(", ")}")
-    val labels = declared.toVector
-    val pos = labels.zipWithIndex.toMap
-    val mat = Array.fill(labels.length, levels.length)(0.0)
-    val cnt = new Array[Double](labels.length)
-    nonNull.foreach { r =>
-      val i = pos(r.sv)
-      mat(i)(levelIdx(r.level)) += r.count
-      cnt(i) += r.count
-    }
-    val hasRare = cnt.exists(c => Stats.isSignificantlyBelow(c, total, halfMinFreq, config.minFreqAlpha))
-    val groups =
-      if (hasRare) {
-        val scores = Ca.caRowScores(mat, Ca.fitCaAxis(mat))
-        val sy = Array.tabulate(labels.length)(i => cnt(i) * scores(i))
-        Prebin.findCommonModalities(labels, cnt, sy, total, halfMinFreq, config.minFreqAlpha)
-      } else labels.map(Vector(_))
-    val leaderOf = groups.flatMap(g => g.map(_ -> g.head)).toMap
-    val valueToRaw = nonNull.map(r => r.sv -> leaderOf(r.sv)).toMap
-    val order = groups.map(_.head)
-    val gMat = groups.map { g =>
-      val row = new Array[Double](levels.length)
-      g.foreach { l => val p = pos(l); var j = 0; while (j < row.length) { row(j) += mat(p)(j); j += 1 } }
-      row
-    }.toArray
-    val hasNan = nanRows.nonEmpty
-    val nanRow = {
-      val row = new Array[Double](levels.length)
-      nanRows.foreach(r => row(levelIdx(r.level)) += r.count)
-      row
-    }
-    val xLabels = if (hasNan) order :+ NanLabel else order
-    val m = if (hasNan) gMat :+ nanRow else gMat
-    KPrep(Layout("ordinal", Vector.empty, Vector.empty, valueToRaw, order, hasNan, hasDefault = false,
-      members = groups.map(g => g.head -> g).toMap), Ordinal.KXagg(xLabels, levels, m))
-  }
-
-  private[carve] def searchFeatureM(spec: FeatureSpec, p: KPrep, devX: Option[Ordinal.KXagg], config: Config,
-      folds: Seq[Ordinal.KXagg] = Nil): MFitted = {
-    val histBuf =
-      if (config.history) scala.collection.mutable.ArrayBuffer.empty[Search.HistoryEntry] else null
-    def run(minFreq: Option[Double]) = Multiclass.bestCombination(
-      p.xagg, devX, config.maxNMod, minFreq, config.minFreqAlpha,
-      config.sortBy, p.layout.hasNan, NanLabel, dropna = true, config.topKInitial, config.escalate, folds,
-      histSink = histBuf, rescueMode = minFreq.isEmpty)
-    val normal = run(Some(config.minFreq))
-    val best =
-      if (normal.isEmpty && config.rescue && (devX.nonEmpty || folds.nonEmpty)) run(None)
-      else normal
-
-    val history = if (histBuf == null) Vector.empty else histBuf.toVector
-    val rateRef = Multiclass.CAScoreRate(Ca.fitCaAxis(p.xagg.m))
-    best match {
-      case None => MFitted(assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
-        history), Double.NaN, Double.NaN, rateRef)
-      case Some(b) => MFitted(assembleFitted(spec, p.layout, b.combination, b.rates, b.cramerv, b.tschuprowt,
-        history), b.cramerv, b.tschuprowt, rateRef)
-    }
   }
 }
 

@@ -66,7 +66,7 @@ object Nested {
 
   /** Driver-side rollup core over grouped (finest, parents..., cnt, sy)
     * tuples — shared by the standalone [[fit]] and the carver-integrated
-    * nested FeatureSpec kind ([[BinaryCarver.prepNested]]). Tuples with a
+    * nested FeatureSpec kind ([[Prebin.prep]]). Tuples with a
     * null finest value must already be excluded; `nobs` is the FULL row
     * count (null finest included — frequency denominators use it).
     */

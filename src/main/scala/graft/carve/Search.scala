@@ -157,6 +157,22 @@ object Search {
       measure: String = "",
       value: Double = Double.NaN)
 
+  /** One feature's search at `minFreq` and, when nothing is viable there,
+    * its rescue rerun with the min-freq veto waived (C13,
+    * `combination_evaluator.py:507-516`) — only under `rescue` and with a
+    * validation view (dev or fold), which still enforces distinct rates
+    * and ordering. `run` gets the min-freq (None = waived) and the history
+    * sink (null when `history` is off); returns the winner and the history
+    * of both runs.
+    */
+  def withRescue[T](minFreq: Double, rescue: Boolean, hasViews: Boolean, history: Boolean)(
+      run: (Option[Double], mutable.Buffer[HistoryEntry]) => Option[T]): (Option[T], Vector[HistoryEntry]) = {
+    val sink = if (history) mutable.ArrayBuffer.empty[HistoryEntry] else null
+    val normal = run(Some(minFreq), sink)
+    val best = if (normal.isEmpty && rescue && hasViews) run(None, sink) else normal
+    (best, if (sink == null) Vector.empty else sink.toVector)
+  }
+
   /** Result of a feature search: the winning partition over the search
     * labels plus its association metrics.
     */

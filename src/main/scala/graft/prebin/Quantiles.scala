@@ -67,12 +67,4 @@ object Quantiles {
       .join(broadcast(targets), col("target") >= col("cum") - col("cnt") && col("target") < col("cum"))
       .select(col("p_idx"), col("v").as("edge"))
   }
-
-  /** Driver-side edge array (distinct, ascending) for the carver pre-bin. */
-  def exactEdges(df: DataFrame, valueCol: String, q: Int): Array[Double] =
-    exactEdgesDF(df, valueCol, q)
-      .orderBy("p_idx")
-      .collect()
-      .map(_.getDouble(1))
-      .distinct
 }

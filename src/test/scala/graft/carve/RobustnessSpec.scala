@@ -153,6 +153,28 @@ class RobustnessSpec extends SparkSuite {
     assert(Dp.perKParallel(5)(identity) == Vector(2, 3, 4, 5))
   }
 
+  test("the DP pool stays bounded: a wide chi² fit never runs more graft-dp threads than cores") {
+    // 8 features x 100 prebins at max_n_mod 8: 7 concurrent k-runs per
+    // feature search, several feature searches at once
+    val hist = (0 until 8).map { f =>
+      s"x$f" -> Array.tabulate(2000)(v =>
+        BinaryCarver.HistRow(v.toDouble, null, isNull = false, 5L, ((v * 7 + f * 13) % 6).min(5).toDouble))
+    }.toMap
+    val specs = hist.keys.toSeq.sorted.map(BinaryCarver.FeatureSpec(_, "quantitative"))
+    def dpThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .count(t => t.getName == "graft-dp" && t.isAlive)
+    @volatile var done = false
+    @volatile var peak = 0
+    val probe = new Thread(() => while (!done) { peak = math.max(peak, dpThreads); Thread.sleep(1) })
+    probe.setDaemon(true)
+    probe.start()
+    try BinaryCarver.fitFromHistograms(hist, None, "y", specs,
+      BinaryCarver.Config(minFreq = 0.02, maxNMod = 8))
+    finally { done = true; probe.join() }
+    assert(peak > 0, "the fit ran no per-k DP on the pool")
+    assert(peak <= Dp.dpPoolSize, s"$peak graft-dp threads alive, bound ${Dp.dpPoolSize}")
+  }
+
   test("cv folds veto an unstable split that train+dev alone accept") {
     // y flips sign across fold-correlated subgroups -> per-fold ordering differs
     val rows = (0 until 3000).map { i =>
