@@ -1,20 +1,26 @@
 package graft.carve
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import scala.collection.mutable
+
+import graft.stats.Ranks
 
 /** Regression carver (`carvers/continuous_carver.py`): the binary carver's
   * prep ([[Prebin.prep]] under [[Prebin.Summed]], Σy of a real-valued y),
   * Kruskal-Wallis H association instead of chi².
   *
-  * Cluster shape: pass 1 = the shared per-value histogram (prebins, counts,
-  * Σy); pass 2 = exact average-rank statistics per (feature, modality):
-  * `groupBy(feature, y).count()` → per-feature cumulative window → join
-  * back → `groupBy(feature, modality).agg(n, Σrank, Σy)`, computed twice
-  * (with and without each feature's NaN rows pooled — rank bases differ,
-  * see [[Continuous.bestCombination]]) in the same aggregation.
+  * Cluster shape: pass 1 = the sketch (which also reads distinct-y and
+  * counts NaN y) and the shared per-value histogram (prebins, counts, Σy);
+  * pass 2 = exact average-rank statistics per (feature, modality): one
+  * persisted `(feature, modality, y) → count` aggregate, whose per-(feature,
+  * y) counts [[graft.stats.Ranks]] ranks in two pools (all rows, and rows
+  * outside the NaN modality — rank bases differ, see
+  * [[Continuous.bestCombination]]): on the driver when the HLL distinct-y
+  * reading puts the pool table under [[Stats.LocalRankRows]] rows, as a
+  * bucketed window above it. The ranks join back to the aggregate and
+  * `groupBy(feature, modality).agg(n, Σrank, Σy)` collects once.
   */
 object ContinuousCarver {
   import BinaryCarver.{FeatureSpec, FittedFeature, Layout, Model, Prep, Config, NanLabel, OtherLabel, assembleFitted}
@@ -90,6 +96,18 @@ object ContinuousCarver {
       specs0: Seq[FeatureSpec],
       config: Config,
       withYHists: Boolean = false
+  ): Stages = boundedStages(train, target, specs0, config, withYHists, Stats.LocalRankRows)
+
+  /** [[computeStages]] with the row bound of the driver-side rank table as
+    * a parameter, so a test can reach both rank branches on small data.
+    */
+  private[graft] def boundedStages(
+      train: DataFrame,
+      target: String,
+      specs0: Seq[FeatureSpec],
+      config: Config,
+      withYHists: Boolean,
+      rankRows: Long
   ): Stages = {
     val specs = BinaryCarver.guardTarget(target, specs0)
     require(config.dropna,
@@ -104,7 +122,11 @@ object ContinuousCarver {
     // The R4 distinct-y gate rides the SKETCH job as one extra aggregate —
     // previously its own full scan of (possibly expensive) y.
     val (sketched, sketchRow) = BinaryCarver.sketchWithExtras(train, specs, config,
-      Seq(approx_count_distinct(col(target)).as("__graft_y_acd")))
+      Seq(approx_count_distinct(col(target)).as("__graft_y_acd"),
+        count(when(isnan(col(target).cast("double")) || col(target).isNull, 1)).as("__graft_y_nan")))
+    // the reference raises on NaN y (`base_discretizer._prepare_y`)
+    require(!sketchRow.exists(_.getAs[Long]("__graft_y_nan") > 0),
+      s"[ContinuousCarver] y ('$target') should not contain NaN/null")
     val distinctY = sketchRow.map(_.getAs[Long]("__graft_y_acd")).getOrElse(-1L)
     val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Summed(),
       Crosstab.folds(config.cv, config.foldCol))(Crosstab.summed)
@@ -117,7 +139,7 @@ object ContinuousCarver {
     // ---- pass 2: rank stats per (feature, modality), both rank bases
     val approxMedian = withYHists && distinctY > medianGateThreshold(config, specs.length)
     val (rows, ties, yHists) =
-      rankStatsJob(train, target, specs, prep, withYHists, approxMedian, distinctY)
+      rankStatsJob(train, target, specs, prep, withYHists, approxMedian, distinctY, rankRows)
     Stages(config, sketched, distinctY, trainHist, hist.folds, prep, rows, ties, yHists)
   }
 
@@ -305,12 +327,13 @@ object ContinuousCarver {
       target: String,
       specs: Seq[FeatureSpec],
       prep: Map[String, Prep],
-      withMedians: Boolean = false,
-      approxMedian: Boolean = false,
+      withMedians: Boolean,
+      approxMedian: Boolean,
       // approx_count_distinct(y) from the sketch job; -1 = unknown. Chooses
       // the rank STRATEGY only — both strategies produce identical ranks —
       // so the ±2% HLL error is harmless.
-      approxDistinctY: Long = -1L
+      approxDistinctY: Long,
+      rankRows: Long
   ): (Map[String, Map[String, (Double, Double, Double, Double, Double)]],
       Map[String, (Double, Double)],
       Map[String, Map[String, Array[(Double, Double)]]]) = {
@@ -323,159 +346,60 @@ object ContinuousCarver {
     val ylh = long.groupBy(col("fid"), col("lbl"), col("y"))
       .agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try rankStatsOf(df, target, specs, long, ylh, withMedians, approxMedian, approxDistinctY)
+    try rankStatsOf(df, specs, long, ylh, withMedians, approxMedian, approxDistinctY, rankRows)
     finally ylh.unpersist()
   }
 
   /** [[rankStatsJob]]'s derivations from the persisted aggregate `ylh`. */
   private def rankStatsOf(
       df: DataFrame,
-      target: String,
       specs: Seq[FeatureSpec],
       long: DataFrame,
       ylh: DataFrame,
       withMedians: Boolean,
       approxMedian: Boolean,
-      approxDistinctY: Long
+      approxDistinctY: Long,
+      rankRows: Long
   ): (Map[String, Map[String, (Double, Double, Double, Double, Double)]],
       Map[String, (Double, Double)],
       Map[String, Map[String, Array[(Double, Double)]]]) = {
-    // per-(feature, y): counts over all rows and over non-NaN-modality rows
+    // per-(feature, y) counts of the two rank pools: all rows ("all") and
+    // non-NaN-modality rows ("sub")
     val yh = ylh.groupBy(col("fid"), col("y"))
       .agg(
-        sum(col("c")).as("ca"),
-        sum(when(col("lbl") =!= NanLabel, col("c")).otherwise(0L)).as("cs")
+        sum(col("c")).as("all"),
+        sum(when(col("lbl") =!= NanLabel, col("c")).otherwise(0L)).as("sub")
       )
 
     // Size-adaptive rank table (guide §1.2): a LOW-cardinality y (integer
     // scores, counts, grades — the common regression targets) has a tiny
-    // per-(feature, y) pool table, so the exclusive cumsums/ranks/ties
-    // compute exactly on the driver from ONE collect of `yh` — no
-    // approxQuantile pass, no bucket offsets, no window. Ranks are the
-    // identical cum + (c+1)/2 arithmetic either way; the distributed
-    // bucket-window path below remains for high-cardinality y (where the
-    // pool table is ~|rows| and must never be collected).
-    val localYh = approxDistinctY >= 0 &&
-      approxDistinctY * math.max(1, specs.length).toLong <= Stats.LocalRankRows
-    if (localYh) {
-      val yhRows = yh.collect()
-      require(!yhRows.exists(_.isNullAt(1)),
-        s"[ContinuousCarver] y ('$target') should not contain NaN/null")
-      val rankRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      val ties = yhRows.groupBy(_.getString(0)).map { case (fid, rows) =>
-        val sorted = rows.sortBy(_.getDouble(1))
-        var cuma = 0L; var cums = 0L
-        var ta = 0L; var na = 0L; var ts = 0L; var ns = 0L
-        sorted.foreach { r =>
-          val y = r.getDouble(1); val ca = r.getLong(2); val cs = r.getLong(3)
-          rankRows.add(org.apache.spark.sql.Row(fid, y,
-            cuma + (ca + 1) / 2.0, cums + (cs + 1) / 2.0))
-          cuma += ca; cums += cs
-          ta += ca * ca * ca - ca; na += ca
-          ts += cs * cs * cs - cs; ns += cs
+    // per-(feature, y) pool table, ranked on the driver from ONE collect of
+    // `yh`; a high-cardinality y (pool table ~|rows|, never collected) is
+    // ranked by the bucketed window. Both give the identical ranks.
+    val localYh = approxDistinctY >= 0 && approxDistinctY * math.max(1, specs.length).toLong <= rankRows
+    val (ranked, pools) =
+      if (localYh) {
+        val tables = yh.collect().groupBy(_.getString(0)).map { case (fid, rows) =>
+          fid -> Ranks.local(rows.map(r => (r.getDouble(1), Array(r.getLong(2), r.getLong(3)))))
         }
-        val tca = if (na < 2) 1.0 else 1.0 - ta.toDouble / (na.toDouble * na * na - na)
-        val tcs = if (ns < 2) 1.0 else 1.0 - ts.toDouble / (ns.toDouble * ns * ns - ns)
-        fid -> (tca, tcs)
+        val cells = for ((fid, t) <- tables.toSeq; j <- t.values.indices)
+          yield Row(fid, t.values(j), t.rank(0, j), t.rank(1, j))
+        val schema = StructType(Seq("fid" -> StringType, "y" -> DoubleType,
+          "rank_all" -> DoubleType, "rank_sub" -> DoubleType).map { case (n, t) => StructField(n, t) })
+        (broadcast(df.sparkSession.createDataFrame(java.util.Arrays.asList(cells: _*), schema)),
+          tables.map { case (fid, t) => fid -> IndexedSeq(t.pool(0), t.pool(1)) })
+      } else {
+        val r = Ranks.bucketed[String](yh, "fid", "y", Seq("all", "sub"))
+        (r.frame.select(col("fid"), col("y"), col("rank_all"), col("rank_sub")), r.pools)
       }
-      val rankedLocal = df.sparkSession.createDataFrame(rankRows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("fid", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("y", org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("rank_all", org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("rank_sub", org.apache.spark.sql.types.DoubleType))))
-      val stats = ylh.join(broadcast(rankedLocal), Seq("fid", "y"))
-        .groupBy(col("fid"), col("lbl"))
-        .agg(
-          sum(col("c")).as("n"),
-          sum(col("rank_all") * col("c")).as("ra"),
-          sum(col("rank_sub") * col("c")).as("rs"),
-          sum(col("y") * col("c")).as("sy"),
-          sum(col("y") * col("y") * col("c")).as("syy")
-        )
-        .collect()
-      val yHists: Map[String, Map[String, Array[(Double, Double)]]] =
-        if (!withMedians) Map.empty
-        else if (approxMedian) yHistsOf(long, approx = true)
-        else {
-          val h = ylh.collect()
-          h.groupBy(_.getString(0)).view.mapValues { rows =>
-            rows.groupBy(_.getString(1)).view.mapValues(
-              _.map(r => (r.getDouble(2), r.getLong(3).toDouble)).toArray).toMap
-          }.toMap
-        }
-      val byFid = mutable.Map.empty[String, mutable.Map[String, (Double, Double, Double, Double, Double)]]
-      stats.foreach { r =>
-        byFid.getOrElseUpdate(r.getString(0), mutable.Map.empty)(r.getString(1)) =
-          ((r.getLong(2).toDouble, r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-      }
-      return (byFid.view.mapValues(_.toMap).toMap, ties, yHists)
-    }
-
-    // Exclusive cumulative counts over y-order within each feature, WITHOUT
-    // a per-feature single-task window (a web-scale continuous target has
-    // ~one distinct y per row): range-bucket y by approximate global splits
-    // (exactness unaffected — buckets only partition the cumsum), collect
-    // the small per-(fid, bucket) totals for driver-side exclusive offsets,
-    // and run the within-bucket window partitioned by (fid, bucket) — the
-    // same shape proven in prebin/Quantiles.exactEdgesDF.
-    val ySplits = yh.stat.approxQuantile("y", (1 until 32).map(_ / 32.0).toArray, 0.05)
-      .filterNot(_.isNaN).distinct.sorted
-    val bucketCol = graft.transform.BinarySearchBucketize.column(
-      col("y"), ySplits.toVector, ySplits.indices.toVector :+ ySplits.length, nanBin = -1)
-    val yhB = yh.withColumn("bucket", bucketCol)
-    // bucket totals AND per-feature tie sums from ONE collect (the tie
-    // correction needs only per-(fid, y) counts, which this grouping
-    // already sums — the previous separate ties job re-derived them)
-    val perBucketRows = yhB.groupBy(col("fid"), col("bucket"))
-      .agg(sum(col("ca")).as("na"), sum(col("cs")).as("ns"),
-        sum(col("ca") * col("ca") * col("ca") - col("ca")).as("ta"),
-        sum(col("cs") * col("cs") * col("cs") - col("cs")).as("ts"))
-      .collect()
-    // a null bucket is exactly a null/NaN y row (BucketizeExpr nanBin=-1):
-    // the reference raises on NaN y (`base_discretizer._prepare_y`) — and
-    // a null here would NPE in the offset sort below
-    require(!perBucketRows.exists(_.isNullAt(1)),
-      s"[ContinuousCarver] y ('$target') should not contain NaN/null")
-    val perBucket = perBucketRows
-      .groupBy(_.getString(0))
-      .map { case (fid, rows) =>
-        val sorted = rows.sortBy(_.getInt(1))
-        val offs = sorted.scanLeft((0, 0L, 0L)) { case ((_, a, s), r) =>
-          (r.getInt(1), a + r.getLong(2), s + r.getLong(3))
-        }.init.zip(sorted).map { case ((_, offA, offS), r) => r.getInt(1) -> (offA, offS) }
-        fid -> offs.toMap
-      }
-    // per-feature tie corrections for both pools (driver sum over buckets —
-    // same long arithmetic as the previous per-fid aggregation)
-    val ties = perBucketRows.groupBy(_.getString(0)).map { case (fid, rows) =>
-      var ta = 0L; var na = 0L; var ts = 0L; var ns = 0L
-      rows.foreach { r =>
-        ta += r.getLong(4); na += r.getLong(2); ts += r.getLong(5); ns += r.getLong(3)
-      }
-      val tca = if (na < 2) 1.0 else 1.0 - ta.toDouble / (na.toDouble * na * na - na)
-      val tcs = if (ns < 2) 1.0 else 1.0 - ts.toDouble / (ns.toDouble * ns * ns - ns)
-      fid -> (tca, tcs)
-    }
-    def offsetExpr(pick: ((Long, Long)) => Long): Column = {
-      val entries = perBucket.toSeq.flatMap { case (fid, offs) =>
-        offs.toSeq.map { case (b, o) => s"$fid#$b" -> pick(o) }
-      }.toMap
-      if (entries.isEmpty) lit(0L)
-      else coalesce(element_at(typedlit(entries), concat_ws("#", col("fid"), col("bucket"))), lit(0L))
-    }
-    val w = Window.partitionBy(col("fid"), col("bucket")).orderBy(col("y"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = yhB
-      .withColumn("cuma", coalesce(sum(col("ca")).over(w), lit(0L)) + offsetExpr(_._1))
-      .withColumn("cums", coalesce(sum(col("cs")).over(w), lit(0L)) + offsetExpr(_._2))
-      .withColumn("rank_all", col("cuma") + (col("ca") + 1) / 2.0)
-      .withColumn("rank_sub", col("cums") + (col("cs") + 1) / 2.0)
+    val ties = pools.map { case (fid, p) => fid -> (p(0).tieCorrection, p(1).tieCorrection) }
 
     // modality stats: the rank join runs over the cardinality-sized ylh
     // (both sides derived from the persisted aggregate), count-weighted —
-    // never over the full long-form frame
-    val stats = ylh.join(ranked.select(col("fid"), col("y"), col("rank_all"), col("rank_sub")), Seq("fid", "y"))
+    // never over the full long-form frame. Σy and Σy² sum in the join's row
+    // order, which differs between a broadcast and a shuffled join, so the
+    // two branches may differ in their last bits there (ranks never do).
+    val stats = ylh.join(ranked, Seq("fid", "y"))
       .groupBy(col("fid"), col("lbl"))
       .agg(
         sum(col("c")).as("n"),

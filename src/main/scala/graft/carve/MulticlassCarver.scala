@@ -95,6 +95,15 @@ object MulticlassCarver {
     (hist, devHist)
   }
 
+  /** Refuses nested specs before any cluster work: the reference's
+    * NestedDiscretizer target sort cannot score string classes.
+    */
+  private def refuseNested(specs: Seq[FeatureSpec]): Unit =
+    require(!specs.exists(_.kind == "nested"),
+      "nested features are not supported against an unordered multiclass target — the " +
+        "reference's NestedDiscretizer target sort cannot score string classes " +
+        "(series_target_rate crashes there); use Binary/Continuous/Ordinal carvers")
+
   def fit(
       train: DataFrame,
       target: String,
@@ -105,6 +114,7 @@ object MulticlassCarver {
     val guarded = BinaryCarver.guardTarget(target, specs)
     if (guarded.length != specs.length) return fit(train, target, guarded, dev, config)
     BinaryCarver.validateInputs(train, target, specs)
+    refuseNested(specs)
     val (hist, devHist) = classStage(train, target, specs, dev,
       BinaryCarver.Config(minFreq = config.minFreq, cv = config.cv, foldCol = config.foldCol,
         sketchCardinalityThreshold = config.sketchCardinalityThreshold,
@@ -122,10 +132,7 @@ object MulticlassCarver {
       foldHists: Seq[Map[String, Array[KHistRow]]] = Nil
   ): Model = {
     require(specs.nonEmpty, "no features to carve")
-    require(!specs.exists(_.kind == "nested"),
-      "nested features are not supported against an unordered multiclass target — the " +
-        "reference's NestedDiscretizer target sort cannot score string classes " +
-        "(series_target_rate crashes there); use Binary/Continuous/Ordinal carvers")
+    refuseNested(specs)
     // an unordered target has no mean: the merge "rate" of an ordered label
     // is its CA first-axis score over the pre-merge crosstab
     // (`ordinal_discretizer.py:compute_stats` — `_ca_row_scores`), and

@@ -1,13 +1,13 @@
 package graft.select
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 import graft.carve.{BinaryCarver, Stats}
+import graft.stats.Ranks
 
 /** Feature pre-selection (SURVEY.md §2.7, reference `selectors/`):
   * gate metrics, association ranking vs the target, redundancy filtering,
@@ -70,10 +70,11 @@ object Selector {
 
   /** Sufficient statistics of one feature's rank pool of `(x, g, count)`
     * cells, x ranked (average ranks) and g the groups: `ssbn = Σ_g R_g²/n_g`,
-    * `tsum = Σ_x (t³ − t)`, and the count-weighted Pearson sums of (rank x,
-    * rank g), zero when g is not numeric. Both rank paths produce it.
+    * the x pool `x` (total and tie sum), and the count-weighted Pearson sums
+    * of (rank x, rank g), zero when g is not numeric. Both rank paths
+    * produce it.
     */
-  private final case class RankStats(n: Double, ssbn: Double, k: Double, tsum: Double,
+  private final case class RankStats(n: Double, ssbn: Double, k: Double, x: Ranks.Pool,
       sx: Double, sxx: Double, sy: Double, syy: Double, sxy: Double) {
     def spearman: Double = {
       val den = math.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
@@ -81,7 +82,8 @@ object Selector {
     }
     def kruskal: KruskalRow = {
       val h0 = 12.0 / (n * (n + 1.0)) * ssbn - 3.0 * (n + 1.0)
-      val tie = 1.0 - tsum / (n * n * n - n)
+      // below two rows the tie correction is 0/0, so H is NaN
+      val tie = if (x.n < 2) Double.NaN else x.tieCorrection
       val h = if (tie <= 0) Double.NaN else h0 / tie
       val eps = if (n > 1) h / (n - 1.0) else Double.NaN
       val eta = if (n - k > 0) math.max(0.0, (h - k + 1.0) / (n - k)) else Double.NaN
@@ -268,61 +270,51 @@ object Selector {
 
   private def using[A](a: Aggregates)(f: Aggregates => A): A = try f(a) finally a.release()
 
-  /** Average ranks (ties → midrank) of `(value, count)` cells: one entry
-    * `(value, n, rank)` per distinct value, ascending with NaN last like
-    * Spark's sort. Values compare by their bits (the grouping already
-    * normalised NaN and -0.0).
-    */
-  private def avgRanks(cells: Iterable[(Double, Long)]): Array[(Double, Long, Double)] = {
-    var cum = 0L
-    cells.groupMapReduce(c => java.lang.Double.doubleToLongBits(c._1))(_._2)(_ + _).toArray
-      .map { case (b, n) => (java.lang.Double.longBitsToDouble(b), n) }
-      .sortWith((a, b) => java.lang.Double.compare(a._1, b._1) < 0)
-      .map { case (v, n) => val r = cum + (n + 1) / 2.0; cum += n; (v, n, r) }
-  }
-
   /** [[RankStats]] of one feature's `(x, g, count)` cells on the driver;
     * with `numericG`, g is a double's bits and is ranked too (Spearman).
     */
   private def localRankStats(cells: Array[(Double, Any, Long)], numericG: Boolean): RankStats = {
-    val rx = avgRanks(cells.map(c => (c._1, c._3)))
-    val rankOf = rx.map(t => java.lang.Double.doubleToLongBits(t._1) -> t._3).toMap
+    val rx = Ranks.local(cells.map(c => (c._1, Array(c._3))))
+    val rankOf = rx.values.indices.map(j => java.lang.Double.doubleToLongBits(rx.values(j)) -> rx.rank(0, j)).toMap
     val groups = cells.groupMapReduce(_._2)(c =>
       (c._3, c._3 * rankOf(java.lang.Double.doubleToLongBits(c._1))))((a, b) => (a._1 + b._1, a._2 + b._2))
     val (sy, syy, sxy) =
       if (!numericG) (0.0, 0.0, 0.0)
       else {
-        val ry = avgRanks(groups.toSeq.map { case (g, (ng, _)) =>
-          (java.lang.Double.longBitsToDouble(g.asInstanceOf[Long]), ng) })
-        ry.foldLeft((0.0, 0.0, 0.0)) { case ((a, b, c), (g, ng, r)) =>
-          (a + ng * r, b + ng * r * r, c + groups(java.lang.Double.doubleToLongBits(g))._2 * r)
+        val ry = Ranks.local(groups.toSeq.map { case (g, (ng, _)) =>
+          (java.lang.Double.longBitsToDouble(g.asInstanceOf[Long]), Array(ng)) })
+        ry.values.indices.foldLeft((0.0, 0.0, 0.0)) { case ((a, b, c), j) =>
+          val (ng, r) = (ry.n(0)(j), ry.rank(0, j))
+          (a + ng * r, b + ng * r * r, c + groups(java.lang.Double.doubleToLongBits(ry.values(j)))._2 * r)
         }
       }
+    val xs = rx.values.indices
     RankStats(groups.values.map(_._1).sum.toDouble, groups.values.map { case (ng, rg) => rg * rg / ng }.sum,
-      groups.size.toDouble, rx.map { case (_, t, _) => t * t * t - t }.sum.toDouble,
-      rx.map { case (_, t, r) => t * r }.sum, rx.map { case (_, t, r) => t * r * r }.sum, sy, syy, sxy)
+      groups.size.toDouble, rx.pool(0), xs.map(j => rx.n(0)(j) * rx.rank(0, j)).sum,
+      xs.map(j => rx.n(0)(j) * rx.rank(0, j) * rx.rank(0, j)).sum, sy, syy, sxy)
   }
 
   /** [[RankStats]] per feature from a `(fid, x, g, cnt)` pool frame, for
     * tables above the driver bound: x (and, with `spearman`, g) ranked by
-    * [[bucketedAvgRank]], group rank sums joined back, one collect.
+    * [[Ranks.bucketed]], group rank sums joined back, one collect.
     */
   private def distributedRankStats(pool: DataFrame, spearman: Boolean): Map[Int, RankStats] = {
-    val rx = bucketedAvgRank(pool.groupBy("fid", "x").agg(sum("cnt").as("n")), "x")
-    val grp = pool.join(rx.select("fid", "x", "r"), Seq("fid", "x"))
+    val rx = Ranks.bucketed[Int](pool.groupBy("fid", "x").agg(sum("cnt").as("n")), "fid", "x", Seq("n"))
+    val xr = rx.frame.select(col("fid"), col("x"), col("n"), col("rank_n").as("r"))
+    val grp = pool.join(xr.select("fid", "x", "r"), Seq("fid", "x"))
       .groupBy("fid", "g").agg(sum("cnt").as("ng"), sum(col("cnt") * col("r")).as("rg"))
     val ranked =
       if (!spearman) grp.withColumn("r", lit(0.0))
-      else grp.join(bucketedAvgRank(grp.select(col("fid"), col("g"), col("ng").as("n")), "g")
-        .select("fid", "g", "r"), Seq("fid", "g"))
+      else grp.join(Ranks.bucketed[Int](grp.select(col("fid"), col("g"), col("ng")), "fid", "g", Seq("ng"))
+        .frame.select(col("fid"), col("g"), col("rank_ng").as("r")), Seq("fid", "g"))
     val (ng, rg, r, n) = (col("ng"), col("rg"), col("r"), col("n"))
     ranked.groupBy("fid").agg(sum(ng).cast("double"), sum(rg * rg / ng), count(lit(1)).cast("double"),
         sum(ng * r), sum(ng * r * r), sum(rg * r))
-      .join(rx.groupBy("fid").agg(sum(n * n * n - n).cast("double").as("tsum"), sum(n * r).as("sx"),
-        sum(n * r * r).as("sxx")), "fid")
+      .join(xr.groupBy("fid").agg(sum(n * r).as("sx"), sum(n * r * r).as("sxx")), "fid")
       .collect().map { row =>
         def d(i: Int) = row.getDouble(i)
-        row.getInt(0) -> RankStats(d(1), d(2), d(3), d(7), d(8), d(9), d(4), d(5), d(6))
+        val fid = row.getInt(0)
+        fid -> RankStats(d(1), d(2), d(3), rx.pools(fid)(0), d(7), d(8), d(4), d(5), d(6))
       }.toMap
   }
 
@@ -612,37 +604,6 @@ object Selector {
     */
   def kruskalReversedByFeature(df: DataFrame, target: String, quals: Seq[String]): Map[String, KruskalRow] =
     using(new Aggregates(df, Some(target), Nil, quals))(_.kruskalReversed)
-
-  /** Average rank `r` of each value within fid over grouped `(fid, value,
-    * n)` counts, above the driver bound, without a window partitioned by
-    * fid alone (an id-like feature would put ~|rows| rows through one
-    * task): approximate global splits bucket the value range, small
-    * per-(fid, bucket) totals collect for driver-side exclusive offsets,
-    * and the window runs within (fid, bucket). Ranks stay exact integer
-    * arithmetic; NaN routes to the LAST bucket, as in an ascending sort.
-    */
-  private def bucketedAvgRank(grouped: DataFrame, valueCol: String): DataFrame = {
-    val splits = grouped.stat.approxQuantile(valueCol, (1 until 32).map(_ / 32.0).toArray, 0.05)
-      .filterNot(_.isNaN).distinct.sorted
-    val bucketCol = graft.transform.BinarySearchBucketize.column(
-      col(valueCol), splits.toVector, splits.indices.toVector :+ splits.length,
-      nanBin = splits.length)
-    val gB = grouped.withColumn("bucket", bucketCol)
-    val per = gB.groupBy(col("fid"), col("bucket")).agg(sum(col("n")).as("bn")).collect()
-    val offs: Map[String, Long] = per.groupBy(_.getInt(0)).toSeq.flatMap { case (fid, rows) =>
-      val sorted = rows.toSeq.sortBy(_.getInt(1))
-      sorted.scanLeft(0L)((acc, r) => acc + r.getLong(2)).init.zip(sorted)
-        .map { case (off, r) => s"$fid#${r.getInt(1)}" -> off }
-    }.toMap
-    val offsetExpr =
-      if (offs.isEmpty) lit(0L)
-      else coalesce(element_at(typedlit(offs), concat_ws("#", col("fid"), col("bucket"))), lit(0L))
-    val w = Window.partitionBy(col("fid"), col("bucket")).orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    gB
-      .withColumn("cum", coalesce(sum(col("n")).over(w), lit(0L)) + offsetExpr)
-      .select(col("fid"), col(valueCol), col("n"), (col("cum") + (col("n") + 1) / 2.0).as("r"))
-  }
 
   private def selectWith(
       a: Aggregates,
