@@ -11,19 +11,28 @@ import graft.stats.Ranks
   * prep ([[Prebin.prep]] under [[Prebin.Summed]], Σy of a real-valued y),
   * Kruskal-Wallis H association instead of chi².
   *
-  * Cluster shape: pass 1 = the sketch (which also reads distinct-y and
-  * counts NaN y) and the shared per-value histogram (prebins, counts, Σy);
-  * pass 2 = exact average-rank statistics per (feature, modality): one
-  * persisted `(feature, modality, y) → count` aggregate, whose per-(feature,
-  * y) counts [[graft.stats.Ranks]] ranks in two pools (all rows, and rows
-  * outside the NaN modality — rank bases differ, see
-  * [[Continuous.bestCombination]]): on the driver when the HLL distinct-y
-  * reading puts the pool table under [[Stats.LocalRankRows]] rows, as a
-  * bucketed window above it. The ranks join back to the aggregate and
-  * `groupBy(feature, modality).agg(n, Σrank, Σy)` collects once.
+  * Cluster shape: two passes over the input. Pass 1 is the sketch, which
+  * also reads distinct-y and counts NaN y. Pass 2 is the cell table
+  * `(feature, value, y[, fold]) → count` (the [[Crosstab]] key shape with y
+  * as one more key), read through one bounded collect of at most
+  * [[Stats.LocalRankRows]] + 1 rows. Below the bound the driver derives
+  * everything else from the cells in canonical (feature, value, y) order:
+  * the train and fold histograms, the prebins, each cell's modality, the
+  * average ranks of y in two pools per feature (all rows, and rows outside
+  * the NaN modality — rank bases differ, see [[Continuous.bestCombination]];
+  * [[graft.stats.Ranks.local]]), the per-modality moments and the exact
+  * median y histograms. Every floating-point sum then runs in an order
+  * fixed by the data, never by the plan. Above the bound the cell table is
+  * persisted and the derivations run distributed from it: one histogram
+  * collect, the modality join, [[graft.stats.Ranks.bucketed]] and one
+  * collect of `groupBy(feature, modality).agg(n, Σrank, Σy, Σy²)`.
   */
 object ContinuousCarver {
   import BinaryCarver.{FeatureSpec, FittedFeature, Layout, Model, Prep, Config, NanLabel, OtherLabel, assembleFitted}
+  import OrdinalCarver.KHistRow
+
+  /** Per feature and modality: the y values with their counts. */
+  type YHists = Map[String, Map[String, Array[(Double, Double)]]]
 
   /** Cluster products of a continuous fit that do NOT depend on the rate
     * strategy: prebin state, rank statistics, tie corrections, the
@@ -31,9 +40,13 @@ object ContinuousCarver {
     * SAME (train, specs) — e.g. target_mean and target_median — computes
     * these once and calls [[fitFromStages]] per config (guide §1.2: the
     * distributed algorithm first; re-scanning identical passes per config
-    * is pure waste). `yHists` is the optional per-modality y histogram the
-    * median rate needs (filled when the stages were computed for a
-    * median fit; [[fitFromStages]] recomputes it in one job otherwise).
+    * is pure waste). `yHists` and `foldYHists` are the per-modality y
+    * histograms the median rate needs, train and per fold. Below the cell
+    * bound they are always filled with the exact histograms unless the
+    * distinct-y reading crosses the exact-median gate, so [[fitFromStages]]
+    * runs no job for them; above the bound `yHists` is filled only for a
+    * median fit and `foldYHists` never ([[fitFromStages]] computes what is
+    * missing).
     */
   final case class Stages(
       stageConfig: Config,
@@ -45,7 +58,8 @@ object ContinuousCarver {
       // per feature: label -> (n, Σrank_all, Σrank_sub, Σy, Σy²)
       rows: Map[String, Map[String, (Double, Double, Double, Double, Double)]],
       ties: Map[String, (Double, Double)],
-      yHists: Map[String, Map[String, Array[(Double, Double)]]],
+      yHists: YHists,
+      foldYHists: Seq[YHists],
       // cross-strategy DP candidate memo: the top-K kruskal DP reads only
       // rank aggregates, so mean/median fits over the same stages share
       // byte-identical candidate lists (content-keyed — any input
@@ -82,13 +96,11 @@ object ContinuousCarver {
     fitFromStages(train, target, guarded, dev, config, stages)
   }
 
-  /** The cluster passes shared across rate strategies: sketch (+ distinct-y
-    * gate on the same job), histogram, and the exact rank-stat aggregation
-    * — restructured (optimization round 7) around ONE persisted
-    * `(feature, modality, y) → count` aggregate that every downstream
-    * collect derives from, instead of re-scanning the input per collect:
-    * 3 input scans total (sketch, histogram, rank aggregate) where the
-    * previous shape paid 5-6 for a median fit.
+  /** The cluster passes shared across rate strategies: the sketch (with
+    * the distinct-y gate and the NaN-y count on the same job) and the cell
+    * table, see the object doc. `withYHists` asks for the median y
+    * histograms where they cost a job of their own: above the cell bound,
+    * or past the exact-median gate.
     */
   def computeStages(
       train: DataFrame,
@@ -98,8 +110,8 @@ object ContinuousCarver {
       withYHists: Boolean = false
   ): Stages = boundedStages(train, target, specs0, config, withYHists, Stats.LocalRankRows)
 
-  /** [[computeStages]] with the row bound of the driver-side rank table as
-    * a parameter, so a test can reach both rank branches on small data.
+  /** [[computeStages]] with the bound of the driver-side cell table as a
+    * parameter, so a test can reach both branches on small data.
     */
   private[graft] def boundedStages(
       train: DataFrame,
@@ -114,13 +126,11 @@ object ContinuousCarver {
       "[ContinuousCarver] dropna=false is only supported by the binary/OvR search path")
     BinaryCarver.validateInputs(train, target, specs)
     // reference: y must be numeric for a continuous fit (a string y would
-    // otherwise surface as a raw ANSI cast error inside the rank job)
+    // otherwise surface as a raw ANSI cast error inside the cell job)
     require(train.schema(target).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"[ContinuousCarver] y ('$target') must be numeric; got ${train.schema(target).dataType.simpleString}")
-    // ---- pass 1: shared histogram → prebins (quantile edges, merges, OTHER).
-    // cv>1 folds ride the SAME scan (fold key as one more groupBy column).
-    // The R4 distinct-y gate rides the SKETCH job as one extra aggregate —
-    // previously its own full scan of (possibly expensive) y.
+    // ---- pass 1: the sketch. The R4 distinct-y gate and the NaN-y count
+    // ride the SAME job as extra aggregates.
     val (sketched, sketchRow) = BinaryCarver.sketchWithExtras(train, specs, config,
       Seq(approx_count_distinct(col(target)).as("__graft_y_acd"),
         count(when(isnan(col(target).cast("double")) || col(target).isNull, 1)).as("__graft_y_nan")))
@@ -128,24 +138,135 @@ object ContinuousCarver {
     require(!sketchRow.exists(_.getAs[Long]("__graft_y_nan") > 0),
       s"[ContinuousCarver] y ('$target') should not contain NaN/null")
     val distinctY = sketchRow.map(_.getAs[Long]("__graft_y_acd")).getOrElse(-1L)
-    val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Summed(),
-      Crosstab.folds(config.cv, config.foldCol))(Crosstab.summed)
-    val trainHist = hist.total
-    // the nested rollup's target sort is mean(y) per bucket, which the
-    // summed view's Σy carries
-    val prep = Prebin.prepAll(specs, trainHist, Prebin.Summed, config.minFreq, config.minFreqAlpha,
-      config.rescue, config.maxHistogramRows)
+    val approxMedian = distinctY > medianGateThreshold(config, specs.length)
 
-    // ---- pass 2: rank stats per (feature, modality), both rank bases
-    val approxMedian = withYHists && distinctY > medianGateThreshold(config, specs.length)
-    val (rows, ties, yHists) =
-      rankStatsJob(train, target, specs, prep, withYHists, approxMedian, distinctY, rankRows)
-    Stages(config, sketched, distinctY, trainHist, hist.folds, prep, rows, ties, yHists)
+    // ---- pass 2: the cell table. `rdd` holds the aggregation's shuffle, so
+    // the bounded collect and (above the bound) the persisted frame read the
+    // same map output: the input is scanned once more, never twice.
+    val folds = Crosstab.folds(config.cv, config.foldCol)
+    val cells = Crosstab.frame(train, target, specs, sketched, Crosstab.Valued, folds)
+    val rdd = cells.rdd
+    val head = rdd.take(math.min(rankRows, Int.MaxValue - 1L).toInt + 1)
+    val s = Staged(train, target, specs, config, folds, sketched, distinctY, withYHists, approxMedian)
+    if (head.length <= rankRows) localStages(s, head)
+    else {
+      val persisted = train.sparkSession.createDataFrame(rdd, cells.schema)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try distributedStages(s, persisted)
+      finally persisted.unpersist()
+    }
+  }
+
+  /** What both branches of [[boundedStages]] read besides the cells. */
+  private final case class Staged(train: DataFrame, target: String, specs: Seq[FeatureSpec], config: Config,
+      folds: Option[Crosstab.Folds], sketched: Map[String, Vector[Double]], distinctY: Long,
+      withYHists: Boolean, approxMedian: Boolean) {
+    val specOf: Map[String, FeatureSpec] = specs.map(sp => sp.name -> sp).toMap
+    def prepAll(hist: Map[String, Array[BinaryCarver.HistRow]]): Map[String, Prep] =
+      Prebin.prepAll(specs, hist, Prebin.Summed, config.minFreq, config.minFreqAlpha,
+        config.rescue, config.maxHistogramRows)
+    /** The gated approx-median path: the percentile grid over the raw frame. */
+    def gridYHists(prep: Map[String, Prep]): YHists =
+      if (withYHists) yHistsOf(longForm(train, target, specs, prep), approx = true) else Map.empty
+  }
+
+  /** Canonical cell order within a feature: value (the NaN bucket last),
+    * then y. `level` carries y.
+    */
+  private def canonical(a: KHistRow, b: KHistRow): Boolean = {
+    val byNull = java.lang.Boolean.compare(a.isNull, b.isNull)
+    lazy val byDv = java.lang.Double.compare(a.dv, b.dv)
+    lazy val bySv = if (a.sv == null || b.sv == null) 0 else a.sv.compareTo(b.sv)
+    (if (byNull != 0) byNull else if (byDv != 0) byDv else if (bySv != 0) bySv
+    else java.lang.Double.compare(a.level, b.level)) < 0
+  }
+
+  /** The summed histogram of canonically ordered cells: one row per value,
+    * Σy added in ascending y.
+    */
+  private def histOf(cells: Array[KHistRow]): Array[BinaryCarver.HistRow] = {
+    val out = mutable.ArrayBuffer.empty[BinaryCarver.HistRow]
+    cells.foreach { c =>
+      out.lastOption match {
+        case Some(h) if h.isNull == c.isNull && h.sv == c.sv && java.lang.Double.compare(h.dv, c.dv) == 0 =>
+          out(out.length - 1) = h.copy(count = h.count + c.count, sumY = h.sumY + c.level * c.count)
+        case _ => out += BinaryCarver.HistRow(c.dv, c.sv, c.isNull, c.count, c.level * c.count)
+      }
+    }
+    out.toArray
+  }
+
+  /** The driver branch: every [[Stages]] product from the collected cells. */
+  private def localStages(s: Staged, collected: Array[Row]): Stages = {
+    val cells = Crosstab.assemble(collected, s.target, Crosstab.Valued, s.folds)(Crosstab.keyed)
+    def sorted(m: Map[String, Array[KHistRow]]) = m.view.mapValues(_.sortWith(canonical)).toMap
+    val total = sorted(cells.total)
+    val foldCells = cells.folds.map(sorted)
+    val trainHist = total.view.mapValues(histOf).toMap
+    val prep = s.prepAll(trainHist)
+    // per modality: (y, count) ascending in y
+    def byLabel(fid: String, cs: Array[KHistRow]): Map[String, Array[(Double, Long)]] = {
+      val layout = prep(fid).layout
+      cs.groupBy(c => layout.labelOf(s.specOf(fid), c.dv, c.sv, c.isNull)).view.mapValues { g =>
+        g.groupMapReduce(c => java.lang.Double.doubleToLongBits(c.level))(_.count)(_ + _).toArray
+          .map { case (bits, c) => (java.lang.Double.longBitsToDouble(bits), c) }.sortBy(_._1)
+      }.toMap
+    }
+    def labelled(m: Map[String, Array[KHistRow]]) = m.map { case (fid, cs) => fid -> byLabel(fid, cs) }
+    def asYHists(m: Map[String, Map[String, Array[(Double, Long)]]]): YHists =
+      m.view.mapValues(_.view.mapValues(_.map { case (y, c) => (y, c.toDouble) }).toMap).toMap
+    val train = labelled(total)
+    // per feature: the modality moments, and the tie corrections of the two
+    // rank pools (all rows, and rows outside the NaN modality)
+    val ranked = train.map { case (fid, byLbl) =>
+      val t = Ranks.local(byLbl.toSeq.flatMap { case (l, ys) =>
+        ys.map { case (y, c) => (y, Array(c, if (l == NanLabel) 0L else c)) }
+      })
+      val moments = byLbl.map { case (l, ys) =>
+        var ra = 0.0; var rs = 0.0; var sy = 0.0; var syy = 0.0; var n = 0L
+        ys.foreach { case (y, c) =>
+          val j = java.util.Arrays.binarySearch(t.values, y)
+          ra += t.rank(0, j) * c; rs += t.rank(1, j) * c
+          sy += y * c; syy += y * y * c; n += c
+        }
+        l -> ((n.toDouble, ra, rs, sy, syy))
+      }
+      fid -> (moments, (t.pool(0).tieCorrection, t.pool(1).tieCorrection))
+    }
+    val (yHists, foldYHists) =
+      if (s.approxMedian) (s.gridYHists(prep), Nil)
+      else (asYHists(train), foldCells.map(m => asYHists(labelled(m))))
+    Stages(s.config, s.sketched, s.distinctY, trainHist, foldCells.map(_.view.mapValues(histOf).toMap), prep,
+      ranked.view.mapValues(_._1).toMap, ranked.view.mapValues(_._2).toMap, yHists, foldYHists)
+  }
+
+  /** The distributed branch over the persisted cell frame `pc`: the
+    * histogram collect (the same rows [[Crosstab.stage]] collects), each
+    * value's modality as a broadcast table of the collected histogram, and
+    * `ylh`, the `(fid, lbl, y) → count` aggregate [[rankStatsOf]] ranks.
+    */
+  private def distributedStages(s: Staged, pc: DataFrame): Stages = {
+    val keys = Seq(col("fid"), col("dv"), col("sv")) ++ s.folds.map(_ => col("__fold"))
+    val hist = Crosstab.assemble(
+      pc.groupBy(keys: _*).agg(sum(col("cnt")).as("cnt"), sum(col("__y") * col("cnt")).as("sy")).collect(),
+      s.target, Crosstab.Summed(fit = "ContinuousCarver"), s.folds)(Crosstab.summed)
+    val prep = s.prepAll(hist.total)
+    // a null dv (categorical values, the NaN bucket) reads back as NaN
+    val labels = for ((fid, rows) <- hist.total.toSeq; r <- rows) yield Row(fid,
+      if (r.dv.isNaN) null else r.dv, r.sv, prep(fid).layout.labelOf(s.specOf(fid), r.dv, r.sv, r.isNull))
+    val schema = StructType(Seq("l_fid" -> StringType, "l_dv" -> DoubleType, "l_sv" -> StringType,
+      "lbl" -> StringType).map { case (n, t) => StructField(n, t) })
+    val labelDf = broadcast(pc.sparkSession.createDataFrame(java.util.Arrays.asList(labels: _*), schema))
+    val ylh = pc.join(labelDf, col("fid") === col("l_fid") && col("dv") <=> col("l_dv") && col("sv") <=> col("l_sv"))
+      .groupBy(col("fid"), col("lbl"), col("__y").as("y"))
+      .agg(sum(col("cnt")).as("c"))
+    val (rows, ties, yHists) = rankStatsOf(s, prep, ylh)
+    Stages(s.config, s.sketched, s.distinctY, hist.total, hist.folds, prep, rows, ties, yHists, Nil)
   }
 
   /** Driver-side search per rate strategy over precomputed [[Stages]]; the
-    * only cluster work left is the median path's y histograms (one job)
-    * when the stages were computed without them, plus any dev/fold median
+    * only cluster work left is a median fit's y histograms the stages do
+    * not carry (one job each for the train and the folds), plus the dev
     * views.
     */
   def fitFromStages(
@@ -173,7 +294,7 @@ object ContinuousCarver {
       else if (stages.distinctY >= 0) stages.distinctY
       else train.agg(approx_count_distinct(col(target))).head().getLong(0)
     val approxMedian = withMedians && distinctY > medianGateThreshold(config, specs.length)
-    val yHists: Map[String, Map[String, Array[(Double, Double)]]] =
+    val yHists: YHists =
       if (!withMedians) Map.empty
       else if (stages.yHists.nonEmpty) stages.yHists
       else yHistsOf(longForm(train, target, specs, prep), approxMedian)
@@ -200,8 +321,9 @@ object ContinuousCarver {
     // ---- dev pass: (n, Σy) per modality is all the vetoes need
     val devHist = dev.map(d => BinaryCarver.histogram(d, target, specs, sketched))
     // per-fold y histograms for the median rate: ONE job over all folds
-    val foldYHists: Seq[Map[String, Map[String, Array[(Double, Double)]]]] =
+    val foldYHists: Seq[YHists] =
       if (!withMedians || config.cv <= 1) Seq.fill(foldHists.length)(Map.empty)
+      else if (stages.foldYHists.nonEmpty) stages.foldYHists
       else {
         val y = col(target).cast("double")
         val foldKey = BinaryCarver.foldExpr(specs, target, config.cv, Option(config.foldCol))
@@ -215,7 +337,7 @@ object ContinuousCarver {
           (0 until config.cv).map { f =>
             rows.filter(_.getLong(0) == f).groupBy(_.getString(1)).view.mapValues { rs =>
               rs.map(r => r.getString(2) -> synthHist(r.getLong(3), r.getSeq[Double](4))).toMap
-            }.toMap: Map[String, Map[String, Array[(Double, Double)]]]
+            }.toMap: YHists
           }
         } else {
           val rows = long.groupBy(col("__fold"), col("fid"), col("lbl"), col("y"))
@@ -223,11 +345,11 @@ object ContinuousCarver {
           (0 until config.cv).map { f =>
             rows.filter(_.getLong(0) == f).groupBy(_.getString(1)).view.mapValues { rs =>
               rs.groupBy(_.getString(2)).view.mapValues(_.map(r => (r.getDouble(3), r.getLong(4).toDouble)).toArray).toMap
-            }.toMap: Map[String, Map[String, Array[(Double, Double)]]]
+            }.toMap: YHists
           }
         }
       }
-    val devYHists: Map[String, Map[String, Array[(Double, Double)]]] =
+    val devYHists: YHists =
       if (!withMedians) Map.empty
       else dev.map { d =>
         val y = col(target).cast("double")
@@ -243,7 +365,7 @@ object ContinuousCarver {
       // RankXagg view of a validation sample (ranks unused by vetoes); the
       // median rate additionally needs the y histogram per modality
       def view(h: Map[String, Array[BinaryCarver.HistRow]],
-          yh: Map[String, Map[String, Array[(Double, Double)]]]): Option[Continuous.RankXagg] =
+          yh: YHists): Option[Continuous.RankXagg] =
         Prebin.project(spec, p, h, Prebin.Summed).map { x =>
           Continuous.RankXagg(x.labels, x.labels.indices.map(i => x.n0(i) + x.n1(i)).toArray,
             new Array[Double](x.labels.length), x.n1, 1.0,
@@ -306,100 +428,25 @@ object ContinuousCarver {
       .select(col("e.fid").as("fid"), col("e.lbl").as("lbl"), col("y"))
   }
 
-  /** Exact average-rank statistics per (feature, modality), both rank
-    * bases, as plain collected data:
+  /** [[distributedStages]]'s rank statistics per (feature, modality), both
+    * rank bases, from the `(fid, lbl, y) → count` aggregate `ylh`:
     * `(rows: fid -> lbl -> (n, Σrank_all, Σrank_sub, Σy, Σy²),
-    *   ties: fid -> (tieCorr_all, tieCorr_sub), yHists)`.
-    *
-    * Restructured (optimization round 7, guide §1.2/§2.3): ONE persisted
-    * `(fid, lbl, y) → count` aggregate (`ylh`) feeds every downstream
-    * derivation — the per-(fid, y) pools, the bucket offsets + tie sums
-    * (one combined collect), the rank join, and (exact path) the median
-    * y histograms — instead of re-scanning the input table per collect.
-    * All downstream sums weight by the count: ranks are exact multiples
-    * of 0.5 and counts are integers, so the weighted sums equal the
-    * previous per-row sums exactly (no floating-point divergence for
-    * integer-valued rank/count arithmetic; Σy re-associates identically
-    * to the previous grouped shuffle).
+    *   ties: fid -> (tieCorr_all, tieCorr_sub), yHists)`. The per-(fid, y)
+    * pool counts are ranked by the bucketed window, the ranks join back to
+    * `ylh` and one collect returns the count-weighted sums. Σy and Σy² sum
+    * in the join's row order, so they may differ from the driver branch's
+    * in the last bits (ranks never do).
     */
-  private def rankStatsJob(
-      df: DataFrame,
-      target: String,
-      specs: Seq[FeatureSpec],
-      prep: Map[String, Prep],
-      withMedians: Boolean,
-      approxMedian: Boolean,
-      // approx_count_distinct(y) from the sketch job; -1 = unknown. Chooses
-      // the rank STRATEGY only — both strategies produce identical ranks —
-      // so the ±2% HLL error is harmless.
-      approxDistinctY: Long,
-      rankRows: Long
-  ): (Map[String, Map[String, (Double, Double, Double, Double, Double)]],
-      Map[String, (Double, Double)],
-      Map[String, Map[String, Array[(Double, Double)]]]) = {
-    val long = longForm(df, target, specs, prep)
-
-    // the ONE aggregation of the input: (feature, modality, y) → count.
-    // Cardinality-sized (modalities × distinct-y per feature); persisted so
-    // the three downstream actions derive from it instead of replaying the
-    // full table scan + explode each.
-    val ylh = long.groupBy(col("fid"), col("lbl"), col("y"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try rankStatsOf(df, specs, long, ylh, withMedians, approxMedian, approxDistinctY, rankRows)
-    finally ylh.unpersist()
-  }
-
-  /** [[rankStatsJob]]'s derivations from the persisted aggregate `ylh`. */
-  private def rankStatsOf(
-      df: DataFrame,
-      specs: Seq[FeatureSpec],
-      long: DataFrame,
-      ylh: DataFrame,
-      withMedians: Boolean,
-      approxMedian: Boolean,
-      approxDistinctY: Long,
-      rankRows: Long
-  ): (Map[String, Map[String, (Double, Double, Double, Double, Double)]],
-      Map[String, (Double, Double)],
-      Map[String, Map[String, Array[(Double, Double)]]]) = {
-    // per-(feature, y) counts of the two rank pools: all rows ("all") and
-    // non-NaN-modality rows ("sub")
+  private def rankStatsOf(s: Staged, prep: Map[String, Prep], ylh: DataFrame)
+      : (Map[String, Map[String, (Double, Double, Double, Double, Double)]], Map[String, (Double, Double)], YHists) = {
     val yh = ylh.groupBy(col("fid"), col("y"))
       .agg(
         sum(col("c")).as("all"),
         sum(when(col("lbl") =!= NanLabel, col("c")).otherwise(0L)).as("sub")
       )
-
-    // Size-adaptive rank table (guide §1.2): a LOW-cardinality y (integer
-    // scores, counts, grades — the common regression targets) has a tiny
-    // per-(feature, y) pool table, ranked on the driver from ONE collect of
-    // `yh`; a high-cardinality y (pool table ~|rows|, never collected) is
-    // ranked by the bucketed window. Both give the identical ranks.
-    val localYh = approxDistinctY >= 0 && approxDistinctY * math.max(1, specs.length).toLong <= rankRows
-    val (ranked, pools) =
-      if (localYh) {
-        val tables = yh.collect().groupBy(_.getString(0)).map { case (fid, rows) =>
-          fid -> Ranks.local(rows.map(r => (r.getDouble(1), Array(r.getLong(2), r.getLong(3)))))
-        }
-        val cells = for ((fid, t) <- tables.toSeq; j <- t.values.indices)
-          yield Row(fid, t.values(j), t.rank(0, j), t.rank(1, j))
-        val schema = StructType(Seq("fid" -> StringType, "y" -> DoubleType,
-          "rank_all" -> DoubleType, "rank_sub" -> DoubleType).map { case (n, t) => StructField(n, t) })
-        (broadcast(df.sparkSession.createDataFrame(java.util.Arrays.asList(cells: _*), schema)),
-          tables.map { case (fid, t) => fid -> IndexedSeq(t.pool(0), t.pool(1)) })
-      } else {
-        val r = Ranks.bucketed[String](yh, "fid", "y", Seq("all", "sub"))
-        (r.frame.select(col("fid"), col("y"), col("rank_all"), col("rank_sub")), r.pools)
-      }
-    val ties = pools.map { case (fid, p) => fid -> (p(0).tieCorrection, p(1).tieCorrection) }
-
-    // modality stats: the rank join runs over the cardinality-sized ylh
-    // (both sides derived from the persisted aggregate), count-weighted —
-    // never over the full long-form frame. Σy and Σy² sum in the join's row
-    // order, which differs between a broadcast and a shuffled join, so the
-    // two branches may differ in their last bits there (ranks never do).
-    val stats = ylh.join(ranked, Seq("fid", "y"))
+    val r = Ranks.bucketed[String](yh, "fid", "y", Seq("all", "sub"))
+    val ties = r.pools.map { case (fid, p) => fid -> (p(0).tieCorrection, p(1).tieCorrection) }
+    val stats = ylh.join(r.frame.select(col("fid"), col("y"), col("rank_all"), col("rank_sub")), Seq("fid", "y"))
       .groupBy(col("fid"), col("lbl"))
       .agg(
         sum(col("c")).as("n"),
@@ -409,27 +456,17 @@ object ContinuousCarver {
         sum(col("y") * col("y") * col("c")).as("syy")
       )
       .collect()
-
-    // per-(feature, modality) y histogram for the median rate (R4): the
-    // exact path IS the persisted ylh aggregate (one cheap collect); the
-    // gated approx path runs its percentile grid over the raw long frame
-    val yHists: Map[String, Map[String, Array[(Double, Double)]]] =
-      if (!withMedians) Map.empty
-      else if (approxMedian) yHistsOf(long, approx = true)
-      else {
-        val h = ylh.collect()
-        h.groupBy(_.getString(0)).view.mapValues { rows =>
-          rows.groupBy(_.getString(1)).view.mapValues(
-            _.map(r => (r.getDouble(2), r.getLong(3).toDouble)).toArray).toMap
-        }.toMap
-      }
-
-    val byFid = mutable.Map.empty[String, mutable.Map[String, (Double, Double, Double, Double, Double)]]
-    stats.foreach { r =>
-      byFid.getOrElseUpdate(r.getString(0), mutable.Map.empty)(r.getString(1)) =
-        ((r.getLong(2).toDouble, r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-    }
-    (byFid.view.mapValues(_.toMap).toMap, ties, yHists)
+    // the exact median histograms are ylh itself (one collect)
+    val yHists: YHists =
+      if (!s.withYHists) Map.empty
+      else if (s.approxMedian) s.gridYHists(prep)
+      else ylh.collect().groupBy(_.getString(0)).view.mapValues { rows =>
+        rows.groupBy(_.getString(1)).view.mapValues(_.map(r => (r.getDouble(2), r.getLong(3).toDouble))).toMap
+      }.toMap
+    val byFid = stats.groupBy(_.getString(0)).view.mapValues(_.map { r =>
+      r.getString(1) -> ((r.getLong(2).toDouble, r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
+    }.toMap).toMap
+    (byFid, ties, yHists)
   }
 
   // ------------------------------------------- target_median y histograms
@@ -472,7 +509,7 @@ object ContinuousCarver {
     * above it (the collect is then bounded by modalities × (K+1) no matter
     * how continuous y is).
     */
-  private def yHistsOf(long: DataFrame, approx: Boolean): Map[String, Map[String, Array[(Double, Double)]]] =
+  private def yHistsOf(long: DataFrame, approx: Boolean): YHists =
     if (approx) {
       val h = long.groupBy(col("fid"), col("lbl"))
         .agg(count(lit(1)).as("n"), medianGridAgg(col("y"))).collect()

@@ -22,6 +22,8 @@ import graft.carve.OrdinalCarver.KHistRow
   * sum over folds — no second scan (`base_carver.py:607-628` semantics at
   * 1× the IO of a plain fit). Row order within a feature is the collect
   * order without folds and first-seen order for the fold total.
+  * [[frame]] is the aggregate before the collect and [[assemble]] the
+  * driver half, for a caller that collects the aggregate its own way.
   */
 object Crosstab {
 
@@ -46,12 +48,17 @@ object Crosstab {
     * to the SAME aggregation: two conditional sums, no extra scan. The
     * reference raises on NaN y and on values outside {0, 1}
     * (`base_discretizer._prepare_y`); without the check sum(y) silently
-    * computes garbage rates for a multiclass y.
+    * computes garbage rates for a multiclass y. `fit` names the family.
     */
-  final case class Summed(requireBinaryY: Boolean = false) extends Target("BinaryCarver")
+  final case class Summed(requireBinaryY: Boolean = false, fit: String = "BinaryCarver") extends Target(fit)
 
   /** Keyed by the target cast to double (integer-encoded ordinal levels). */
   case object Level extends Target("OrdinalCarver")
+
+  /** Keyed by the continuous target cast to double, with no target
+    * contract here: the continuous carver checks y on its sketch job.
+    */
+  case object Valued extends Target("ContinuousCarver")
 
   /** Keyed by the target cast to string; classes take their sorted
     * (canonical) order — `get_multiclass_crosstab` pins the same order.
@@ -83,7 +90,14 @@ object Crosstab {
   val keyed: Mk[KHistRow] = (dv, sv, isNull, key, count, _) => KHistRow(dv, sv, isNull, key, count)
 
   def stage[R: ClassTag](df: DataFrame, target: String, specs: Seq[FeatureSpec],
-      sketched: Map[String, Vector[Double]], y: Target, folds: Option[Folds])(mk: Mk[R]): Result[R] = {
+      sketched: Map[String, Vector[Double]], y: Target, folds: Option[Folds])(mk: Mk[R]): Result[R] =
+    assemble(frame(df, target, specs, sketched, y, folds).collect(), target, y, folds)(mk)
+
+  /** The stage's aggregate before the collect: `(fid, dv, sv[, __y][, __fold], cnt)`
+    * plus the summed target's `sy` (and its y-contract counts).
+    */
+  private[carve] def frame(df: DataFrame, target: String, specs: Seq[FeatureSpec],
+      sketched: Map[String, Vector[Double]], y: Target, folds: Option[Folds]): DataFrame = {
     val isKeyed = !y.isInstanceOf[Summed]
     val yCol = if (y == Class) col(target).cast("string") else col(target).cast("double")
     val foldCol = folds.map(f => BinaryCarver.foldExpr(specs, target, f.cv, f.foldCol).as("__fold"))
@@ -91,21 +105,29 @@ object Crosstab {
       Seq(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), yCol.as("__y")) ++ foldCol: _*)
     val keys = (if (isKeyed) Seq(col("__y")) else Nil) ++ foldCol.map(_ => col("__fold"))
     val aggs = y match {
-      case Summed(check) =>
+      case Summed(check, _) =>
         sum(col("__y")).as("sy") +: (if (!check) Nil else Seq(
           sum(col("__y").isNull.cast("long")).as("yNull"),
           sum((col("__y") =!= 0.0 && col("__y") =!= 1.0).cast("long")).as("yNonBin")))
       case _ => Nil
     }
-    val agg = long
+    long
       .groupBy(Seq(col("e.fid").as("fid"), col("e.dv").as("dv"), col("e.sv").as("sv")) ++ keys: _*)
       .agg(count(lit(1)).as("cnt"), aggs: _*)
-      .collect()
+  }
+
+  /** The driver half of [[stage]] over collected [[frame]] rows (or rows of
+    * the same shape): the y contract, fold-id checks, fold views and the
+    * train total.
+    */
+  private[carve] def assemble[R: ClassTag](agg: Array[Row], target: String, y: Target, folds: Option[Folds])(
+      mk: Mk[R]): Result[R] = {
+    val isKeyed = !y.isInstanceOf[Summed]
     val foldIdx = if (isKeyed) 4 else 3
-    val cntIdx = 3 + keys.length
+    val cntIdx = 3 + (if (isKeyed) 1 else 0) + folds.size
 
     y match {
-      case Summed(true) =>
+      case Summed(true, _) =>
         require(!agg.exists(r => r.getLong(cntIdx + 2) > 0),
           s"[BinaryCarver] y ('$target') should not contain NaN/null")
         require(!agg.exists(r => !r.isNullAt(cntIdx + 3) && r.getLong(cntIdx + 3) > 0),
@@ -125,7 +147,7 @@ object Crosstab {
     val classIdx = classes.zipWithIndex.toMap
     def keyOf(r: Row): Double = y match {
       case Class => classIdx(r.getString(3)).toDouble
-      case Level => r.getDouble(3)
+      case Level | Valued => r.getDouble(3)
       case _ => 0.0
     }
     def sumYOf(r: Row): Double = if (isKeyed || r.isNullAt(cntIdx + 1)) 0.0 else r.getDouble(cntIdx + 1)

@@ -404,8 +404,9 @@ final class CarverSession(spark: SparkSession) {
               "[session] one_vs_rest stability needs a labelled extract (per-class binarization).")
         }
         val binned = binary.transform(newDf, keepOriginal = true).cache()
-        // per-feature bin histograms (small K; one cached transform shared)
-        JArray(kept.toList.map { x =>
+        // per-feature bin histograms (small K; one cached transform shared,
+        // released when the report is built)
+        try JArray(kept.toList.map { x =>
           val rows = binned.groupBy(col(s"${x.name}_bin").as("b"))
             .agg(count(lit(1)).as("c")).collect()
           // transform emits a NULL bin code for categorical values unseen at
@@ -423,6 +424,7 @@ final class CarverSession(spark: SparkSession) {
           ("feature" -> x.name) ~ ("psi" -> r6(p)) ~ ("labelled" -> false) ~
             ("unseen_count" -> unseen): JValue
         })
+        finally binned.unpersist()
     }
   }
 

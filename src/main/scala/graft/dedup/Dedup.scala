@@ -473,11 +473,18 @@ object Dedup {
       if (durableDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
     // both edge directions from ONE pass over `pairs` (a union of two
     // selects would evaluate the upstream pair-generation subplan — at
-    // near-dup scale, the whole LSH pipeline — twice in the same job)
+    // near-dup scale, the whole LSH pipeline — twice in the same job).
+    // The edge count for the size gate below ticks a LongAccumulator inside
+    // the cut's own job, the same always-true nondeterministic filter the
+    // loop's convergence count uses: a retried task can only over-count,
+    // which only sends a graph to the distributed path.
+    val edgeCount = spark.sparkContext.longAccumulator("cc_edges")
+    val countEdge = udf { () => edgeCount.add(1L); true }.asNondeterministic()
     val edges = cut(pairs.select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst")))
+      .select(col("e.src"), col("e.dst"))
+      .filter(countEdge()))
     // Size-adaptive strategy (guide §3.1's broadcast-join principle applied
     // to iteration): the edge set is ALREADY bucket-capped upstream, and
     // when it fits comfortably on the driver, an O(E α(E)) union-find
@@ -496,9 +503,8 @@ object Dedup {
            org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
       case _ => false
     }
-    // edges is already materialized (cut), so the count is metadata-cheap;
-    // threshold <= 0 disables the local path (and skips the count job)
-    if (idIsIntegral && localEdgeThreshold > 0 && edges.count() <= localEdgeThreshold) {
+    // threshold <= 0 disables the local path
+    if (idIsIntegral && localEdgeThreshold > 0 && edgeCount.value <= localEdgeThreshold) {
       val e = edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {

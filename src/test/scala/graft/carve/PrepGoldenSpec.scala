@@ -113,16 +113,17 @@ object PrepGoldenSpec {
   private def dump(m: BinaryCarver.Model): String =
     m.toJson + "\n" + m.features.map(history).filter(_.nonEmpty).mkString("\n")
 
-  /** One text block per family: every (cv, dev) fit's model JSON, family
-    * extras and search history, in a fixed order.
+  /** One text block per family (all of [[Families]] by default): every
+    * (cv, dev) fit's model JSON, family extras and search history, in a
+    * fixed order.
     */
-  def render(spark: SparkSession): Seq[(String, String)] = {
+  def render(spark: SparkSession, families: Seq[String] = Families): Seq[(String, String)] = {
     val train = frame(spark, 3000, 11L, dev = false).cache()
     val devFrame = frame(spark, 1200, 23L, dev = true).cache()
     val settings = for (cv <- Seq(0, 3); dev <- Seq(false, true)) yield (cv, if (dev) Some(devFrame) else None)
     def section(cv: Int, dev: Option[DataFrame], body: String) =
       s"=== cv=$cv dev=${dev.isDefined}\n$body\n"
-    val out = Families.map { family =>
+    val out = families.map { family =>
       family -> settings.map { case (cv, dev) =>
         val bcfg = BinaryCarver.Config(minFreq = MinFreq, cv = cv)
         section(cv, dev, family match {

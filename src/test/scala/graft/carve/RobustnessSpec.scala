@@ -137,7 +137,9 @@ class RobustnessSpec extends SparkSuite {
       ("binary", 5, cv => BinaryCarver.fit(df, "y", specs, config = BinaryCarver.Config(cv = cv))),
       ("ordinal", 3, cv => OrdinalCarver.fit(kdf, "lvl", specs, config = OrdinalCarver.Config(cv = cv))),
       ("multiclass", 3, cv => MulticlassCarver.fit(kdf, "k", specs, config = MulticlassCarver.Config(cv = cv))),
-      ("one-vs-rest", 3, cv => OneVsRestCarver.fit(kdf, "k", specs, config = BinaryCarver.Config(cv = cv))))
+      ("one-vs-rest", 3, cv => OneVsRestCarver.fit(kdf, "k", specs, config = BinaryCarver.Config(cv = cv))),
+      ("continuous", 3, cv => ContinuousCarver.fit(kdf, "lvl", specs,
+        config = BinaryCarver.Config(sortBy = "kruskal", cv = cv))))
     fits.foreach { case (family, cv, fit) =>
       val plain = countJobs(fit(0))
       val folded = countJobs(fit(cv))

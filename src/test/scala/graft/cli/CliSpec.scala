@@ -184,6 +184,23 @@ class CliSpec extends SparkSuite {
     assert(p > 0.1, s"half the mass drifted out of the fitted bins: psi=$p")
   }
 
+  test("unlabelled stability releases the transformed extract it caches") {
+    import spark.implicits._
+    val s = new CarverSession(spark)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cli_unpersist").toString
+    (0 until 400).map(i => if (i < 200) ("a", if (i % 10 < 8) 1 else 0) else ("b", if (i % 10 < 2) 1 else 0))
+      .toDF("cat", "y")
+      .write.mode("overwrite").parquet(s"$tmp/train.parquet")
+    call(s, "load_dataset", "path" -> JString(s"$tmp/train.parquet"), "target" -> JString("y"))
+    call(s, "suggest_features")
+    call(s, "run_carver", "task" -> JString("binary"), "min_freq" -> JDouble(0.1))
+    Seq.fill(50)("a").toDF("cat").write.mode("overwrite").parquet(s"$tmp/extract.parquet")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val st = call(s, "evaluate_stability", "path" -> JString(s"$tmp/extract.parquet"))
+    assert(st.asInstanceOf[JArray].arr.nonEmpty, st.toString)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before, "the stability verb left a frame persisted")
+  }
+
   test("Cli REPL line protocol: ok/error envelopes") {
     val s = new CarverSession(spark)
     def roundtrip(line: String): JValue = {

@@ -232,6 +232,47 @@ class DedupSpec extends SparkSuite {
     assert(local == dist)
   }
 
+  test("connectedComponents: E edges at threshold E run locally with no count job, E - 1 go distributed") {
+    import spark.implicits._
+    val nodes = (1L to 8L).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    val e = 6L // the gate counts both directions of every pair
+    // jobs and components at one threshold, AQE and broadcast joins off so
+    // one eager cut is one job
+    def run(threshold: Long): (Int, Map[Long, Long]) = {
+      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          counter.incrementAndGet(); ()
+        }
+      }
+      val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold",
+        "spark.graft.cc.localEdgeThreshold")
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.graft.cc.localEdgeThreshold", threshold.toString)
+      spark.sparkContext.addSparkListener(listener)
+      val comp =
+        try {
+          val c = Dedup.connectedComponents(nodes, pairs)
+          Thread.sleep(300) // let queued listener events drain
+          c
+        } finally {
+          spark.sparkContext.removeSparkListener(listener)
+          saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+        }
+      (counter.get(), comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
+    val (localJobs, local) = run(e)
+    val (distJobs, dist) = run(e - 1)
+    assert(local == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 8L))
+    assert(dist == local)
+    // local: the edge cut and the edge collect; a separate count job would make it 3
+    assert(localJobs == 2, s"local path ran $localJobs jobs")
+    assert(distJobs > localJobs, s"threshold ${e - 1} ran $distJobs jobs: not the distributed loop")
+  }
+
   test("connectedComponents is id-type generic: string (URL) keys converge, no silent cast") {
     import spark.implicits._
     // a URL-keyed corpus: chain a-b-c, pair d-e, singleton f. Before the
