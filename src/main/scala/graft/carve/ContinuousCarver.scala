@@ -11,21 +11,25 @@ import graft.stats.Ranks
   * prep ([[Prebin.prep]] under [[Prebin.Summed]], Σy of a real-valued y),
   * Kruskal-Wallis H association instead of chi².
   *
-  * Cluster shape: two passes over the input. Pass 1 is the sketch, which
-  * also reads distinct-y and counts NaN y. Pass 2 is the cell table
-  * `(feature, value, y[, fold]) → count` (the [[Crosstab]] key shape with y
-  * as one more key), read through one bounded collect of at most
-  * [[Stats.LocalRankRows]] + 1 rows. Below the bound the driver derives
+  * Cluster shape below the cell bound: two passes over the input. Pass 1
+  * is the sketch, which also reads distinct-y and counts NaN y. Pass 2 is
+  * the cell table `(feature, value, y[, fold]) → count` (the [[Crosstab]]
+  * key shape with y as one more key), read through one bounded collect of
+  * at most [[Stats.LocalRankRows]] + 1 rows. Below the bound the driver derives
   * everything else from the cells in canonical (feature, value, y) order:
   * the train and fold histograms, the prebins, each cell's modality, the
   * average ranks of y in two pools per feature (all rows, and rows outside
   * the NaN modality — rank bases differ, see [[Continuous.bestCombination]];
   * [[graft.stats.Ranks.local]]), the per-modality moments and the exact
   * median y histograms. Every floating-point sum then runs in an order
-  * fixed by the data, never by the plan. Above the bound the cell table is
-  * persisted and the derivations run distributed from it: one histogram
-  * collect, the modality join, [[graft.stats.Ranks.bucketed]] and one
-  * collect of `groupBy(feature, modality).agg(n, Σrank, Σy, Σy²)`.
+  * fixed by the data, never by the plan. Above the bound the fit scans its
+  * input twice more: the histogram stage, then the persisted `(feature,
+  * modality, y)` counts of the labelled input, ranked on the driver from
+  * one collect of the `(feature, y)` pools when the distinct-y reading puts
+  * them under the bound, else by [[graft.stats.Ranks.bucketed]], and one
+  * collect of `groupBy(feature, modality).agg(n, Σrank, Σy, Σy²)`. When the
+  * sketch's distinct readings alone put the cells past twice the bound,
+  * the cell pass is skipped, so such a fit scans its input three times.
   */
 object ContinuousCarver {
   import BinaryCarver.{FeatureSpec, FittedFeature, Layout, Model, Prep, Config, NanLabel, OtherLabel, assembleFitted}
@@ -140,27 +144,32 @@ object ContinuousCarver {
     val distinctY = sketchRow.map(_.getAs[Long]("__graft_y_acd")).getOrElse(-1L)
     val approxMedian = distinctY > medianGateThreshold(config, specs.length)
 
-    // ---- pass 2: the cell table. `rdd` holds the aggregation's shuffle, so
-    // the bounded collect and (above the bound) the persisted frame read the
-    // same map output: the input is scanned once more, never twice.
+    // ---- pass 2: the cell table through a bounded collect. The sketch's
+    // readings bound the cell count from below: every feature has a cell
+    // per distinct y, an unsketched quantitative one a cell per distinct
+    // value. Past twice the bound (HLL's error is about 5%) that settles
+    // the branch without the cell pass.
     val folds = Crosstab.folds(config.cv, config.foldCol)
-    val cells = Crosstab.frame(train, target, specs, sketched, Crosstab.Valued, folds)
-    val rdd = cells.rdd
-    val head = rdd.take(math.min(rankRows, Int.MaxValue - 1L).toInt + 1)
-    val s = Staged(train, target, specs, config, folds, sketched, distinctY, withYHists, approxMedian)
-    if (head.length <= rankRows) localStages(s, head)
-    else {
-      val persisted = train.sparkSession.createDataFrame(rdd, cells.schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try distributedStages(s, persisted)
-      finally persisted.unpersist()
+    val minCells = specs.map { sp =>
+      val acd = s"${sp.name}__acd"
+      val dx = sketchRow.filter(r => !sketched.contains(sp.name) && r.schema.fieldNames.contains(acd))
+        .fold(0L)(_.getAs[Long](acd))
+      math.max(dx, distinctY).toDouble
+    }.sum
+    val cells = Option.when(minCells <= 2.0 * rankRows)(
+      Crosstab.frame(train, target, specs, sketched, Crosstab.Valued, folds)
+        .take(math.min(rankRows, Int.MaxValue - 1L).toInt + 1))
+    val s = Staged(train, target, specs, config, folds, sketched, distinctY, withYHists, approxMedian, rankRows)
+    cells.filter(_.length <= rankRows) match {
+      case Some(collected) => localStages(s, collected)
+      case None => distributedStages(s)
     }
   }
 
-  /** What both branches of [[boundedStages]] read besides the cells. */
+  /** What both branches of [[boundedStages]] read. */
   private final case class Staged(train: DataFrame, target: String, specs: Seq[FeatureSpec], config: Config,
       folds: Option[Crosstab.Folds], sketched: Map[String, Vector[Double]], distinctY: Long,
-      withYHists: Boolean, approxMedian: Boolean) {
+      withYHists: Boolean, approxMedian: Boolean, rankRows: Long) {
     val specOf: Map[String, FeatureSpec] = specs.map(sp => sp.name -> sp).toMap
     def prepAll(hist: Map[String, Array[BinaryCarver.HistRow]]): Map[String, Prep] =
       Prebin.prepAll(specs, hist, Prebin.Summed, config.minFreq, config.minFreqAlpha,
@@ -240,28 +249,25 @@ object ContinuousCarver {
       ranked.view.mapValues(_._1).toMap, ranked.view.mapValues(_._2).toMap, yHists, foldYHists)
   }
 
-  /** The distributed branch over the persisted cell frame `pc`: the
-    * histogram collect (the same rows [[Crosstab.stage]] collects), each
-    * value's modality as a broadcast table of the collected histogram, and
-    * `ylh`, the `(fid, lbl, y) → count` aggregate [[rankStatsOf]] ranks.
+  /** The distributed branch: the histogram stage ([[Crosstab.stage]], a
+    * second scan), the prebins, and `ylh`, the persisted `(fid, lbl, y) →
+    * count` aggregate of the labelled input (a third scan) that
+    * [[rankStatsOf]] derives from. With a high-cardinality y the cell table
+    * is about one row per input row and feature, so re-reading it costs
+    * more than these two scans, which aggregate to value-sized and
+    * modality-sized tables.
     */
-  private def distributedStages(s: Staged, pc: DataFrame): Stages = {
-    val keys = Seq(col("fid"), col("dv"), col("sv")) ++ s.folds.map(_ => col("__fold"))
-    val hist = Crosstab.assemble(
-      pc.groupBy(keys: _*).agg(sum(col("cnt")).as("cnt"), sum(col("__y") * col("cnt")).as("sy")).collect(),
-      s.target, Crosstab.Summed(fit = "ContinuousCarver"), s.folds)(Crosstab.summed)
+  private def distributedStages(s: Staged): Stages = {
+    val hist = Crosstab.stage(s.train, s.target, s.specs, s.sketched, Crosstab.Summed(), s.folds)(Crosstab.summed)
     val prep = s.prepAll(hist.total)
-    // a null dv (categorical values, the NaN bucket) reads back as NaN
-    val labels = for ((fid, rows) <- hist.total.toSeq; r <- rows) yield Row(fid,
-      if (r.dv.isNaN) null else r.dv, r.sv, prep(fid).layout.labelOf(s.specOf(fid), r.dv, r.sv, r.isNull))
-    val schema = StructType(Seq("l_fid" -> StringType, "l_dv" -> DoubleType, "l_sv" -> StringType,
-      "lbl" -> StringType).map { case (n, t) => StructField(n, t) })
-    val labelDf = broadcast(pc.sparkSession.createDataFrame(java.util.Arrays.asList(labels: _*), schema))
-    val ylh = pc.join(labelDf, col("fid") === col("l_fid") && col("dv") <=> col("l_dv") && col("sv") <=> col("l_sv"))
-      .groupBy(col("fid"), col("lbl"), col("__y").as("y"))
-      .agg(sum(col("cnt")).as("c"))
-    val (rows, ties, yHists) = rankStatsOf(s, prep, ylh)
-    Stages(s.config, s.sketched, s.distinctY, hist.total, hist.folds, prep, rows, ties, yHists, Nil)
+    val ylh = longForm(s.train, s.target, s.specs, prep)
+      .groupBy(col("fid"), col("lbl"), col("y"))
+      .agg(count(lit(1)).as("c"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (rows, ties, yHists) = rankStatsOf(s, prep, ylh)
+      Stages(s.config, s.sketched, s.distinctY, hist.total, hist.folds, prep, rows, ties, yHists, Nil)
+    } finally ylh.unpersist()
   }
 
   /** Driver-side search per rate strategy over precomputed [[Stages]]; the
@@ -432,10 +438,10 @@ object ContinuousCarver {
     * rank bases, from the `(fid, lbl, y) → count` aggregate `ylh`:
     * `(rows: fid -> lbl -> (n, Σrank_all, Σrank_sub, Σy, Σy²),
     *   ties: fid -> (tieCorr_all, tieCorr_sub), yHists)`. The per-(fid, y)
-    * pool counts are ranked by the bucketed window, the ranks join back to
-    * `ylh` and one collect returns the count-weighted sums. Σy and Σy² sum
-    * in the join's row order, so they may differ from the driver branch's
-    * in the last bits (ranks never do).
+    * pool counts are ranked, the ranks join back to `ylh` and one collect
+    * returns the count-weighted sums. Σy and Σy² sum in the join's row
+    * order, so they may differ from the driver branch's in the last bits
+    * (ranks never do).
     */
   private def rankStatsOf(s: Staged, prep: Map[String, Prep], ylh: DataFrame)
       : (Map[String, Map[String, (Double, Double, Double, Double, Double)]], Map[String, (Double, Double)], YHists) = {
@@ -444,9 +450,28 @@ object ContinuousCarver {
         sum(col("c")).as("all"),
         sum(when(col("lbl") =!= NanLabel, col("c")).otherwise(0L)).as("sub")
       )
-    val r = Ranks.bucketed[String](yh, "fid", "y", Seq("all", "sub"))
-    val ties = r.pools.map { case (fid, p) => fid -> (p(0).tieCorrection, p(1).tieCorrection) }
-    val stats = ylh.join(r.frame.select(col("fid"), col("y"), col("rank_all"), col("rank_sub")), Seq("fid", "y"))
+    // a low-cardinality y (integer scores, counts, grades) has a small pool
+    // table even when the cells are many: it is ranked on the driver from
+    // one collect and broadcast; otherwise (the table is ~ the cells) the
+    // bucketed window ranks it. Both give the identical ranks.
+    val localPools = s.distinctY >= 0 && s.distinctY * math.max(1, s.specs.length).toLong <= s.rankRows
+    val (ranked, pools) =
+      if (localPools) {
+        val tables = yh.collect().groupBy(_.getString(0)).map { case (fid, rows) =>
+          fid -> Ranks.local(rows.map(r => (r.getDouble(1), Array(r.getLong(2), r.getLong(3)))))
+        }
+        val cells = for ((fid, t) <- tables.toSeq; j <- t.values.indices)
+          yield Row(fid, t.values(j), t.rank(0, j), t.rank(1, j))
+        val schema = StructType(Seq("fid" -> StringType, "y" -> DoubleType,
+          "rank_all" -> DoubleType, "rank_sub" -> DoubleType).map { case (n, t) => StructField(n, t) })
+        (broadcast(ylh.sparkSession.createDataFrame(java.util.Arrays.asList(cells: _*), schema)),
+          tables.map { case (fid, t) => fid -> IndexedSeq(t.pool(0), t.pool(1)) })
+      } else {
+        val r = Ranks.bucketed[String](yh, "fid", "y", Seq("all", "sub"))
+        (r.frame.select(col("fid"), col("y"), col("rank_all"), col("rank_sub")), r.pools)
+      }
+    val ties = pools.map { case (fid, p) => fid -> (p(0).tieCorrection, p(1).tieCorrection) }
+    val stats = ylh.join(ranked, Seq("fid", "y"))
       .groupBy(col("fid"), col("lbl"))
       .agg(
         sum(col("c")).as("n"),

@@ -48,9 +48,9 @@ object Crosstab {
     * to the SAME aggregation: two conditional sums, no extra scan. The
     * reference raises on NaN y and on values outside {0, 1}
     * (`base_discretizer._prepare_y`); without the check sum(y) silently
-    * computes garbage rates for a multiclass y. `fit` names the family.
+    * computes garbage rates for a multiclass y.
     */
-  final case class Summed(requireBinaryY: Boolean = false, fit: String = "BinaryCarver") extends Target(fit)
+  final case class Summed(requireBinaryY: Boolean = false) extends Target("BinaryCarver")
 
   /** Keyed by the target cast to double (integer-encoded ordinal levels). */
   case object Level extends Target("OrdinalCarver")
@@ -105,7 +105,7 @@ object Crosstab {
       Seq(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), yCol.as("__y")) ++ foldCol: _*)
     val keys = (if (isKeyed) Seq(col("__y")) else Nil) ++ foldCol.map(_ => col("__fold"))
     val aggs = y match {
-      case Summed(check, _) =>
+      case Summed(check) =>
         sum(col("__y")).as("sy") +: (if (!check) Nil else Seq(
           sum(col("__y").isNull.cast("long")).as("yNull"),
           sum((col("__y") =!= 0.0 && col("__y") =!= 1.0).cast("long")).as("yNonBin")))
@@ -127,7 +127,7 @@ object Crosstab {
     val cntIdx = 3 + (if (isKeyed) 1 else 0) + folds.size
 
     y match {
-      case Summed(true, _) =>
+      case Summed(true) =>
         require(!agg.exists(r => r.getLong(cntIdx + 2) > 0),
           s"[BinaryCarver] y ('$target') should not contain NaN/null")
         require(!agg.exists(r => !r.isNullAt(cntIdx + 3) && r.getLong(cntIdx + 3) > 0),

@@ -1,14 +1,11 @@
 package graft.carve
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The continuous fit's cluster budget. Below the cell bound a fit scans
   * its input twice (the sketch, then the cell table) and derives the rest
-  * on the driver. Jobs are counted by job group with adaptive execution on
-  * and broadcast joins off, so only this fit's jobs count.
+  * on the driver. Jobs are counted with adaptive execution on and
+  * broadcast joins off.
   */
 class ContinuousJobBudgetSpec extends SparkSuite {
   import spark.implicits._
@@ -25,33 +22,9 @@ class ContinuousJobBudgetSpec extends SparkSuite {
   private def config(strategy: String, cv: Int) =
     BinaryCarver.Config(sortBy = "kruskal", rateStrategy = strategy, cv = cv, minFreq = 0.05)
 
-  /** Jobs `body` starts under its own job group, with AQE on and
-    * auto-broadcast off; the session settings are restored afterwards.
-    */
-  private def jobs[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val group = s"budget-${System.nanoTime}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.adaptive.enabled", true)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1L)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "continuous job budget")
-    try {
-      val out = body
-      Thread.sleep(300) // let queued listener events drain
-      (n.get, out)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
-  }
+  /** Jobs `body` starts with adaptive execution on and broadcast joins off. */
+  private def jobs[T](body: => T): (Int, T) = countJobs(
+    "spark.sql.adaptive.enabled" -> "true", "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   test("a below-bound computeStages runs at most 5 jobs: sketch 2, cell map stage 1, bounded collect 2") {
     for (cv <- Seq(0, 3)) {
@@ -78,11 +51,31 @@ class ContinuousJobBudgetSpec extends SparkSuite {
       val nanY = df.withColumn("y", org.apache.spark.sql.functions.when($"x" === 3.0, Double.NaN).otherwise($"y"))
       intercept[IllegalArgumentException](
         ContinuousCarver.boundedStages(nanY, "y", specs, config("target_mean", 0), withYHists = false, bound))
-      // the histogram guard raises after the cell frame is persisted
+      // the histogram guard raises inside either branch
       val e = intercept[IllegalArgumentException](ContinuousCarver.boundedStages(df, "y", specs,
         config("target_mean", 0).copy(maxHistogramRows = 10L), withYHists = false, bound))
       assert(e.getMessage.contains("histogram too large"), e.getMessage)
       assert(spark.sparkContext.getPersistentRDDs.keySet == before, s"bound $bound left a frame persisted")
+    }
+  }
+
+  test("the distributed branch's job budget, with and without the cell pass, with driver and bucketed pool ranks") {
+    // above the bound the fit runs the histogram stage and the labelled
+    // (feature, modality, y) counts. At bound 0 the sketch's readings skip
+    // the cell pass and the real-valued y is ranked by the bucketed window.
+    // The sketch bounds a 7-level y's cells from below at 177 (120 + 50 + 7
+    // distinct values): at bound 50 the cell pass is skipped, at bound 100
+    // it runs and its bounded collect overflows; both rank the small
+    // (feature, y) pool table on the driver.
+    val low = df.withColumn("y", ($"x" % 7).cast("double"))
+    val cases = Seq(("bucketed", df, 0L, 18), ("driver", low, 50L, 11), ("driver after the cell pass", low, 100L, 13))
+    for (cv <- Seq(0, 3); (name, frame, bound, budget) <- cases) {
+      val (mean, _) = jobs(ContinuousCarver.boundedStages(frame, "y", specs, config("target_mean", cv),
+        withYHists = false, bound))
+      // the median histograms are one more collect of the persisted counts
+      val (median, _) = jobs(ContinuousCarver.boundedStages(frame, "y", specs, config("target_median", cv),
+        withYHists = true, bound))
+      assert(mean <= budget && median <= budget + 1, s"$name, cv=$cv: $mean jobs (mean), $median (median)")
     }
   }
 }

@@ -94,36 +94,12 @@ class MulticlassCarverSpec extends SparkSuite {
   }
 
   test("a nested spec is refused before any Spark job runs") {
-    val group = s"nested-refusal-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(); ()
-          case Some(g) if g == group + "-marker" => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
     val nested = df.withColumn("region", concat(lit("r"), col("cat")))
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "nested refusal")
-      val err = intercept[IllegalArgumentException] {
-        MulticlassCarver.fit(nested, "y", Seq(BinaryCarver.FeatureSpec("x", "quantitative"),
-          BinaryCarver.FeatureSpec("cat", "nested", parents = Seq("region"))))
-      }
-      assert(err.getMessage.contains("nested features are not supported"), err.getMessage)
-      // listener events arrive in order: once the marker job is seen, every
-      // job the fit started has been counted
-      sc.setJobGroup(group + "-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get() == 0, s"the refusal ran ${jobs.get()} Spark jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (jobs, err) = countJobs()(intercept[IllegalArgumentException] {
+      MulticlassCarver.fit(nested, "y", Seq(BinaryCarver.FeatureSpec("x", "quantitative"),
+        BinaryCarver.FeatureSpec("cat", "nested", parents = Seq("region"))))
+    })
+    assert(err.getMessage.contains("nested features are not supported"), err.getMessage)
+    assert(jobs == 0, s"the refusal ran $jobs Spark jobs")
   }
 }

@@ -117,18 +117,6 @@ class RobustnessSpec extends SparkSuite {
   test("cv folds are single-pass: a cv=5 fit launches no more cluster jobs than cv=0") {
     // the fold key is one more groupBy column in the ONE histogram scan —
     // a cv=5 fit must not scan the table per fold (round-2 scale-killer)
-    def countJobs(body: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { body; Thread.sleep(300) } // let queued listener events drain
-      finally spark.sparkContext.removeSparkListener(listener)
-      counter.get()
-    }
     val specs = Seq(BinaryCarver.FeatureSpec("x", "quantitative"))
     val kdf = df.withColumn("lvl", (col("y") * 2 + pmod(col("id"), lit(2))).cast("int"))
       .withColumn("k", (col("y") + pmod(col("id"), lit(2))).cast("string"))
@@ -141,8 +129,8 @@ class RobustnessSpec extends SparkSuite {
       ("continuous", 3, cv => ContinuousCarver.fit(kdf, "lvl", specs,
         config = BinaryCarver.Config(sortBy = "kruskal", cv = cv))))
     fits.foreach { case (family, cv, fit) =>
-      val plain = countJobs(fit(0))
-      val folded = countJobs(fit(cv))
+      val (plain, _) = countJobs()(fit(0))
+      val (folded, _) = countJobs()(fit(cv))
       assert(folded <= plain + 1, s"$family: cv=$cv fit ran $folded jobs vs $plain without cv")
     }
   }

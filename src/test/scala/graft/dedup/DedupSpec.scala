@@ -117,40 +117,19 @@ class DedupSpec extends SparkSuite {
     import spark.implicits._
     val nodes = (1L to 6L).toDF("id")
     val pairs = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("id_a", "id_b")
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
     // AQE materializes each shuffle stage as its own job, and a broadcast
     // join submits a separate build job — both would make the count reflect
     // physical stage structure, not algorithm rounds. Pin both off so one
-    // eager localCheckpoint == one job.
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val bcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // force the DISTRIBUTED loop (this test pins the loop's job budget;
-    // the size-adaptive driver union-find would short-circuit it)
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    spark.sparkContext.addSparkListener(listener)
-    val comp =
-      try {
-        val c = Dedup.connectedComponents(nodes, pairs)
-        Thread.sleep(300) // let queued listener events drain
-        c
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcastBefore)
-        spark.conf.unset("spark.graft.cc.localEdgeThreshold")
-      }
+    // eager localCheckpoint == one job; force the DISTRIBUTED loop (this
+    // test pins the loop's job budget; the size-adaptive driver union-find
+    // would short-circuit it)
+    val (jobs, comp) = countJobs(SparkSuite.OneJobPerAction :+ ("spark.graft.cc.localEdgeThreshold" -> "0"): _*)(
+      Dedup.connectedComponents(nodes, pairs))
     // setup: edges + initial labels checkpoints (2 jobs); this graph
     // converges in 2 iterations (one that changes labels, one that
     // verifies no change) at <=2 jobs each -> <=6 total. The old
     // formulation's extra per-round convergence join would make it 8.
-    assert(counter.get() <= 6, s"ran ${counter.get()} jobs")
+    assert(jobs <= 6, s"ran $jobs jobs")
     val m = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 5L))
   }
@@ -240,29 +219,10 @@ class DedupSpec extends SparkSuite {
     // jobs and components at one threshold, AQE and broadcast joins off so
     // one eager cut is one job
     def run(threshold: Long): (Int, Map[Long, Long]) = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold",
-        "spark.graft.cc.localEdgeThreshold")
-      val saved = keys.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.cc.localEdgeThreshold", threshold.toString)
-      spark.sparkContext.addSparkListener(listener)
-      val comp =
-        try {
-          val c = Dedup.connectedComponents(nodes, pairs)
-          Thread.sleep(300) // let queued listener events drain
-          c
-        } finally {
-          spark.sparkContext.removeSparkListener(listener)
-          saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-        }
-      (counter.get(), comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      val (jobs, comp) = countJobs(
+        SparkSuite.OneJobPerAction :+ ("spark.graft.cc.localEdgeThreshold" -> threshold.toString): _*)(
+        Dedup.connectedComponents(nodes, pairs))
+      (jobs, comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     }
     val (localJobs, local) = run(e)
     val (distJobs, dist) = run(e - 1)

@@ -124,45 +124,19 @@ class SelectorSpec extends SparkSuite {
     assert(sel.dropped.exists(_._2 == "budget"))
   }
 
-  /** Spark jobs `body` launches, with AQE and auto-broadcast off so each
-    * action is one job (as in DedupSpec's CC job-budget test).
-    */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val bcastBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      Thread.sleep(300) // let queued listener events drain
-      (r, counter.get())
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcastBefore)
-    }
-  }
-
   test("select runs the global aggregate and the grouped pass only: at most 3 jobs") {
     // one job for the global aggregate; the grouped pass's bounded collect
     // takes one shuffle partition first, then the other three (two jobs)
-    val (sel, jobs) = jobsOf(Selector.select(df, "y",
+    val (jobs, sel) = countJobs(SparkSuite.OneJobPerAction: _*)(Selector.select(df, "y",
       quants = Seq("signal", "copy", "noise", "constant"), quals = Seq("cat", "cat_noise"),
       config = Selector.Config(nBest = 2)))
     assert(jobs <= 3, s"ran $jobs jobs")
     assert(sel.kept.nonEmpty)
-    val (_, taskJobs) = jobsOf(Selector.selectTask(df, "y", Seq("signal", "noise"),
+    val (taskJobs, _) = countJobs(SparkSuite.OneJobPerAction: _*)(Selector.selectTask(df, "y", Seq("signal", "noise"),
       Seq("cat", "cat_noise"), task = "classification"))
     assert(taskJobs <= 3, s"selectTask ran $taskJobs jobs")
     // rank measures alone never run the global aggregate
-    val (_, rankJobs) = jobsOf(Selector.kruskalByFeature(df, "y", Seq("signal", "noise")))
+    val (rankJobs, _) = countJobs(SparkSuite.OneJobPerAction: _*)(Selector.kruskalByFeature(df, "y", Seq("signal", "noise")))
     assert(rankJobs <= 2, s"kruskalByFeature ran $rankJobs jobs")
   }
 
