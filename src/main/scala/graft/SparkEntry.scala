@@ -1082,14 +1082,14 @@ object SparkEntry {
     cachedModel(s"ordModel:$dir") {
       val (h, f) = ordHist(s, dir)
       graft.carve.OrdinalCarver.fitFromHistograms(h, None, "y", ordSpecs,
-        graft.carve.OrdinalCarver.Config(), f, ordDpMemo(s, dir))
+        graft.carve.OrdinalCarver.Config(), f, Some(ordDpMemo(s, dir)))
     }
 
   private def ordinalLevelModel(s: SparkSession, dir: String): graft.carve.OrdinalCarver.Model =
     cachedModel(s"ordLevelModel:$dir") {
       val (h, f) = ordHist(s, dir)
       graft.carve.OrdinalCarver.fitFromHistograms(h, None, "y", ordSpecs,
-        graft.carve.OrdinalCarver.Config(targetScale = "level"), f, ordDpMemo(s, dir))
+        graft.carve.OrdinalCarver.Config(targetScale = "level"), f, Some(ordDpMemo(s, dir)))
     }
 
   // ---- selector memo: q_select / q_select_sf01 run the identical

@@ -853,13 +853,10 @@ object BinaryCarver {
 
   private def searchFeature(spec: FeatureSpec, p: Prep, devXagg: Option[Search.Xagg], folds: Seq[Search.Xagg],
       config: Config): FittedFeature = {
-    val (best0, history) = Search.withRescue(config.minFreq, config.rescue, devXagg.nonEmpty || folds.nonEmpty,
-        config.history) { (minFreq, sink) =>
-      Search.bestCombination(p.xagg, devXagg, config.maxNMod, minFreq, config.minFreqAlpha,
-        config.sortBy, p.layout.hasNan, NanLabel, dropna = config.dropna,
-        config.topKInitial, config.escalate, folds = folds, rateStrategy = config.rateStrategy,
-        histSink = sink, rescueMode = minFreq.isEmpty)
-    }
+    val ev = Search.Evaluator(config.maxNMod, config.minFreq, config.minFreqAlpha, config.topKInitial,
+      config.escalate, config.rescue, config.history, config.dropna)
+    val (best0, history) =
+      ev.search(Search.Chi2Measure(config.sortBy, config.rateStrategy), p.xagg, devXagg, folds, p.layout.hasNan)
     // dropna=false: the NaN group (the all-vs-NaN rescue's second half) and
     // the NaN rate row never materialize as a bin — NaN stays raw at
     // transform time (`Features.unfillna`); the split was only the
@@ -873,7 +870,7 @@ object BinaryCarver {
     best match {
       case None => assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
         history, config.dropna)
-      case Some(b) => assembleFitted(spec, p.layout, b.combination, b.rates, b.cramerv, b.tschuprowt,
+      case Some(b) => assembleFitted(spec, p.layout, b.combination, b.rates, b.best.cramerv, b.best.tschuprowt,
         history, config.dropna)
     }
   }

@@ -1,26 +1,16 @@
 package graft.carve
 
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import scala.collection.mutable
-
-/** Continuous-target (regression) carver — Kruskal-Wallis H family
-  * (`carvers/continuous_carver.py` + `combinations/continuous/...`).
+/** Continuous-target (regression) search — the Kruskal-Wallis H family
+  * (`combinations/continuous/...`).
   *
   * The reference aggregates a LIST of y values per modality; at scale that
   * is exactly what not to do (SURVEY.md C3). The DP only consumes
-  * per-modality `(n, Σrank(y), Σy)` plus the global tie correction, so the
-  * cluster computes average ranks exactly with a `groupBy(feature, y)`
-  * histogram + one cumulative window per feature, then joins ranks back and
-  * reduces to per-modality stats. Nothing row-sized ever reaches the
-  * driver.
-  *
-  * Scale note: the per-feature rank window partitions by feature id — a
-  * single task per feature sized by that feature's distinct-y count. For
-  * web-scale continuous targets with ~N distinct values, swap in a
-  * range-partitioned two-pass cumulative sum; at carving granularity the
-  * distinct-y count is almost always ≪ N.
+  * per-modality `(n, Σrank(y), Σy)` plus the global tie correction, and
+  * the median rate a per-modality y histogram (grouped counts). Those
+  * aggregates come from [[ContinuousCarver]], which ranks y with
+  * [[graft.stats.Ranks]] — `local` on the driver, `bucketed` on the
+  * cluster when the `(feature, y)` pools pass its bound; nothing
+  * row-sized reaches this object.
   */
 object Continuous {
 
@@ -59,36 +49,30 @@ object Continuous {
       // per-modality y histogram (grouped counts, never y-lists)
       rateStrategy: String = "target_mean",
       yHist: Map[String, Array[(Double, Double)]] = Map.empty
-  ) {
+  ) extends Search.Grouping[RankXagg] {
     def nObs: Double = n.sum
-    def without(label: String): RankXagg = {
-      val idx = labels.indexOf(label)
-      if (idx < 0) this
-      else RankXagg(labels.patch(idx, Nil, 1), n.patch(idx, Nil, 1),
-        sumRank.patch(idx, Nil, 1), sumY.patch(idx, Nil, 1), tieCorr,
-        rateStrategy, yHist - label)
-    }
-    def grouped(indexToGroupby: Map[String, String]): RankXagg = {
-      val order = mutable.LinkedHashMap.empty[String, Int]
-      val leaders = labels.map(l => indexToGroupby.getOrElse(l, l))
-      leaders.foreach(l => order.getOrElseUpdate(l, order.size))
-      val gn = new Array[Double](order.size)
-      val gr = new Array[Double](order.size)
-      val gy = new Array[Double](order.size)
+
+    protected def drop(i: Int): RankXagg =
+      RankXagg(labels.patch(i, Nil, 1), n.patch(i, Nil, 1), sumRank.patch(i, Nil, 1), sumY.patch(i, Nil, 1),
+        tieCorr, rateStrategy, yHist - labels(i))
+
+    protected def merge(leaders: Vector[String], to: Array[Int]): RankXagg = {
+      val gn = new Array[Double](leaders.length)
+      val gr = new Array[Double](leaders.length)
+      val gy = new Array[Double](leaders.length)
       var i = 0
-      while (i < labels.length) {
-        val g = order(leaders(i))
-        gn(g) += n(i); gr(g) += sumRank(i); gy(g) += sumY(i)
+      while (i < to.length) {
+        gn(to(i)) += n(i); gr(to(i)) += sumRank(i); gy(to(i)) += sumY(i)
         i += 1
       }
       val gHist =
         if (yHist.isEmpty) yHist
-        else labels.indices.groupBy(i => order(leaders(i))).map { case (g, idxs) =>
-          order.keysIterator.toVector(g) ->
-            idxs.flatMap(i => yHist.getOrElse(labels(i), Array.empty[(Double, Double)])).toArray
+        else labels.indices.groupBy(to(_)).map { case (g, idxs) =>
+          leaders(g) -> idxs.flatMap(i => yHist.getOrElse(labels(i), Array.empty[(Double, Double)])).toArray
         }
-      RankXagg(order.keysIterator.toVector, gn, gr, gy, tieCorr, rateStrategy, gHist)
+      RankXagg(leaders, gn, gr, gy, tieCorr, rateStrategy, gHist)
     }
+
     def rates: Vector[Search.RateRow] = {
       val total = nObs
       labels.indices.map { i =>
@@ -187,174 +171,44 @@ object Continuous {
     hFromRankSums(rg, ng, nObs, tieCorr)
   }
 
-  /** Kruskal analogue of `Search.bestCombination`: same escalating walk,
-    * same vetoes (rates are target MEANS `Σy/n` here), NaN fan-out scored
-    * by closed-form H.
+  /** The continuous family's [[Search.Measure]]: the top-K Kruskal DP,
+    * closed-form H for the NaN fan-out, target means or medians as rates
+    * (vetoes read rates, never ranks).
     *
     * Ranks are pool-dependent (reference `_modality_rank_stats` runs on the
-    * nan-filtered xagg for the non-nan phase and on the restored raw xagg
-    * for the nan phase), so the caller provides both bases:
-    *
-    * @param trainSub  non-NaN modalities with ranks pooled over non-NaN rows
-    * @param trainFull all modalities (incl. NaN) with ranks pooled over all rows
-    * @param dev       robustness view — only (n, Σy) are consumed (vetoes
-    *                  use rates, never ranks)
+    * NaN-filtered xagg for the non-NaN phase and on the restored raw xagg
+    * for the NaN phase), so phase 1 walks `trainSub` — the non-NaN
+    * modalities with ranks pooled over the non-NaN rows — while the search
+    * train holds every modality with ranks pooled over all rows. The DP
+    * reads only rank aggregates, so target_mean and target_median fits
+    * over the same stages share its results through the evaluator's memo.
     */
-  def bestCombination(
-      trainSub: RankXagg,
-      trainFull: RankXagg,
-      dev: Option[RankXagg],
-      maxNMod: Int,
-      minFreq: Option[Double],
-      alpha: Double = 0.05,
-      hasNan: Boolean = false,
-      nanLabel: String = BinaryCarver.NanLabel,
-      topKInitial: Int = 2000,
-      escalate: Boolean = false,
-      folds: Seq[RankXagg] = Nil,
-      histSink: mutable.Buffer[Search.HistoryEntry] = null,
-      rescueMode: Boolean = false,
-      // optional cross-strategy candidate memo (Dp.CandMemo): the DP inputs
-      // are rank aggregates, independent of the rate strategy
-      dpMemo: Dp.CandMemo = null
-  ): Option[(Vector[Vector[String]], Double, Vector[Search.RateRow])] = {
-    def kCands(r: Array[Double], n: Array[Double], nObs: Double, tieCorr: Double,
-        labels: Vector[String], topK: Int): Vector[(Vector[Vector[String]], Double)] =
-      if (dpMemo == null) kruskalTopKPartitions(r, n, nObs, tieCorr, maxNMod, labels, topK)
-      else dpMemo.getOrElseUpdate(
-        ("kruskal", r.toSeq, n.toSeq, nObs, tieCorr, maxNMod, labels, topK),
-        kruskalTopKPartitions(r, n, nObs, tieCorr, maxNMod, labels, topK))
-
-    def viabilityFlags(t: RankXagg, d: Option[RankXagg], f: Seq[RankXagg]): Search.Viability = {
-      val tr = t.rates
-      val mf = Search.testMinFreq(tr, minFreq, alpha)
-      val di = Search.testDistinctRates(tr)
-      if (!mf || !di) return Search.Viability(viable = false, mf, di, orderingOk = true)
-      var res = Search.Viability(viable = true, mf, di, orderingOk = true)
-      val it = (d.toSeq ++ f).iterator
-      while (it.hasNext && res.viable) {
-        val dd = it.next()
-        val dr = dd.rates
-        val mfD = Search.testMinFreq(dr, minFreq, alpha)
-        val diD = Search.testDistinctRates(dr)
-        val ord = Search.testOrdering(tr.map(_.rate), dr.map(_.rate))
-        res = Search.Viability(mfD && diD && ord, mf && mfD, di && diD, ord)
-      }
-      res
+  final case class KruskalMeasure(trainSub: RankXagg)
+      extends Search.Measure[RankXagg, (Vector[Vector[String]], Double)] {
+    def name: String = "kruskal"
+    def rates(x: RankXagg): Vector[Search.RateRow] = x.rates
+    def topK(x: RankXagg, labels: Vector[String], ev: Search.Evaluator): Int => Vector[(Vector[Vector[String]], Double)] = {
+      val (r, n) = align(x, labels)
+      k => ev.memoized(("kruskal", r.toSeq, n.toSeq, x.nObs, x.tieCorr, ev.maxNMod, labels, k))(
+        kruskalTopKPartitions(r, n, x.nObs, x.tieCorr, ev.maxNMod, labels, k))
     }
-    def viability(t: RankXagg, d: Option[RankXagg], f: Seq[RankXagg]): Boolean =
-      viabilityFlags(t, d, f).viable
-    def historize(combo: Vector[Vector[String]], h: Double, v: Search.Viability, withNan: Boolean): Unit = {
-      if (histSink == null) return
-      val info =
-        if (!v.viable) "Not viable"
-        else {
-          val base = s"Best for kruskal and max_n_mod=$maxNMod"
-          val d = if (withNan) base + " (dropna=True)" else base
-          if (rescueMode) d + " (rescue: min_freq waived)" else d
-        }
-      histSink += Search.HistoryEntry(combo, Double.NaN, Double.NaN, combo.length, v.viable,
-        v.minFreqOk, v.distinctOk, v.orderingOk, withNan, info, measure = "kruskal", value = h)
+    def score(x: RankXagg): Vector[Vector[String]] => (Vector[Vector[String]], Double) = {
+      val (nObs, pos) = (x.nObs, x.labels.zipWithIndex.toMap)
+      combo => (combo, hForCombination(x.sumRank, x.n, nObs, x.tieCorr, pos, combo))
     }
+    def combination(c: (Vector[Vector[String]], Double)): Vector[Vector[String]] = c._1
+    def metric(c: (Vector[Vector[String]], Double)): Double = c._2
+    def fields(c: (Vector[Vector[String]], Double)): (Double, Double, String, Double) =
+      (Double.NaN, Double.NaN, "kruskal", c._2)
+    override def pool(trainNoNan: RankXagg): RankXagg = trainSub
 
-    val rawLabels0 = trainSub.labels
-    val trainNoNan = trainSub
-    val devNoNan = if (hasNan) dev.map(_.without(nanLabel)) else dev
-    val foldsNoNan = if (hasNan) folds.map(_.without(nanLabel)) else folds
-
-    def align(x: RankXagg, order: Vector[String]): (Array[Double], Array[Double], Array[Double]) = {
+    /** (Σrank, n) aligned to an explicit label order (absent → 0). */
+    private def align(x: RankXagg, order: Vector[String]): (Array[Double], Array[Double]) = {
       val pos = x.labels.zipWithIndex.toMap
       val r = new Array[Double](order.length)
       val n = new Array[Double](order.length)
-      val y = new Array[Double](order.length)
-      order.indices.foreach { i =>
-        pos.get(order(i)).foreach { p => r(i) = x.sumRank(p); n(i) = x.n(p); y(i) = x.sumY(p) }
-      }
-      (r, n, y)
-    }
-
-    val nonNanWinner: Option[(Vector[Vector[String]], Double)] =
-      if (trainNoNan.labels.length <= 1) None
-      else {
-        val (r, n, _) = align(trainNoNan, rawLabels0)
-        var topK = topKInitial
-        var walked = 0
-        var found: Option[(Vector[Vector[String]], Double)] = None
-        var done = false
-        while (!done) {
-          val cands = kCands(r, n, trainNoNan.nObs, trainNoNan.tieCorr, rawLabels0, topK)
-          var i = walked
-          while (i < cands.length && found.isEmpty) {
-            val (combo, h) = cands(i)
-            val idx = combo.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-            val v = viabilityFlags(trainNoNan.grouped(idx), devNoNan.map(_.grouped(idx)),
-              foldsNoNan.map(_.grouped(idx)))
-            historize(combo, h, v, withNan = false)
-            if (v.viable) found = Some((combo, h))
-            i += 1
-          }
-          walked = i
-          if (found.isDefined) done = true
-          else if (cands.length < topK) done = true
-          else if (!escalate) done = true
-          else topK *= 4
-        }
-        found
-      }
-
-    val (mergedTrain, mergedDev, mergedFolds, mergedLabels, baseBest) = nonNanWinner match {
-      case Some((combo, h)) =>
-        val idx = combo.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-        val gt = trainFull.grouped(idx)
-        (gt, dev.map(_.grouped(idx)), folds.map(_.grouped(idx)), gt.labels.filterNot(_ == nanLabel),
-          Some((combo, h, gt.rates)))
-      case None => (trainFull, dev, folds, rawLabels0, None)
-    }
-
-    if (!hasNan) return baseBest
-
-    // NaN fan-out over merged bins
-    val fullLabels = mergedTrain.labels
-    val modToPos = fullLabels.zipWithIndex.toMap
-    val (fr, fn, _) = align(mergedTrain, fullLabels)
-    val (br, bn, _) = align(mergedTrain, mergedLabels)
-    val historized = mutable.Set.empty[Vector[Vector[String]]]
-    var topK = topKInitial
-    var winner: Option[(Vector[Vector[String]], Double)] = None
-    var done = false
-    while (!done) {
-      val base = kCands(br, bn, mergedTrain.nObs, mergedTrain.tieCorr, mergedLabels, topK)
-      val scored = Dp.nanFanoutVariants(base.map(_._1), nanLabel, mergedLabels, maxNMod)
-        .map { v => (v, hForCombination(fr, fn, mergedTrain.nObs, mergedTrain.tieCorr, modToPos, v)) }
-        .toVector
-        .sortBy { case (_, h) => if (h.isNaN) Double.PositiveInfinity else -h }
-      var i = 0
-      while (i < scored.length && winner.isEmpty) {
-        val (v, h) = scored(i)
-        if (!historized.contains(v)) {
-          historized += v
-          val idx = v.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-          val vf = viabilityFlags(mergedTrain.grouped(idx), mergedDev.map(_.grouped(idx)),
-            mergedFolds.map(_.grouped(idx)))
-          historize(v, h, vf, withNan = true)
-          if (vf.viable) winner = Some((v, h))
-        }
-        i += 1
-      }
-      if (winner.isDefined) done = true
-      else if (base.length < topK) done = true
-      else if (!escalate) done = true
-      else topK *= 4
-    }
-
-    winner.map { case (v, h) =>
-      val expand: Map[String, Vector[String]] = nonNanWinner match {
-        case Some((combo, _)) => combo.map(g => g.head -> g).toMap
-        case None => Map.empty
-      }
-      val finalCombo = v.map(g => g.flatMap(l => expand.getOrElse(l, Vector(l))))
-      val idx = v.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-      (finalCombo, h, mergedTrain.grouped(idx).rates)
+      order.indices.foreach { i => pos.get(order(i)).foreach { p => r(i) = x.sumRank(p); n(i) = x.n(p) } }
+      (r, n)
     }
   }
 }

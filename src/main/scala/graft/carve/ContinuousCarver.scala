@@ -19,7 +19,7 @@ import graft.stats.Ranks
   * everything else from the cells in canonical (feature, value, y) order:
   * the train and fold histograms, the prebins, each cell's modality, the
   * average ranks of y in two pools per feature (all rows, and rows outside
-  * the NaN modality — rank bases differ, see [[Continuous.bestCombination]];
+  * the NaN modality — rank bases differ, see [[Continuous.KruskalMeasure]];
   * [[graft.stats.Ranks.local]]), the per-modality moments and the exact
   * median y histograms. Every floating-point sum then runs in an order
   * fixed by the data, never by the plan. Above the bound the fit scans its
@@ -555,20 +555,17 @@ object ContinuousCarver {
       full: Continuous.RankXagg,
       devX: Option[Continuous.RankXagg],
       config: Config,
-      folds: Seq[Continuous.RankXagg] = Nil,
+      folds: Seq[Continuous.RankXagg],
       // per-label (n, Σy, Σy²) for the per-bin sample std (M4 drift tests)
-      moments: Map[String, (Double, Double, Double)] = Map.empty,
-      dpMemo: Dp.CandMemo = null
+      moments: Map[String, (Double, Double, Double)],
+      dpMemo: Dp.CandMemo
   ): FittedFeature = {
-    val (best, history) = Search.withRescue(config.minFreq, config.rescue, devX.nonEmpty || folds.nonEmpty,
-        config.history) { (minFreq, sink) =>
-      Continuous.bestCombination(sub, full, devX, config.maxNMod, minFreq, config.minFreqAlpha,
-        p.layout.hasNan, NanLabel, config.topKInitial, config.escalate, folds,
-        histSink = sink, rescueMode = minFreq.isEmpty, dpMemo = dpMemo)
-    }
+    val ev = Search.Evaluator(config.maxNMod, config.minFreq, config.minFreqAlpha, config.topKInitial,
+      config.escalate, config.rescue, config.history, memo = Some(dpMemo))
+    val (best, history) = ev.search(Continuous.KruskalMeasure(sub), full, devX, folds, p.layout.hasNan)
     best match {
       case None => assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN, history)
-      case Some((combination, h, rates)) =>
+      case Some(Search.Found(combination, (_, h), rates)) =>
         // per-bin sample std (ddof=1) from the (n, Σy, Σy²) label moments —
         // the Welch-drift reference the stability monitor needs (M4)
         val stds = combination.map { g =>

@@ -18,10 +18,6 @@ object Dp {
       cramerv: Double,
       tschuprowt: Double
   ) {
-    /** modality -> group leader (first element of its group),
-      * reference `combinations.py:combination_formatter`. */
-    lazy val indexToGroupby: Map[String, String] =
-      combination.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
     def metric(sortBy: String): Double = if (sortBy == "cramerv") cramerv else tschuprowt
   }
 
@@ -219,19 +215,22 @@ object Dp {
   def splitsToCombination(splits: Vector[Int], rawIndex: Vector[String]): Vector[Vector[String]] =
     (0 until splits.length - 1).map(g => rawIndex.slice(splits(g), splits(g + 1))).toVector
 
-  /** Content-keyed memo for top-K candidate lists. The DP consumes only the
-    * crosstab/rank aggregates — never the rate strategy — so fits that
-    * differ ONLY in the rate (continuous target_mean vs target_median,
-    * ordinal ridit vs level) re-run byte-identical DPs; keying the
-    * candidate vector by the full DP input makes the second strategy's
-    * search driver-trivial. A miss on ANY input difference (labels, counts,
-    * topK escalation level, phase-2 merged bins) recomputes — no
-    * approximation. Thread-safe (feature searches run in parallel futures).
+  /** Content-keyed memo for top-K candidate lists, held by a
+    * [[Search.Evaluator]]. The DP consumes only the crosstab/rank
+    * aggregates — never the rate strategy — so fits that differ ONLY in
+    * the rate (continuous target_mean vs target_median, ordinal ridit vs
+    * level) re-run byte-identical DPs; keying the candidate vector by the
+    * full DP input makes the second strategy's search driver-trivial. A
+    * miss on ANY input difference (labels, counts, topK escalation level,
+    * phase-2 merged bins) recomputes — no approximation. Thread-safe
+    * (feature searches run in parallel futures).
     */
   final class CandMemo {
     private val m = new scala.collection.concurrent.TrieMap[Any, AnyRef]
     def getOrElseUpdate[T <: AnyRef](key: Any, compute: => T): T =
       m.getOrElseUpdate(key, compute).asInstanceOf[T]
+    /** Entries held: one per distinct DP input. */
+    private[carve] def size: Int = m.size
   }
 
   /** Threads of the dedicated pool for the chi²-style per-k DP runs. */

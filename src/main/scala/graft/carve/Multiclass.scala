@@ -28,8 +28,6 @@ object Multiclass {
   }
 
   final case class MCand(combination: Vector[Vector[String]], cramerv: Double, tschuprowt: Double) {
-    lazy val indexToGroupby: Map[String, String] =
-      combination.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
     def metric(sortBy: String): Double = if (sortBy == "cramerv") cramerv else tschuprowt
   }
 
@@ -115,152 +113,29 @@ object Multiclass {
     }.toVector
   }
 
-  final case class MBest(
-      combination: Vector[Vector[String]],
-      cramerv: Double,
-      tschuprowt: Double,
-      rates: Vector[Search.RateRow],
-      rate: Ordinal.ORate // the fitted CA rate (carries the axis for stability)
-  )
-
-  private def viable(
-      trainG: KXagg, devG: Option[KXagg], rate: Ordinal.ORate,
-      minFreq: Option[Double], alpha: Double, foldsG: Seq[KXagg] = Nil
-  ): Boolean = Ordinal.viableFlags(trainG, devG, rate, minFreq, alpha, foldsG).viable
-
-  /** Multiclass combination search: progressive top-K chi² DP (phase 1) +
-    * the inherited enumerate-and-score NaN placement (phase 2 — like the
-    * ordinal path, the reference does NOT override the NaN phase).
+  /** The multiclass family's [[Search.Measure]]: the K-column chi² top-K
+    * DP, quantised V / T, the fitted CA-score `rate`; like the ordinal
+    * family, the NaN phase enumerates every placement.
     */
-  def bestCombination(
-      train: KXagg,
-      dev: Option[KXagg],
-      maxNMod: Int,
-      minFreq: Option[Double],
-      alpha: Double = 0.05,
-      sortBy: String = "tschuprowt",
-      hasNan: Boolean = false,
-      nanLabel: String = BinaryCarver.NanLabel,
-      dropna: Boolean = true,
-      topKInitial: Int = 2000,
-      escalate: Boolean = true,
-      folds: Seq[KXagg] = Nil,
-      histSink: mutable.Buffer[Search.HistoryEntry] = null,
-      rescueMode: Boolean = false
-  ): Option[MBest] = {
-    def historize(combo: Vector[Vector[String]], cv: Double, tt: Double,
-        v: Search.Viability, withNan: Boolean): Unit = {
-      if (histSink == null) return
-      val info =
-        if (!v.viable) "Not viable"
-        else {
-          val base = s"Best for $sortBy and max_n_mod=$maxNMod"
-          val d = if (withNan) base + " (dropna=True)" else base
-          if (rescueMode) d + " (rescue: min_freq waived)" else d
-        }
-      histSink += Search.HistoryEntry(combo, cv, tt, combo.length, v.viable,
-        v.minFreqOk, v.distinctOk, v.orderingOk, withNan, info,
-        measure = sortBy, value = if (sortBy == "cramerv") cv else tt)
+  final case class Chi2KMeasure(rate: Ordinal.ORate, sortBy: String) extends Search.Measure[KXagg, MCand] {
+    def name: String = sortBy
+    def rates(x: KXagg): Vector[Search.RateRow] = Ordinal.orateRows(x, rate)
+    def topK(x: KXagg, labels: Vector[String], ev: Search.Evaluator): Int => Vector[MCand] = {
+      val (mm, nPerMod) = Ordinal.alignMatrix(x, labels)
+      val colSums = x.colSums
+      k => ev.memoized(("multiclass", mm.map(_.toSeq).toSeq, nPerMod.toSeq, colSums.toSeq, ev.maxNMod, labels, sortBy, k))(
+        topKPartitionsChi2Multiclass(mm, nPerMod, colSums, ev.maxNMod, labels, sortBy, k))
     }
-    val rawLabels0 = if (hasNan && dropna) train.labels.filterNot(_ == nanLabel) else train.labels
-    val trainNoNan = if (hasNan) train.without(nanLabel) else train
-    val devNoNan = if (hasNan) dev.map(_.without(nanLabel)) else dev
-    val foldsNoNan = if (hasNan) folds.map(_.without(nanLabel)) else folds
-
-    // CA axis fixed from the nan-filtered raw train crosstab
-    // (`multiclass_combination_evaluators.py:123`)
-    val rate = CAScoreRate(null).fitReference(trainNoNan)
-
-    val nonNanWinner: Option[MCand] =
-      if (trainNoNan.labels.length <= 1) None
-      else {
-        val (mm, nPerMod) = Ordinal.alignMatrix(trainNoNan, rawLabels0)
-        val colSums = trainNoNan.colSums
-        var topK = topKInitial
-        var walked = 0
-        var found: Option[MCand] = None
-        var done = false
-        while (!done) {
-          val cands = topKPartitionsChi2Multiclass(mm, nPerMod, colSums, maxNMod, rawLabels0, sortBy, topK)
-          var i = walked
-          while (i < cands.length && found.isEmpty) {
-            val c = cands(i)
-            val v = Ordinal.viableFlags(trainNoNan.grouped(c.indexToGroupby),
-              devNoNan.map(_.grouped(c.indexToGroupby)), rate, minFreq, alpha,
-              foldsNoNan.map(_.grouped(c.indexToGroupby)))
-            historize(c.combination, c.cramerv, c.tschuprowt, v, withNan = false)
-            if (v.viable) found = Some(c)
-            i += 1
-          }
-          walked = i
-          if (found.isDefined) done = true
-          else if (walked < topK) done = true
-          else if (!escalate) done = true
-          else topK *= 4
-        }
-        found
+    def score(x: KXagg): Vector[Vector[String]] => MCand = {
+      val nObs = x.nObs
+      combo => {
+        val (cv, tt) = associationMeasure(x.grouped(Search.index(combo)).m, nObs)
+        MCand(combo, cv, tt)
       }
-
-    val (mergedTrain, mergedDev, mergedFolds, mergedLabels, baseBest) = nonNanWinner match {
-      case Some(c) =>
-        val gTrain = train.grouped(c.indexToGroupby)
-        val gDev = dev.map(_.grouped(c.indexToGroupby))
-        (gTrain, gDev, folds.map(_.grouped(c.indexToGroupby)), gTrain.labels.filterNot(_ == nanLabel),
-          Some(MBest(c.combination, c.cramerv, c.tschuprowt, Ordinal.orateRows(gTrain, rate), rate)))
-      case None => (train, dev, folds, rawLabels0, None)
     }
-
-    if (!(hasNan && dropna)) {
-      if (!dropna && hasNan && baseBest.isEmpty) {
-        val combo = Vector(rawLabels0, Vector(nanLabel))
-        val idx = combo.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-        val g = train.grouped(idx)
-        val vr = Ordinal.viableFlags(g, dev.map(_.grouped(idx)), rate, minFreq, alpha, folds.map(_.grouped(idx)))
-        val (cv0, tt0) = associationMeasure(g.m, train.nObs)
-        historize(combo, cv0, tt0, vr, withNan = true)
-        if (vr.viable)
-          return Some(MBest(combo, cv0, tt0, Ordinal.orateRows(g, rate), rate))
-        return None
-      }
-      return baseBest
-    }
-
-    // phase 2: enumerate NaN placements over merged labels
-    val nObs = mergedTrain.nObs
-    val scored = Ordinal.nanCombinations(mergedLabels, maxNMod, nanLabel).map { variant =>
-      val idx = variant.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-      val (cv, tt) = associationMeasure(mergedTrain.grouped(idx).m, nObs)
-      (variant, idx, cv, tt)
-    }.sortBy { case (_, _, cv, tt) =>
-      val v = if (sortBy == "cramerv") cv else tt
-      if (v.isNaN) Double.PositiveInfinity else -v
-    }
-
-    val historized = mutable.Set.empty[Vector[Vector[String]]]
-    var nanWinner: Option[(Vector[Vector[String]], Map[String, String], Double, Double)] = None
-    var i = 0
-    while (i < scored.length && nanWinner.isEmpty) {
-      val (variant, idx, cv, tt) = scored(i)
-      if (!historized.contains(variant)) {
-        historized += variant
-        val g = mergedTrain.grouped(idx)
-        val vf = Ordinal.viableFlags(g, mergedDev.map(_.grouped(idx)), rate, minFreq, alpha,
-          mergedFolds.map(_.grouped(idx)))
-        historize(variant, cv, tt, vf, withNan = true)
-        if (vf.viable) nanWinner = Some((variant, idx, cv, tt))
-      }
-      i += 1
-    }
-
-    nanWinner match {
-      case Some((variant, idx, cv, tt)) =>
-        val expand: Map[String, Vector[String]] = nonNanWinner match {
-          case Some(c) => c.combination.map(g => g.head -> g).toMap
-          case None => Map.empty
-        }
-        val finalCombo = variant.map(g => g.flatMap(l => expand.getOrElse(l, Vector(l))))
-        Some(MBest(finalCombo, cv, tt, Ordinal.orateRows(mergedTrain.grouped(idx), rate), rate))
-      case None => None
-    }
+    def combination(c: MCand): Vector[Vector[String]] = c.combination
+    def metric(c: MCand): Double = c.metric(sortBy)
+    def fields(c: MCand): (Double, Double, String, Double) = (c.cramerv, c.tschuprowt, sortBy, metric(c))
+    override def exhaustiveNan: Boolean = true
   }
 }

@@ -156,19 +156,20 @@ object MulticlassCarver {
     }
     val prep = Prebin.prepAll(specs, trainHist, view, config.minFreq, config.minFreqAlpha, config.rescue,
       config.maxHistogramRows)
+    val ev = Search.Evaluator(config.maxNMod, config.minFreq, config.minFreqAlpha, config.topKInitial,
+      config.escalate, config.rescue, config.history)
     val fitted = Prebin.fitEach(specs, prep, view, devHist, foldHists) { (spec, p, devX, foldXs) =>
-      val (best, history) = Search.withRescue(config.minFreq, config.rescue, devX.nonEmpty || foldXs.nonEmpty,
-          config.history) { (minFreq, sink) =>
-        Multiclass.bestCombination(p.xagg, devX, config.maxNMod, minFreq, config.minFreqAlpha,
-          config.sortBy, p.layout.hasNan, NanLabel, dropna = true, config.topKInitial, config.escalate, foldXs,
-          histSink = sink, rescueMode = minFreq.isEmpty)
-      }
+      // CA axis fixed from the NaN-filtered raw train crosstab
+      // (`multiclass_combination_evaluators.py:123`)
+      val noNan = if (p.layout.hasNan) p.xagg.without(NanLabel) else p.xagg
+      val measure = Multiclass.Chi2KMeasure(Multiclass.CAScoreRate(Ca.fitCaAxis(noNan.m)), config.sortBy)
+      val (best, history) = ev.search(measure, p.xagg, devX, foldXs, p.layout.hasNan)
       val rateRef = Multiclass.CAScoreRate(Ca.fitCaAxis(p.xagg.m))
       best match {
         case None => MFitted(assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
           history), Double.NaN, Double.NaN, rateRef)
-        case Some(b) => MFitted(assembleFitted(spec, p.layout, b.combination, b.rates, b.cramerv, b.tschuprowt,
-          history), b.cramerv, b.tschuprowt, rateRef)
+        case Some(b) => MFitted(assembleFitted(spec, p.layout, b.combination, b.rates, b.best.cramerv,
+          b.best.tschuprowt, history), b.best.cramerv, b.best.tschuprowt, rateRef)
       }
     }
     Model(target, config.minFreq, config.maxNMod, config.sortBy, classes, fitted)

@@ -1,7 +1,5 @@
 package graft.carve
 
-import scala.collection.mutable
-
 /** Ordinal-target combination machinery — the Spark-side re-expression of
   * the reference's ordinal evaluator family
   * (`combinations/ordinal/ordinal_combination_evaluators.py`,
@@ -17,7 +15,8 @@ object Ordinal {
     * levels (columns, ascending). The ordinal/multiclass generalization of
     * `Search.Xagg`.
     */
-  final case class KXagg(labels: Vector[String], levels: Vector[Double], m: Array[Array[Double]]) {
+  final case class KXagg(labels: Vector[String], levels: Vector[Double], m: Array[Array[Double]])
+      extends Search.Grouping[KXagg] {
     def rowTotal(i: Int): Double = { var s = 0.0; var j = 0; while (j < m(i).length) { s += m(i)(j); j += 1 }; s }
     def nObs: Double = m.iterator.map(_.sum).sum
     def colSums: Array[Double] = {
@@ -26,29 +25,18 @@ object Ordinal {
       c
     }
 
-    /** Remove one label's row (reference `AggregatedSamples.dropna`). */
-    def without(label: String): KXagg = {
-      val idx = labels.indexOf(label)
-      if (idx < 0) this
-      else KXagg(labels.patch(idx, Nil, 1), levels, m.patch(idx, Nil, 1))
-    }
+    protected def drop(i: Int): KXagg = KXagg(labels.patch(i, Nil, 1), levels, m.patch(i, Nil, 1))
 
-    /** Group rows by a combination: leaders ordered by first appearance
-      * (reference `group_crosstab`). Unmapped labels stay singletons.
-      */
-    def grouped(indexToGroupby: Map[String, String]): KXagg = {
-      val leaderOrder = mutable.LinkedHashMap.empty[String, Int]
-      val leaders = labels.map(l => indexToGroupby.getOrElse(l, l))
-      leaders.foreach(l => leaderOrder.getOrElseUpdate(l, leaderOrder.size))
-      val out = Array.fill(leaderOrder.size, levels.length)(0.0)
+    protected def merge(leaders: Vector[String], to: Array[Int]): KXagg = {
+      val out = Array.fill(leaders.length, levels.length)(0.0)
       var i = 0
-      while (i < labels.length) {
-        val g = leaderOrder(leaders(i))
+      while (i < to.length) {
+        val row = out(to(i))
         var j = 0
-        while (j < levels.length) { out(g)(j) += m(i)(j); j += 1 }
+        while (j < levels.length) { row(j) += m(i)(j); j += 1 }
         i += 1
       }
-      KXagg(leaderOrder.keysIterator.toVector, levels, out)
+      KXagg(leaders, levels, out)
     }
   }
 
@@ -260,10 +248,7 @@ object Ordinal {
   }
 
   /** One scored candidate partition. */
-  final case class OCand(combination: Vector[Vector[String]], metrics: OMetrics) {
-    lazy val indexToGroupby: Map[String, String] =
-      combination.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-  }
+  final case class OCand(combination: Vector[Vector[String]], metrics: OMetrics)
 
   /** Splits → raw-label groups honoring a compaction map
     * (`dp.py:splits_to_combination` with keep): empty modalities attach to
@@ -372,13 +357,6 @@ object Ordinal {
 
   // ------------------------------------------------------------- search
 
-  final case class OBest(
-      combination: Vector[Vector[String]],
-      metrics: OMetrics,
-      rates: Vector[Search.RateRow],
-      rate: ORate // the fitted rate (carries the ridit reference for stability)
-  )
-
   /** Per-group viability rows from the ordinal rate. */
   def orateRows(x: KXagg, rate: ORate): Vector[Search.RateRow] = {
     val total = x.nObs
@@ -389,183 +367,28 @@ object Ordinal {
     }.toVector
   }
 
-  private[carve] def viable(
-      trainG: KXagg,
-      devG: Option[KXagg],
-      rate: ORate,
-      minFreq: Option[Double],
-      alpha: Double,
-      foldsG: Seq[KXagg] = Nil
-  ): Boolean = viableFlags(trainG, devG, rate, minFreq, alpha, foldsG).viable
-
-  private[carve] def viableFlags(
-      trainG: KXagg,
-      devG: Option[KXagg],
-      rate: ORate,
-      minFreq: Option[Double],
-      alpha: Double,
-      foldsG: Seq[KXagg] = Nil
-  ): Search.Viability = {
-    val trainRates = orateRows(trainG, rate)
-    val mf = Search.testMinFreq(trainRates, minFreq, alpha)
-    val di = Search.testDistinctRates(trainRates)
-    if (!mf || !di) return Search.Viability(viable = false, mf, di, orderingOk = true)
-    var res = Search.Viability(viable = true, mf, di, orderingOk = true)
-    val it = (devG.toSeq ++ foldsG).iterator
-    while (it.hasNext && res.viable) {
-      val view = it.next()
-      val devRates = orateRows(view, rate)
-      val mfD = Search.testMinFreq(devRates, minFreq, alpha)
-      val diD = Search.testDistinctRates(devRates)
-      val ord = Search.testOrdering(trainRates.map(_.rate), devRates.map(_.rate))
-      res = Search.Viability(mfD && diD && ord, mf && mfD, di && diD, ord)
-    }
-    res
-  }
-
-  /** Ordinal combination search: progressive top-K C−D DP (phase 1) + the
-    * inherited enumerate-and-score NaN placement (phase 2; the reference
-    * does NOT override `_get_best_combination_with_nan` for ordinal).
+  /** The ordinal family's [[Search.Measure]]: the top-K C−D DP, tau-b /
+    * tau-c / Somers' D, the fitted ordinal `rate`; the NaN phase
+    * enumerates every placement. The DP reads only the K-crosstab, never
+    * the target scale (ridit vs level), so fits that differ only in the
+    * rate share its results through the evaluator's memo for features
+    * whose modality order does not depend on the scale (quantitative).
     */
-  def bestCombination(
-      train: KXagg,
-      dev: Option[KXagg],
-      rate0: ORate,
-      maxNMod: Int,
-      minFreq: Option[Double],
-      alpha: Double = 0.05,
-      sortBy: String = "tau_c",
-      hasNan: Boolean = false,
-      nanLabel: String = BinaryCarver.NanLabel,
-      dropna: Boolean = true,
-      topKInitial: Int = 2000,
-      escalate: Boolean = true,
-      folds: Seq[KXagg] = Nil,
-      histSink: mutable.Buffer[Search.HistoryEntry] = null,
-      rescueMode: Boolean = false,
-      // optional cross-config candidate memo (Dp.CandMemo): the C−D DP reads
-      // only the K-crosstab, never the target scale (ridit vs level), so
-      // fits differing only in the rate share byte-identical DP output for
-      // features whose modality order is scale-independent (quantitative)
-      dpMemo: Dp.CandMemo = null
-  ): Option[OBest] = {
-    def historize(combo: Vector[Vector[String]], value: Double, v: Search.Viability, withNan: Boolean): Unit = {
-      if (histSink == null) return
-      val info =
-        if (!v.viable) "Not viable"
-        else {
-          val base = s"Best for $sortBy and max_n_mod=$maxNMod"
-          val d = if (withNan) base + " (dropna=True)" else base
-          if (rescueMode) d + " (rescue: min_freq waived)" else d
-        }
-      histSink += Search.HistoryEntry(combo, Double.NaN, Double.NaN, combo.length, v.viable,
-        v.minFreqOk, v.distinctOk, v.orderingOk, withNan, info, measure = sortBy, value = value)
+  final case class TauMeasure(rate: ORate, sortBy: String) extends Search.Measure[KXagg, OCand] {
+    def name: String = sortBy
+    def rates(x: KXagg): Vector[Search.RateRow] = orateRows(x, rate)
+    def topK(x: KXagg, labels: Vector[String], ev: Search.Evaluator): Int => Vector[OCand] = {
+      val (mm, nPerMod) = alignMatrix(x, labels)
+      val colSums = x.colSums
+      k => ev.memoized(("ordinal", mm.map(_.toSeq).toSeq, nPerMod.toSeq, colSums.toSeq, ev.maxNMod, labels, sortBy, k))(
+        topKPartitionsOrdinalDp(mm, nPerMod, colSums, ev.maxNMod, labels, sortBy, k))
     }
-    val rawLabels0 = if (hasNan && dropna) train.labels.filterNot(_ == nanLabel) else train.labels
-    val trainNoNan = if (hasNan) train.without(nanLabel) else train
-    val devNoNan = if (hasNan) dev.map(_.without(nanLabel)) else dev
-    val foldsNoNan = if (hasNan) folds.map(_.without(nanLabel)) else folds
-
-    // ridit reference fixed from the nan-filtered raw train crosstab
-    // (`ordinal_combination_evaluators.py:127`)
-    val rate = rate0.fitReference(trainNoNan)
-
-    // ---- phase 1: non-nan DP with ×4 escalation ---------------------------
-    val nonNanWinner: Option[OCand] =
-      if (trainNoNan.labels.length <= 1) None
-      else {
-        val (mm, nPerMod) = alignMatrix(trainNoNan, rawLabels0)
-        val colSums = trainNoNan.colSums
-        var topK = topKInitial
-        var walked = 0
-        var found: Option[OCand] = None
-        var done = false
-        while (!done) {
-          val cands =
-            if (dpMemo == null) topKPartitionsOrdinalDp(mm, nPerMod, colSums, maxNMod, rawLabels0, sortBy, topK)
-            else dpMemo.getOrElseUpdate(
-              ("ordinal", mm.map(_.toSeq).toSeq, nPerMod.toSeq, colSums.toSeq, maxNMod, rawLabels0, sortBy, topK),
-              topKPartitionsOrdinalDp(mm, nPerMod, colSums, maxNMod, rawLabels0, sortBy, topK))
-          var i = walked
-          while (i < cands.length && found.isEmpty) {
-            val c = cands(i)
-            val v = viableFlags(trainNoNan.grouped(c.indexToGroupby), devNoNan.map(_.grouped(c.indexToGroupby)),
-              rate, minFreq, alpha, foldsNoNan.map(_.grouped(c.indexToGroupby)))
-            historize(c.combination, c.metrics.metric(sortBy), v, withNan = false)
-            if (v.viable) found = Some(c)
-            i += 1
-          }
-          walked = i
-          if (found.isDefined) done = true
-          else if (walked < topK) done = true
-          else if (!escalate) done = true
-          else topK *= 4
-        }
-        found
-      }
-
-    // ---- apply phase-1 winner ---------------------------------------------
-    val (mergedTrain, mergedDev, mergedFolds, mergedLabels, baseBest) = nonNanWinner match {
-      case Some(c) =>
-        val gTrain = train.grouped(c.indexToGroupby)
-        val gDev = dev.map(_.grouped(c.indexToGroupby))
-        val labels = gTrain.labels.filterNot(_ == nanLabel)
-        val best = OBest(c.combination, c.metrics, orateRows(gTrain, rate), rate)
-        (gTrain, gDev, folds.map(_.grouped(c.indexToGroupby)), labels, Some(best))
-      case None => (train, dev, folds, rawLabels0, None)
-    }
-
-    if (!(hasNan && dropna)) {
-      if (!dropna && hasNan && baseBest.isEmpty) {
-        // all-values-vs-NaN rescue (`combination_evaluator.py:411-429`)
-        val combo = Vector(rawLabels0, Vector(nanLabel))
-        val idx = combo.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-        val g = train.grouped(idx)
-        val vr = viableFlags(g, dev.map(_.grouped(idx)), rate, minFreq, alpha, folds.map(_.grouped(idx)))
-        historize(combo, ordinalAssociations(g.m).metric(sortBy), vr, withNan = true)
-        if (vr.viable)
-          return Some(OBest(combo, ordinalAssociations(g.m), orateRows(g, rate), rate))
-        return None
-      }
-      return baseBest
-    }
-
-    // ---- phase 2: enumerate NaN placements over merged labels -------------
-    val variants = nanCombinations(mergedLabels, maxNMod, nanLabel)
-    val scored = variants.map { variant =>
-      val idx = variant.iterator.flatMap(g => g.iterator.map(_ -> g.head)).toMap
-      (variant, idx, ordinalAssociations(mergedTrain.grouped(idx).m))
-    }.sortBy { case (_, _, m) =>
-      val v = m.metric(sortBy)
-      if (v.isNaN) Double.PositiveInfinity else -v
-    }
-
-    val historized = mutable.Set.empty[Vector[Vector[String]]]
-    var nanWinner: Option[(Vector[Vector[String]], Map[String, String], OMetrics)] = None
-    var i = 0
-    while (i < scored.length && nanWinner.isEmpty) {
-      val (variant, idx, m) = scored(i)
-      if (!historized.contains(variant)) {
-        historized += variant
-        val g = mergedTrain.grouped(idx)
-        val vf = viableFlags(g, mergedDev.map(_.grouped(idx)), rate, minFreq, alpha,
-          mergedFolds.map(_.grouped(idx)))
-        historize(variant, m.metric(sortBy), vf, withNan = true)
-        if (vf.viable) nanWinner = Some((variant, idx, m))
-      }
-      i += 1
-    }
-
-    nanWinner match {
-      case Some((variant, idx, m)) =>
-        val expand: Map[String, Vector[String]] = nonNanWinner match {
-          case Some(c) => c.combination.map(g => g.head -> g).toMap
-          case None => Map.empty
-        }
-        val finalCombo = variant.map(g => g.flatMap(l => expand.getOrElse(l, Vector(l))))
-        Some(OBest(finalCombo, m, orateRows(mergedTrain.grouped(idx), rate), rate))
-      case None => None // nan phase replaces the result (same as binary path)
-    }
+    def score(x: KXagg): Vector[Vector[String]] => OCand =
+      combo => OCand(combo, ordinalAssociations(x.grouped(Search.index(combo)).m))
+    def combination(c: OCand): Vector[Vector[String]] = c.combination
+    def metric(c: OCand): Double = c.metrics.metric(sortBy)
+    def fields(c: OCand): (Double, Double, String, Double) = (Double.NaN, Double.NaN, sortBy, metric(c))
+    override def exhaustiveNan: Boolean = true
   }
 
   /** Matrix + row totals aligned to an explicit label order (absent → 0). */

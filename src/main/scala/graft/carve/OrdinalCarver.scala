@@ -130,7 +130,7 @@ object OrdinalCarver {
       // but differing in targetScale (ridit vs level) re-run byte-identical
       // C−D DPs for scale-independent modality orders (quantitative specs);
       // pass one Dp.CandMemo across those fits to share the candidates
-      dpMemo: Dp.CandMemo = null
+      dpMemo: Option[Dp.CandMemo] = None
   ): Model = {
     require(specs.nonEmpty, "no features to carve")
     // reference OrdinalCarver._prepare_samples: >2 integer-encoded levels
@@ -177,19 +177,20 @@ object OrdinalCarver {
       if (config.targetScale == "ridit" && config.levelValues.isEmpty) Ordinal.TargetMeanRidit(null, null)
       else Ordinal.TargetMeanLevel(config.levelValues)
 
+    val ev = Search.Evaluator(config.maxNMod, config.minFreq, config.minFreqAlpha, config.topKInitial,
+      config.escalate, config.rescue, config.history, memo = dpMemo)
     val fitted = Prebin.fitEach(specs, prep, view, devHist, foldHists) { (spec, p, devX, foldXs) =>
-      val (best, history) = Search.withRescue(config.minFreq, config.rescue, devX.nonEmpty || foldXs.nonEmpty,
-          config.history) { (minFreq, sink) =>
-        Ordinal.bestCombination(p.xagg, devX, rate0, config.maxNMod, minFreq, config.minFreqAlpha,
-          config.sortBy, p.layout.hasNan, NanLabel, dropna = true, config.topKInitial, config.escalate, foldXs,
-          histSink = sink, rescueMode = minFreq.isEmpty, dpMemo = dpMemo)
-      }
+      // ridit reference fixed from the NaN-filtered raw train crosstab
+      // (`ordinal_combination_evaluators.py:127`)
+      val rate = rate0.fitReference(if (p.layout.hasNan) p.xagg.without(NanLabel) else p.xagg)
+      val (best, history) =
+        ev.search(Ordinal.TauMeasure(rate, config.sortBy), p.xagg, devX, foldXs, p.layout.hasNan)
       val rateRef = rate0.fitReference(p.xagg)
       best match {
         case None => OFitted(assembleFitted(spec, p.layout, Vector.empty, Vector.empty, Double.NaN, Double.NaN,
           history), Double.NaN, Double.NaN, Double.NaN, rateRef)
         case Some(b) => OFitted(assembleFitted(spec, p.layout, b.combination, b.rates, Double.NaN, Double.NaN,
-          history), b.metrics.tauB, b.metrics.tauC, b.metrics.somersd, rateRef)
+          history), b.best.metrics.tauB, b.best.metrics.tauC, b.best.metrics.somersd, rateRef)
       }
     }
     Model(target, config.minFreq, config.maxNMod, config.sortBy, levels, fitted)

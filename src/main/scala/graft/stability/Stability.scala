@@ -281,7 +281,7 @@ object Stability {
         refCount.indices.map(i => refCount(i) * refRate(i)).toArray)
       val devX = Search.Xagg(f.rates.map(_.label),
         newCount.indices.map(i => newCount(i) - newSy(i)).toArray, newSy)
-      val viability = Search.testViability(trainX, Some(devX), Some(model.minFreq), alpha)
+      val viability = Search.viability(trainX, Iterator(devX), Some(model.minFreq), alpha)(Search.rates(_, "target_mean"))
 
       val reasons = Vector.newBuilder[String]
       if (psiV > psiThreshold) reasons += f"psi=$psiV%.4f>$psiThreshold"

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * [[BinaryCarver.Model]] whose transform matches the reference's
   * ordinal-encoded transform row for row; and a model written by
   * [[RefJson.write]] round-trips through [[RefJson.read]] with an
-  * identical transform. (`gen_ref_saved.py --check-load` additionally
-  * verifies the reference itself loads a Scala-written file.)
+  * identical transform. (`gen_ref_saved.py --check-load <file>`
+  * additionally verifies the reference itself loads a file that
+  * [[RefJson.save]] wrote, i.e. [[RefJson.write]]'s text.)
   */
 class RefJsonSpec extends SparkSuite {
 

@@ -29,8 +29,10 @@ import org.apache.spark.sql.functions._
 class SearchGoldenSpec extends SparkSuite {
   import SearchGoldenSpec._
 
+  private lazy val rendered = render(spark)
+
   test("escalation, rescue and dropna=false fits match their recorded model JSON and search history") {
-    val out = render(spark)
+    val out = rendered
     assert(out.map(_._1) == Families)
     out.foreach { case (family, text) =>
       val path = s"/search/$family.txt"
@@ -46,7 +48,7 @@ class SearchGoldenSpec extends SparkSuite {
   }
 
   test("the pinned fits reach the paths they are meant to pin") {
-    val out = render(spark).toMap
+    val out = rendered.toMap
     def block(family: String, name: String): Vector[String] =
       out(family).split("=== ").find(_.startsWith(name)).get.linesIterator.toVector
     def history(lines: Vector[String]): Vector[Array[String]] =

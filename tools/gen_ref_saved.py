@@ -13,7 +13,8 @@ raise if called — so a green run proves the fit used only the real shims.
 
 Usage:  python3 tools/gen_ref_saved.py
         python3 tools/gen_ref_saved.py --check-load path/to/our_model.json
-            (also loads a Scala-written reference-schema JSON with the
+            (also loads a Scala-written reference-schema JSON — the file
+             `RefJson.save` writes, `RefJson.write`'s text — with the
              reference's BinaryCarver.load and verifies its transform
              matches the reference-fitted carver's — bidirectional interop)
 """

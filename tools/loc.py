@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Count non-blank, non-comment Scala lines per directory.
+"""Count non-blank, non-comment Scala lines per directory or file.
 
 A line counts when, outside a /* ... */ block, it is neither blank nor a
 // line comment. Block comments (scaladoc included) are skipped whole; a
@@ -7,8 +7,10 @@ line that closes a block and then carries code counts.
 
 Usage: python3 tools/loc.py [ROOT ...]   (default: src/main/scala)
 
-Prints one "lines  directory" row per directory holding .scala files, then
-the total. Compare two checkouts by running it in each.
+A ROOT is a directory (walked) or a .scala file (counted as itself).
+Prints one "lines  directory" row per directory holding .scala files and
+one "lines  file" row per file argument, then the total. Compare two
+checkouts by running it in each.
 """
 import os
 import sys
@@ -41,6 +43,10 @@ def code_lines(path):
 def main(roots):
     per_dir = defaultdict(int)
     for root in roots:
+        if os.path.isfile(root):
+            if root.endswith(".scala"):
+                per_dir[root] += code_lines(root)
+            continue
         for d, _, files in os.walk(root):
             for name in files:
                 if name.endswith(".scala"):
