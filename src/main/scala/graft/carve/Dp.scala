@@ -80,12 +80,17 @@ object Dp {
 
   /** Layout-exact clone of scala.collection.mutable.PriorityQueue (1-based
     * array; enqueue = append+fixUp; dequeue = move-last-to-root+fixDown;
-    * fixUp swaps while parent LT child, fixDown picks the GT child and
+    * fixUp moves up while parent LT child, fixDown picks the GT child and
     * stops on parent GTEQ child) over parallel primitive keys. `key` must
     * be the value the former Ordering compared (−cost for maximize, cost
     * for minimize): Double.compare on it reproduces Ordering.by(±_.cost)
-    * exactly, ±0.0 and NaN included. Capacity grows by doubling — growth
-    * never affects the swap sequence.
+    * exactly, ±0.0 and NaN included. Both sifts move a hole instead of
+    * swapping: the moving entry stays in locals, the entries it passes
+    * shift one level, and it is written once where it stops. The compares
+    * are the swap loop's own (the moving key is the one the swap loop
+    * holds at the same index), so every operation leaves the identical
+    * array layout. Capacity grows by doubling — growth never affects the
+    * layout either.
     */
   private final class CostHeap(topK: Int) {
     private[this] var keys = new Array[Double](math.min(topK, 1024) + 2)
@@ -98,22 +103,22 @@ object Dp {
         keys = java.util.Arrays.copyOf(keys, keys.length * 2)
         refs = java.util.Arrays.copyOf(refs, refs.length * 2)
       }
-      keys(size0) = key
-      refs(size0) = ref
       var m = size0
-      while (m > 1 && java.lang.Double.compare(keys(m / 2), keys(m)) < 0) {
+      while (m > 1 && java.lang.Double.compare(keys(m / 2), key) < 0) {
         val h = m / 2
-        val k = keys(m); keys(m) = keys(h); keys(h) = k
-        val r = refs(m); refs(m) = refs(h); refs(h) = r
+        keys(m) = keys(h)
+        refs(m) = refs(h)
         m = h
       }
+      keys(m) = key
+      refs(m) = ref
       size0 += 1
     }
     def dequeue(): Node = {
       size0 -= 1
       val result = refs(1)
-      keys(1) = keys(size0)
-      refs(1) = refs(size0)
+      val key = keys(size0)
+      val ref = refs(size0)
       refs(size0) = null
       val n = size0 - 1
       var k = 1
@@ -121,13 +126,16 @@ object Dp {
       while (!done && n >= 2 * k) {
         var j = 2 * k
         if (j < n && java.lang.Double.compare(keys(j), keys(j + 1)) < 0) j += 1
-        if (java.lang.Double.compare(keys(k), keys(j)) >= 0) done = true
+        if (java.lang.Double.compare(key, keys(j)) >= 0) done = true
         else {
-          val kk = keys(k); keys(k) = keys(j); keys(j) = kk
-          val rr = refs(k); refs(k) = refs(j); refs(j) = rr
+          keys(k) = keys(j)
+          refs(k) = refs(j)
           k = j
         }
       }
+      // on the last dequeue (n == 0) this rewrites the vacated root slot
+      keys(k) = key
+      refs(k) = ref
       result
     }
     /** dequeueAll (worst-first) reversed: the former
@@ -145,6 +153,14 @@ object Dp {
     * metric-best first — exactly the per-k lists [[topKPartitions]]
     * concatenates, with splits still in parent-chain form so callers that
     * sort/truncate before reading splits skip the materialization.
+    *
+    * Rows g < cap fill every cell j = g..nMod, since row g + 1 reads them
+    * all. The last row (g == cap) fills only its j = nMod cell: nothing
+    * reads its other cells, and each cell's heap depends only on the
+    * previous row, so the cell — and every returned list — is the one the
+    * full row would hold. That last row is the widest (its previous row's
+    * lists are the fullest), so at prebin granularity the trim removes
+    * most of the DP's heap work.
     */
   def topKNodes(
       nMod: Int,
@@ -157,31 +173,36 @@ object Dp {
     // dp rows: rows(g)(j) = top-K g-group partitions of [0, j), kept SORTED
     // (metric-best first). The sortedness lets the next row prune: extensions
     // of worse prefixes than the current K-th candidate can stop early.
+    // `skipCost` as a primitive flag and value, so the per-segment test does
+    // not box; `==` is Option.contains' test (NaN never skips, -0.0 == 0.0).
+    val hasSkip = skipCost.isDefined
+    val skip = if (hasSkip) skipCost.get else 0.0
     var prev: Array[Array[Node]] = Array.fill(nMod + 1)(Array.empty)
     var j = 1
     while (j <= nMod) {
       val c = segCost(0, j)
-      if (!skipCost.contains(c)) prev(j) = Array(new Node(c, null, j))
+      if (!(hasSkip && c == skip)) prev(j) = Array(new Node(c, null, j))
       j += 1
     }
     val res: Array[Array[Node]] = Array.fill(cap + 1)(Array.empty)
     // bounded selection: a size-<=topK heap whose head is the WORST kept
     // entry. [[CostHeap]] clones scala's PriorityQueue layout under the
-    // former `Ordering.by(±_.cost)` — same comparison results, same swap
-    // sequence, therefore the same kept SET and the same dequeue order
+    // former `Ordering.by(±_.cost)` — same comparison results, same
+    // layout, therefore the same kept SET and the same dequeue order
     // under cost ties — minus the per-sift Ordering dispatch and Double
     // boxing that dominated the DP at prebin granularity (nMod ~ 100 →
     // ~1.6M heap pushes per call).
     var g = 2
     while (g <= cap) {
       val row: Array[Array[Node]] = Array.fill(nMod + 1)(Array.empty)
-      var jj = g
+      // the last row is read only at nMod (see the scaladoc)
+      var jj = if (g == cap) math.max(g, nMod) else g
       while (jj <= nMod) {
         val heap = new CostHeap(topK)
         var i = g - 1
         while (i < jj) {
           val c = segCost(i, jj)
-          if (!skipCost.contains(c)) {
+          if (!(hasSkip && c == skip)) {
             val prevEntries = prev(i)
             var p = 0
             var stop = false

@@ -8,8 +8,11 @@ import scala.collection.mutable
   * scala.collection.mutable.PriorityQueue formulation: same kept set, same
   * order — including under engineered cost TIES, where a heap-layout
   * difference would reorder or swap candidates. The production claim is
-  * layout-exactness (identical comparison results and swap sequence), so
-  * the assertion is full sequence equality, not set equality.
+  * layout-exactness (identical comparisons, identical array layout), so
+  * the assertion is full sequence equality, not set equality. The
+  * reference fills every cell of the last row; the production DP fills
+  * only the cell its callers read, and the wide-row cases pin that this
+  * changes no returned list.
   */
 class DpEquivalenceSpec extends AnyFunSuite {
 
@@ -123,6 +126,43 @@ class DpEquivalenceSpec extends AnyFunSuite {
         if (rnd.nextInt(4) == 0) Double.NegativeInfinity else rnd.nextDouble() * 10)
       check(nMod, 4, 20, maximize = true, (i, j) => vals(i)(j),
         skip = Some(Double.NegativeInfinity), label = s"skip trial $trial")
+    }
+  }
+
+  test("wide last rows: every res(g) matches the full-row reference") {
+    // nMod 20-40 with a small cap makes the last row (filled only at nMod
+    // by the DP, fully by the reference) the bulk of the work; quantized
+    // costs add exact ties at the topK cutoff, skip trials add excluded
+    // segments, both directions run
+    val rnd = new scala.util.Random(20261019)
+    for (trial <- 1 to 16) {
+      val nMod = 20 + rnd.nextInt(21)
+      val cap = 3 + rnd.nextInt(4)
+      val topK = 1 + rnd.nextInt(200)
+      val tied = trial % 4 < 2
+      val skip = if (trial % 3 == 0) Some(if (tied) 1.0 else Double.NegativeInfinity) else None
+      val vals = Array.fill(nMod + 1, nMod + 1)(
+        if (tied) rnd.nextInt(4).toDouble
+        else if (skip.isDefined && rnd.nextInt(5) == 0) Double.NegativeInfinity
+        else rnd.nextDouble() * 100)
+      check(nMod, cap, topK, maximize = trial % 2 == 0, (i, j) => vals(i)(j), skip,
+        label = s"wide trial $trial (nMod $nMod, cap $cap, topK $topK)")
+    }
+  }
+
+  test("the last row evaluates only its nMod cell: nMod - cap + 1 segments") {
+    val nMod = 30
+    for (cap <- 2 to 6) {
+      val calls = mutable.ArrayBuffer.empty[(Int, Int)]
+      val rnd = new scala.util.Random(cap)
+      val vals = Array.fill(nMod + 1, nMod + 1)(rnd.nextDouble())
+      Dp.topKNodes(nMod, cap, (i, j) => { calls += ((i, j)); vals(i)(j) }, 50)
+      // row 1 evaluates segment (0, j) for every j; row g < cap evaluates
+      // (i, jj) for every cell jj = g..nMod and every i = g-1..jj-1
+      val fullRows = nMod + (2 until cap).map(g => (g to nMod).map(jj => jj - g + 1).sum).sum
+      val lastRow = calls.drop(fullRows)
+      assert(calls.length == fullRows + nMod - cap + 1, s"cap $cap: ${calls.length} segment evaluations")
+      assert(lastRow == (cap - 1 until nMod).map(i => (i, nMod)), s"cap $cap: last row evaluated $lastRow")
     }
   }
 
