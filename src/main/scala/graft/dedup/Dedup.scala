@@ -17,7 +17,11 @@ import graft.text.TextOps
   *    to keep the quadratic pair fan-out bounded on pathological buckets
   *    (boilerplate pages), mirroring production near-dup pipelines;
   *  - exact Jaccard verification re-joins texts only for candidate pairs
-  *    (a tiny fraction of the corpus).
+  *    (a tiny fraction of the corpus);
+  *  - the shingle, MinHash and Jaccard kernels run on primitive `long[]`
+  *    end to end ([[windowHashes]] → [[sortedShingles]] / [[minhashSig]]),
+  *    inside codegen expressions (graft.transform.SignatureExprs) — no
+  *    Scala UDF and no boxed shingle on any dedup scan.
   */
 object Dedup {
 
@@ -70,19 +74,33 @@ object Dedup {
       (mix64(seed + 2L * i) | 1L, mix64(seed + 2L * i + 1))
     }
 
-  /** MinHash signature of a set of shingle hashes. Pure Scala — used by the
-    * signature UDF and directly unit-testable.
+  // [[perms]] as two primitive arrays (multipliers, offsets), memoized per
+  // config so each task expands the splitmix64 family once, not once per row
+  private val permCache =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Long), (Array[Long], Array[Long])]()
+  private def permsFor(numHashes: Int, seed: Long): (Array[Long], Array[Long]) =
+    permCache.computeIfAbsent((numHashes, seed), _ => perms(numHashes, seed).unzip)
+
+  /** MinHash signature of a bag of shingle hashes — the raw window hashes
+    * of [[windowHashes]] or the distinct set of [[sortedShingles]] give the
+    * same signature (a repeated hash cannot change a minimum). Pure Scala —
+    * called from the signature expression and directly unit-testable.
     */
-  def minhashSig(shingleHashes: Iterator[Long], numHashes: Int, seed: Long = 42L): Array[Long] = {
-    val ps = perms(numHashes, seed)
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    shingleHashes.foreach { h =>
-      var i = 0
-      while (i < numHashes) {
-        val v = ps(i)._1 * h + ps(i)._2
-        if (v < sig(i)) sig(i) = v
-        i += 1
+  def minhashSig(shingleHashes: Array[Long], numHashes: Int, seed: Long = 42L): Array[Long] = {
+    val (mul, add) = permsFor(numHashes, seed)
+    val sig = new Array[Long](numHashes)
+    var i = 0
+    while (i < numHashes) {
+      val a = mul(i); val b = add(i)
+      var m = Long.MaxValue
+      var j = 0
+      while (j < shingleHashes.length) {
+        val v = a * shingleHashes(j) + b
+        if (v < m) m = v
+        j += 1
       }
+      sig(i) = m
+      i += 1
     }
     sig
   }
@@ -105,40 +123,38 @@ object Dedup {
     h
   }
 
-  /** Distinct k-char shingle hashes. Shingle WINDOWS slide over UTF-16
-    * units (substring), so window boundaries on supplementary-plane text
-    * differ from a code-point slicer — the cross-engine shingle contract
-    * is BMP text (each hash itself is code-point-faithful via [[fnv1a]]).
+  /** FNV-1a hash of every k-char window of the normalized (lower-cased,
+    * trimmed) text, repeats included, in window order; empty when the text
+    * is null or shorter than k. Windows slide over UTF-16 units, so window
+    * boundaries on supplementary-plane text differ from a code-point slicer
+    * — the cross-engine shingle contract is BMP text (each hash itself is
+    * code-point-faithful via [[fnvWindow]], which reads the parent string
+    * with no substring).
     */
-  def shingleHashes(text: String, k: Int): Iterator[Long] = {
+  def windowHashes(text: String, k: Int): Array[Long] = {
     val t = if (text == null) "" else text.toLowerCase.trim
     val nWin = t.length - k + 1
-    if (nWin <= 0) return Iterator.empty
-    // distinct hashes via an open-addressed PRIMITIVE long set (0L = empty
-    // slot, tracked separately): this is the hottest scan of the dedup
-    // family, and the previous `substring -> fnv1a -> toSet` allocated a
-    // window substring plus a boxed Long per window. Capacity = next pow2
-    // >= 2*windows keeps load factor <= 0.5 with no resize. The window hash
-    // itself reads code points straight off the parent string ([[fnvWindow]])
-    // — no substring either.
-    var cap = 4
-    while (cap < nWin * 2) cap <<= 1
-    val keys = new Array[Long](cap)
-    val mask = cap - 1
-    var hasZero = false
+    if (nWin <= 0) return Array.emptyLongArray
+    val out = new Array[Long](nWin)
     var i = 0
-    while (i < nWin) {
-      val h = fnvWindow(t, i, i + k)
-      if (h == 0L) hasZero = true
-      else {
-        var idx = ((h ^ (h >>> 32)).toInt & mask)
-        while (keys(idx) != 0L && keys(idx) != h) idx = (idx + 1) & mask
-        keys(idx) = h
-      }
+    while (i < nWin) { out(i) = fnvWindow(t, i, i + k); i += 1 }
+    out
+  }
+
+  /** Distinct k-char shingle hashes in ascending (signed) order: the
+    * window hashes, sorted and de-duplicated in place. The shingle set the
+    * Jaccard verification merges.
+    */
+  def sortedShingles(text: String, k: Int): Array[Long] = {
+    val w = windowHashes(text, k)
+    java.util.Arrays.sort(w)
+    var n = 0
+    var i = 0
+    while (i < w.length) {
+      if (n == 0 || w(i) != w(n - 1)) { w(n) = w(i); n += 1 }
       i += 1
     }
-    val nonZero = keys.iterator.filter(_ != 0L)
-    if (hasZero) Iterator.single(0L) ++ nonZero else nonZero
+    if (n == w.length) w else java.util.Arrays.copyOf(w, n)
   }
 
   /** FNV-1a of the code points in `s[start, end)` — exactly
@@ -225,7 +241,7 @@ object Dedup {
     * never the 64-long signature (which would be ×bands copies of it) —
     * pairs are deduped across bands first, and the signatures are joined
     * back exactly once per distinct pair to score. Signatures are
-    * persisted so the shingling UDF runs one scan, not three.
+    * persisted so the shingling runs one scan, not three.
     */
   def minhashCandidatePairs(
       df: DataFrame,
@@ -386,7 +402,10 @@ object Dedup {
     * texts back in and computes |A∩B|/|A∪B| of the k-shingle sets per
     * row. This is the verification stage run after LSH candidate
     * generation — it touches only candidate pairs, never the full corpus
-    * cross product.
+    * cross product. Both kernels are codegen expressions over primitive
+    * long arrays ([[graft.transform.ShingleSet]],
+    * [[graft.transform.SortedJaccard]]): null text is the empty set, and
+    * two empty sets score 1.0.
     */
   def verifyPairsJaccard(
       pairs: DataFrame, // (id_a, id_b)
@@ -397,42 +416,24 @@ object Dedup {
   ): DataFrame = {
     // shingle ONCE per document (a doc in k candidate pairs would otherwise
     // be re-shingled k times — at boilerplate-heavy corpora k reaches the
-    // hundreds); pairs then merge two sorted hash arrays in O(na+nb)
-    val shingle = udf { (s: String) =>
-      val arr = shingleHashes(s, shingleK).toArray
-      java.util.Arrays.sort(arr)
-      arr
-    }
-    // asNondeterministic (guide §4.4): callers filter on the jaccard
-    // column, and the optimizer's pushed-down copy of a deterministic UDF
-    // re-evaluates the merge per row (filter + projection = 2×). The
-    // function is pure; the marker only stops the optimizer duplicating it.
-    val jac = udf { (a: Array[Long], b: Array[Long]) =>
-      if (a.isEmpty && b.isEmpty) 1.0
-      else {
-        var i = 0; var j = 0; var inter = 0
-        while (i < a.length && j < b.length) {
-          val x = a(i); val y = b(j)
-          if (x == y) { inter += 1; i += 1; j += 1 }
-          else if (x < y) i += 1
-          else j += 1
-        }
-        inter.toDouble / (a.length + b.length - inter).toDouble
-      }
-    }.asNondeterministic()
+    // hundreds); pairs then merge two sorted hash arrays in O(na+nb). The
+    // merge is deterministic, so a caller's filter on `jaccard` is pushed
+    // into the join condition and the merge runs twice per pair; the
+    // shingling, not the merge, dominates this stage.
     // NOTE (r7, measured): a semi-join pre-filter of the shingled side on
     // the candidate id set was tried and REVERTED — the shrunken size
     // estimate made the planner broadcast the heavy shingle-array side
-    // (UDF evaluated single-threaded inside the broadcast build: 4× slower
-    // locally), and forcing a merge join instead shuffled+sorted the
+    // (shingling evaluated single-threaded inside the broadcast build: 4×
+    // slower locally), and forcing a merge join instead shuffled+sorted the
     // arrays (8× slower). The shape below keeps the arrays unshuffled: the
     // planner broadcasts the (id-only) pair side when it fits and streams
     // the shingle scan in parallel tasks.
-    val sh = df.select(col(idCol).as("__id"), shingle(col(textCol)).as("__sh"))
+    val sh = df.select(col(idCol).as("__id"),
+      graft.transform.ShingleSet.column(col(textCol), shingleK).as("__sh"))
     pairs
       .join(sh.withColumnRenamed("__id", "id_a").withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
       .join(sh.withColumnRenamed("__id", "id_b").withColumnRenamed("__sh", "sh_b"), Seq("id_b"))
-      .withColumn("jaccard", round(jac(col("sh_a"), col("sh_b")), 6))
+      .withColumn("jaccard", round(graft.transform.SortedJaccard.column(col("sh_a"), col("sh_b")), 6))
       .drop("sh_a", "sh_b")
   }
 

@@ -1,19 +1,26 @@
 package graft.transform
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Codegen forms of the dedup signature kernels (the last Scala UDFs on the
-  * dedup family's hottest scans): the generated code calls the same pure
-  * kernels ([[graft.dedup.Dedup.minhashSig]] / [[graft.dedup.Dedup.simhashOf]])
-  * directly — identical hashes to the UDF formulation, but no UDF boxing /
+/** Codegen forms of the dedup and similarity kernels (the former Scala UDFs
+  * on the dedup family's hottest scans): the generated code calls the same
+  * pure kernels ([[graft.dedup.Dedup.minhashSig]],
+  * [[graft.dedup.Dedup.sortedShingles]], [[graft.dedup.Dedup.simhashOf]])
+  * directly — identical values to the UDF formulation, but no UDF boxing /
   * encoder round-trip, and the projection stays inside whole-stage codegen
   * alongside the tokenCount/langId/fingerprint expressions it scans with.
+  * Array results are built with `UnsafeArrayData.fromPrimitiveArray` from
+  * the kernels' `long[]` (a `GenericArrayData` over a `long[]` boxes every
+  * element), and the Jaccard merge reads its inputs in place through
+  * `ArrayData.getLong`.
   */
 case class MinhashSignature(child: Expression, numHashes: Int, shingleK: Int, seed: Long)
     extends UnaryExpression {
@@ -47,6 +54,62 @@ object MinhashSignature {
 
   def column(c: Column, numHashes: Int, shingleK: Int, seed: Long): Column =
     ColumnBridge.column(MinhashSignature(ColumnBridge.expression(c), numHashes, shingleK, seed))
+}
+
+/** The distinct k-char shingle hashes of a text, ascending — codegen form
+  * of [[graft.dedup.Dedup.sortedShingles]], the set side of Jaccard
+  * verification. Null text gives the empty set, never null: a missing
+  * text scores 0.0 against any non-empty text, not null.
+  */
+case class ShingleSet(child: Expression, shingleK: Int) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "shingle_set"
+
+  override def eval(input: InternalRow): Any =
+    SignatureKernels.shingleSet(child.eval(input).asInstanceOf[UTF8String], shingleK)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.transform.SignatureKernels.shingleSet(${c.isNull} ? null : ${c.value}, $shingleK);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleSet =
+    copy(child = newChild)
+}
+
+object ShingleSet {
+  def column(c: Column, shingleK: Int): Column =
+    ColumnBridge.column(ShingleSet(ColumnBridge.expression(c), shingleK))
+}
+
+/** |A∩B| / |A∪B| of two ascending distinct `array<bigint>` sets (as
+  * [[ShingleSet]] emits them), by one merge over the arrays in place. Two
+  * empty sets score 1.0; null in, null out.
+  */
+case class SortedJaccard(left: Expression, right: Expression) extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "sorted_jaccard"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SignatureKernels.sortedJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.transform.SignatureKernels.sortedJaccard($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedJaccard =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedJaccard {
+  def column(a: Column, b: Column): Column =
+    ColumnBridge.column(SortedJaccard(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }
 
 /** Sign-hyperplane LSH band keys over an `array<double>` embedding —
@@ -84,10 +147,30 @@ object SignBandKeys {
   * call `graft.transform.SignatureKernels.minhash(...)` as plain Java.
   */
 object SignatureKernels {
+  import graft.dedup.Dedup
+
   def minhash(s: UTF8String, numHashes: Int, shingleK: Int, seed: Long): ArrayData =
-    new GenericArrayData(
-      graft.dedup.Dedup.minhashSig(
-        graft.dedup.Dedup.shingleHashes(s.toString, shingleK), numHashes, seed))
+    UnsafeArrayData.fromPrimitiveArray(
+      Dedup.minhashSig(Dedup.windowHashes(s.toString, shingleK), numHashes, seed))
+
+  def shingleSet(s: UTF8String, shingleK: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(Dedup.sortedShingles(if (s == null) null else s.toString, shingleK))
+
+  def sortedJaccard(a: ArrayData, b: ArrayData): Double = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    if (na == 0 && nb == 0) 1.0
+    else {
+      var i = 0; var j = 0; var inter = 0
+      while (i < na && j < nb) {
+        val x = a.getLong(i); val y = b.getLong(j)
+        if (x == y) { inter += 1; i += 1; j += 1 }
+        else if (x < y) i += 1
+        else j += 1
+      }
+      inter.toDouble / (na + nb - inter).toDouble
+    }
+  }
 
   // deterministic pure constants (splitmix64 expansion) memoized per config
   // so each task computes them once, not once per row
@@ -120,7 +203,7 @@ object SignatureKernels {
       out(b) = key
       b += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 

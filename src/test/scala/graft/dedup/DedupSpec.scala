@@ -23,10 +23,10 @@ class DedupSpec extends SparkSuite {
   }
 
   test("minhash signature is deterministic and jaccard-faithful") {
-    val s1 = Dedup.minhashSig(Dedup.shingleHashes("the quick brown fox jumps over the lazy dog", 5), 64)
-    val s2 = Dedup.minhashSig(Dedup.shingleHashes("the quick brown fox jumps over the lazy dog", 5), 64)
+    val s1 = Dedup.minhashSig(Dedup.sortedShingles("the quick brown fox jumps over the lazy dog", 5), 64)
+    val s2 = Dedup.minhashSig(Dedup.sortedShingles("the quick brown fox jumps over the lazy dog", 5), 64)
     assert(s1.sameElements(s2))
-    val s3 = Dedup.minhashSig(Dedup.shingleHashes("totally unrelated string with nothing shared", 5), 64)
+    val s3 = Dedup.minhashSig(Dedup.sortedShingles("totally unrelated string with nothing shared", 5), 64)
     val estSame = s1.zip(s3).count { case (a, b) => a == b } / 64.0
     assert(estSame < 0.2)
   }
@@ -160,12 +160,50 @@ class DedupSpec extends SparkSuite {
       "emoji 😀😁 mixed 😀 text", "ümläut tõkens",
       "x😀y") // surrogate pair cut by a window boundary
     for (t <- texts; k <- Seq(2, 5)) {
-      val got = Dedup.shingleHashes(t, k).toVector.sorted
+      val got = Dedup.sortedShingles(t, k).toVector
+      assert(got.zip(got.drop(1)).forall { case (a, b) => a < b }, s"not strictly ascending: k=$k text=$t")
       val tt = if (t == null) "" else t.toLowerCase.trim
       val want =
         if (tt.length < k) Vector.empty[Long]
         else (0 to tt.length - k).map(i => Dedup.fnv1a(tt.substring(i, i + k))).toSet.toVector.sorted
       assert(got == want, s"k=$k text=$t")
+    }
+  }
+
+  test("minhash over the raw window hashes (repeats included) equals minhash over the distinct set") {
+    val texts = Seq("aaaaaaaaaaaa", "abcabcabcabcabc", "the quick brown fox the quick brown fox",
+      "emoji 😀😁 mixed 😀 text", "ab", "", null)
+    for (t <- texts; k <- Seq(2, 5)) {
+      val windows = Dedup.windowHashes(t, k)
+      val set = Dedup.sortedShingles(t, k)
+      assert(windows.toSet == set.toSet, s"k=$k text=$t")
+      assert(Dedup.minhashSig(windows, 64).toSeq == Dedup.minhashSig(set, 64).toSeq, s"k=$k text=$t")
+    }
+    // repeats really occur in the window array
+    assert(Dedup.windowHashes("aaaaaaaaaaaa", 5).length > Dedup.sortedShingles("aaaaaaaaaaaa", 5).length)
+  }
+
+  test("verifyPairsJaccard plans hold no Scala UDF (fixed pairs and LSH-candidate shapes)") {
+    // a range-backed frame: the optimizer would fold the shingle projection
+    // of an in-memory LocalRelation into constants before planning
+    val texts = spark.range(12).select(col("id").as("doc_id"),
+      concat(lit("page "), col("id"), lit(" " + "shared boilerplate about near duplicate pages " * 3),
+        lit("end "), (col("id") % 3).cast("string")).as("text"))
+    // fixed id pairs, as q_jaccard_verify runs it
+    val fixed = texts.select(col("doc_id").as("id_a")).filter(col("id_a") < 8)
+      .withColumn("id_b", col("id_a") + 1)
+    val verifyFixed = Dedup.verifyPairsJaccard(fixed, texts, "doc_id", "text")
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+    // LSH candidates with a filter on the score, as q_ngram_jaccard runs it
+    val cands = Dedup.minhashCandidatePairs(texts, "doc_id", "text").select(col("id_a"), col("id_b"))
+    val verifyCands = Dedup.verifyPairsJaccard(cands, texts, "doc_id", "text")
+      .filter(col("jaccard") >= 0.3)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+    for ((name, df) <- Seq("fixed pairs" -> verifyFixed, "LSH candidates" -> verifyCands)) {
+      assert(df.collect().nonEmpty, name)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("UDF("), s"$name plan:\n$plan")
+      assert(plan.contains("shingle_set(") && plan.contains("sorted_jaccard("), s"$name plan:\n$plan")
     }
   }
 

@@ -2,6 +2,7 @@ package graft.transform
 
 import graft.SparkSuite
 import graft.dedup.Dedup
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** The codegen signature expressions must be hash-identical to the pure
@@ -29,7 +30,7 @@ class SignatureExprsSpec extends SparkSuite {
     out.foreach { r =>
       if (r.isNullAt(1)) assert(r.isNullAt(2), "null text must give a null signature")
       else {
-        val expected = Dedup.minhashSig(Dedup.shingleHashes(r.getString(1), 5), 16, 42L).toSeq
+        val expected = Dedup.minhashSig(Dedup.sortedShingles(r.getString(1), 5), 16, 42L).toSeq
         assert(r.getSeq[Long](2) == expected, s"row ${r.getLong(0)}")
       }
     }
@@ -40,7 +41,7 @@ class SignatureExprsSpec extends SparkSuite {
         org.apache.spark.sql.types.StringType), 16, 5, 42L)
     val interp = expr.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     assert(interp.toLongArray().toSeq ==
-      Dedup.minhashSig(Dedup.shingleHashes(texts.head, 5), 16, 42L).toSeq)
+      Dedup.minhashSig(Dedup.sortedShingles(texts.head, 5), 16, 42L).toSeq)
   }
 
   test("generated code for the signature expressions COMPILES (no silent interpreted fallback)") {
@@ -60,7 +61,7 @@ class SignatureExprsSpec extends SparkSuite {
       Seq(MinhashSignature(child, 16, 5, 42L), Simhash64(child)))
     val out = proj(InternalRow(UTF8String.fromString(texts.head)))
     assert(out.getArray(0).toLongArray().toSeq ==
-      Dedup.minhashSig(Dedup.shingleHashes(texts.head, 5), 16, 42L).toSeq)
+      Dedup.minhashSig(Dedup.sortedShingles(texts.head, 5), 16, 42L).toSeq)
     assert(out.getLong(1) == Dedup.simhashOf(texts.head))
 
     // the sign-bucket LSH expression compiles and matches its Scala kernel
@@ -81,6 +82,54 @@ class SignatureExprsSpec extends SparkSuite {
       key
     }
     assert(keys.toSeq == expected.toSeq)
+
+    // the verification kernels: shingle sets and their Jaccard, generated
+    // in one projection over two text columns
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+    val childB = BoundReference(1, StringType, nullable = true)
+    val jproj = GenerateUnsafeProjection.generate(Seq(
+      ShingleSet(child, 5), ShingleSet(childB, 5),
+      Round(SortedJaccard(ShingleSet(child, 5), ShingleSet(childB, 5)), Literal(6))))
+    for (a <- texts :+ null; b <- texts :+ null) {
+      val row = InternalRow(UTF8String.fromString(a), UTF8String.fromString(b))
+      val got = jproj(row)
+      val (sa, sb) = (Dedup.sortedShingles(a, 5), Dedup.sortedShingles(b, 5))
+      assert(got.getArray(0).toLongArray().toSeq == sa.toSeq, s"text=$a")
+      assert(got.getArray(1).toLongArray().toSeq == sb.toSeq, s"text=$b")
+      val want = BigDecimal(jaccardOf(sa, sb)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert(got.getDouble(2) == want, s"a=$a b=$b")
+      // interpreted eval agrees with the generated code
+      assert(ShingleSet(child, 5).eval(row).asInstanceOf[ArrayData].toLongArray().toSeq == sa.toSeq)
+      assert(SortedJaccard(ShingleSet(child, 5), ShingleSet(childB, 5)).eval(row) == jaccardOf(sa, sb))
+    }
+  }
+
+  /** |A∩B| / |A∪B| over Scala sets; 1.0 for two empty sets. */
+  private def jaccardOf(a: Array[Long], b: Array[Long]): Double =
+    if (a.isEmpty && b.isEmpty) 1.0
+    else (a.toSet & b.toSet).size.toDouble / (a.toSet | b.toSet).size
+
+  test("shingle set and sorted Jaccard edge cases: null text, empty sets, null arrays") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+    val text = BoundReference(0, StringType, nullable = true)
+    val empty = Literal.create(Array.emptyLongArray, ArrayType(LongType, containsNull = false))
+    val some = Literal.create(Dedup.sortedShingles(texts.head, 5), ArrayType(LongType, containsNull = false))
+    val nullSet = Literal.create(null, ArrayType(LongType, containsNull = false))
+    val exprs = Seq(ShingleSet(text, 5), SortedJaccard(empty, empty), SortedJaccard(empty, some),
+      SortedJaccard(some, empty), SortedJaccard(some, some), SortedJaccard(some, nullSet))
+    val gen = GenerateUnsafeProjection.generate(exprs)(InternalRow.fromSeq(Seq(null)))
+    // null text → the empty set, never null
+    assert(!ShingleSet(text, 5).nullable)
+    assert(!gen.isNullAt(0) && gen.getArray(0).numElements() == 0)
+    assert(ShingleSet(text, 5).eval(InternalRow.fromSeq(Seq(null))).asInstanceOf[ArrayData].numElements() == 0)
+    val want = Seq(1.0, 0.0, 0.0, 1.0)
+    assert((1 to 4).map(gen.getDouble) == want)
+    assert(exprs.slice(1, 5).map(_.eval(null)) == want)
+    // a null set in gives null out
+    assert(gen.isNullAt(5) && exprs(5).eval(null) == null)
   }
 
   test("simhash expression matches the Scala kernel; null -> null") {
