@@ -387,15 +387,6 @@ object Selector {
   def distanceByFeature(df: DataFrame, target: String, quants: Seq[String]): Map[String, Double] =
     new Aggregates(df, Some(target), quants, Nil).pearson.view.mapValues(-_).toMap
 
-  /** Spearman rho per feature vs the target, over rows where the feature is
-    * non-null. Average-rank (tie-corrected) formulation as the Pearson
-    * correlation of rank transforms, computed entirely from the grouped
-    * `(fid, v, y)` counts: ranks of v within fid from cumulative counts,
-    * group rank sums per y, ranks of y over the feature's non-null rows.
-    */
-  def spearmanByFeature(df: DataFrame, target: String, quants: Seq[String]): Map[String, Double] =
-    using(new Aggregates(df, Some(target), quants, Nil))(_.spearman)
-
   /** Kruskal-Wallis H (tie-corrected) per quantitative feature with the
     * target as the grouping variable, plus the ε²/η² effect sizes
     * (`selectors/measures/quantitative_measures.py:36-160`) — from the same
@@ -490,17 +481,6 @@ object Selector {
   def qualPairMatrix(df: DataFrame, quals: Seq[String]): Map[(String, String), Double] =
     using(new Aggregates(df, None, Nil, quals, redundancy = true))(_.pairMatrix(quals))
 
-  /** Single-pair association (kept for targeted checks; `select` uses the
-    * batched matrices instead of per-pair jobs).
-    */
-  def pairAssociation(df: DataFrame, a: FeatureRank, b: FeatureRank): Double = {
-    if (a.kind == "quantitative" && b.kind == "quantitative")
-      quantCorrMatrix(df, Seq(a.name, b.name)).getOrElse((a.name, b.name), 0.0)
-    else if (a.kind == "categorical" && b.kind == "categorical")
-      qualPairMatrix(df, Seq(a.name, b.name)).getOrElse((a.name, b.name), 0.0)
-    else 0.0 // mixed-kind redundancy not filtered (matches reference split by type)
-  }
-
   /** One row of the uniform per-feature ranking table — the reference's
     * `selectors/utils/pretty_print.py:44-78` `format_ranked_features`:
     * gate values keep a column each, the ranking measure and redundancy
@@ -587,23 +567,9 @@ object Selector {
     }
   }
 
-  /** Tschuprow's T per qualitative feature vs the target (classification
-    * ranking measure) — same one-pass histogram as qualitativeMetrics.
-    */
-  def tschuprowtByFeature(df: DataFrame, target: String, quals: Seq[String]): Map[String, Double] =
-    tschuprowtFromHist(qualHistogram(df, target, quals), quals)
-
   private def tschuprowtFromHist(
       hist: Map[String, Array[BinaryCarver.HistRow]], quals: Seq[String]): Map[String, Double] =
     quals.map(n => n -> targetVT(hist.getOrElse(n, Array.empty).filterNot(_.isNull))._2).toMap
-
-  /** REVERSED Kruskal-Wallis per qualitative feature vs a numeric target
-    * (`_vectorized.py:kruskal_h_reversed`): the feature's modalities are
-    * the groups, the target is the ranked variable. Same grouped counts and
-    * rank path as [[kruskalByFeature]] with the roles swapped.
-    */
-  def kruskalReversedByFeature(df: DataFrame, target: String, quals: Seq[String]): Map[String, KruskalRow] =
-    using(new Aggregates(df, Some(target), Nil, quals))(_.kruskalReversed)
 
   private def selectWith(
       a: Aggregates,

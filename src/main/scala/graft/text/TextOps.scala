@@ -28,9 +28,6 @@ object TextOps {
   def digitCount(text: Column): Column =
     length(regexp_replace(text, "[^0-9]", "")).cast("long")
 
-  def upperCount(text: Column): Column =
-    length(regexp_replace(text, "[^A-Z]", "")).cast("long")
-
   /** Mean token length = (chars − separators) / tokens, null-safe. */
   def meanTokenLen(text: Column): Column = {
     val n = tokenCount(text)
