@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.FrameBridge
 
 import graft.tables.Tables
 import graft.temporal.Temporal
@@ -62,14 +63,14 @@ object SparkEntry {
 
   // the LocalRelation form of the shared candidate set: `toDF` over 551k
   // tuples eagerly encodes every row, and three queries consume the set —
-  // memoized per (session, dir) so the encode happens once (the DataFrame
-  // is session-bound, hence the identity key; the underlying pair data is
-  // the same sanctioned per-dir memo as dupCandidates)
+  // the encoded plan is memoized per dir (a plan holds no session, so the
+  // memo neither pins a session nor outlives one) and each call binds it
+  // to the calling session
   private def dupCandidatesDF(s: SparkSession, dir: String): DataFrame =
-    cachedModel(s"minhashCandsDF:${System.identityHashCode(s)}:$dir") {
+    FrameBridge.ofRows(s, cachedModel(s"minhashCandsPlan:$dir") {
       import s.implicits._
-      dupCandidates(s, dir).toSeq.toDF("id_a", "id_b", "est_jaccard")
-    }
+      dupCandidates(s, dir).toSeq.toDF("id_a", "id_b", "est_jaccard").queryExecution.logical
+    })
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---------------------------------------------------------- aggregation

@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
   * reference's BinaryCarver (`carvers/binary_carver.py`,
   * `carvers/utils/base_carver.py:456-577`).
   *
-  * Cluster/driver split (SURVEY.md §3.1): fit makes exactly ONE pass over
-  * the train table — `groupBy(feature, value).agg(count, sum(y))` in long
-  * form — and one over the dev table. The collected per-value histograms
+  * Cluster/driver split (SURVEY.md §3.1): fit makes ONE pass over the
+  * train table below the cell budget — the sketch job also returns the
+  * `(feature, value, y[, fold]) → count` cells ([[Crosstab.pass]]) — and
+  * else the sketch plus the crosstab pass `groupBy(feature,
+  * value).agg(count, sum(y))` in long form; and one over the dev table.
+  * The collected per-value histograms
   * (bounded by column cardinality, not row count) feed every driver-side
   * algorithm: the pre-binning ([[Prebin.prep]] under the summed target
   * view [[Prebin.Summed]]: quantile prebins at min_freq/2, rare quantile
@@ -650,10 +653,10 @@ object BinaryCarver {
     val guarded = guardTarget(target, specs)
     if (guarded.length != specs.length) return fit(train, target, guarded, dev, config)
     validateInputs(train, target, specs)
-    val sketched = sketchHighCardinality(train, specs, config)
-    // cv>1 shares ONE scan between the train histogram and all fold views
-    val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Summed(requireBinaryY = true),
-      Crosstab.folds(config.cv, config.foldCol))(Crosstab.summed)
+    // one pass below the cell budget (the sketch job returns the cells);
+    // cv>1 shares it between the train histogram and all fold views
+    val (hist, sketched) = Crosstab.fitStage(train, target, specs, config, Crosstab.Summed(requireBinaryY = true),
+      Crosstab.folds(config.cv, config.foldCol), "BinaryCarver")(Crosstab.summed)
     val devHist = dev.map(d => histogram(d, target, specs, sketched, requireBinaryY = true))
     fitFromHistograms(hist.total, devHist, target, specs, config, hist.folds)
   }
@@ -676,9 +679,10 @@ object BinaryCarver {
 
   /** [[sketchHighCardinality]] with caller-supplied extra aggregate columns
     * riding the SAME job (guide §2.3 "aggregate before you shuffle" /
-    * fewer passes): e.g. the continuous carver's distinct-y median gate —
-    * one scan instead of two. Extras must be pre-aliased; the returned Row
-    * (when any aggregation ran) carries them by those aliases.
+    * fewer passes): the crosstab cells of [[Crosstab.pass]] (the fit's only
+    * pass below the cell budget), and the continuous carver's distinct-y
+    * median gate and NaN-y count. Extras must be pre-aliased; the returned
+    * Row (when any aggregation ran) carries them by those aliases.
     */
   def sketchWithExtras(df: DataFrame, specs: Seq[FeatureSpec], config: Config,
       extras: Seq[org.apache.spark.sql.Column]): (Map[String, Vector[Double]], Option[org.apache.spark.sql.Row]) = {

@@ -11,18 +11,21 @@ import graft.stats.Ranks
   * prep ([[Prebin.prep]] under [[Prebin.Summed]], Σy of a real-valued y),
   * Kruskal-Wallis H association instead of chi².
   *
-  * Cluster shape below the cell bound: two passes over the input. Pass 1
-  * is the sketch, which also reads distinct-y and counts NaN y. Pass 2 is
-  * the cell table `(feature, value, y[, fold]) → count` (the [[Crosstab]]
-  * key shape with y as one more key), read through one bounded collect of
-  * at most [[Stats.LocalRankRows]] + 1 rows. Below the bound the driver derives
+  * Cluster shape below the cell bound: one pass over the input. The
+  * sketch job also reads distinct-y, counts NaN y and returns the cell
+  * table `(feature, value, y[, fold]) → count` (the [[Crosstab]] key shape
+  * with y as one more key) when it holds at most [[Stats.LocalRankRows]]
+  * cells ([[Crosstab.pass]]). Below the bound the driver derives
   * everything else from the cells in canonical (feature, value, y) order:
   * the train and fold histograms, the prebins, each cell's modality, the
   * average ranks of y in two pools per feature (all rows, and rows outside
   * the NaN modality — rank bases differ, see [[Continuous.KruskalMeasure]];
   * [[graft.stats.Ranks.local]]), the per-modality moments and the exact
   * median y histograms. Every floating-point sum then runs in an order
-  * fixed by the data, never by the plan. Above the bound the fit scans its
+  * fixed by the data, never by the plan. When the cells did not come back
+  * (a partial buffer past its share of the bound, or a sketched feature),
+  * a second pass reads the cell table through one bounded collect of at
+  * most [[Stats.LocalRankRows]] + 1 rows. Above the bound the fit scans its
   * input twice more: the histogram stage, then the persisted `(feature,
   * modality, y)` counts of the labelled input, ranked on the driver from
   * one collect of the `(feature, y)` pools when the distinct-y reading puts
@@ -44,7 +47,8 @@ object ContinuousCarver {
     * SAME (train, specs) — e.g. target_mean and target_median — computes
     * these once and calls [[fitFromStages]] per config (guide §1.2: the
     * distributed algorithm first; re-scanning identical passes per config
-    * is pure waste). `yHists` and `foldYHists` are the per-modality y
+    * is pure waste); below the cell bound computing them reads the input
+    * once, see the object doc. `yHists` and `foldYHists` are the per-modality y
     * histograms the median rate needs, train and per fold. Below the cell
     * bound they are always filled with the exact histograms unless the
     * distinct-y reading crosses the exact-median gate, so [[fitFromStages]]
@@ -100,9 +104,9 @@ object ContinuousCarver {
     fitFromStages(train, target, guarded, dev, config, stages)
   }
 
-  /** The cluster passes shared across rate strategies: the sketch (with
-    * the distinct-y gate and the NaN-y count on the same job) and the cell
-    * table, see the object doc. `withYHists` asks for the median y
+  /** The cluster passes shared across rate strategies: the sketch job
+    * (with the distinct-y gate, the NaN-y count and, below the bound, the
+    * cell table on the same job), see the object doc. `withYHists` asks for the median y
     * histograms where they cost a job of their own: above the cell bound,
     * or past the exact-median gate.
     */
@@ -115,7 +119,9 @@ object ContinuousCarver {
   ): Stages = boundedStages(train, target, specs0, config, withYHists, Stats.LocalRankRows)
 
   /** [[computeStages]] with the bound of the driver-side cell table as a
-    * parameter, so a test can reach both branches on small data.
+    * parameter, so a test can reach both branches on small data. The
+    * sketch job returns the cells up to this bound ([[Crosstab.cellBudget]]
+    * lowers it for the sketch job alone).
     */
   private[graft] def boundedStages(
       train: DataFrame,
@@ -133,32 +139,35 @@ object ContinuousCarver {
     // otherwise surface as a raw ANSI cast error inside the cell job)
     require(train.schema(target).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"[ContinuousCarver] y ('$target') must be numeric; got ${train.schema(target).dataType.simpleString}")
-    // ---- pass 1: the sketch. The R4 distinct-y gate and the NaN-y count
-    // ride the SAME job as extra aggregates.
-    val (sketched, sketchRow) = BinaryCarver.sketchWithExtras(train, specs, config,
+    // ---- pass 1: the sketch. The R4 distinct-y gate, the NaN-y count and
+    // the cell table (up to rankRows cells) ride the SAME job.
+    val folds = Crosstab.folds(config.cv, config.foldCol)
+    val pass = Crosstab.pass(train, target, specs, config, Crosstab.Valued, folds,
       Seq(approx_count_distinct(col(target)).as("__graft_y_acd"),
-        count(when(isnan(col(target).cast("double")) || col(target).isNull, 1)).as("__graft_y_nan")))
+        count(when(isnan(col(target).cast("double")) || col(target).isNull, 1)).as("__graft_y_nan")),
+      math.min(rankRows, Crosstab.cellBudget.value))
+    val (sketched, sketchRow) = (pass.sketched, pass.row)
     // the reference raises on NaN y (`base_discretizer._prepare_y`)
     require(!sketchRow.exists(_.getAs[Long]("__graft_y_nan") > 0),
       s"[ContinuousCarver] y ('$target') should not contain NaN/null")
     val distinctY = sketchRow.map(_.getAs[Long]("__graft_y_acd")).getOrElse(-1L)
     val approxMedian = distinctY > medianGateThreshold(config, specs.length)
 
-    // ---- pass 2: the cell table through a bounded collect. The sketch's
-    // readings bound the cell count from below: every feature has a cell
-    // per distinct y, an unsketched quantitative one a cell per distinct
-    // value. Past twice the bound (HLL's error is about 5%) that settles
-    // the branch without the cell pass.
-    val folds = Crosstab.folds(config.cv, config.foldCol)
+    // ---- pass 2, when the cells did not come back with the sketch: the
+    // cell table through a bounded collect. The sketch's readings bound the
+    // cell count from below: every feature has a cell per distinct y, an
+    // unsketched quantitative one a cell per distinct value. Past twice the
+    // bound (HLL's error is about 5%) that settles the branch without the
+    // cell pass.
     val minCells = specs.map { sp =>
       val acd = s"${sp.name}__acd"
       val dx = sketchRow.filter(r => !sketched.contains(sp.name) && r.schema.fieldNames.contains(acd))
         .fold(0L)(_.getAs[Long](acd))
       math.max(dx, distinctY).toDouble
     }.sum
-    val cells = Option.when(minCells <= 2.0 * rankRows)(
+    val cells = pass.cells.orElse(Option.when(minCells <= 2.0 * rankRows)(
       Crosstab.frame(train, target, specs, sketched, Crosstab.Valued, folds)
-        .take(math.min(rankRows, Int.MaxValue - 1L).toInt + 1))
+        .take(math.min(rankRows, Int.MaxValue - 1L).toInt + 1)))
     val s = Staged(train, target, specs, config, folds, sketched, distinctY, withYHists, approxMedian, rankRows)
     cells.filter(_.length <= rankRows) match {
       case Some(collected) => localStages(s, collected)
@@ -208,6 +217,7 @@ object ContinuousCarver {
   /** The driver branch: every [[Stages]] product from the collected cells. */
   private def localStages(s: Staged, collected: Array[Row]): Stages = {
     val cells = Crosstab.assemble(collected, s.target, Crosstab.Valued, s.folds)(Crosstab.keyed)
+    Crosstab.requireRows(cells.total, "ContinuousCarver")
     def sorted(m: Map[String, Array[KHistRow]]) = m.view.mapValues(_.sortWith(canonical)).toMap
     val total = sorted(cells.total)
     val foldCells = cells.folds.map(sorted)
@@ -259,6 +269,7 @@ object ContinuousCarver {
     */
   private def distributedStages(s: Staged): Stages = {
     val hist = Crosstab.stage(s.train, s.target, s.specs, s.sketched, Crosstab.Summed(), s.folds)(Crosstab.summed)
+    Crosstab.requireRows(hist.total, "ContinuousCarver")
     val prep = s.prepAll(hist.total)
     val ylh = longForm(s.train, s.target, s.specs, prep)
       .groupBy(col("fid"), col("lbl"), col("y"))

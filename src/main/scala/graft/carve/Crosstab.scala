@@ -1,29 +1,39 @@
 package graft.carve
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import scala.reflect.ClassTag
+import scala.util.DynamicVariable
 
 import graft.carve.BinaryCarver.{FeatureSpec, HistRow}
 import graft.carve.OrdinalCarver.KHistRow
 
 /** The crosstab stage (SURVEY §2.4 C1/C2, folds C4) — the one reduction of
   * data-sized input to small driver state, shared by every carver family:
-  * ONE `explode(histEntries) → groupBy(fid, dv, sv[, y][, fold]) → collect`.
+  * the cells `(fid, dv, sv[, y][, fold]) → count` of the
+  * [[BinaryCarver.histEntries]] long form, collected to the driver.
   * The target is either summed (`count` plus `sum(y)`: binary, continuous)
-  * or one more groupBy key (the double level: ordinal; the string class:
+  * or one more key (the double level: ordinal; the string class:
   * multiclass, mapped to its index in the sorted class list after the
-  * collect). Map-side partial aggregation keeps the shuffle at
-  * features × cardinality (× target keys) rows.
+  * collect).
   *
-  * With folds the fold key is one more groupBy column: each held-out
-  * fold's view is the rows carrying its key, and the train total is the
-  * sum over folds — no second scan (`base_carver.py:607-628` semantics at
-  * 1× the IO of a plain fit). Row order within a feature is the collect
-  * order without folds and first-seen order for the fold total.
-  * [[frame]] is the aggregate before the collect and [[assemble]] the
-  * driver half, for a caller that collects the aggregate its own way.
+  * A fit reads its input in ONE pass when it can ([[pass]]): the sketch
+  * job also counts the exact cells with [[CellCounts]], bounded by
+  * [[Stats.LocalRankRows]] cells (the seam [[cellBudget]]). When they come
+  * back and no feature was sketched, they are handed to the driver half
+  * [[assemble]] in the shape of [[frame]]'s rows, in canonical (fid,
+  * value, y, fold) order. Otherwise — too many cells, a sketched feature,
+  * or no sketch job to ride — the fit runs the crosstab pass:
+  * `explode(histEntries) → groupBy → collect` ([[stage]]), whose map-side
+  * partial aggregation keeps the shuffle at features × cardinality
+  * (× target keys) rows.
+  *
+  * With folds the fold key is one more key: each held-out fold's view is
+  * the rows carrying its key, and the train total is the sum over folds —
+  * no second scan (`base_carver.py:607-628` semantics at 1× the IO of a
+  * plain fit). Row order within a feature is the row order [[assemble]]
+  * meets without folds and first-seen order for the fold total.
   */
 object Crosstab {
 
@@ -89,6 +99,133 @@ object Crosstab {
   /** The ordinal/multiclass projection. */
   val keyed: Mk[KHistRow] = (dv, sv, isNull, key, count, _) => KHistRow(dv, sv, isNull, key, count)
 
+  /** Cells a fit collects to the driver from its sketch job. A
+    * `private[graft]` seam: a test sets it (`withValue`) to reach the
+    * crosstab pass on small data.
+    */
+  private[graft] val cellBudget = new DynamicVariable[Long](Stats.LocalRankRows)
+
+  /** The sketch job of a fit: the sketched edges, the job's row (with the
+    * caller's extras) when a job ran, and the cells in [[frame]]'s row
+    * shape when they came back within the budget and no feature was
+    * sketched.
+    */
+  private[carve] final case class Pass(sketched: Map[String, Vector[Double]], row: Option[Row],
+      cells: Option[Array[Row]])
+
+  /** Runs the sketch ([[BinaryCarver.sketchWithExtras]] with `extras`) and
+    * counts the cells of `y` on the same job. Without a job to ride (no
+    * quantitative feature to sketch and no extras) it runs nothing, so the
+    * caller's crosstab pass stays the fit's only pass.
+    */
+  private[carve] def pass(df: DataFrame, target: String, specs: Seq[FeatureSpec], config: BinaryCarver.Config,
+      y: Target, folds: Option[Folds], extras: Seq[Column], budget: Long): Pass = {
+    val sketches = config.sketchCardinalityThreshold > 0 && specs.exists(_.kind == "quantitative")
+    if (!sketches && extras.isEmpty) return Pass(Map.empty, None, None)
+    val fold = folds.fold(lit(null).cast("long"))(f => BinaryCarver.foldExpr(specs, target, f.cv, f.foldCol))
+    val cells = CellCounts.column(array(BinaryCarver.histEntries(specs, Map.empty): _*), yCol(target, y), fold,
+      budget).as(CellsAlias)
+    val (sketched, row) = BinaryCarver.sketchWithExtras(df, specs, config, extras :+ cells)
+    Pass(sketched, row, row.filter(_ => sketched.isEmpty)
+      .flatMap(r => Option(r.getSeq[Row](r.fieldIndex(CellsAlias))))
+      .map(frameRows(_, y, folds)))
+  }
+
+  /** The train crosstab of a fit that collects it whole (binary, ordinal,
+    * multiclass, one-vs-rest): the cells of its sketch job, else the
+    * crosstab pass. Returns the crosstab and the sketched edges.
+    */
+  private[carve] def fitStage[R: ClassTag](df: DataFrame, target: String, specs: Seq[FeatureSpec],
+      config: BinaryCarver.Config, y: Target, folds: Option[Folds], family: String)(
+      mk: Mk[R]): (Result[R], Map[String, Vector[Double]]) = {
+    val p = pass(df, target, specs, config, y, folds, Nil, cellBudget.value)
+    val result = p.cells match {
+      case Some(rows) => assemble(rows, target, y, folds)(mk)
+      case None => stage(df, target, specs, p.sketched, y, folds)(mk)
+    }
+    requireRows(result.total, family)
+    (result, p.sketched)
+  }
+
+  /** An empty train crosstab is a fit over no rows: a typed error instead
+    * of a missing feature further on.
+    */
+  private[carve] def requireRows(total: Map[String, Array[_]], family: String): Unit =
+    require(total.nonEmpty, s"[$family] the training frame has no rows to fit")
+
+  private val CellsAlias = "__graft_cells"
+
+  private def yCol(target: String, y: Target): Column =
+    if (y == Class) col(target).cast("string") else col(target).cast("double")
+
+  /** [[CellCounts]] rows `(fid, dv, sv, y, fold, n)` as [[frame]] rows, in
+    * canonical order: feature, value (the NaN bucket last), then y and
+    * fold for a keyed target, or fold and y for a summed one, whose rows
+    * are the (feature, value, fold) groups with Σy added in ascending y.
+    */
+  private def frameRows(cells: Seq[Row], y: Target, folds: Option[Folds]): Array[Row] = {
+    val summed = y.isInstanceOf[Summed]
+    val sorted = cells.toArray.sortWith((a, b) => compareAt(a, b, if (summed) SummedOrder else KeyedOrder) < 0)
+    // frame's key columns: (fid, dv, sv[, __y][, __fold])
+    def keys(c: Row, tail: Any*): Row =
+      Row.fromSeq(Seq(c(0), c(1), c(2)) ++ (if (summed) Nil else Seq(c(3))) ++ folds.map(_ => c(4)) ++ tail)
+    y match {
+      case Summed(check) =>
+        val out = mutable.ArrayBuffer.empty[Row]
+        var i = 0
+        while (i < sorted.length) {
+          val first = sorted(i)
+          var cnt, yNull, nonBin = 0L
+          var sy = 0.0
+          var anyY = false
+          while (i < sorted.length && compareAt(sorted(i), first, SummedGroup) == 0) {
+            val c = sorted(i)
+            val n = c.getLong(5)
+            cnt += n
+            if (c.isNullAt(3)) yNull += n
+            else {
+              val v = c.getDouble(3)
+              sy += v * n
+              anyY = true
+              if (v != 0.0 && v != 1.0) nonBin += n
+            }
+            i += 1
+          }
+          // frame's sums: sum(y) and the non-binary count are null when
+          // every y is null
+          val sums = Seq(cnt, if (anyY) sy else null) ++ (if (check) Seq(yNull, if (anyY) nonBin else null) else Nil)
+          out += keys(first, sums: _*)
+        }
+        out.toArray
+      case _ => sorted.map(c => keys(c, c(5)))
+    }
+  }
+
+  // key positions of a CellCounts row, in comparison order
+  private val KeyedOrder = Array(0, 1, 2, 3, 4)
+  private val SummedOrder = Array(0, 1, 2, 4, 3)
+  private val SummedGroup = Array(0, 1, 2, 4)
+
+  private def compareAt(a: Row, b: Row, keys: Array[Int]): Int = {
+    var c = 0
+    var k = 0
+    while (c == 0 && k < keys.length) {
+      c = compareNullsLast(a.get(keys(k)), b.get(keys(k)))
+      k += 1
+    }
+    c
+  }
+
+  private def compareNullsLast(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => 1
+    case (_, null) => -1
+    case (x: Double, z: Double) => java.lang.Double.compare(x, z)
+    case (x: Long, z: Long) => java.lang.Long.compare(x, z)
+    case (x: String, z: String) => x.compareTo(z)
+    case _ => throw new IllegalStateException(s"incomparable cell keys $a, $b")
+  }
+
   def stage[R: ClassTag](df: DataFrame, target: String, specs: Seq[FeatureSpec],
       sketched: Map[String, Vector[Double]], y: Target, folds: Option[Folds])(mk: Mk[R]): Result[R] =
     assemble(frame(df, target, specs, sketched, y, folds).collect(), target, y, folds)(mk)
@@ -99,10 +236,9 @@ object Crosstab {
   private[carve] def frame(df: DataFrame, target: String, specs: Seq[FeatureSpec],
       sketched: Map[String, Vector[Double]], y: Target, folds: Option[Folds]): DataFrame = {
     val isKeyed = !y.isInstanceOf[Summed]
-    val yCol = if (y == Class) col(target).cast("string") else col(target).cast("double")
     val foldCol = folds.map(f => BinaryCarver.foldExpr(specs, target, f.cv, f.foldCol).as("__fold"))
     val long = df.select(
-      Seq(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), yCol.as("__y")) ++ foldCol: _*)
+      Seq(explode(array(BinaryCarver.histEntries(specs, sketched): _*)).as("e"), yCol(target, y).as("__y")) ++ foldCol: _*)
     val keys = (if (isKeyed) Seq(col("__y")) else Nil) ++ foldCol.map(_ => col("__fold"))
     val aggs = y match {
       case Summed(check) =>

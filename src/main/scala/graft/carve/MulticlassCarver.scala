@@ -13,9 +13,9 @@ import graft.carve.OrdinalCarver.KHistRow
   * Tschuprow's T / Cramér's V generalised to K columns, modalities ordered
   * and viability-rated by correspondence-analysis first-axis score.
   *
-  * Cluster/driver split mirrors BinaryCarver: ONE
-  * `groupBy(feature, value, class).count()` long-form pass (the
-  * [[Crosstab]] stage keyed by class, run by [[classStage]]); everything
+  * Cluster/driver split mirrors BinaryCarver: ONE pass below the cell
+  * budget for the `(feature, value, class) → count` cells (the
+  * [[Crosstab]] keyed by class, run by [[classStage]]); everything
   * else is driver-side math over the collected crosstabs: the shared
   * [[Prebin.prep]] under a class target view (K class counts; CA
   * first-axis scores stand in for the merge rate and the categorical
@@ -68,8 +68,9 @@ object MulticlassCarver {
   }
 
   /** The class stage shared by the multiclass and one-vs-rest fits: the
-    * sketch, the class [[Crosstab]] (± folds; it also yields the sorted
-    * class set, so no distinct() pass), the > 2 classes check, and the dev
+    * sketch and the class [[Crosstab]] (± folds; one pass below the cell
+    * budget; it also yields the sorted class set, so no distinct() pass),
+    * the > 2 classes check, and the dev
     * class crosstab. The reference's validate_multiclass_target raises on
     * a dev class mismatch in EITHER direction (a dev sample missing a
     * train class would silently score that class as all-zero otherwise);
@@ -79,9 +80,8 @@ object MulticlassCarver {
   def classStage(train: DataFrame, target: String, specs: Seq[FeatureSpec], dev: Option[DataFrame],
       config: BinaryCarver.Config, family: String)
       : (Crosstab.Result[KHistRow], Option[Map[String, Array[KHistRow]]]) = {
-    val sketched = BinaryCarver.sketchHighCardinality(train, specs, config)
-    val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Class,
-      Crosstab.folds(config.cv, config.foldCol))(Crosstab.keyed)
+    val (hist, sketched) = Crosstab.fitStage(train, target, specs, config, Crosstab.Class,
+      Crosstab.folds(config.cv, config.foldCol), family)(Crosstab.keyed)
     val classes = hist.classes
     require(classes.length > 2, s"[$family] y has ${classes.length} classes; use BinaryCarver for <=2")
     val devHist = dev.map { d =>
@@ -223,8 +223,9 @@ object OneVsRestCarver {
       }.toArray
     }
 
-  /** Single-pass fit: ONE shared sketch pass (target-independent) + ONE
-    * class-histogram scan (plus one per fold-free dev) feed all K−1 binary
+  /** Single-pass fit: ONE sketch job that also returns the class
+    * crosstab below the cell budget (else a second, class-histogram scan;
+    * plus one per fold-free dev) feeds all K−1 binary
     * fits — the per-class crosstabs are driver-side column-sum projections
     * of the same aggregate, so fit job count is independent of K.
     */

@@ -10,8 +10,9 @@ import graft.carve.BinaryCarver.{FeatureSpec, FittedFeature, NanLabel, assembleF
   * reference's OrdinalCarver (`carvers/ordinal_carver.py`).
   *
   * Cluster/driver split mirrors BinaryCarver: ONE pass over the train table
-  * — the [[Crosstab]] stage keyed by the target level,
-  * `groupBy(feature, value, y_level).count()` — collects the per-value
+  * below the cell budget — the [[Crosstab]] cells keyed by the target
+  * level, `(feature, value, y_level) → count`, returned by the sketch job
+  * or else collected by the crosstab pass — collects the per-value
   * K-column crosstabs (bounded by cardinality × levels). All
   * carving runs driver-side on those aggregates: the shared
   * [[Prebin.prep]] under a level target view (K level counts; the rare
@@ -110,12 +111,11 @@ object OrdinalCarver {
     require(train.schema(target).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"[OrdinalCarver] y ('$target') must be an integer-encoded numeric ordinal Series; " +
         s"got ${train.schema(target).dataType.simpleString} — integer-encode the ordered target (e.g. 1..K) first")
-    val sketched = BinaryCarver.sketchHighCardinality(train, specs,
+    val (hist, sketched) = Crosstab.fitStage(train, target, specs,
       BinaryCarver.Config(minFreq = config.minFreq,
         sketchCardinalityThreshold = config.sketchCardinalityThreshold,
-        sketchRelativeError = config.sketchRelativeError))
-    val hist = Crosstab.stage(train, target, specs, sketched, Crosstab.Level,
-      Crosstab.folds(config.cv, config.foldCol))(Crosstab.keyed)
+        sketchRelativeError = config.sketchRelativeError),
+      Crosstab.Level, Crosstab.folds(config.cv, config.foldCol), "OrdinalCarver")(Crosstab.keyed)
     (hist.total, hist.folds, sketched)
   }
 

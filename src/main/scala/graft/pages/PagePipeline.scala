@@ -84,11 +84,11 @@ object PagePipeline {
       val guarded = Temporal.leakageGuard(pages, "warc_ts", asOf)
       // high-cardinality features (warc_age_sec has ~one distinct value per
       // row) go through the sketch prebin: the collected histogram stays
-      // O(quantiles), not O(distinct values). The sketch's two extra passes
-      // (distinct-count gate + approxQuantile) run on the cheap scan-side
-      // projection — no window shuffle, just the parquet scan.
-      // the narrow projection is scanned TWICE (sketch pass, then the
-      // window/histogram pass). `spark.graft.pages.cacheScan` persists it
+      // O(quantiles), not O(distinct values). The sketch is one job (the
+      // distinct-count gate and the quantile edges are aggregates of the
+      // same pass) over the cheap scan-side projection — no window
+      // shuffle, just the parquet scan. So the narrow projection is
+      // scanned TWICE (sketch pass, then the window/histogram pass). `spark.graft.pages.cacheScan` persists it
       // (MEMORY_AND_DISK — ~0.5% of input bytes at corpus scale) so the
       // html/text decode + tokenization runs once: worth it when decode
       // dominates the scan (real web corpora). Default OFF: a 4-core A/B on

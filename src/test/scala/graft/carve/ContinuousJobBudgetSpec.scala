@@ -3,8 +3,8 @@ package graft.carve
 import graft.SparkSuite
 
 /** The continuous fit's cluster budget. Below the cell bound a fit scans
-  * its input twice (the sketch, then the cell table) and derives the rest
-  * on the driver. Jobs are counted with adaptive execution on and
+  * its input once (the sketch job also returns the cell table) and derives
+  * the rest on the driver. Jobs are counted with adaptive execution on and
   * broadcast joins off.
   */
 class ContinuousJobBudgetSpec extends SparkSuite {
@@ -26,10 +26,10 @@ class ContinuousJobBudgetSpec extends SparkSuite {
   private def jobs[T](body: => T): (Int, T) = countJobs(
     "spark.sql.adaptive.enabled" -> "true", "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
-  test("a below-bound computeStages runs at most 5 jobs: sketch 2, cell map stage 1, bounded collect 2") {
+  test("a below-bound computeStages runs 2 jobs: the sketch job returns the cells") {
     for (cv <- Seq(0, 3)) {
       val (n, _) = jobs(ContinuousCarver.computeStages(df, "y", specs, config("target_mean", cv)))
-      assert(n <= 5, s"cv=$cv: computeStages ran $n jobs")
+      assert(n == 2, s"cv=$cv: computeStages ran $n jobs")
     }
   }
 
